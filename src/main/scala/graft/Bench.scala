@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
 
 /** Driver benchmark: per-query timings plus the full-build lifecycle twin.
@@ -22,22 +22,8 @@ import org.apache.spark.sql.functions.{col, expr, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // memory-backed scratch (shuffle + spill), like BenchScale: this host's
-    // disk is ~5x slower than tmpfs; model output still lands on disk
-    val scratch = Scratch.resolve(Scratch.SweepFootprint)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", scratch)
-      // same dim-broadcast ceiling as BenchScale: at sf0.1 the pruned dims
-      // are a few MB (broadcast either way), but the conf keeps the bench
-      // plan shape identical to the at-scale build's
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.bench(cpus)
     // session warmup outside the timed loop: JIT, codegen pipeline, file
     // index + parquet reader init (fixed costs, not query work)
     try spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -51,21 +37,18 @@ object Bench {
       case None        => SparkEntry.queries
     }
     // a thrown query must never read as a fast success: its name and
-    // exception class go into the artifact's "errors" object (r5 lesson —
+    // exception go into the artifact's "errors" object (r5 lesson —
     // 12 analysis-time failures printed as 0.06 s timings and the total
     // "improved")
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    def failed(name: String, e: Throwable): Unit = {
+      errors(name) = e
+      System.err.println(s"[bench] $name FAILED: $e")
+    }
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-          .agg(expr("bit_xor(__h)")).collect()
-      } catch {
-        case e: Throwable =>
-          errors(name) = e.getClass.getSimpleName
-          System.err.println(s"[bench] $name FAILED: $e")
-      }
+      try action(fn(spark, sfDir)).collect()
+      catch { case e: Throwable => failed(name, e) }
       name -> (System.nanoTime() - t0) / 1e9
     }
     // streaming surface: the events table replayed as a file stream through
@@ -94,12 +77,7 @@ object Bench {
           q.awaitTermination()
           nEvents / ((System.nanoTime() - ts) / 1e9)
         }.max
-      } catch {
-        case e: Throwable =>
-          errors("__stream") = e.getClass.getSimpleName
-          System.err.println(s"[bench] stream leg FAILED: $e")
-          -1.0
-      }
+      } catch { case e: Throwable => failed("__stream", e); -1.0 }
 
     // synthetic-source throughput: SF1 lineitem (6M rows) generated on the
     // fly through the graft-synth DSv2 source and aggregated — the
@@ -110,7 +88,7 @@ object Bench {
         val t = System.nanoTime()
         spark.read.format("graft-synth")
           .option("table", "lineitem").option("sf", "1")
-          .option("partitions", cpus)
+          .option("partitions", cpus.toLong)
           .load()
           .agg(org.apache.spark.sql.functions.sum(col("l_quantity")))
           .collect()
@@ -153,12 +131,7 @@ object Bench {
         val sec = (System.nanoTime() - tv) / 1e9
         rm(new java.io.File(vdir))
         (nBase + touched) / sec
-      } catch {
-        case e: Throwable =>
-          errors("__versioned") = e.getClass.getSimpleName
-          System.err.println(s"[bench] versioned leg FAILED: $e")
-          -1.0
-      }
+      } catch { case e: Throwable => failed("__versioned", e); -1.0 }
 
     Store.clear(spark) // cold build: nothing reused from the query loop
     val buildDir =
@@ -166,12 +139,7 @@ object Bench {
     val tb = System.nanoTime()
     val built =
       try Runner.buildAll(Ctx(spark, sfDir), buildDir, cacheParents = true).size
-      catch {
-        case e: Throwable =>
-          errors("__build") = e.getClass.getSimpleName
-          System.err.println(s"[bench] build leg FAILED: $e")
-          -1
-      }
+      catch { case e: Throwable => failed("__build", e); -1 }
     val buildSec = (System.nanoTime() - tb) / 1e9
     rm(new java.io.File(buildDir))
     // The driver captures only the last ~2 KB of stdout: a JSON line naming
@@ -186,12 +154,20 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val pageMBps = HostProbe.pageMBps()
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    // the compact line names each error's class only (its keys and shape
+    // are the driver's contract, its size the 2 KB budget); the detail
+    // artifact adds the message and the first stack frame
+    def errObj(v: Throwable => String): String =
+      errors.map { case (k, e) => quote(k) + ":" + quote(v(e)) }
+        .mkString("{", ",", "}")
+    val errJson = errObj(_.getClass.getSimpleName)
+    val errDetail = errObj(e =>
+      s"${e.getClass.getSimpleName}: ${e.getMessage} @ " +
+        e.getStackTrace.headOption.map(_.toString).getOrElse("?"))
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$fullQs,"errors":$errJson,"sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$fullQs,"errors":$errDetail,"sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}"""
     println(s"BENCH_DETAIL: $detail")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
@@ -209,4 +185,23 @@ object Bench {
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$compactQs,"queries_run":${results.size},"queries_shown":${shown.size},"errors":$errJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}""")
     spark.stop()
   }
+
+  /** The bench action: bit_xor of every row's xxhash64 over all columns
+    * (see the scaladoc above for why not count() or sum). One row. */
+  def action(df: DataFrame): DataFrame =
+    df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("__h"))
+      .agg(expr("bit_xor(__h)"))
+
+  /** `s` as a JSON string literal: backslash, quote and ALL control chars
+    * (< 0x20) escaped — a tab or CR in builder-authored SQL or an exception
+    * message would otherwise make a reader's json.load fail. */
+  def quote(s: String): String = "\"" + String.valueOf(s).flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

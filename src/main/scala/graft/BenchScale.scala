@@ -28,7 +28,7 @@ object BenchScale {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.defaultCpus
     val synthSf = sys.env.get("SPARK_GRAFT_SYNTH_SF")
     // Scratch (shuffle files + persist spill) goes to memory-backed storage
     // by default: this host's disk sustains ~0.5 GB/s vs ~2.6 GB/s tmpfs,
@@ -36,46 +36,10 @@ object BenchScale {
     // cluster analogue is NVMe/ramdisk-backed spark.local.dir — standard
     // practice, not a benchmark trick. Model OUTPUT still goes to real disk.
     // (guarded: falls back to disk temp when tmpfs lacks the headroom —
-    // see graft.Scratch)
-    val scratch = Scratch.resolve(Scratch.BuildFootprint)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", scratch)
-      // long-heap runs GC rarely; shuffle files are reference-cleaned, so
-      // force a periodic sweep to keep tmpfs scratch bounded
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      // start wide, let AQE coalesce: at SF10 a 32-partition fact shuffle
-      // is ~500 MB/task (sort-spill territory); explicit repartition calls
-      // (globalOrder's range exchange) keep their requested count
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 4).toString)
-      // At SF10 the pruned dims (dim_part ~2M rows, dim_customer ~1.5M) are
-      // 40-200 MB — far over the 10 MB default, so every report's dim join
-      // was a sort-merge join that re-shuffled a 60M-row fact relation. A
-      // 256 MB ceiling broadcasts them (the same call a real cluster makes:
-      // executors holding multi-GB heaps routinely broadcast 100-500 MB
-      // dims) while the 8M-row xrf and fact-fact joins stay shuffle-shaped.
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      // Bound CONCURRENT driver-side broadcast-relation builds: 8 model
-      // writers × multi-GB transient build allocations is the broadcast-OOM
-      // abort shape on drag epochs (the r12/r13 aborts — each 256 MB dim
-      // broadcast transiently allocates ~2 GB building its hash relation).
-      // 4 concurrent builds bounds the transient to ~8 GB regardless of
-      // writer count; queued builds wait on the static exchange pool, not
-      // on memory. (DriverGuard handles the complementary accumulation
-      // vector: dead-broadcast reclamation + admission.)
-      .config("spark.sql.broadcastExchange.maxThreadThreshold", "4")
-      // zstd writes 33% fewer bytes than snappy at equal encode CPU on this
-      // data (tools/CodecProbe.scala: 6.02 -> 4.06 GB on the 60M-row fact,
-      // 9.9-10.4 s either codec against tmpfs) — ~7 GB less write I/O over
-      // the ~22 GB build output, which is exactly the exposure that drags
-      // run tails on degraded-disk epochs.
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // see graft.Scratch). The build confs (periodic GC, wide initial
+    // partitions, bounded broadcast builds, zstd output) are
+    // Sessions.bench's `atScale` set.
+    val spark = Sessions.bench(cpus, atScale = true)
 
     sys.env.get("SPARK_GRAFT_QUERY_SF").foreach { sf =>
       querySweep(spark, sf, cpus)
@@ -168,7 +132,7 @@ object BenchScale {
     *
     * Each leg collect()s a handful of result rows (6 / ~84 / 25 / 5 / 1);
     * nothing driver-side scales with SF. */
-  private def querySweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def querySweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val ctx = Ctx(spark, s"synth:sf=$sf")
     def timed(name: String)(df: => DataFrame): (String, Double, Long) = {
       val t0 = System.nanoTime()
@@ -231,7 +195,7 @@ object BenchScale {
     * hashes — every output column computed, nothing driver-side scales
     * with SF). Legs run the REGISTRY entries, so what's measured is the
     * shipped plan, not a bench re-implementation. */
-  private def pipeSweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def pipeSweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val dir = s"synth:sf=$sf"
     val legs = Seq(
       "dedup_exact",        // md5 groupBy, one shuffle
@@ -265,9 +229,7 @@ object BenchScale {
     Store.clear(spark)
     val results = legs.map { name =>
       val t0 = System.nanoTime()
-      val df = Registry.queries(name)(spark, dir)
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.action(Registry.queries(name)(spark, dir)).collect()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[benchscale] pipe:$name%-22s $sec%8.1f s")
       // per-leg isolation: each leg pays its own memo builds (it already
@@ -297,10 +259,10 @@ object BenchScale {
     * three checksums agree (a mitigation that changes answers is not a
     * mitigation) and emits per-leg seconds. The dim side is 4M rows so the
     * join is honestly shuffle-shaped (no broadcast escape hatch). */
-  private def skewSweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def skewSweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val li = spark.read.format("graft-synth")
       .option("table", "lineitem").option("sf", sf)
-      .option("partitions", cpus).load()
+      .option("partitions", cpus.toLong).load()
     val dimN = 4000000L
     // 30% of rows -> key 0; the rest uniform over the dim's key space.
     // Row-hash based, so the assignment is deterministic and re-runnable.

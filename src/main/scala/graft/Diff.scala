@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI for [[Runner.diff]] — the recce regression twin, driveable end to
   * end: diff two build directories table by table and emit one JSON line
   * per table plus a final summary line (the bare-last-line stdout contract
@@ -15,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Diff {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Diff <dirA> <dirB> [table=key+key ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     val keys = args.drop(2).map { kv =>
       val Array(t, ks) = kv.split("=", 2)
       t -> ks.split("\\+").toSeq

@@ -630,7 +630,11 @@ object AnnIndex {
     Tables.foreach(t => Versioned.vacuum(ctx.spark, s"$dir/$t", keepVersions = 2))
     Versioned.vacuum(ctx.spark, s"$dir/meta", keepVersions = 2)
     val emb = ctx.tbl("embeddings")
-    val target = emb.filter(col("vec_id") === 0).select("label").head().get(0)
+    // take(1), not head(): on embeddings without a vec_id 0 (graft-synth
+    // numbers ids from 1) the label is NULL and nothing matches — an empty
+    // result, as the DuckDB twin's scalar subquery gives
+    val target = emb.filter(col("vec_id") === 0).select("label").take(1)
+      .headOption.map(_.get(0)).orNull
     val queries = emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     query(ctx.spark, dir, queries, where = Some(col("label") === target))

@@ -741,8 +741,8 @@ object Reports {
     * The reference's 3 COUNT(DISTINCT ...) in one GROUP BY would plan as an
     * Expand that quadruples the 60M-row fact before aggregating. Split into
     * three branches instead, each the cheapest shape for its aggregate
-    * (values bit-identical — exact decimal/long sums; A/B at SF10 in
-    * tools/AbProbe: 51 s Expand / 20-22 s this form, same hashes):
+    * (values bit-identical — exact decimal/long sums; same-JVM A/B at SF10,
+    * PERF_NOTES_r7/r8.md: 51 s Expand / 20-22 s this form, same hashes):
     *  1. sums/avgs collapse map-side straight to the ~450 group cells;
     *  2. order_count + customer_count come from ONE narrow
     *     (gk, order_key, customer_key) distinct — customer_key is

@@ -162,4 +162,20 @@ class AnnFilteredSpec extends SparkSpec {
       where = Some(col("label") === target && col("vec_id") >= n))
     assert(after.filter(col("cand_id") < n).count() == 0)
   }
+
+  test("ann_index_filtered on 1-based ids (no vec_id 0) is empty, like its twin") {
+    // graft-synth numbers ids from 1: the filter label of vec_id 0 is then
+    // NULL, which the DuckDB twin's scalar subquery turns into zero rows
+    val dir = java.nio.file.Files.createTempDirectory("ann_one_based").toString
+    val oneBased = Ctx(spark, dir)
+    val index = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp") +
+      "/graft-annfiltered/" + java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$dir/filtered".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    try {
+      ctx.tbl("embeddings").withColumn("vec_id", col("vec_id") + 1)
+        .write.parquet(s"$dir/embeddings.parquet")
+      assert(oneBased.tbl("embeddings").filter(col("vec_id") === 0).count() == 0)
+      assert(extensions.AnnIndex.filteredServePipeline(oneBased).count() == 0)
+    } finally { rm(new java.io.File(dir)); rm(index) }
+  }
 }

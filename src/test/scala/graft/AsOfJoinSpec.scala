@@ -1,29 +1,16 @@
 package graft
 
 import graft.plans.{AsOf, AsOfJoinExec}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The custom as-of join (LogicalPlan + Strategy + SparkPlan) must produce
   * exactly the rows a composed-ops reference implementation produces, run
   * as a sort-merge pass (no cartesian/broadcast-nested-loop candidate
   * explosion), and never match across null keys or null times. */
-class AsOfJoinSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-  private lazy val ctx = Ctx(spark, "/root/testdata/sf0.001")
-
+class AsOfJoinSpec extends SparkSpec {
   private def finalPlan(p: SparkPlan): SparkPlan = p match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
     case other => other

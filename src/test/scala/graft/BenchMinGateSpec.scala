@@ -50,8 +50,9 @@ class BenchMinGateSpec extends AnyFunSuite {
       .filter(_.getName.matches("BENCH_MIN_r\\d+\\.json"))
       .flatMap(parse).sortBy(_.round)
     assert(arts.nonEmpty,
-      "no suite_isolated_draws artifact found — run tools/DrawSweep _suite " +
-        "and commit BENCH_MIN_r{N}.json")
+      "no suite_isolated_draws artifact found — run " +
+        "`graft.tools.Probe isolated _suite 3` and commit its last line as " +
+        "BENCH_MIN_r{N}.json")
     if (arts.length < 2) {
       info(s"only ${arts.head.path} carries the isolated-draw protocol — " +
         "gate activates when the next round's refresh lands")

@@ -1,22 +1,15 @@
 package graft
 
 import graft.functions.CosineSim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Native cosine_sim must be BIT-identical to the higher-order-function
   * fold it replaced (same sequential accumulation order), or the oracle
   * hash-match breaks — compared here as exact doubles, no tolerance. */
-class CosineSimSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    CosineSim.register(s)
-    s
+class CosineSimSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    CosineSim.register(spark)
   }
 
   private def hof(a: String, b: String): String = {

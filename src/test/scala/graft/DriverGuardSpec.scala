@@ -11,14 +11,15 @@ class DriverGuardSpec extends SparkSpec {
 
   private val Mb = 1 << 20
 
-  private def awaitBelow(bytes: Long, timeoutMs: Long): Boolean = {
+  private def awaitBelow(bytes: Long, timeoutMs: Long,
+      held: => Long = DriverGuard.broadcastBytes): Boolean = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     while (System.nanoTime() < deadline) {
-      if (DriverGuard.broadcastBytes <= bytes) return true
+      if (held <= bytes) return true
       DriverGuard.reclaim(minIntervalMs = 500)
       Thread.sleep(200)
     }
-    DriverGuard.broadcastBytes <= bytes
+    held <= bytes
   }
 
   test("storage pool and broadcast bytes are readable") {
@@ -30,19 +31,20 @@ class DriverGuardSpec extends SparkSpec {
   }
 
   test("reclaim frees DEAD broadcast blocks promptly") {
-    // settle: clear any broadcasts earlier suites left dying
-    awaitBelow(8L * Mb, 20000)
-    val floor = DriverGuard.broadcastBytes
+    // measured on the six fixtures' own BroadcastBlockId blocks: a total
+    // over all broadcast blocks also counts what earlier suites left
+    // dying, which can be freed mid-test and shrink the measured delta
     var refs = (0 until 6).map(_ =>
       spark.sparkContext.broadcast(new Array[Byte](16 * Mb)))
     refs.foreach(b => assert(b.value.length == 16 * Mb))
-    val loaded = DriverGuard.broadcastBytes
-    assert(loaded >= floor + 6L * 16 * Mb,
-      s"expected >=96MB of broadcast blocks, saw ${loaded - floor} over floor")
+    val ids = refs.map(_.id).toSet
+    def fixtureBytes = org.apache.spark.BroadcastBlocks.bytes(ids)
+    val loaded = fixtureBytes
+    assert(loaded >= 6L * 16 * Mb,
+      s"expected >=96MB of broadcast blocks, saw $loaded bytes")
     refs = null // dead: only the weak refs in ContextCleaner remain
-    assert(awaitBelow(floor + 32L * Mb, 30000),
-      s"dead broadcasts not reclaimed: ${DriverGuard.broadcastBytes} bytes " +
-        s"still held (floor $floor)")
+    assert(awaitBelow(32L * Mb, 30000, fixtureBytes),
+      s"dead broadcasts not reclaimed: $fixtureBytes fixture bytes still held")
   }
 
   test("admit passes immediately when below the watermark") {

@@ -2,18 +2,11 @@ package graft
 
 import graft.Expectations._
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Expectations — the batched dbt-test engine: correct violation counts,
   * dbt null semantics, and the one-job property that makes it viable where
   * dbt's one-SELECT-per-test is N full scans. */
-class ExpectationsSpec extends AnyFunSuite {
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExpectationsSpec extends SparkSpec {
   private def df = {
     val s = spark; import s.implicits._
     Seq(

@@ -1,23 +1,16 @@
 package graft
 
 import graft.functions.FreqItemsSketch
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Misra-Gries frequent-items TypedImperativeAggregate: the no-false-negative
   * guarantee (every item with true frequency > 2N/capacity is present), the
   * error-bound invariant (lb ≤ true ≤ ub), merge correctness across
   * partitionings, and the exact-when-room case. */
-class FreqItemsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    FreqItemsSketch.register(s)
-    s
+class FreqItemsSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    FreqItemsSketch.register(spark)
   }
 
   /** Zipf-ish stream: item k appears ~N/k²-ish times via pmod trickery —

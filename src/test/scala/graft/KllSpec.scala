@@ -2,23 +2,16 @@ package graft
 
 import graft.functions.KllSketch
 import graft.operators.ExactQuantile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** KLL quantile sketch + sketch-narrowed exact percentiles: the certified
   * rank-error bound must hold (that certificate is what makes the exact
   * second pass sound), the summary must stay bounded, and ExactQuantile
   * must agree with Spark's own full-sort percentile_cont to the last bit. */
-class KllSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    KllSketch.register(s)
-    s
+class KllSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    KllSketch.register(spark)
   }
 
   test("certified rank error bound holds on a shuffled uniform stream") {

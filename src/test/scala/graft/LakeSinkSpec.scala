@@ -3,19 +3,11 @@ package graft
 import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Streams.lakeSink — the streaming event-lake landing loop: microbatches
   * append into the date-partitioned layout, files accrete, and the
   * in-pipeline compaction collapses them back without losing a row. */
-class LakeSinkSpec extends AnyFunSuite {
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LakeSinkSpec extends SparkSpec {
   test("appends accrete small files; scheduled compaction collapses them, row-exact") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

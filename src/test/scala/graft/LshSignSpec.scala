@@ -2,22 +2,16 @@ package graft
 
 import graft.functions.LshSign
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Native LshSign expression vs the interpreted HOF stack it replaced:
   * exact string equality on the real embeddings and on adversarial double
   * arrays (negatives, zeros, sign-boundary sums), plus analysis-time type
   * checking. The four bucketed similarity queries' oracle hashes are the
   * end-to-end guarantee; this is the targeted unit proof. */
-class LshSignSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    LshSign.register(s)
-    s
+class LshSignSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    LshSign.register(spark)
   }
 
   test("matches the HOF form on the real embeddings (float arrays)") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.MinHash
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** MinHashSketch TypedImperativeAggregate: Jaccard-estimate accuracy against
   * exact set overlap, partition-order invariance (elementwise-min merge is
@@ -10,15 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * sketches is the matching-slot fraction, computed in plain SQL over the
   * result arrays.
   */
-class MinHashSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    MinHash.register(s)
-    s
+class MinHashSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    MinHash.register(spark)
   }
 
   // sentinel-guarded estimate (MinHash.register doc): a slot match only

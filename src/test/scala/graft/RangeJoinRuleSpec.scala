@@ -1,24 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** RewriteRangeJoin optimizer rule: a bare point-in-interval theta join in
   * plain SQL must silently become a binned hash equi-join (same rows, no
   * BroadcastNestedLoopJoin), while joins with an equi conjunct, other join
   * types, and the kill-switch conf are left untouched. */
-class RangeJoinRuleSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may hand back another suite's session (extensions conf
-    // ignored) — the lazy registration path must then kick in, and is
-    // itself part of what this suite exercises
+class RangeJoinRuleSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    val s = spark
+    // the shared session is built without the extensions conf, so the
+    // lazy registration path must kick in — itself part of what this
+    // suite exercises
     graft.plans.AsOf.register(s)
     s.range(400).select(
       date_add(lit(java.sql.Date.valueOf("1995-01-01")),
@@ -30,7 +24,6 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       col("id").as("iid"))
       .withColumn("hi", date_add(col("lo"), (col("iid") % 40).cast("int")))
       .createOrReplaceTempView("rj_intervals")
-    s
   }
 
   private val sql =

@@ -1,20 +1,12 @@
 package graft
 
 import graft.operators.RangeJoin
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Binned point-in-interval join: result-identical to the naive theta join,
   * but planned as a hash equi-join on the bin — never the quadratic
   * BroadcastNestedLoopJoin Spark gives a bare BETWEEN join condition. */
-class RangeJoinSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RangeJoinSpec extends SparkSpec {
   private def points = spark.range(500).select(
     date_add(lit(java.sql.Date.valueOf("1995-01-01")),
       (col("id") * 13 % 900).cast("int")).as("day"),

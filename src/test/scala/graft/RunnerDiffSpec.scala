@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Runner.diff — the recce regression twin (reference pyproject.toml:10,
   * Makefile:54-58): two deliberately-divergent builds must report exact
   * added/removed/changed counts, and identical builds must report clean.
   * All comparisons are multiset-exact (duplicate rows count). */
-class RunnerDiffSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
+class RunnerDiffSpec extends SparkSpec {
   private def mkBuild(dir: String)(tables: (String, org.apache.spark.sql.DataFrame)*): Unit =
     tables.foreach { case (n, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$n")

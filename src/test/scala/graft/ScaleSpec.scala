@@ -1,24 +1,16 @@
 package graft
 
 import graft.operators.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Two-phase global-order rewrite: (a) bit-identical to the single-partition
   * window forms it replaces (row_number / ROWS+RANGE cumsum / rank / ntile,
   * including ties), (b) the five scale-hardened reports carry NO window with
   * an empty partition spec in their optimized plans — the single-partition
   * Exchange the judge flagged cannot appear. */
-class ScaleSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ScaleSpec extends SparkSpec {
   /** Run `body` with the globalOrder small-input threshold pinned: "0"
     * forces the two-phase path (the 100 TB posture), a large value forces
     * the single-window fast path. Restores the session default after. */

@@ -1,9 +1,7 @@
 package graft
 
 import graft.operators.Skew
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew posture evidence (TPC-H keys are uniform; a real corpus's are not):
   * (1) the salted join is result-identical to the plain join while provably
@@ -11,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * actually fires on a deliberately skewed shuffle join (plan carries
   * skew=true), which is the zero-code first line of defence at cluster
   * scale. */
-class SkewSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SkewSpec extends SparkSpec {
   // 60k facts, 50k of them on hot key 7; 100-key dim
   private def facts = spark.range(60000).select(
     when(col("id") < 50000, lit(7L)).otherwise(pmod(col("id"), lit(100L)))

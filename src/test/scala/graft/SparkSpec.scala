@@ -4,17 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite, UTC, small shuffle
-  * fan-out (test data is sf0.001). */
+/** Shared session fixture: the programs' own bench session
+  * ([[Sessions.bench]]) at a fixed 4 cores, so specs see the plans the
+  * programs run (256m broadcast ceilings, UTC) with a small shuffle
+  * fan-out (test data is sf0.001). Specs that pin a plan shape chosen
+  * under another threshold set it inside the spec. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    // managed (bucketed) tables stay out of the checkout
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+    Sessions.bench(cpus = 4)
+  }
 
   lazy val ctx: Ctx = Ctx(spark, "/root/testdata/sf0.001")
 

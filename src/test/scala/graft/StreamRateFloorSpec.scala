@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming throughput floor — the bench contract's events/s leg asserted
   * as a test so a throughput regression (e.g. an interpreted per-row path
@@ -11,17 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on this hardware (local[4]: >15k events/s; the worst stall-contaminated
   * official run still measured 12k at local[32]), so only a real regression
   * or a dead host trips it. */
-class StreamRateFloorSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
+class StreamRateFloorSpec extends SparkSpec {
   test("file-replay hourly aggregation sustains >= 1000 events/s") {
     val sfDir = "/root/testdata/sf0.1"
     val src = streaming.Streams.eventFileStream(spark, sfDir)

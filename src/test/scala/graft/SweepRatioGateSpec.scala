@@ -49,7 +49,7 @@ class SweepRatioGateSpec extends AnyFunSuite {
     val draws = """"draws"\s*:\s*\[(.*?)\]""".r
       .findFirstMatchIn(txt).map(_.group(1))
       .getOrElse(fail(s"no draws array in $path — refresh with the 3-draw " +
-        "protocol (BenchScale pipeSweep x3 or tools/DrawSweep) and keep " +
+        "protocol (BenchScale pipeSweep x3 or graft.tools.Probe isolated) and keep " +
         "per-draw host_page_mbps"))
     val entries = """\{[^}]*\}""".r.findAllIn(draws).toSeq
     assert(entries.nonEmpty, s"empty draws array in $path")
