@@ -145,25 +145,20 @@ object Bench {
     // The driver captures only the last ~2 KB of stdout: a JSON line naming
     // all 84 queries exceeds that and gets truncated at the FRONT, so it
     // never parses (BENCH_r02 "parsed": null). The LAST line is therefore a
-    // compact one — totals plus the slowest queries up to a hard character
-    // budget — and the full per-query map goes to an earlier stdout line and
-    // to BENCH_DETAIL.json next to the build.
+    // compact one (totals, errors and the slowest queries within the 2 KB
+    // budget: [[compactLine]]) and the full per-query map goes to an earlier
+    // stdout line and to BENCH_DETAIL.json next to the build.
     def f(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def f2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val pageMBps = HostProbe.pageMBps()
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // the compact line names each error's class only (its keys and shape
     // are the driver's contract, its size the 2 KB budget); the detail
     // artifact adds the message and the first stack frame
-    def errObj(v: Throwable => String): String =
-      errors.map { case (k, e) => quote(k) + ":" + quote(v(e)) }
-        .mkString("{", ",", "}")
-    val errJson = errObj(_.getClass.getSimpleName)
-    val errDetail = errObj(e =>
-      s"${e.getClass.getSimpleName}: ${e.getMessage} @ " +
+    val errDetail = errors.map { case (k, e) =>
+      quote(k) + ":" + quote(s"${e.getClass.getSimpleName}: ${e.getMessage} @ " +
         e.getStackTrace.headOption.map(_.toString).getOrElse("?"))
+    }.mkString("{", ",", "}")
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val detail =
@@ -173,17 +168,39 @@ object Bench {
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    val budget = 1200 // chars for the "queries" object in the compact line
-    val slowestFirst = results.toSeq.sortBy(-_._2)
-    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    slowestFirst.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + f2(v)
-      if (used + entry.length + 1 <= budget) { shown += entry; used += entry.length + 1 }
-    }
-    val compactQs = shown.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$compactQs,"queries_run":${results.size},"queries_shown":${shown.size},"errors":$errJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}""")
+    println(compactLine(
+      s""""metric":"total","value":${f(total)},"unit":"sec"""",
+      results.toSeq, errors.toSeq.map { case (k, e) => k -> e.getClass.getSimpleName },
+      s""""sf":${quote(sfDir)},"build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps"""))
     spark.stop()
+  }
+
+  /** The compact last stdout line: `head` fields, then the `errors` object
+    * (query -> exception class) and the `queries` object (query -> seconds,
+    * slowest first), then `tail` fields. Both objects share one budget: the
+    * whole line stays within `maxBytes` UTF-8 bytes (the driver keeps the
+    * last ~2 KB of stdout). Every error is offered a place before any
+    * timing — a failed query must never hide behind a fast one — and
+    * `queries_shown` / `errors_not_shown` say how much was left out. */
+  def compactLine(head: String, results: Seq[(String, Double)],
+      errors: Seq[(String, String)], tail: String,
+      maxBytes: Int = 2000): String = {
+    def obj(entries: Seq[String]) = entries.mkString("{", ",", "}")
+    def line(qs: Seq[String], es: Seq[String]) =
+      s"""{$head,"queries":${obj(qs)},"queries_run":${results.size},"queries_shown":${qs.size},"errors":${obj(es)},"errors_not_shown":${errors.size - es.size},"detail":"BENCH_DETAIL.json",$tail}"""
+    def fits(l: String) = l.getBytes("UTF-8").length <= maxBytes
+    def f2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    var es = Vector.empty[String]
+    var qs = Vector.empty[String]
+    errors.foreach { case (k, v) =>
+      val e = quote(k) + ":" + quote(v)
+      if (fits(line(qs, es :+ e))) es :+= e
+    }
+    results.sortBy(-_._2).foreach { case (k, v) =>
+      val q = quote(k) + ":" + f2(v)
+      if (fits(line(qs :+ q, es))) qs :+= q
+    }
+    line(qs, es)
   }
 
   /** The bench action: bit_xor of every row's xxhash64 over all columns

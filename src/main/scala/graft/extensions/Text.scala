@@ -1076,31 +1076,31 @@ object Text {
   /** Repetition-based quality signals (the Gopher/FineWeb "repetitive
     * document" filters): unique-token ratio, the most frequent token's and
     * bigram's share of the document, and the fraction of trigram occurrences
-    * that are in-document repeats. Each signal is a per-(doc, n-gram)
-    * count-then-per-doc rollup — two partial-aggregatable groupBys per
-    * n-gram order, all keyed on doc_id, no joins across documents. */
+    * that are in-document repeats. Every signal is per document, so the
+    * whole query is one map-side pass: one documents scan, one tokenization
+    * and the native [[graft.functions.NgramRepStats]] kernel, which counts
+    * tokens, bigrams and trigrams in one loop per document — no exchange, no
+    * join. Only documents with at least one token get a row; a document too
+    * short for bigrams or trigrams has a NULL share for that order (the
+    * kernel's 0 count goes through nullifZero). */
   def repetition(ctx: Ctx): DataFrame = {
-    val bigramsOfToks = "ngrams(toks, 2, 1)"
-    def stats(gram: Column, n: String, extra: Seq[Column]) =
-      docsTok(ctx).select(col("doc_id"), explode(gram).as("g"))
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
-        .groupBy("doc_id").agg(sum("tf").as(n), extra: _*)
-    val tok = stats(col("toks"), "n_tokens", Seq(
-      count(lit(1)).as("n_unique_tokens"), max("tf").as("top_tok_tf")))
-    val bi = stats(expr(bigramsOfToks), "n_bigrams", Seq(max("tf").as("top_bigram_tf")))
-    val tri = stats(expr(shinglesOfToks), "n_trigrams", Seq(
-      sum(when(col("tf") > 1, col("tf")).otherwise(lit(0L))).as("dup_trigram_occ")))
-    tok.join(bi, Seq("doc_id"), "left").join(tri, Seq("doc_id"), "left")
+    def s(f: String) = col("s." + f)
+    val topBigramShare = dv(s("top_bigram_tf"), nullifZero(s("n_bigrams")))
+    val dupTrigramFrac = dv(s("dup_trigram_occ"), nullifZero(s("n_trigrams")))
+    // size(toks) > 0, asked of the text: a text has a token iff it holds a
+    // character outside the \s class ws_tokens splits on (lowercasing maps
+    // no character into that class). A filter on toks itself is pushed
+    // below the projection with toks inlined, tokenizing every row twice.
+    docsTok(ctx).where(col("text").rlike("\\S"))
+      .select(col("doc_id"), expr("ngram_rep_stats(toks)").as("s"))
       .select(
-        col("doc_id"), col("n_tokens"), col("n_unique_tokens"),
-        dv(col("n_unique_tokens"), nullifZero(col("n_tokens"))).as("unique_token_ratio"),
-        dv(col("top_tok_tf"), nullifZero(col("n_tokens"))).as("top_token_share"),
-        dv(col("top_bigram_tf"), nullifZero(col("n_bigrams"))).as("top_bigram_share"),
-        dv(coalesce(col("dup_trigram_occ"), lit(0L)),
-          nullifZero(col("n_trigrams"))).as("dup_trigram_frac"),
-        (dv(col("top_bigram_tf"), nullifZero(col("n_bigrams"))) > 0.1 ||
-          dv(coalesce(col("dup_trigram_occ"), lit(0L)),
-            nullifZero(col("n_trigrams"))) > 0.5).as("is_repetitive"))
+        col("doc_id"), s("n_tokens").as("n_tokens"),
+        s("n_unique_tokens").as("n_unique_tokens"),
+        dv(s("n_unique_tokens"), nullifZero(s("n_tokens"))).as("unique_token_ratio"),
+        dv(s("top_tok_tf"), nullifZero(s("n_tokens"))).as("top_token_share"),
+        topBigramShare.as("top_bigram_share"),
+        dupTrigramFrac.as("dup_trigram_frac"),
+        (topBigramShare > 0.1 || dupTrigramFrac > 0.5).as("is_repetitive"))
   }
 
   /** Sub-document (chunk-level) exact dedup: non-overlapping `chunkTokens`-

@@ -271,9 +271,9 @@ object ArgmaxDot {
   /** Register `argmax_dot` + `argmax_cosine` for SQL text / expr(...).
     * Idempotent. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_dot", exprs => ArgmaxDot(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_cosine", exprs => ArgmaxCosine(exprs(0), exprs(1)), "built-in")
+    Natives.define(spark, "argmax_dot")(exprs =>
+      ArgmaxDot(exprs(0), exprs(1), exprs(2)))
+    Natives.define(spark, "argmax_cosine")(exprs =>
+      ArgmaxCosine(exprs(0), exprs(1)))
   }
 }

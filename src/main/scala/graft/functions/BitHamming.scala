@@ -62,6 +62,5 @@ object BitHamming {
   /** Register `bit_hamming` in the session's function registry so it is
     * usable from SQL text and `expr(...)`. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bit_hamming", exprs => BitHamming(exprs(0), exprs(1)), "built-in")
+    Natives.define(spark, "bit_hamming")(exprs => BitHamming(exprs(0), exprs(1)))
 }

@@ -109,6 +109,5 @@ case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   /** Register `cosine_sim` for SQL text / expr(...). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
+    Natives.define(spark, "cosine_sim")(exprs => CosineSim(exprs(0), exprs(1)))
 }

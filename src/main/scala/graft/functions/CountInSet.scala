@@ -76,15 +76,14 @@ object CountInSet {
 
   /** Register `count_in_set` for expr(...) use. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_in_set", exprs => {
-        val words = exprs(1) match {
-          case Literal(s: UTF8String, StringType) =>
-            s.toString.split(",").toSeq
-          case other => throw new IllegalArgumentException(
-            "count_in_set: words must be a comma-joined string literal, got "
-              + other)
-        }
-        CountInSet(exprs.head, words)
-      }, "built-in")
+    Natives.define(spark, "count_in_set")(exprs => {
+      val words = exprs(1) match {
+        case Literal(s: UTF8String, StringType) =>
+          s.toString.split(",").toSeq
+        case other => throw new IllegalArgumentException(
+          "count_in_set: words must be a comma-joined string literal, got "
+            + other)
+      }
+      CountInSet(exprs.head, words)
+    })
 }

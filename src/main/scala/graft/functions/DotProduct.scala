@@ -98,6 +98,5 @@ case class DotProduct(left: Expression, right: Expression)
 object DotProduct {
   /** Register `dot_product` for SQL text / expr(...). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+    Natives.define(spark, "dot_product")(exprs => DotProduct(exprs(0), exprs(1)))
 }

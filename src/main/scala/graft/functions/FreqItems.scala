@@ -172,15 +172,12 @@ object FreqItemsSketch {
   /** Register `freq_items(col[, capacity])` for SQL text / expr(...).
     * Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items",
-      exprs => {
-        val cap = exprs.lift(1) match {
-          case Some(Literal(v: Int, IntegerType)) => v
-          case Some(other) => other.eval(null).toString.toInt
-          case None => 4096
-        }
-        FreqItemsSketch(exprs.head, cap).toAggregateExpression()
-      },
-      "built-in")
+    Natives.define(spark, "freq_items")(exprs => {
+      val cap = exprs.lift(1) match {
+        case Some(Literal(v: Int, IntegerType)) => v
+        case Some(other) => other.eval(null).toString.toInt
+        case None => 4096
+      }
+      FreqItemsSketch(exprs.head, cap).toAggregateExpression()
+    })
 }

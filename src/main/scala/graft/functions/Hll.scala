@@ -95,8 +95,6 @@ object Hll {
   /** Register `hll_approx_count_distinct(col)` for SQL text / expr(...).
     * Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_approx_count_distinct",
-      exprs => HyperLogLog(exprs.head).toAggregateExpression(),
-      "built-in")
+    Natives.define(spark, "hll_approx_count_distinct")(exprs =>
+      HyperLogLog(exprs.head).toAggregateExpression())
 }

@@ -182,15 +182,12 @@ object KllSketch {
 
   /** Register `kll_sketch(col[, k])` for SQL text / expr(...). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch",
-      exprs => {
-        val kk = exprs.lift(1) match {
-          case Some(Literal(v: Int, IntegerType)) => v
-          case Some(other) => other.eval(null).toString.toInt
-          case None => 512
-        }
-        KllSketch(exprs.head, kk).toAggregateExpression()
-      },
-      "built-in")
+    Natives.define(spark, "kll_sketch")(exprs => {
+      val kk = exprs.lift(1) match {
+        case Some(Literal(v: Int, IntegerType)) => v
+        case Some(other) => other.eval(null).toString.toInt
+        case None => 512
+      }
+      KllSketch(exprs.head, kk).toAggregateExpression()
+    })
 }

@@ -139,16 +139,13 @@ object LshSign {
     * Occupancy rule at scale: bits ~ log2(N / target bucket size), the
     * same fix the 64-bit SimHash widening applied to near-dup chunks. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_sign",
-      exprs => {
-        def lit(e: Expression, default: Int): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => other.eval(null).toString.toInt
-        }
-        val bits = exprs.lift(1).map(lit(_, 8)).getOrElse(8)
-        val mod = exprs.lift(2).map(lit(_, 7)).getOrElse(7)
-        LshSign(exprs.head, bits, mod)
-      },
-      "built-in")
+    Natives.define(spark, "lsh_sign")(exprs => {
+      def lit(e: Expression, default: Int): Int = e match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => other.eval(null).toString.toInt
+      }
+      val bits = exprs.lift(1).map(lit(_, 8)).getOrElse(8)
+      val mod = exprs.lift(2).map(lit(_, 7)).getOrElse(7)
+      LshSign(exprs.head, bits, mod)
+    })
 }

@@ -123,12 +123,9 @@ object Md5Mins {
 
   /** Register `min_md5`, `band_min_md5s` for expr(...) use. Idempotent. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "min_md5", exprs => MinMd5(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "band_min_md5s", exprs => BandMinMd5s(exprs.head,
-        intLit(exprs(1), "band_min_md5s", "bands")), "built-in")
+    Natives.define(spark, "min_md5")(exprs => MinMd5(exprs.head))
+    Natives.define(spark, "band_min_md5s")(exprs => BandMinMd5s(exprs.head,
+        intLit(exprs(1), "band_min_md5s", "bands")))
   }
 }
 

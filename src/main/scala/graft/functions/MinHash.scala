@@ -109,8 +109,6 @@ object MinHash {
     *   p -> p)) / size(a)`.
     * Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sketch",
-      exprs => MinHashSketch(exprs.head).toAggregateExpression(),
-      "built-in")
+    Natives.define(spark, "minhash_sketch")(exprs =>
+      MinHashSketch(exprs.head).toAggregateExpression())
 }

@@ -126,6 +126,5 @@ object MinHashSig16 {
 
   /** Register `minhash16_sig` for SQL text / `expr(...)` use. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash16_sig", exprs => MinHashSig16(exprs(0)), "built-in")
+    Natives.define(spark, "minhash16_sig")(exprs => MinHashSig16(exprs(0)))
 }

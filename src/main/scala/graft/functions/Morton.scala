@@ -75,6 +75,5 @@ object MortonCode {
 
   /** Register `zorder2(a, b)` for SQL text / expr(...). Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder2", exprs => MortonCode(exprs(0), exprs(1)), "built-in")
+    Natives.define(spark, "zorder2")(exprs => MortonCode(exprs(0), exprs(1)))
 }

@@ -83,6 +83,5 @@ object OrderedPairs {
 
   /** Register `ordered_pairs` for expr(...) use. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ordered_pairs", exprs => OrderedPairs(exprs.head), "built-in")
+    Natives.define(spark, "ordered_pairs")(exprs => OrderedPairs(exprs.head))
 }

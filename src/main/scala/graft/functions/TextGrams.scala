@@ -3,11 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd replacements for the text layer's higher-order-function
@@ -33,10 +34,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[NgramMd5s]] == same windows, each element md5-hex'd — the digest is
   *    fed the gram's UTF8 bytes directly (token bytes + ' ' separators), so
   *    the 32-hex key never materializes the gram string at all.
+  *  - [[NgramRepStats]] == per document with size(toks) > 0, the counts of
+  *                     explode(g) -> groupBy(doc_id, g).agg(count as tf)
+  *                       -> groupBy(doc_id).agg(sum(tf), ...)
+  *                     for g = toks, ngrams(toks, 2, 1), ngrams(toks, 3, 1):
+  *                     n_tokens = sum(tf), n_unique_tokens = count(*),
+  *                     top_tok_tf = max(tf); n_bigrams = sum(tf),
+  *                     top_bigram_tf = max(tf); n_trigrams = sum(tf),
+  *                     dup_trigram_occ = sum(tf where tf > 1) — with 0, not
+  *                     NULL, for an order the document is too short for.
+  *    (n-grams are counted by token-id tuple, which equals counting the
+  *    space-joined strings for whitespace tokens: they hold no space and
+  *    are never null; pinned by RepStatsSpec)
   *
   * Null semantics match the composed forms where they are consumed: a null
-  * token array yields null, and every call site explodes the result, where
-  * null and array() both produce zero rows.
+  * token array yields null, and every array call site explodes the result,
+  * where null and array() both produce zero rows (ngram_rep_stats' one call
+  * site keeps only size(toks) > 0).
   */
 object TextGrams {
 
@@ -132,21 +146,99 @@ object TextGrams {
       s"$fn: $arg must be an integer literal, got $other")
   }
 
-  /** Register `ws_tokens`, `ngrams`, `ngram_md5s` for expr(...) use.
-    * Idempotent (createOrReplaceTempFunction). */
+  /** The struct [[NgramRepStats]] returns: seven non-null counts. */
+  val repStatsType: StructType = StructType(Seq(
+    "n_tokens", "n_unique_tokens", "top_tok_tf", "n_bigrams", "top_bigram_tf",
+    "n_trigrams", "dup_trigram_occ").map(StructField(_, LongType, nullable = false)))
+
+  /** Token, bigram and trigram counts of one document in one loop over its
+    * token array. Every counting map is exact: a token's identity is its
+    * bytes (UTF8String equality, a null element is one more identity), each
+    * token gets a dense id, a bigram is the pair of its token ids packed in
+    * a long, and a trigram the pair (bigram id, third token id) packed the
+    * same way — so no two distinct n-grams can share a count. */
+  def repStats(arr: ArrayData): InternalRow = {
+    val n = arr.numElements()
+    val tokIds = new java.util.HashMap[UTF8String, Integer](n * 2)
+    val tokTf = new Array[Int](n)
+    val ids = new Array[Int](n)
+    var topTok = 0
+    var i = 0
+    while (i < n) {
+      val s = arr.getUTF8String(i)
+      val known = tokIds.get(s)
+      val id =
+        if (known != null) known.intValue
+        else { val k = tokIds.size; tokIds.put(s, k); k }
+      ids(i) = id
+      tokTf(id) += 1
+      if (tokTf(id) > topTok) topTok = tokTf(id)
+      i += 1
+    }
+    val bi = new LongCounts(n - 1)
+    val biIds = new Array[Int](math.max(n - 1, 0))
+    i = 0
+    while (i < n - 1) {
+      biIds(i) = bi.add((ids(i).toLong << 32) | ids(i + 1))
+      i += 1
+    }
+    val tri = new LongCounts(n - 2)
+    i = 0
+    while (i < n - 2) {
+      tri.add((biIds(i).toLong << 32) | ids(i + 2))
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](n.toLong, tokIds.size.toLong,
+      topTok.toLong, math.max(n - 1, 0).toLong, bi.top.toLong,
+      math.max(n - 2, 0).toLong, tri.repeatedOccurrences))
+  }
+
+  /** Register `ws_tokens`, `ngrams`, `ngram_md5s`, `ngram_rep_stats` for
+    * expr(...) use, once per session ([[Natives.define]]). */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "ws_tokens", exprs => WsTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "ngrams", exprs => Ngrams(exprs.head,
-        intLit(exprs(1), "ngrams", "n"), intLit(exprs(2), "ngrams", "stride")),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "ngram_md5s", exprs => NgramMd5s(exprs.head,
+    Natives.define(spark, "ws_tokens")(exprs => WsTokens(exprs.head))
+    Natives.define(spark, "ngrams")(exprs => Ngrams(exprs.head,
+        intLit(exprs(1), "ngrams", "n"), intLit(exprs(2), "ngrams", "stride")))
+    Natives.define(spark, "ngram_md5s")(exprs => NgramMd5s(exprs.head,
         intLit(exprs(1), "ngram_md5s", "n"),
-        intLit(exprs(2), "ngram_md5s", "stride")),
-      "built-in")
+        intLit(exprs(2), "ngram_md5s", "stride")))
+    Natives.define(spark, "ngram_rep_stats")(exprs => NgramRepStats(exprs.head))
+  }
+}
+
+/** Open-addressing map from a long key to a dense id (first seen, first
+  * numbered) and that id's occurrence count: the per-row n-gram counter of
+  * [[TextGrams.repStats]], sized for at most `max` adds. */
+private[functions] final class LongCounts(max: Int) {
+  private val cap = Integer.highestOneBit(math.max(max, 2) * 2 - 1) << 1
+  private val mask = cap - 1
+  private val keys = new Array[Long](cap)
+  private val slots = new Array[Int](cap) // id + 1; 0 = empty
+  private val counts = new Array[Int](math.max(max, 0))
+  private var size = 0
+  /** The largest count so far. */
+  var top = 0
+
+  /** Count one occurrence of `key`; returns its id. */
+  def add(key: Long): Int = {
+    var h = ((key * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+    while (slots(h) != 0 && keys(h) != key) h = (h + 1) & mask
+    if (slots(h) == 0) { keys(h) = key; size += 1; slots(h) = size }
+    val id = slots(h) - 1
+    counts(id) += 1
+    if (counts(id) > top) top = counts(id)
+    id
+  }
+
+  /** Occurrences of the keys counted more than once. */
+  def repeatedOccurrences: Long = {
+    var sum = 0L
+    var id = 0
+    while (id < size) {
+      if (counts(id) > 1) sum += counts(id)
+      id += 1
+    }
+    sum
   }
 }
 
@@ -218,5 +310,29 @@ case class NgramMd5s(child: Expression, n: Int, stride: Int) extends GramLike {
       s"graft.functions.TextGrams$$.MODULE$$.gramMd5s($c, $n, $stride)")
 
   override protected def withNewChildInternal(newChild: Expression): NgramMd5s =
+    copy(child = newChild)
+}
+
+/** See [[TextGrams.repStats]]. */
+case class NgramRepStats(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = TextGrams.repStatsType
+  override def nullable: Boolean = true
+  override def prettyName: String = "ngram_rep_stats"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got " +
+        other.catalogString)
+  }
+
+  override protected def nullSafeEval(in: Any): Any =
+    TextGrams.repStats(in.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TextGrams$$.MODULE$$.repStats($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): NgramRepStats =
     copy(child = newChild)
 }

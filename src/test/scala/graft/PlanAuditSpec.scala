@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** Physical-plan audit: the properties that make these plans survive a 100×
   * scale-up are asserted, not assumed — predicate pushdown reaches the
@@ -76,6 +78,24 @@ class PlanAuditSpec extends SparkSpec {
           s"scan reads more than needed: $cols")
       }
     }
+  }
+
+  test("text_repetition is one map-side pass: one documents scan, no exchange, no join") {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = extensions.Text.repetition(ctx).queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(!all.exists(_.isInstanceOf[ShuffleExchangeExec]), plan)
+    assert(!all.exists(_.isInstanceOf[BaseJoinExec]), plan)
+    val docScans = all.collect { case f: FileSourceScanExec => f }
+      .filter(_.metadata.get("Location").exists(_.contains("documents")))
+    assert(docScans.size == 1, plan)
+    // and one tokenization: the text is split in one projection only
+    val tokenizing = all.filter(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.WsTokens])))
+    assert(tokenizing.size == 1, plan)
   }
 
   test("rollup is one Expand + one aggregate, no per-level re-scan") {
