@@ -17,12 +17,17 @@ import org.apache.spark.sql.functions._
   *    partition is rebuilt (late rows inside it are picked up), closed
   *    partitions are never touched or read.
   *
-  * 100 TB posture: work per run is proportional to NEW data, not table
-  * size. The hwm filter sits directly above the source scan, so a
-  * date-partitioned source (the normal landing layout for event/order
-  * feeds) prunes to the open partitions; the dynamic-overwrite write
-  * touches only the delta's partition directories. Row counts come from
-  * the written files' metadata, not a recompute of the delta.
+  * What a delta reads: the `partCol >= hwm` filter is applied to the
+  * `source` DataFrame as given, so it prunes only what that plan lets it
+  * reach. [[fctOrdersMonthly]] is `Wh.fctOrders`, which `Store.table`
+  * persists over the persisted `Ods.ordersItems`: the filter sits above
+  * both persists, so the first delta in a session builds and pins the
+  * whole fact, and every delta reads all of it from memory. Work per run
+  * is proportional to the table, not to the new data (ROADMAP item 7 makes
+  * the source a function of the hwm). The write side is incremental: the
+  * dynamic-overwrite write touches only the delta's partition
+  * directories. Row counts come from a read of the written partitions,
+  * not a recompute of the delta.
   */
 object Incremental {
 

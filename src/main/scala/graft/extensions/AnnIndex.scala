@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * 3-6× the packed cost — PERF_NOTES_r10.md §3) and the `aggregate()`
   * higher-order fold (CodegenFallback: interpreted per-row eval, 2.6-3×
   * the unrolled sum at 900k candidates regardless of element type —
-  * tools/AnnServeProbe, PERF_NOTES_r11.md). The unrolled sum adds the
+  * PERF_NOTES_r11.md). The unrolled sum adds the
   * SAME eight decimal(12,9) values the original per-subspace sum() added
   * — decimal addition is exact and order-free, so the output is
   * bit-identical (AnnIndexSpec pins row-identity with annIvfPq).
@@ -501,7 +501,7 @@ object AnnIndex {
     // Unrolled, not an aggregate() fold: higher-order functions are
     // CodegenFallback, and the interpreted per-row eval measured 2.6-3x
     // the cost of this whole-stage-codegen'd sum at 900k candidates
-    // (tools/AnnServeProbe: 8.2 s HOF-decimal vs 2.8-3.6 s unrolled; a
+    // (PERF_NOTES_r11.md: 8.2 s HOF-decimal vs 2.8-3.6 s unrolled; a
     // double-typed fold read 7.8 s, proving the tax is the HOF fallback,
     // not decimal arithmetic — PERF_NOTES_r11.md)
     val adcSum = (0 until 8)

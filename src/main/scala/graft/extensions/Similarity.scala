@@ -84,7 +84,7 @@ object Similarity {
     *     cluster — its members share every sign, so its pair output is
     *     quadratic in cluster size no matter how many bits the grid has.
     *     Measured on the synth corpus (10 planted megaclusters,
-    *     tools/LshProbe): full output 54.0M pairs at SF2 → 1.184B at SF10
+    *     PERF_NOTES_r8.md, SCALE.md): full output 54.0M pairs at SF2 → 1.184B at SF10
     *     (quadratic, 22× on 5× data — this was r7's super-linear
     *     `ann_lsh_buckets_wide` leg); capped output 192k → 330k (1.7× on
     *     5× data, bounded by buckets × cap²/2). The cap is the standard
@@ -642,7 +642,7 @@ object Similarity {
     // aggregate() fold: higher-order functions are CodegenFallback, and
     // the interpreted per-row eval measured 2.6-3x the cost of the
     // whole-stage-codegen'd unrolled expression on 900k candidates
-    // (tools/AnnServeProbe, PERF_NOTES_r11.md — element type is not the
+    // (PERF_NOTES_r11.md — element type is not the
     // tax, the HOF is: a double fold was just as slow). Decimal addition
     // is exact and order-free, so the value is bit-identical to the fold
     // and to the original per-subspace sum() (the DuckDB oracle pins it).

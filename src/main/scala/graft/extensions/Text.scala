@@ -74,7 +74,7 @@ object Text {
         // collect_set straight off the raw pairs: ONE doc-keyed shuffle,
         // with the dedup happening inside the map-side partial sets — the
         // distinct + collect_list form paid a second full pair-sized
-        // exchange for nothing (4x at SF10, tools/ShingleAb; consumers are
+        // exchange for nothing (4x at SF10, PERF_NOTES_r8.md; consumers are
         // order-insensitive: mins / sizes / intersect-size / re-explodes)
         shinglePairs(ctx).groupBy("doc_id")
           // serialized storage: wide string-array rows deserialized are
@@ -311,7 +311,7 @@ object Text {
   private[graft] def minhash16(docArr: DataFrame): DataFrame = {
     // native one-pass expression (functions.MinHashSig16) — the composed
     // transform/array_min form costs ~3x the digest work in array-pass
-    // overhead (measured in tools/MinhashSigAb); value-identical
+    // overhead (measured: PERF_NOTES_r8.md); value-identical
     graft.functions.MinHashSig16.register(docArr.sparkSession)
     docArr.withColumn("hs", expr("minhash16_sig(shingles)"))
       .select(col("doc_id") +: (0 until 16).map(i =>
@@ -483,11 +483,6 @@ object Text {
           nullifZero(count(lit(1)))).as("recall"))
   }
 
-  /** Per-doc 16-bit simhash signature (md5-derived per-token bit votes),
-    * memoized and persisted per (session, sfDir): the signature relation is
-    * tiny (one short string per doc) but costs a full token explode + 16-vote
-    * aggregate to build, and the near-dup chunk SELF-join would otherwise
-    * evaluate that chain once per join side. */
   /** Hex digit -> bit b (0..3) as an IN-list over the digit character: the
     * one form of "extract bit b of a hex digit" that is written IDENTICALLY
     * in Spark and the DuckDB oracle (no conv/from_hex dialect divergence).
@@ -498,72 +493,43 @@ object Text {
     Seq("4", "5", "6", "7", "c", "d", "e", "f"), // bit 2
     Seq("8", "9", "a", "b", "c", "d", "e", "f")) // bit 3
 
-  private def simhashes(ctx: Ctx): DataFrame =
-    graft.Store.memo(ctx, "doc_simhashes") {
-      // 64-bit signature: bit j votes +/-1 by bit (j%4) of md5 hex digit
-      // (j/4). A 16-bit signature was a SCALE BUG: chunk buckets over a
-      // 6/5/5-bit domain (64/32/32 values) hold N/64 docs each, so the
-      // near-dup candidate join grew quadratically — fine at 500 docs,
-      // billions of pairs at 500k. 22/21/21-bit chunk domains make a
-      // bucket collision mean something again at any corpus size.
-      //
-      // Compute shape (the r6→r7 reconciliation — same bits, ~5x less
-      // expression work): (1) natural-language tokens repeat, so reduce to
-      // per-(doc, token-hash) COUNTS first (narrow map-side-combining
-      // shuffle) and weight each vote by cnt — ±1 per occurrence summed
-      // == ±cnt per distinct, integer addition is order-free; (2) decode
-      // each hex digit ONCE into an int column and evaluate the 64 votes
-      // as integer bit-masks, instead of 64 substring+IN-list string
-      // comparisons per row (that form remains in the DuckDB oracle twin,
-      // where it is the dialect-portable spelling — same bits either way).
-      // the documents parquet is a single row group, so WITHOUT an explicit
-      // exchange the whole explode -> md5 -> partial-aggregate chain runs in
-      // ONE task (the map side of the first shuffle); spreading the RAW docs
-      // (a tiny relation) first parallelizes the heavy per-token hashing.
-      // This is simhash-local: the shared shingle consumers keep docsTok's
-      // fuse-into-consumer contract (see the docsTok note).
-      val spread = docs(ctx)
-        .repartition(ctx.spark.sparkContext.defaultParallelism)
-        .withColumn("toks", expr(toksExpr))
-      val tokCnt = spread
-        .select(col("doc_id"), explode(col("toks")).as("tok"))
-        .groupBy(col("doc_id"), md5(col("tok")).as("h"))
-        .agg(count(lit(1)).as("cnt"))
-      val digits = tokCnt.select(
-        col("doc_id") +: col("cnt") +:
-          (0 until 16).map(i => conv(substring(col("h"), i + 1, 1), 16, 10)
-            .cast("int").as(s"d$i")): _*)
-      val voteCols = (0 until 64).map { j =>
-        sum(when(col(s"d${j / 4}").bitwiseAND(lit(1 << (j % 4))) > 0, col("cnt"))
-          .otherwise(-col("cnt"))).as(s"v$j")
-      }
-      val votes = digits.groupBy("doc_id").agg(voteCols.head, voteCols.tail: _*)
-      val sig = graft.Store.track(ctx.spark, votes.select(
-        col("doc_id"),
-        concat((0 until 64).map(j =>
-          when(col(s"v$j") >= 0, "1").otherwise("0")): _*).as("simhash"))
-        .persist())
-      // EAGER fill: consumers (the bucket join, the 3-chunk near-dup join)
-      // embed this relation on BOTH join sides — left lazy, each branch
-      // would carry (and codegen-compile) the whole 64-aggregate subtree
-      // again. Filling here compiles it once; consumers plan against the
-      // finished in-memory columnar relation. (Measured: 6.4 s -> ~1.5 s
-      // cold at sf0.1 — the cost was duplicated Janino compilation, not
-      // data.)
-      sig.count()
-      sig
-    }
+  /** Per-doc 64-bit simhash signature (doc_id, sig): one projection of
+    * [[docsTok]] through the native [[graft.functions.Simhash64]] — each
+    * distinct token votes its count into bit j by bit (j % 4) of its md5
+    * hex digit (j / 4). No exchange, no persist, no construction-time
+    * action: the signature is a map-side column of the documents scan,
+    * which each consumer branch recomputes (in one task per scan, as the
+    * documents parquet is one row group) in place of filling, holding and
+    * reading a persisted copy. Documents without a token have no row.
+    * Character j of the 64-character signature is bit 63 - j of `sig`;
+    * [[sigString]] renders it, only in output columns, so every key, chunk
+    * and shuffle carries the long.
+    *
+    * 64 bits, not 16: chunk buckets over a 6/5/5-bit domain held N/64 docs
+    * each, and the near-dup candidate join grew quadratically; 22/21/21-bit
+    * chunk domains make a bucket collision mean something at any corpus
+    * size. */
+  private[graft] def simhashes(ctx: Ctx): DataFrame =
+    // size(toks) > 0, asked of the text (see repetition). The coalesce
+    // never fires after that filter; it makes `sig` non-nullable, so the
+    // isnotnull(sig) a join on it infers folds away instead of being pushed
+    // below this projection with the kernel inlined (two kernel passes).
+    docsTok(ctx).where(col("text").rlike("\\S")).select(col("doc_id"),
+      expr("simhash64(coalesce(toks, cast(array() AS array<string>)))").as("sig"))
+
+  /** The 64-character '0'/'1' signature string of a simhash64 long. */
+  private def sigString(sig: Column): Column = lpad(bin(sig), 64, "0")
 
   /** SimHash (64-bit, md5-derived per-token bit votes): equal-signature
-    * buckets are near-dup groups; one groupBy per token + one per doc. */
+    * buckets are near-dup groups, grouped and joined on the long. */
   def dedupSimhash(ctx: Ctx): DataFrame = {
-    val simhash = simhashes(ctx)
-    simhash
-      .join(simhash.groupBy("simhash").agg(
+    val sim = simhashes(ctx)
+    sim
+      .join(sim.groupBy("sig").agg(
         count(lit(1)).as("bucket_size"), min("doc_id").as("bucket_keep_doc_id")),
-        Seq("simhash"))
-      .select(col("doc_id"), col("simhash"), col("bucket_size"),
-        col("bucket_keep_doc_id"))
+        Seq("sig"))
+      .select(col("doc_id"), sigString(col("sig")).as("simhash"),
+        col("bucket_size"), col("bucket_keep_doc_id"))
   }
 
   /** SimHash near-duplicate pairs within Hamming distance `maxDist`,
@@ -578,7 +544,7 @@ object Text {
     * d(X,Y) ≤ 2), so there is no far-candidate verification mass at all.
     * This replaced the r7 chunk-pigeonhole join whose (chunk_idx,
     * chunk_val) buckets went quadratic on template-concentrated corpora:
-    * measured with `tools/SimhashProbe` at synth SF100 (5M docs), 63 953
+    * measured at synth SF100 (5M docs; PERF_NOTES_r8.md), 63 953
     * docs shared one 21-bit chunk and candidate mass was 38.4B pairs
     * (one reduce task burned 24 min before the leg was killed) vs a true
     * output floor of ~1M pairs. Flip expansion is 65 rows per DISTINCT
@@ -591,17 +557,18 @@ object Text {
     * join each side's doc list.
     *
     * The path is chosen COST-BASED at declaration: one aggregation over
-    * the persisted signature relation computes the chunk join's true
-    * candidate mass Σ occ·(occ−1)/2, and the flip expansion (a fixed
+    * the signature relation computes the chunk join's true candidate mass
+    * Σ occ·(occ−1)/2, and the flip expansion (a fixed
     * 65-rows-per-distinct-signature cost — slower at small N) engages
     * only above `spark.graft.simhash.maxChunkPairs` (default 500M; synth
     * SF10 mass 386M → chunk join 24 s vs flip 56 s, SF100 mass 38.4B →
     * chunk join unbounded vs flip 135 s). Both paths are exact, so the
     * choice never changes the result. Other `maxDist` values always use
-    * the chunk join (exact for ≤ 2 chunks' worth of error). Distance
-    * comes from the native codegen'd [[graft.functions.BitHamming]]. */
+    * the chunk join (exact for ≤ 2 chunks' worth of error). Every key is
+    * the signature long: chunks are its shifts and masks, a flip is one
+    * xor, Hamming distance is `bit_count(a ^ b)`; the strings appear only
+    * in the output projection. */
   def dedupSimhashNear(ctx: Ctx, maxDist: Int = 2): DataFrame = {
-    graft.functions.BitHamming.register(ctx.spark)
     val sim = simhashes(ctx)
     // Cost-based path choice (both paths are EXACT — same result set):
     // the chunk join's cost is the candidate-pair mass Σ occ·(occ−1)/2
@@ -610,28 +577,33 @@ object Text {
     // fixed 65-variants-per-distinct-signature expansion that only wins
     // once the mass explodes (synth SF10: mass 386M → chunk join 24 s vs
     // flip 56 s; SF100: mass 38.4B → chunk join unbounded vs flip 135 s).
-    // One aggregation over the persisted signature relation decides —
-    // the same bounded planning-cost pattern as RangeJoinRule's width
-    // derivation. Override with spark.graft.simhash.maxChunkPairs.
-    val chunks = sim.select(col("doc_id"), col("simhash"), expr(
+    // One aggregation over the signature relation decides — the same
+    // bounded planning-cost pattern as RangeJoinRule's width derivation.
+    // Override with spark.graft.simhash.maxChunkPairs.
+    //
+    // Chunks are signature characters 1-22, 23-43 and 44-64: bits 63..42,
+    // 41..21 and 20..0 of the long.
+    val chunks = sim.select(col("doc_id"), col("sig"), expr(
       """stack(3,
-        |  0, substring(simhash, 1, 22),
-        |  1, substring(simhash, 23, 21),
-        |  2, substring(simhash, 44, 21)) AS (chunk_idx, chunk_val)""".stripMargin))
+        |  0, shiftrightunsigned(sig, 42),
+        |  1, shiftrightunsigned(sig, 21) & 2097151,
+        |  2, sig & 2097151) AS (chunk_idx, chunk_val)""".stripMargin))
+    val hamming = (a: String, b: String) =>
+      bit_count(col(a).bitwiseXOR(col(b))).as("hamming")
     def chunkJoinPath: DataFrame = {
       val cands = chunks
         .select(col("chunk_idx"), col("chunk_val"),
-          col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
+          col("doc_id").as("doc_a"), col("sig").as("sig_a"))
         .join(chunks.select(col("chunk_idx"), col("chunk_val"),
-          col("doc_id").as("doc_b"), col("simhash").as("sim_b")),
+          col("doc_id").as("doc_b"), col("sig").as("sig_b")),
           Seq("chunk_idx", "chunk_val"))
         .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "sim_a", "doc_b", "sim_b").distinct()
+        .select("doc_a", "sig_a", "doc_b", "sig_b").distinct()
       cands
-        .withColumn("hamming", expr("bit_hamming(sim_a, sim_b)"))
+        .withColumn("hamming", hamming("sig_a", "sig_b"))
         .filter(col("hamming") <= maxDist)
-        .select(col("doc_a"), col("doc_b"), col("sim_a").as("simhash_a"),
-          col("sim_b").as("simhash_b"), col("hamming"))
+        .select(col("doc_a"), col("doc_b"), sigString(col("sig_a")).as("simhash_a"),
+          sigString(col("sig_b")).as("simhash_b"), col("hamming"))
     }
     val maxChunkPairs = ctx.spark.conf
       .get("spark.graft.simhash.maxChunkPairs", "500000000").toLong
@@ -641,75 +613,47 @@ object Text {
       .agg(coalesce(sum(expr("o * (o - 1) div 2")), lit(0L))).head().getLong(0)
     if (maxDist == 2 && mass > maxChunkPairs) {
       // ---- signature-level meet-in-the-middle (exact for d <= 2) ----
-      // Signatures travel as TWO 32-bit longs, not 64-char strings: the
-      // variant self-join is the big shuffle (65 rows per distinct sig)
-      // and the long encoding is ~5x narrower per row — at SF100 the
-      // string form spilled ~90 GB and filled the scratch disk.
-      val sigs = sim.select("simhash").distinct().select(
-        expr("cast(conv(substring(simhash, 1, 32), 2, 10) as bigint)").as("hi"),
-        expr("cast(conv(substring(simhash, 33, 32), 2, 10) as bigint)").as("lo"))
-      // j = 0 keeps the signature itself; j in 1..32 flips a hi bit,
-      // 33..64 a lo bit
-      val variants = sigs
-        .select(col("hi"), col("lo"), explode(expr("sequence(0, 64)")).as("j"))
+      // j = 0 keeps the signature itself; j in 1..64 flips bit 64 - j
+      val variants = sim.select("sig").distinct()
+        .select(col("sig"), explode(expr("sequence(0, 64)")).as("j"))
         .select(
-          when(col("j").between(1, 32),
-            expr("hi ^ shiftleft(1L, 32 - j)")).otherwise(col("hi")).as("vhi"),
-          when(col("j") >= 33,
-            expr("lo ^ shiftleft(1L, 64 - j)")).otherwise(col("lo")).as("vlo"),
-          col("hi"), col("lo"))
-      // Self-join kept over a groupBy-bucket formulation after measuring:
-      // tools/SimhashJoinAb at SF100 reads 43.2-44.5 s (join) vs
-      // 41.0-47.4 s (radius-1-ball buckets + bounded double explode),
-      // identical pair sets — Spark reuses the variant exchange across
-      // the self-join sides, so the "second shuffle" the bucket form
-      // saves does not exist in the executed plan.
-      val colliding = variants
-        .select(col("vhi"), col("vlo"), col("hi").as("hi_a"), col("lo").as("lo_a"))
-        .join(variants
-          .select(col("vhi"), col("vlo"), col("hi").as("hi_b"), col("lo").as("lo_b")),
-          Seq("vhi", "vlo"))
-        .filter(struct(col("hi_a"), col("lo_a")) < struct(col("hi_b"), col("lo_b")))
-        .select("hi_a", "lo_a", "hi_b", "lo_b").distinct()
-      def sigStr(hi: String, lo: String) =
-        concat(lpad(bin(col(hi)), 32, "0"), lpad(bin(col(lo)), 32, "0"))
-      // exact Hamming on the long encoding (== bit_hamming over the bin
-      // strings, since those ARE the 64 bits); collisions are all <= 2,
-      // the filter is kept as the documented invariant
-      val sigPairs = colliding
-        .withColumn("hamming",
-          (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
-            .cast("int"))
+          when(col("j") === 0, col("sig"))
+            .otherwise(expr("sig ^ shiftleft(1L, 64 - j)")).as("v"),
+          col("sig"))
+      // Self-join kept over a groupBy-bucket formulation after measuring
+      // at SF100 (PERF_NOTES_r8.md, OPTIMIZATION_r13.md): 43.2-44.5 s
+      // (join) vs 41.0-47.4 s (radius-1-ball buckets + bounded double
+      // explode), identical pair sets — Spark reuses the variant exchange
+      // across the self-join sides, so the "second shuffle" the bucket
+      // form saves does not exist in the executed plan. Any total order
+      // on the longs keeps one orientation of each pair.
+      val sigPairs = variants.select(col("v"), col("sig").as("sig_a"))
+        .join(variants.select(col("v"), col("sig").as("sig_b")), Seq("v"))
+        .filter(col("sig_a") < col("sig_b"))
+        .select("sig_a", "sig_b").distinct()
+        .withColumn("hamming", hamming("sig_a", "sig_b"))
+        // collisions are all <= 2; the filter is the documented invariant
         .filter(col("hamming") <= maxDist)
-      // doc expansion: cross-sig pairs from each side's doc list. The
-      // joins key on the (hi, lo) long pairs — 16 bytes of key through
-      // the expansion shuffles instead of a 64-char signature string;
-      // the output strings are rebuilt in the final projection, which
-      // runs in the same stage as the last join (no shuffle carries them)
-      val simL = sim.select(col("doc_id"),
-        expr("cast(conv(substring(simhash, 1, 32), 2, 10) as bigint)").as("hi"),
-        expr("cast(conv(substring(simhash, 33, 32), 2, 10) as bigint)").as("lo"))
+      // doc expansion: cross-sig pairs from each side's doc list, keyed on
+      // the longs; the output strings are rendered in the final
+      // projection, in the same stage as the last join
       val cross = sigPairs
-        .join(simL.select(col("doc_id").as("da"),
-          col("hi").as("hi_a"), col("lo").as("lo_a")), Seq("hi_a", "lo_a"))
-        .join(simL.select(col("doc_id").as("db"),
-          col("hi").as("hi_b"), col("lo").as("lo_b")), Seq("hi_b", "lo_b"))
+        .join(sim.select(col("doc_id").as("da"), col("sig").as("sig_a")), Seq("sig_a"))
+        .join(sim.select(col("doc_id").as("db"), col("sig").as("sig_b")), Seq("sig_b"))
         .select(
           least(col("da"), col("db")).as("doc_a"),
           greatest(col("da"), col("db")).as("doc_b"),
-          when(col("da") < col("db"), sigStr("hi_a", "lo_a"))
-            .otherwise(sigStr("hi_b", "lo_b")).as("simhash_a"),
-          when(col("da") < col("db"), sigStr("hi_b", "lo_b"))
-            .otherwise(sigStr("hi_a", "lo_a")).as("simhash_b"),
+          sigString(when(col("da") < col("db"), col("sig_a"))
+            .otherwise(col("sig_b"))).as("simhash_a"),
+          sigString(when(col("da") < col("db"), col("sig_b"))
+            .otherwise(col("sig_a"))).as("simhash_b"),
           col("hamming"))
       // … plus distance-0 pairs within each identical-signature group
-      // (same long-keyed join + rebuild-at-output as the cross expansion)
-      val d0 = simL.select(col("doc_id").as("doc_a"), col("hi"), col("lo"))
-        .join(simL.select(col("doc_id").as("doc_b"), col("hi"), col("lo")),
-          Seq("hi", "lo"))
+      val d0 = sim.select(col("doc_id").as("doc_a"), col("sig"))
+        .join(sim.select(col("doc_id").as("doc_b"), col("sig")), Seq("sig"))
         .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), sigStr("hi", "lo").as("simhash_a"),
-          sigStr("hi", "lo").as("simhash_b"), lit(0).as("hamming"))
+        .select(col("doc_a"), col("doc_b"), sigString(col("sig")).as("simhash_a"),
+          sigString(col("sig")).as("simhash_b"), lit(0).as("hamming"))
       cross.unionByName(d0)
     } else chunkJoinPath // small mass, or a maxDist the flip path doesn't cover
   }
@@ -1393,7 +1337,7 @@ object Text {
     *    one-row relation and the candidate filter a broadcast semi join);
     *  - [[heavyHittersEager]] runs pass 1 as a scalar action at
     *    construction and filters with an InSet predicate — 3.5-4x cheaper
-    *    per token row (tools/HeavyHittersAb), for callers that time
+    *    per token row (PERF_NOTES_r10.md), for callers that time
     *    construction+action together.
     * The recount's exchange stays bounded by the ≤cap matched groups
     * either way; the sketch's order-invariance (FreqItemsSpec) keeps both
@@ -1405,7 +1349,7 @@ object Text {
     // whole pipeline is a lazy plan: no job runs until the consumer acts
     // (HeavyHittersLazySpec pins zero-jobs-at-construction). The candidate
     // filter is then a broadcast semi join — per-token it measures 3.5-4x
-    // the InSet predicate's cost (tools/HeavyHittersAb, PERF_NOTES_r10 §2),
+    // the InSet predicate's cost (PERF_NOTES_r10.md §2),
     // which is why the eager variant exists; this is the default because a
     // plan that runs jobs at CONSTRUCTION time under-measures in any
     // consumer that builds plans outside its timed window (the r11 scar).
@@ -1428,7 +1372,7 @@ object Text {
     * CONSTRUCTION, and pass 2 filters with the collected candidates as an
     * InSet predicate — measured 3.5-4x cheaper per token row than the lazy
     * semi-join form doing identical work (17-22 s vs ~5 s on 248M tokens
-    * at SF100; tools/HeavyHittersAb). Same output, same guarantee. The
+    * at SF100; PERF_NOTES_r10.md, BENCH_HEAVY_HITTERS_ZIPF.json). Same output, same guarantee. The
     * eagerness is in the NAME: callers timing this must start their clock
     * before construction (the Registry bench/verify paths do). */
   def heavyHittersEager(ctx: Ctx, denom: Int = 500, cap: Int = 8192): DataFrame = {

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * whole-stage-codegen'd expression eval: the plan becomes a broadcast
   * join against ONE packed row per key (or a literal) followed by a
   * map-side projection — no scored-row materialization, no aggregate, no
-  * exchange. Measured on the SF100 build (tools/AnnScaleProbe,
+  * exchange. Measured on the SF100 build (BENCH_ANN.json,
   * PERF_NOTES_r12.md): the encode stage collapses from the dominant term
   * to scan-speed.
   *

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * higher-order-function form. HOFs are CodegenFallback (interpreted
   * per-row lambda dispatch + an intermediate array per row) — measured at
   * 2.6-3x the cost of the equivalent codegen'd loop on the ANN serving
-  * path (tools/AnnServeProbe, PERF_NOTES_r11.md), and the PQ ENCODE pass
+  * path (PERF_NOTES_r11.md), and the PQ ENCODE pass
   * evaluates a dot per (vector, subspace, codeword) = n·subs·256 rows, the
   * single biggest term of the 2M-vector index build this expression was
   * added for (r11 verdict item 4).

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the 128-char digest concat, min'd per slice position.
   *
   * Built-ins CAN express this (one digest transform + 16 slice/min array
-  * passes — see tools/MinhashSigAb), but the 17 higher-order passes cost
+  * passes — see PERF_NOTES_r8.md), but the 17 higher-order passes cost
   * ~3x the digest work itself on the SF100 corpus: every pass re-walks the
   * array and allocates per-element slices. Here the mins are tracked as
   * raw digest bytes in a tight loop (hex-lexicographic order == unsigned

@@ -46,11 +46,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (n-grams are counted by token-id tuple, which equals counting the
   *    space-joined strings for whitespace tokens: they hold no space and
   *    are never null; pinned by RepStatsSpec)
+  *  - [[Simhash64]] == per document with size(toks) > 0, the 64-character
+  *                     signature of
+  *                     explode(toks) -> groupBy(doc_id, md5(tok)).agg(count
+  *                       as cnt) -> groupBy(doc_id).agg(v_j = sum(+cnt where
+  *                       bit (j % 4) of md5 hex digit (j / 4) is set, else
+  *                       -cnt)) -> char j = v_j >= 0 ? '1' : '0'
+  *                     as a bigint whose bit 63 - j is character j, so
+  *                     lpad(bin(sig), 64, '0') renders the string (the
+  *                     composed form is kept as the reference in
+  *                     SimhashSpec; the oracle twins render the string)
   *
   * Null semantics match the composed forms where they are consumed: a null
-  * token array yields null, and every array call site explodes the result,
-  * where null and array() both produce zero rows (ngram_rep_stats' one call
-  * site keeps only size(toks) > 0).
+  * token array yields null (and only a null one, for simhash64, whose
+  * nullability is its input's), and every array call site explodes the
+  * result, where null and array() both produce zero rows (ngram_rep_stats'
+  * and simhash64's call sites keep only size(toks) > 0).
   */
 object TextGrams {
 
@@ -193,8 +204,54 @@ object TextGrams {
       math.max(n - 2, 0).toLong, tri.repeatedOccurrences))
   }
 
-  /** Register `ws_tokens`, `ngrams`, `ngram_md5s`, `ngram_rep_stats` for
-    * expr(...) use, once per session ([[Natives.define]]). */
+  /** The 64-bit simhash of one document in one loop over its token array:
+    * each distinct token (a null element is one more identity, whose md5
+    * is NULL and so votes against every bit) is counted, then votes its
+    * count into bit j — plus where bit (j % 4) of its md5 hex digit (j / 4)
+    * is set, minus where it is not. Hex digit d is the high nibble of
+    * digest byte d / 2 when d is even and the low nibble when odd, so bit
+    * (j % 4) of digit (j / 4) is bit ((j % 8) ^ 4) of byte j / 8. A vote sum
+    * >= 0 sets signature bit 63 - j; an empty array sets all 64. */
+  def simhash64(arr: ArrayData): Long = {
+    val n = arr.numElements()
+    val tf = new java.util.HashMap[UTF8String, Array[Int]](n * 2)
+    var i = 0
+    while (i < n) {
+      val s = arr.getUTF8String(i)
+      val c = tf.get(s)
+      if (c != null) c(0) += 1 else tf.put(s, Array(1))
+      i += 1
+    }
+    val votes = new Array[Long](64)
+    val md = md5Local.get()
+    val it = tf.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      val cnt = e.getValue()(0).toLong
+      if (e.getKey == null) {
+        var j = 0
+        while (j < 64) { votes(j) -= cnt; j += 1 }
+      } else {
+        val dg = md.digest(e.getKey.getBytes)
+        var j = 0
+        while (j < 64) {
+          if (((dg(j >>> 3) >>> ((j & 7) ^ 4)) & 1) != 0) votes(j) += cnt
+          else votes(j) -= cnt
+          j += 1
+        }
+      }
+    }
+    var sig = 0L
+    var j = 0
+    while (j < 64) {
+      if (votes(j) >= 0) sig |= 1L << (63 - j)
+      j += 1
+    }
+    sig
+  }
+
+  /** Register `ws_tokens`, `ngrams`, `ngram_md5s`, `ngram_rep_stats`,
+    * `simhash64` for expr(...) use, once per session ([[Natives.define]]). */
   def register(spark: SparkSession): Unit = {
     Natives.define(spark, "ws_tokens")(exprs => WsTokens(exprs.head))
     Natives.define(spark, "ngrams")(exprs => Ngrams(exprs.head,
@@ -203,6 +260,7 @@ object TextGrams {
         intLit(exprs(1), "ngram_md5s", "n"),
         intLit(exprs(2), "ngram_md5s", "stride")))
     Natives.define(spark, "ngram_rep_stats")(exprs => NgramRepStats(exprs.head))
+    Natives.define(spark, "simhash64")(exprs => Simhash64(exprs.head))
   }
 }
 
@@ -265,22 +323,25 @@ case class WsTokens(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-private[functions] trait GramLike extends UnaryExpression {
+/** A function of one token array (array<string>). */
+private[functions] trait TokenArrayFn extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<string> argument, got " +
+        other.catalogString)
+  }
+}
+
+private[functions] trait GramLike extends TokenArrayFn {
   def n: Int
   def stride: Int
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (n < 1 || stride < 1)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires n >= 1 and stride >= 1, got n=$n stride=$stride")
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> argument, got " +
-          other.catalogString)
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (n < 1 || stride < 1) TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires n >= 1 and stride >= 1, got n=$n stride=$stride")
+    else super.checkInputDataTypes()
 }
 
 /** See [[TextGrams.grams]]. */
@@ -314,17 +375,10 @@ case class NgramMd5s(child: Expression, n: Int, stride: Int) extends GramLike {
 }
 
 /** See [[TextGrams.repStats]]. */
-case class NgramRepStats(child: Expression) extends UnaryExpression {
+case class NgramRepStats(child: Expression) extends TokenArrayFn {
   override def dataType: DataType = TextGrams.repStatsType
   override def nullable: Boolean = true
   override def prettyName: String = "ngram_rep_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got " +
-        other.catalogString)
-  }
 
   override protected def nullSafeEval(in: Any): Any =
     TextGrams.repStats(in.asInstanceOf[ArrayData])
@@ -334,5 +388,21 @@ case class NgramRepStats(child: Expression) extends UnaryExpression {
       s"graft.functions.TextGrams$$.MODULE$$.repStats($c)")
 
   override protected def withNewChildInternal(newChild: Expression): NgramRepStats =
+    copy(child = newChild)
+}
+
+/** See [[TextGrams.simhash64]]. */
+case class Simhash64(child: Expression) extends TokenArrayFn {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash64"
+
+  override protected def nullSafeEval(in: Any): Any =
+    TextGrams.simhash64(in.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.TextGrams$$.MODULE$$.simhash64($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Simhash64 =
     copy(child = newChild)
 }

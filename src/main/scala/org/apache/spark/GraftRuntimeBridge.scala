@@ -26,8 +26,12 @@ object GraftRuntimeBridge {
   def driverBroadcastBytes(): Option[Long] =
     Option(SparkEnv.get).map { env =>
       val bm = env.blockManager
+      // getStatus checks the memory store for the block, then reads its
+      // entry: a block removed between the two (a broadcast destroyed by
+      // the ContextCleaner mid-listing) throws an NPE. It holds no bytes.
       bm.getMatchingBlockIds(_.isBroadcast)
-        .flatMap(id => bm.getStatus(id))
+        .flatMap(id =>
+          try bm.getStatus(id) catch { case _: NullPointerException => None })
         .map(_.memSize)
         .sum
     }

@@ -14,7 +14,7 @@ class NativesSpec extends SparkSpec {
 
   /** Every SQL name the graft.functions natives define. */
   private val names = Seq("ws_tokens", "ngrams", "ngram_md5s",
-    "ngram_rep_stats", "min_md5", "band_min_md5s", "count_in_set",
+    "ngram_rep_stats", "simhash64", "min_md5", "band_min_md5s", "count_in_set",
     "cosine_sim", "lsh_sign", "argmax_dot", "argmax_cosine", "dot_product",
     "bit_hamming", "hll_approx_count_distinct", "kll_sketch", "freq_items",
     "minhash_sketch", "minhash16_sig", "ordered_pairs", "zorder2")

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 
@@ -11,13 +12,16 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
   * parquet scan, column pruning shrinks ReadSchema to what the query needs,
   * and snowflake dimension joins broadcast instead of shuffling the fact. */
 class PlanAuditSpec extends SparkSpec {
-  private def scans(plan: SparkPlan): Seq[FileSourceScanExec] = {
-    val expanded = plan.collect {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    expanded.flatMap(_.collect { case f: FileSourceScanExec => f })
+  /** Every node of an executed plan, once: an adaptive plan is entered
+    * through its current plan and a query stage through its stage plan. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case other => other +: other.children.flatMap(nodes)
   }
+
+  private def scans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    nodes(plan).collect { case f: FileSourceScanExec => f }
 
   test("filter pushdown reaches the embeddings parquet scan (ann_brute_force)") {
     val plan = extensions.Similarity.annBruteForce(ctx).queryExecution.executedPlan
@@ -81,21 +85,41 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("text_repetition is one map-side pass: one documents scan, no exchange, no join") {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val plan = extensions.Text.repetition(ctx).queryExecution.executedPlan
+    // an exchange-free plan has no adaptive root: `scans` must still list
+    // its one scan once, not once per ancestor
+    assert(!plan.isInstanceOf[AdaptiveSparkPlanExec], plan)
     val all = nodes(plan)
     assert(!all.exists(_.isInstanceOf[ShuffleExchangeExec]), plan)
     assert(!all.exists(_.isInstanceOf[BaseJoinExec]), plan)
-    val docScans = all.collect { case f: FileSourceScanExec => f }
+    val docScans = scans(plan)
       .filter(_.metadata.get("Location").exists(_.contains("documents")))
     assert(docScans.size == 1, plan)
     // and one tokenization: the text is split in one projection only
     val tokenizing = all.filter(_.expressions.exists(
       _.exists(_.isInstanceOf[graft.functions.WsTokens])))
     assert(tokenizing.size == 1, plan)
+  }
+
+  test("the simhash signature is one map-side projection: no exchange, no persist") {
+    def kernels(p: SparkPlan) = nodes(p).count(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.Simhash64])))
+    val plan = extensions.Text.simhashes(ctx).queryExecution.executedPlan
+    val all = nodes(plan)
+    assert(!all.exists(_.isInstanceOf[ShuffleExchangeExec]), plan)
+    assert(!all.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+    assert(scans(plan).size == 1, plan)
+    assert(kernels(plan) == 1, plan)
+    // its consumers read no persisted relation either, and run the kernel
+    // once per documents scan (two: one per join side): a join's inferred
+    // isnotnull(sig) pushed below the projection would run it twice
+    Seq(extensions.Text.dedupSimhash(ctx), extensions.Text.dedupSimhashNear(ctx))
+      .foreach { df =>
+        val p = df.queryExecution.executedPlan
+        assert(p.isInstanceOf[AdaptiveSparkPlanExec], p)
+        assert(!nodes(p).exists(_.isInstanceOf[InMemoryTableScanExec]), p)
+        assert(scans(p).size == 2 && kernels(p) == 2, p)
+      }
   }
 
   test("rollup is one Expand + one aggregate, no per-level re-scan") {

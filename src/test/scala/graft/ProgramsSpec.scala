@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Anti-drift guard over the main sources: every program builds its
   * session through [[Sessions]] (no second session builder, no second
-  * copy of the broadcast ceiling), and every object with a
-  * `main` is listed under the README's "Programs" heading. */
+  * copy of the broadcast ceiling), every object with a
+  * `main` is listed under the README's "Programs" heading, and every
+  * program a main source cites as `tools/<Name>` exists. */
 class ProgramsSpec extends AnyFunSuite {
 
   private def sources(dir: java.io.File): Seq[java.io.File] =
@@ -41,5 +42,19 @@ class ProgramsSpec extends AnyFunSuite {
     assert(mains.nonEmpty, "no object with a main found")
     val missing = mains.filterNot(p => programs.contains(s"`$p`"))
     assert(missing.isEmpty, s"not in README's Programs list: ${missing.mkString(", ")}")
+  }
+
+  test("every tools/<Name> cited in the main sources exists") {
+    // a retired tool's verdict lives in the file the README's "Retired
+    // tools" table names; cite that file, not the deleted program
+    val exists: String => Boolean = name =>
+      new java.io.File(s"src/main/scala/graft/tools/$name.scala").isFile ||
+        Option(new java.io.File("tools").listFiles()).toSeq.flatten
+          .exists(_.getName.takeWhile(_ != '.') == name)
+    val cited = main.flatMap { case (f, src) =>
+      """tools/([A-Za-z]\w*)""".r.findAllMatchIn(src).map(m => f.getPath -> m.group(1))
+    }.distinct
+    val missing = cited.filterNot { case (_, name) => exists(name) }
+    assert(missing.isEmpty, s"cited tools that do not exist: ${missing.mkString(", ")}")
   }
 }

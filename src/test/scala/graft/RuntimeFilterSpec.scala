@@ -13,13 +13,27 @@ import org.apache.spark.sql.functions._
   * might_contain probe must appear on the fact side of the executed plan.
   */
 class RuntimeFilterSpec extends SparkSpec {
+  // demo-scale thresholds: the default application-side floor is 10 GB
+  private val demoConf = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
+  private var saved = Seq.empty[(String, Option[String])]
+
   override def beforeAll(): Unit = {
     super.beforeAll()
-    val s = spark
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    // demo-scale thresholds: the default application-side floor is 10 GB
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
+    saved = demoConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    demoConf.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  // the session is shared by every suite in the JVM: a bloom probe injected
+  // into later suites' plans would change the plan shapes they pin
+  override def afterAll(): Unit = {
+    saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    super.afterAll()
   }
 
   test("selective dim filter injects a bloom probe on the fact side of a shuffle join") {
