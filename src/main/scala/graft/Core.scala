@@ -49,10 +49,37 @@ final case class Ctx(spark: SparkSession, dir: String) {
         .option("partitions", spark.sparkContext.defaultParallelism)
         .load()
     } else if (name == "events") Ctx.normalizedEvents(spark, s"$dir/$name.parquet")
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else Ctx.parquet(spark, s"$dir/$name.parquet")
 }
 
 object Ctx {
+  /** Parquet source schemas per session, keyed on path and modification
+    * time: inferring a schema runs a footer-reading Spark job, which every
+    * plan constructor would otherwise pay again for every table it reads.
+    * A rewritten source has a new modification time, so it is read again.
+    * The map holds its sessions weakly, and its values do not reference
+    * them, so a stopped session's entries go with it. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, TrieMap[(String, Long), StructType]]()
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing source keeps Spark's own "Path does not exist" error
+    val mtime =
+      try Some(p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p).getModificationTime)
+      catch { case _: java.io.FileNotFoundException => None }
+    mtime.fold(spark.read.parquet(path)) { t =>
+      val perSession = schemas.synchronized {
+        var m = schemas.get(spark)
+        if (m == null) { m = TrieMap.empty; schemas.put(spark, m) }
+        m
+      }
+      spark.read.schema(perSession.getOrElseUpdate((path, t),
+        spark.read.parquet(path).schema)).parquet(path)
+    }
+  }
+
   /** Schema-adaptive events loader — the ONE place `events.ts` is decoded.
     *
     * The testdata generator has shipped `ts` as parquet TIMESTAMP(NANOS)
@@ -200,13 +227,6 @@ object Macros {
   /** money() over a raw parquet double (values carry <= 4 decimal digits, so
     * exact-binary vs shortest-repr rounding agree): plain cast. */
   def money(c: Column): Column = c.cast(Money)
-
-  /** money() over a COMPUTED double (division results — arbitrary digits,
-    * frequent scale-4 ties): Spark's double->decimal cast rounds from the
-    * exact binary value while DuckDB rounds from the shortest decimal
-    * representation. Routing through a string cast makes Spark use the
-    * shortest repr too (Double.toString), matching DuckDB exactly. */
-  def moneyS(c: Column): Column = c.cast(StringType).cast(Money)
 
   /** money() over a decimal expression whose scale exceeds 4: round first so
     * DuckDB's truncating decimal->decimal cast never fires. */

@@ -311,16 +311,4 @@ object Lake {
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
     written.length.toLong
   }
-
-  /** Materialize the hot mid-DAG facts as bucketed tables, each bucketed by
-    * the key its consumers join/aggregate on (the cluster twin of the
-    * Store.table persist boundary). */
-  def materializeFacts(ctx: Ctx, buckets: Int = 8): Unit = {
-    writeBucketed(layers.Ods.ordersItems(ctx), "lake_orders_items",
-      buckets, Seq("order_key"))
-    writeBucketed(layers.Wh.fctOrders(ctx), "lake_fct_orders",
-      buckets, Seq("customer_key"))
-    writeBucketed(layers.Wh.fctOrdersItems(ctx), "lake_fct_orders_items",
-      buckets, Seq("order_key"))
-  }
 }

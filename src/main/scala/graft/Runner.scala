@@ -586,8 +586,4 @@ object Runner {
         (name, mat, cols)
     }.toDF("model", "materialization", "columns")
   }
-
-  /** Write the catalog as one JSON file (the manifest.json moral twin). */
-  def writeManifest(ctx: Ctx, path: String): Unit =
-    manifest(ctx).coalesce(1).write.mode("overwrite").json(path)
 }

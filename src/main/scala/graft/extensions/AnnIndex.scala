@@ -5,85 +5,208 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Persisted IVFADC index — the build-once / query-many production shape
-  * of [[Similarity.annIvfPq]] (reference: the FAISS index-file lifecycle;
-  * the r9 probe measured the build at 564 s for 2M vectors at SF100, which
-  * is exactly the cost a serving path must NOT pay per query batch).
+/** The IVFADC pipeline (FAISS IVF + PQ asymmetric distance) and its
+  * persisted, build-once / query-many index.
   *
-  * [[build]] computes the three index relations plus the rerank corpus and
-  * publishes each as a [[graft.Versioned]] manifest table under `dir`:
+  * The stages live here once, and every ANN query composes them: the
+  * in-memory [[Similarity]] queries over the `embeddings` table and
+  * [[query]] over a published index.
+  *
+  *   - [[subvectors]]: the 8 subvectors of 8 dims of each 64-dim vector;
+  *   - [[assign]] / [[pqCodes]] ([[encode]] for both): nearest seed cell and
+  *     nearest codeword per subvector, through the native
+  *     `argmax_cosine` (functions.ArgmaxCosine) against one broadcast,
+  *     packed quantizer row. It picks what a crossJoin + `row_number` over
+  *     (cosine desc, id) picks (same IEEE cosine op order, max then min id,
+  *     ArgmaxSpec), with no scored-row materialization and no exchange;
+  *   - [[probe]]: each query's `nprobe` nearest cells;
+  *   - [[adcTable]] / [[adcScore]]: the query's per-subspace codeword
+  *     similarities as one decimal(12,9) slot array, and a candidate's score
+  *     as eight unrolled `element_at` lookups into it;
+  *   - [[serve]]: ADC-score the coded vectors in probed cells, shortlist,
+  *     exact-rerank the shortlist;
+  *   - [[topK]]: the per-query ranking every stage ends in.
+  *
+  * Cross-engine exactness (the DuckDB twins): per-subspace cosines are
+  * rounded to decimal(12,9) before the 8-way sum, and decimal addition is
+  * exact and order-free, so the shuffle's row order cannot flip a ranking;
+  * every ranking breaks ties on the lower id.
+  *
+  * Two row-machinery taxes were measured out of the ADC: the
+  * row-per-subspace form (posexplode + join + re-aggregate, 3-6× the packed
+  * cost, PERF_NOTES_r10.md §3) and an `aggregate()` fold over the slots
+  * (CodegenFallback: interpreted per row, 2.6-3× the unrolled sum at 900k
+  * candidates whatever the element type, PERF_NOTES_r11.md).
+  *
+  * [[build]] publishes the index relations as [[graft.Versioned]] tables
+  * under `dir`:
   *
   *   - `seeds`      (cell_id, se)            — coarse-quantizer centroids
   *   - `codebooks`  (s, code, cv)            — per-subspace PQ codewords
-  *   - `coded`      (vec_id, cell_id, codes) — each corpus vector's cell
-  *     assignment and its 8 PQ codes packed in subspace order (the 8-byte
-  *     production encoding, kept as array<int> for plan inspectability)
+  *   - `coded`      (vec_id, cell_id, codes) — each vector's cell and its 8
+  *     PQ codes in subspace order
   *   - `vectors`    (vec_id, embedding)      — full floats, rerank-only
-  *   - `meta`       (generation, seeds_v, codebooks_v, coded_v, vectors_v)
-  *     — ONE row naming the four table versions that form this index
-  *     generation, committed LAST
+  *   - `meta`       — ONE row naming the four table versions of this
+  *     generation, the tombstone set and the ingest ledger, committed LAST
   *
-  * Versioned (not bare parquet) is what makes this production-shaped: an
-  * index REBUILD publishes all four relations as new snapshots readable
-  * only when complete (readers of the old index are never disturbed
-  * mid-rebuild — snapshot isolation), and a crashed rebuild leaves the
-  * prior version fully servable. The four data tables commit
-  * independently; CROSS-TABLE atomicity comes from the meta-manifest:
-  * [[query]] resolves the latest `meta` snapshot once at entry and pins
-  * every table read to the versions that row names, so a serving call can
-  * never observe a mixed generation — an in-flight rebuild that has
-  * committed some tables but not yet its meta row is invisible, and a
-  * crashed rebuild leaves readers on the previous generation entirely
-  * (AnnIndexSpec pins this with an interleaved-rebuild test).
+  * The four data tables commit independently; cross-table atomicity comes
+  * from the meta row: readers resolve it once ([[Generation]]) and pin every
+  * read to the versions it names, so an in-flight rebuild that has not yet
+  * committed its meta row is invisible and a crashed one leaves readers on
+  * the previous generation (AnnIndexSpec's interleaved-rebuild test).
   *
-  * [[query]] serves the composed IVFADC pipeline FROM the persisted tables
-  * — probe nprobe cells, ADC-score only coded vectors in probed cells (no
-  * floats touched), exact-rerank only the top-`shortlist` — with the same
-  * deterministic tie-breaks and decimal-rounded ADC sums as
-  * [[Similarity.annIvfPq]]; AnnIndexSpec proves the served results are
-  * row-identical to the unpersisted composition.
-  *
-  * The ADC is PACKED and UNROLLED, the shape [[Similarity.annIvfPq]]
-  * ships: one row per candidate, score = eight explicit `element_at` slot
-  * lookups over the candidate's packed codes against the query's
-  * broadcast slot array, summed in one whole-stage-codegen'd expression.
-  * Two row-machinery taxes were measured out of this path: the
-  * row-per-subspace form (posexplode + BroadcastHashJoin + re-aggregate,
-  * 3-6× the packed cost — PERF_NOTES_r10.md §3) and the `aggregate()`
-  * higher-order fold (CodegenFallback: interpreted per-row eval, 2.6-3×
-  * the unrolled sum at 900k candidates regardless of element type —
-  * PERF_NOTES_r11.md). The unrolled sum adds the
-  * SAME eight decimal(12,9) values the original per-subspace sum() added
-  * — decimal addition is exact and order-free, so the output is
-  * bit-identical (AnnIndexSpec pins row-identity with annIvfPq).
-  *
-  * At 100 TB: the build is the linear encode pass (broadcast seeds +
-  * codebooks) paid once; a query batch reads manifest-listed parquet of
-  * the coded relation (8 codes + cell per vector — ~1% of the float
+  * At 100 TB: the build is one linear encode pass, paid once; a query batch
+  * reads the coded relation (8 codes + cell per vector, ~1% of the float
   * bytes), shuffles only probed-cell candidates, and touches full vectors
-  * for shortlist×Q rows. Serving cost is independent of build cost.
+  * for shortlist × Q rows.
   */
 object AnnIndex {
 
   private val Tables = Seq("seeds", "codebooks", "coded", "vectors")
 
+  private[extensions] def register(spark: SparkSession): Unit = {
+    graft.functions.CosineSim.register(spark)
+    graft.functions.ArgmaxDot.register(spark)
+  }
+
+  // ---- the IVFADC stages -------------------------------------------------
+
+  /** (`id`, s, `out`): subvector s in [0, 8) of the 64-dim `v`. */
+  private[extensions] def subvectors(df: DataFrame, id: String = "vec_id",
+      v: String = "embedding", out: String = "sv"): DataFrame =
+    df.select(col(id), explode(expr("sequence(0, 7)")).as("s"), col(v))
+      .select(col(id), col("s"), expr(s"slice($v, s * 8 + 1, 8)").as(out))
+
+  /** The coarse seeds (cell_id, se) and the PQ codebook (s, code, cv), cut
+    * from `e` (vec_id, embedding) by two id predicates. */
+  private[extensions] def quantizers(e: DataFrame, seedIds: Column,
+      codewordIds: Column): (DataFrame, DataFrame) =
+    (e.filter(seedIds).select(col("vec_id").as("cell_id"), col("embedding").as("se")),
+      subvectors(e.filter(codewordIds))
+        .select(col("s"), col("vec_id").as("code"), col("sv").as("cv")))
+
+  /** `vecs` (vec_id, embedding, ...) with its nearest seed's `cell_id`
+    * after vec_id. */
+  private[extensions] def assign(vecs: DataFrame, seeds: DataFrame): DataFrame = {
+    val seedsPacked = seeds.agg(
+      expr("flatten(transform(array_sort(collect_list(struct(cell_id, se))), x -> x.se))").as("smat"),
+      expr("array_sort(collect_list(cell_id))").as("sids"))
+    vecs.crossJoin(broadcast(seedsPacked))
+      .select(col("vec_id") +:
+        expr("element_at(sids, argmax_cosine(embedding, smat) + 1)").as("cell_id") +:
+        vecs.columns.filterNot(_ == "vec_id").toSeq.map(col): _*)
+  }
+
+  /** (vec_id, codes): each vector's nearest codeword per subspace, packed
+    * in subspace order (the 8-byte production encoding, kept as an array
+    * for plan inspectability). */
+  private[extensions] def pqCodes(vecs: DataFrame, cb: DataFrame): DataFrame = {
+    val cbPacked = cb.groupBy("s").agg(
+      expr("flatten(transform(array_sort(collect_list(struct(code, cv))), x -> x.cv))").as("cmat"),
+      expr("array_sort(collect_list(code))").as("codes_arr"))
+    subvectors(vecs).join(broadcast(cbPacked), Seq("s"))
+      .select(col("vec_id"), col("s"),
+        expr("element_at(codes_arr, argmax_cosine(sv, cmat) + 1)").as("code"))
+      .groupBy("vec_id")
+      .agg(expr("transform(array_sort(collect_list(struct(s, code))), x -> x.code)")
+        .as("codes"))
+  }
+
+  /** (vec_id, cell_id, codes, ...): `vecs` (vec_id, embedding, ...)
+    * encoded under fixed quantizers. [[build]] and [[add]] share it, so an
+    * incremental add encodes exactly as the build did. Columns beyond the
+    * pair are stored attributes (build's metaCols): they ride the map-side
+    * cell assignment and land in the coded schema. */
+  private[extensions] def encode(vecs: DataFrame, seeds: DataFrame,
+      cb: DataFrame): DataFrame = {
+    val meta = vecs.columns.filterNot(Set("vec_id", "embedding")).toSeq
+    assign(vecs, seeds).drop("embedding").join(pqCodes(vecs, cb), Seq("vec_id"))
+      .select((Seq("vec_id", "cell_id", "codes") ++ meta).map(col): _*)
+  }
+
+  /** Per query, the rows ranked 1..k by `score` desc, then the lower `id`,
+    * with the rank in `rank`. */
+  private[extensions] def topK(df: DataFrame, score: String, k: Int,
+      id: String = "cand_id", rank: String = "rank"): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy("query_id").orderBy(col(score).desc, col(id))))
+      .filter(col(rank) <= k)
+
+  /** (query_id, cell_id): the `nprobe` seeds nearest each query
+    * (query_id, qe). */
+  private[extensions] def probe(queries: DataFrame, seeds: DataFrame,
+      nprobe: Int): DataFrame =
+    topK(queries.crossJoin(broadcast(seeds))
+        .select(col("query_id"), col("cell_id"),
+          expr("cosine_sim(qe, se)").as("seed_cos")),
+      "seed_cos", nprobe, id = "cell_id", rank = "rn")
+      .select("query_id", "cell_id")
+
+  /** (query_id, qarr): each query's ADC table, one decimal(12,9) slot array
+    * of 8 × `nSlots` (slot s * nSlots + code), 0 where no codeword has that
+    * code. Codes are the raw codebook ids, so a candidate's codes index it
+    * directly. */
+  private[extensions] def adcTable(queries: DataFrame, cb: DataFrame,
+      nSlots: Int): DataFrame =
+    subvectors(queries, "query_id", "qe", "qv")
+      .join(broadcast(cb), Seq("s"))
+      .select(col("query_id"), col("s"),
+        col("code").cast("int").as("code"),
+        round(expr("cosine_sim(qv, cv)"), 9).cast("decimal(12,9)").as("qdec"))
+      .groupBy(col("query_id"), col("s"))
+      .agg(map_from_entries(collect_list(struct(col("code"), col("qdec")))).as("m"))
+      .select(col("query_id"), col("s"),
+        expr(s"""transform(sequence(0, ${nSlots - 1}),
+           c -> coalesce(element_at(m, c), CAST(0 AS DECIMAL(12,9))))""").as("sarr"))
+      .groupBy("query_id")
+      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, sarr))), x -> x.sarr))")
+        .as("qarr"))
+
+  /** A candidate's ADC score over `codes` and `qarr`: the eight slot
+    * lookups unrolled into one whole-stage-codegen'd decimal sum. */
+  private[extensions] def adcScore(nSlots: Int): Column = {
+    val lookups = (0 until 8)
+      .map(s => s"element_at(qarr, CAST($s * $nSlots + " +
+        s"element_at(codes, ${s + 1}) + 1 AS INT))")
+      .mkString(" + ")
+    expr(s"CAST($lookups AS DECIMAL(22,9))")
+  }
+
+  /** IVFADC top-k: probe `nprobe` cells per query, ADC-score the `coded`
+    * (vec_id, cell_id, codes) vectors in them, keep the top `shortlist`,
+    * and rank those by exact cosine against `vectors` (vec_id, embedding).
+    * Out: (query_id, cand_id, cell_id, approx: double, cosine, rank). */
+  private[extensions] def serve(queries: DataFrame, seeds: DataFrame,
+      cb: DataFrame, coded: DataFrame, vectors: DataFrame, nSlots: Int,
+      k: Int, nprobe: Int, shortlist: Int): DataFrame = {
+    val adc = probe(queries, seeds, nprobe)
+      .join(coded.select(col("cell_id"), col("vec_id").as("cand_id"),
+        col("codes")), Seq("cell_id"))
+      .filter(col("query_id") =!= col("cand_id"))
+      .join(broadcast(adcTable(queries, cb, nSlots)), Seq("query_id"))
+      .select(col("query_id"), col("cand_id"), col("cell_id"),
+        adcScore(nSlots).as("approx"))
+    val short = topK(adc, "approx", shortlist, rank = "rn")
+      .select("query_id", "cand_id", "cell_id", "approx")
+    topK(short.join(queries, Seq("query_id"))
+      .join(vectors.select(col("vec_id").as("cand_id"), col("embedding").as("ce")),
+        Seq("cand_id"))
+      .select(col("query_id"), col("cand_id"), col("cell_id"),
+        col("approx").cast("double").as("approx"),
+        expr("cosine_sim(qe, ce)").as("cosine")), "cosine", k)
+  }
+
+  // ---- the persisted index -----------------------------------------------
+
   /** Build the index from `ctx`'s `embeddings` table and publish under
-    * `dir`. `nCells`/`nCodewords` set the coarse/PQ shape and mean exactly
-    * what they say: seeds = the `nCells` SMALLEST vec_ids, codebooks =
-    * per-subspace slices of the `nCodewords` smallest. This is a RANK
-    * rule, not an id threshold, because the two corpora this engine reads
-    * disagree on id base — driver testdata is 0-based dense, the synth
-    * generator 1-based dense — so any `vec_id < n` / `<= n` rule publishes
-    * a different cell count per corpus (the r11 off-by-one scar was this
-    * wart surfacing on the synth side). The rank rule publishes exactly
-    * the parameterized shape on ANY id set; AnnIndexBench's
-    * `cells_actual` confirms it per artifact. A production build passes
-    * ~sqrt(N) cells and 256 codewords. The defaults (8 cells / 16
-    * codewords) are the [[Similarity.annIvfPq]] verification shape —
-    * annIvfPq/annIvf fix their quantizers as the testdata seed sets
-    * {0..7} and {0..15}, and matching those sets exactly is what gives
-    * the AnnIndexSpec row-identity (and through the oracle twins,
-    * cross-engine parity).
+    * `dir`. Seeds are the `nCells` smallest vec_ids and the codebook the
+    * subvectors of the `nCodewords` smallest: a RANK rule, not an id
+    * threshold, because the sf testdata numbers ids from 0 and the synth
+    * generator from 1, and any `vec_id < n` rule would publish a different
+    * shape per corpus. A production build passes ~sqrt(N) cells and 256
+    * codewords; the defaults (8 / 16) are the shape [[Similarity.annIvfPq]]
+    * fixes as `vec_id < 8` / `< 16`, the same sets on testdata, which gives
+    * AnnIndexSpec's row identity.
     * Returns table -> committed version, including the `meta` generation
     * commit that makes the five publishes one atomic index version. */
   def build(ctx: Ctx, dir: String, nCells: Int = 8,
@@ -91,30 +214,21 @@ object AnnIndex {
     require(nCells >= 1 && nCodewords >= 1,
       s"build needs >=1 seed and >=1 codeword: " +
         s"nCells=$nCells nCodewords=$nCodewords")
-    graft.functions.CosineSim.register(ctx.spark)
-    graft.functions.ArgmaxDot.register(ctx.spark)
+    register(ctx.spark)
     val e = ctx.tbl("embeddings")
     // the quantizer id cuts: one TakeOrdered over the id column, bounded
-    // by max(nCells, nCodewords) rows on the driver — ~sqrt(N) at
-    // production sizes, bounded by construction
+    // by max(nCells, nCodewords) rows on the driver
     val nq = math.max(nCells, nCodewords)
     val qIds = e.select(col("vec_id")).orderBy(col("vec_id")).limit(nq)
       .collect().map(_.getLong(0))
     require(qIds.length >= nq,
       s"corpus has only ${qIds.length} vectors — the requested quantizer " +
         s"shape needs >= $nq (nCells=$nCells nCodewords=$nCodewords)")
-    val cellCut = qIds(nCells - 1)
-    val cwCut = qIds(nCodewords - 1)
-    val seeds = e.filter(col("vec_id") <= cellCut)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("se"))
-    val sub = e.select(col("vec_id"), explode(expr("sequence(0, 7)")).as("s"),
-        col("embedding"))
-      .select(col("vec_id"), col("s"), expr("slice(embedding, s * 8 + 1, 8)").as("sv"))
-    val cb = sub.filter(col("vec_id") <= cwCut)
-      .select(col("s"), col("vec_id").as("code"), col("sv").as("cv"))
+    val (seeds, cb) = quantizers(e, col("vec_id") <= qIds(nCells - 1),
+      col("vec_id") <= qIds(nCodewords - 1))
     // metaCols ride INTO the coded table (FAISS-style stored attributes):
     // query's `where` predicate then evaluates map-side on the coded scan —
-    // no allow-list join, no shuffle, the 100 TB filtered-serve shape
+    // no allow-list join, no shuffle
     val coded = encode(
       e.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*), seeds, cb)
     // The four tables are independent publishes (the atomic generation
@@ -139,52 +253,6 @@ object AnnIndex {
     commitMeta(ctx.spark, dir, versions, batchId = -1L)
   }
 
-  /** Encode `vecs` (vec_id, embedding) under FIXED quantizers: nearest-seed
-    * cell plus the 8 PQ codes per vector. Shared by [[build]] and [[add]],
-    * so an incremental add encodes exactly the way the original build did —
-    * bit-identity by construction, not by parallel maintenance.
-    *
-    * The argmax runs through the PACKED native argmax_cosine
-    * (functions.ArgmaxCosine), not a crossJoin + max_by: identical
-    * assignment (same IEEE cosine op order, max-then-MIN-id ties —
-    * AnnIndexSpec pins row-identity with annIvfPq), but the plan is a
-    * broadcast join against ONE packed quantizer-matrix row + a map-side
-    * projection: no n × nCells scored-row materialization and NO exchange
-    * at all, where even the map-side partial max_by still iterated every
-    * scored row through the agg (r12; the term that scales with a
-    * production sqrt(N) cell count — semanticDedupPipeline passes ~1.4k
-    * cells at SF100). */
-  private def encode(vecs: DataFrame, seeds: DataFrame,
-      cb: DataFrame): DataFrame = {
-    // columns beyond the contract pair are stored index attributes
-    // (build's metaCols): they ride the map-side cell-assignment
-    // projection for free and land in the coded schema
-    val meta = vecs.columns.filterNot(Set("vec_id", "embedding")).toSeq
-    val sub = vecs.select(col("vec_id"), explode(expr("sequence(0, 7)")).as("s"),
-        col("embedding"))
-      .select(col("vec_id"), col("s"), expr("slice(embedding, s * 8 + 1, 8)").as("sv"))
-    val seedsPacked = seeds.agg(
-      expr("flatten(transform(array_sort(collect_list(struct(cell_id, se))), x -> x.se))").as("smat"),
-      expr("array_sort(collect_list(cell_id))").as("sids"))
-    val assigned = vecs
-      .crossJoin(broadcast(seedsPacked))
-      .select(col("vec_id") +:
-        expr("element_at(sids, argmax_cosine(embedding, smat) + 1)").as("cell_id") +:
-        meta.map(col): _*)
-    val cbPacked = cb.groupBy("s").agg(
-      expr("flatten(transform(array_sort(collect_list(struct(code, cv))), x -> x.cv))").as("cmat"),
-      expr("array_sort(collect_list(code))").as("codes_arr"))
-    val codes = sub.join(broadcast(cbPacked), Seq("s"))
-      .select(col("vec_id"), col("s"),
-        expr("element_at(codes_arr, argmax_cosine(sv, cmat) + 1)").as("code"))
-      // pack in subspace order: the vector's production PQ encoding
-      .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(s, code))), x -> x.code)")
-        .as("codes"))
-    assigned.join(codes, Seq("vec_id"))
-      .select((Seq("vec_id", "cell_id", "codes") ++ meta).map(col): _*)
-  }
-
   /** The generation commit: one row naming the four versions just
     * published, plus the streaming-ingest ledger (`batch_id` — the highest
     * stream batch folded into this generation, -1 when none) and the
@@ -205,15 +273,39 @@ object AnnIndex {
     versions + ("meta" -> Versioned.write(metaDf, s"$dir/meta"))
   }
 
-  /** The generation's tombstone-set version: Some(v) when deletions are
-    * pending materialization, None for a fresh build, a purge-compacted
-    * generation, or a pre-tombstone meta row. */
-  private def pinnedTombstones(spark: SparkSession, dir: String): Option[Long] =
-    if (Versioned.latestVersion(spark, s"$dir/meta").isEmpty) None
+  /** One index generation, as its meta row names it: the four table
+    * versions (None before the meta-manifest existed: latest-per-table,
+    * consistent only under serialized builds), the pending tombstone set
+    * (None for a fresh build, a purge-compacted generation or a
+    * pre-tombstone row) and the ingest ledger (-1 for a fresh build, a
+    * pre-ledger row or no index). */
+  private final case class Generation(dir: String,
+      versions: Map[String, Option[Long]], tombstones: Option[Long],
+      batchId: Long) {
+    def pinned: Boolean = versions.values.forall(_.isDefined)
+    def v(table: String): Long = versions(table).get
+    def read(spark: SparkSession, table: String): DataFrame =
+      Versioned.read(spark, s"$dir/$table", versions(table))
+    /** The pending tombstone set (vec_id), if any. */
+    def tombstoned(spark: SparkSession): Option[DataFrame] =
+      tombstones.map(t => Versioned.read(spark, s"$dir/tombstones", Some(t)))
+  }
+
+  /** Read the latest meta row once (a one-row collect), so every field of
+    * a call comes from the same generation. Versions are read by NAME: a
+    * reordered or renamed meta field throws rather than pinning the wrong
+    * table. */
+  private def generation(spark: SparkSession, dir: String): Generation =
+    if (Versioned.latestVersion(spark, s"$dir/meta").isEmpty)
+      Generation(dir, Tables.map(_ -> (None: Option[Long])).toMap, None, -1L)
     else {
-      val m = Versioned.read(spark, s"$dir/meta")
-      if (!m.columns.contains("tombstones_v")) None
-      else Some(m.head().getAs[Long]("tombstones_v")).filter(_ >= 0)
+      val row = Versioned.read(spark, s"$dir/meta").head()
+      val has = row.schema.fieldNames.toSet
+      Generation(dir,
+        Tables.map(t => t -> Some(row.getAs[Long](s"${t}_v"))).toMap,
+        if (has("tombstones_v")) Some(row.getAs[Long]("tombstones_v")).filter(_ >= 0)
+        else None,
+        if (has("batch_id")) row.getAs[Long]("batch_id") else -1L)
     }
 
   /** Drop `tombstones` (distinct removed vec_ids) from a relation keyed by
@@ -232,38 +324,25 @@ object AnnIndex {
     * in ONE meta row, so "the batch's rows are visible" and "the batch is
     * marked ingested" cannot diverge. */
   def lastIngestBatch(spark: SparkSession, dir: String): Long =
-    if (Versioned.latestVersion(spark, s"$dir/meta").isEmpty) -1L
-    else {
-      val m = Versioned.read(spark, s"$dir/meta")
-      if (m.columns.contains("batch_id")) m.head().getAs[Long]("batch_id")
-      else -1L
-    }
+    generation(spark, dir).batchId
 
   /** Incrementally add a vector batch to the index — the FAISS `add`
-    * shape, the ingest path that makes a persisted index maintainable
-    * without rebuilds: encode `batch` (vec_id, embedding) under the
-    * CURRENTLY PINNED generation's quantizers (seeds/codebooks are reused
-    * untouched — no retraining), append the encoded rows to `coded` and
-    * the raw rows to `vectors` as new Versioned snapshots, and commit a
-    * new meta generation pinning (old seeds_v, old codebooks_v, new
-    * coded_v, new vectors_v). Work is proportional to the BATCH, not the
-    * corpus: the encode is one map-side pass over the batch against the
-    * broadcast quantizers, and the appends stage only the batch's files
-    * (Versioned append keeps prior files by reference).
+    * shape: encode `batch` (vec_id, embedding) under the PINNED
+    * generation's quantizers (never retrained), append the encoded rows to
+    * `coded` and the raw rows to `vectors` as new Versioned snapshots, and
+    * commit a new meta generation pinning (old seeds_v, old codebooks_v,
+    * new coded_v, new vectors_v). Work is proportional to the batch: one
+    * map-side encode pass, and the appends keep prior files by reference.
     *
-    * Because this index's quantizers are a pure function of the
-    * generation (never retrained on add), `build(half) + add(rest)` is
-    * BIT-IDENTICAL to `build(all)` whenever the rebuild would derive the
-    * same quantizers — proven row-for-row in AnnIndexSpec. Crash safety is
-    * the meta rule: readers pin the last committed generation, so a crash
-    * anywhere inside add leaves the previous index serving; the appended
-    * but unpinned snapshots are invisible. RETRY safety is the appendBase
-    * rule: both appends anchor on the PINNED versions, not the table tips,
-    * so a retry after a crashed add starts from the same generation the
-    * crashed attempt did — the orphan files the crash left on the tips are
-    * discarded, never duplicated into the new snapshot (spec-pinned).
-    * Corollary: concurrent adds to one index serialize externally, the
-    * contract concurrent builds already have (last meta commit wins).
+    * Because the quantizers are a pure function of the generation,
+    * `build(half) + add(rest)` is BIT-IDENTICAL to `build(all)` whenever
+    * the rebuild would derive the same quantizers (AnnIndexSpec). A crash
+    * anywhere inside add leaves the previous generation serving (the meta
+    * rule). RETRY safety is the appendBase rule: both appends anchor on
+    * the PINNED versions, not the table tips, so a retry after a crashed
+    * add discards the orphan files the crash left instead of duplicating
+    * them (spec-pinned). Concurrent adds to one index serialize
+    * externally, the contract concurrent builds already have.
     *
     * Rejects vec_ids already present (a silent duplicate would double rows
     * in every downstream consumer); the check joins the bounded batch
@@ -277,17 +356,15 @@ object AnnIndex {
     * don't reset stream-replay protection. */
   def add(spark: SparkSession, dir: String, batch: DataFrame,
       batchId: Long = -1L): Map[String, Long] = {
-    graft.functions.CosineSim.register(spark)
-    graft.functions.ArgmaxDot.register(spark)
-    val pin = pinnedVersions(spark, dir)
-    require(pin.values.forall(_.isDefined),
+    register(spark)
+    val gen = generation(spark, dir)
+    require(gen.pinned,
       s"add requires a meta-pinned index generation at $dir (pre-meta " +
         "indexes must be rebuilt once to gain a generation row)")
-    val ledger = lastIngestBatch(spark, dir)
-    require(batchId < 0 || batchId > ledger,
-      s"stream batch $batchId already ingested at $dir (ledger: $ledger)")
-    val seeds = Versioned.read(spark, s"$dir/seeds", pin("seeds"))
-    val cb = Versioned.read(spark, s"$dir/codebooks", pin("codebooks"))
+    require(batchId < 0 || batchId > gen.batchId,
+      s"stream batch $batchId already ingested at $dir (ledger: ${gen.batchId})")
+    val seeds = gen.read(spark, "seeds")
+    val cb = gen.read(spark, "codebooks")
     // STABILIZE the batch before the first action: add runs three actions
     // over this plan (clash-check count, encode -> coded append, vectors
     // append), and a nondeterministic caller plan (limit/sample without an
@@ -301,7 +378,7 @@ object AnnIndex {
     // the index's stored attributes (build's metaCols) are whatever the
     // pinned coded schema carries beyond the encoding triple — the batch
     // must supply the same columns or the append would shear the schema
-    val codedPinned = Versioned.read(spark, s"$dir/coded", pin("coded"))
+    val codedPinned = gen.read(spark, "coded")
     val metaCols = codedPinned.columns
       .filterNot(Set("vec_id", "cell_id", "codes")).toSeq
     val missing = metaCols.filterNot(batch.columns.contains)
@@ -316,9 +393,9 @@ object AnnIndex {
       require(clashes == 0,
         s"add batch contains vec_ids already present in the index at $dir")
       val codedV = Versioned.write(encode(b, seeds, cb), s"$dir/coded",
-        mode = "append", appendBase = pin("coded"))
+        mode = "append", appendBase = Some(gen.v("coded")))
       val vectorsV = Versioned.write(b.select("vec_id", "embedding"),
-        s"$dir/vectors", mode = "append", appendBase = pin("vectors"))
+        s"$dir/vectors", mode = "append", appendBase = Some(gen.v("vectors")))
       // coded and vectors must describe the SAME row set in every pinned
       // generation; counts are parquet-metadata reads (bounded, no scan).
       // A mismatch aborts BEFORE the meta commit — the old generation keeps
@@ -330,10 +407,10 @@ object AnnIndex {
           s"rows) — batch plan not deterministic across actions; aborting " +
           "before the meta commit (previous generation still serves)")
       commitMeta(spark, dir,
-        Map("seeds" -> pin("seeds").get, "codebooks" -> pin("codebooks").get,
+        Map("seeds" -> gen.v("seeds"), "codebooks" -> gen.v("codebooks"),
           "coded" -> codedV, "vectors" -> vectorsV),
-        batchId = if (batchId >= 0) batchId else ledger,
-        tombstonesV = pinnedTombstones(spark, dir).getOrElse(-1L))
+        batchId = if (batchId >= 0) batchId else gen.batchId,
+        tombstonesV = gen.tombstones.getOrElse(-1L))
     } finally {
       b.unpersist()
       ()
@@ -354,37 +431,17 @@ object AnnIndex {
     * visible until the meta row lands. Removing an absent id is a no-op
     * by construction (anti-join semantics). */
   def remove(spark: SparkSession, dir: String, ids: DataFrame): Map[String, Long] = {
-    val pin = pinnedVersions(spark, dir)
-    require(pin.values.forall(_.isDefined),
-      s"remove requires a meta-pinned index generation at $dir")
-    val prevT = pinnedTombstones(spark, dir)
+    val gen = generation(spark, dir)
+    require(gen.pinned, s"remove requires a meta-pinned index generation at $dir")
     val t = ids.select(col("vec_id")).distinct()
-    val tv = prevT match {
+    val tv = gen.tombstones match {
       case Some(v) => Versioned.write(t, s"$dir/tombstones", mode = "append",
         appendBase = Some(v))
       case None => Versioned.write(t, s"$dir/tombstones")
     }
-    commitMeta(spark, dir,
-      Map("seeds" -> pin("seeds").get, "codebooks" -> pin("codebooks").get,
-        "coded" -> pin("coded").get, "vectors" -> pin("vectors").get),
-      batchId = lastIngestBatch(spark, dir), tombstonesV = tv)
+    commitMeta(spark, dir, Tables.map(t => t -> gen.v(t)).toMap,
+      batchId = gen.batchId, tombstonesV = tv)
   }
-
-  /** Resolve the generation to serve: the latest meta row's pinned
-    * versions (one-row collect — bounded by construction). Indexes built
-    * before the meta-manifest existed (no `meta` table) fall back to
-    * latest-per-table, which is only consistent under serialized builds —
-    * the documented pre-r11 behavior. */
-  private def pinnedVersions(spark: SparkSession, dir: String): Map[String, Option[Long]] =
-    if (Versioned.latestVersion(spark, s"$dir/meta").isEmpty)
-      Tables.map(_ -> (None: Option[Long])).toMap
-    else {
-      // by NAME, not position: a future meta field addition/reorder must
-      // throw (unresolvable column), never silently pin the wrong table
-      // versions (r11 advice)
-      val row = Versioned.read(spark, s"$dir/meta").head()
-      Tables.map(t => t -> Some(row.getAs[Long](s"${t}_v"))).toMap
-    }
 
   /** Collapse the pinned generation's `coded`/`vectors` into `nFiles` data
     * files each and publish the result as a NEW generation — the
@@ -401,134 +458,47 @@ object AnnIndex {
     * `Versioned.vacuum`. */
   def compact(spark: SparkSession, dir: String, nFiles: Int = 8): Map[String, Long] = {
     require(nFiles >= 1, s"nFiles must be >= 1: $nFiles")
-    val pin = pinnedVersions(spark, dir)
-    require(pin.values.forall(_.isDefined),
-      s"compact requires a meta-pinned index generation at $dir")
-    val tomb = pinnedTombstones(spark, dir)
-      .map(v => Versioned.read(spark, s"$dir/tombstones", Some(v)))
-    val versions = Map(
-      "seeds" -> pin("seeds").get,
-      "codebooks" -> pin("codebooks").get,
-      "coded" -> Versioned.write(
-        dropTombstoned(Versioned.read(spark, s"$dir/coded", pin("coded")), tomb)
-          .repartition(nFiles),
-        s"$dir/coded"),
-      "vectors" -> Versioned.write(
-        dropTombstoned(Versioned.read(spark, s"$dir/vectors", pin("vectors")), tomb)
-          .repartition(nFiles),
-        s"$dir/vectors"))
-    commitMeta(spark, dir, versions, batchId = lastIngestBatch(spark, dir))
+    val gen = generation(spark, dir)
+    require(gen.pinned, s"compact requires a meta-pinned index generation at $dir")
+    def rewrite(t: String): Long = Versioned.write(
+      dropTombstoned(gen.read(spark, t), gen.tombstoned(spark)).repartition(nFiles),
+      s"$dir/$t")
+    commitMeta(spark, dir,
+      Map("seeds" -> gen.v("seeds"), "codebooks" -> gen.v("codebooks"),
+        "coded" -> rewrite("coded"), "vectors" -> rewrite("vectors")),
+      batchId = gen.batchId)
   }
 
-  /** Serve IVFADC top-k from the persisted index: `queries` is
-    * (query_id, qe: array<float>). Output schema and every tie-break are
-    * identical to [[Similarity.annIvfPq]]'s:
-    * (query_id, cand_id, cell_id, approx: double, cosine, rank).
+  /** Serve IVFADC top-k ([[serve]]) from the persisted index: `queries` is
+    * (query_id, qe: array<float>); the output and every tie-break are
+    * [[Similarity.annIvfPq]]'s. Table reads are pinned to one meta
+    * generation.
     *
-    * Table reads are pinned to one meta generation (see object scaladoc);
-    * scoring is the packed ADC fold — one slot-array lookup per subspace
-    * per candidate, no per-subspace rows, no re-aggregation. */
+    * `allowed` (a vec_id allow-list, any predicate evaluated outside the
+    * index) and `where` (a predicate over coded's own columns, build's
+    * metaCols: map-side, no join) both pre-filter the candidate stream
+    * before ADC scoring, as tombstones do, so a filtered query still fills
+    * all k slots where a post-filter on the final top-k would return fewer
+    * the more selective the predicate. */
   def query(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 5, nprobe: Int = 2, shortlist: Int = 20,
       allowed: Option[DataFrame] = None,
       where: Option[Column] = None): DataFrame = {
     graft.functions.CosineSim.register(spark)
-    val pin = pinnedVersions(spark, dir)
-    val seeds = Versioned.read(spark, s"$dir/seeds", pin("seeds"))
-    val cb = Versioned.read(spark, s"$dir/codebooks", pin("codebooks"))
-    // pending deletions hide at the candidate source: a tombstoned vector
-    // can never appear in any shortlist (vectors joins by cand_id later,
-    // so filtering coded covers the whole pipeline)
-    val tomb = pinnedTombstones(spark, dir)
-      .map(v => Versioned.read(spark, s"$dir/tombstones", Some(v)))
-    // FILTERED serve (the FAISS-IDSelector shape): `allowed` is a
-    // one-column (vec_id) allow-list — the result of any metadata
-    // predicate evaluated OUTSIDE the index. It pre-filters the coded
-    // candidate stream via left-semi BEFORE ADC scoring, so the ADC
-    // shortlist is drawn entirely from admissible vectors and a filtered
-    // query still fills all k slots (a post-filter on the final top-k
-    // would return fewer the more selective the predicate). Same
-    // placement as the tombstone drop: filtering `coded` covers the
-    // whole downstream pipeline.
-    // `where` is the stronger form when the index stores the attribute
-    // (build's metaCols): a plain predicate over coded's own columns,
-    // evaluated MAP-SIDE on the candidate scan — no join at all, where
-    // the allow-list costs a (broadcastable) semi-join. Both pre-filter
-    // before ADC, so either way filtered queries fill all k slots.
-    val coded = allowed.foldLeft(where.foldLeft(dropTombstoned(
-      Versioned.read(spark, s"$dir/coded", pin("coded")), tomb)) {
+    val gen = generation(spark, dir)
+    val cb = gen.read(spark, "codebooks")
+    val coded = allowed.foldLeft(where.foldLeft(
+      dropTombstoned(gen.read(spark, "coded"), gen.tombstoned(spark))) {
       (c, w) => c.filter(w)
     }) {
       (c, a) => c.join(a.select(col("vec_id")).distinct(), Seq("vec_id"), "left_semi")
     }
-    val vectors = Versioned.read(spark, s"$dir/vectors", pin("vectors"))
     // slot-array width: codes are the RAW codebook ids persisted at build
-    // time (vec_ids — NOT densely reindexed, so remapping candidates is
-    // never needed at serve time); the query array simply spans
-    // [0, max code] with decimal-0 padding in unreferenced slots. The
-    // codebook is the broadcast-tiny relation, so this is a bounded
-    // metadata action, not a data-scaled collect.
+    // time, so the slot array spans [0, max code]; the codebook is tiny,
+    // so this is a bounded metadata action, not a data-scaled collect
     val nSlots = cb.agg(max(col("code"))).head().getLong(0).toInt + 1
-    val probes = queries.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("cell_id"),
-        expr("cosine_sim(qe, se)").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "cell_id")
-    // per-query ADC table, packed: one decimal(12,9) slot array of length
-    // 8 * nSlots per query (subspace-major, slot = s * nSlots + code)
-    val qarr = queries
-      .select(col("query_id"), explode(expr("sequence(0, 7)")).as("s"), col("qe"))
-      .select(col("query_id"), col("s"), expr("slice(qe, s * 8 + 1, 8)").as("qv"))
-      .join(broadcast(cb), Seq("s"))
-      .select(col("query_id"), col("s"),
-        col("code").cast("int").as("code"),
-        round(expr("cosine_sim(qv, cv)"), 9).cast("decimal(12,9)").as("qdec"))
-      .groupBy(col("query_id"), col("s"))
-      .agg(map_from_entries(collect_list(struct(col("code"), col("qdec")))).as("m"))
-      .select(col("query_id"), col("s"),
-        expr(s"""transform(sequence(0, ${nSlots - 1}),
-           c -> coalesce(element_at(m, c), CAST(0 AS DECIMAL(12,9))))""").as("sarr"))
-      .groupBy("query_id")
-      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, sarr))), x -> x.sarr))")
-        .as("qarr"))
-    // candidates = coded vectors in probed cells, ONE row per candidate —
-    // the packed codes array never unpacks; the score is 8 slot lookups
-    // UNROLLED into one flat expression, accumulating the same
-    // decimal(12,9) values the old per-subspace sum() added (decimal
-    // addition is exact and order-free, so the result is bit-identical).
-    // Unrolled, not an aggregate() fold: higher-order functions are
-    // CodegenFallback, and the interpreted per-row eval measured 2.6-3x
-    // the cost of this whole-stage-codegen'd sum at 900k candidates
-    // (PERF_NOTES_r11.md: 8.2 s HOF-decimal vs 2.8-3.6 s unrolled; a
-    // double-typed fold read 7.8 s, proving the tax is the HOF fallback,
-    // not decimal arithmetic — PERF_NOTES_r11.md)
-    val adcSum = (0 until 8)
-      .map(s => s"element_at(qarr, CAST($s * $nSlots + " +
-        s"element_at(codes, ${s + 1}) + 1 AS INT))")
-      .mkString(" + ")
-    val adc = probes
-      .join(coded.select(col("cell_id"), col("vec_id").as("cand_id"),
-        col("codes")), Seq("cell_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .join(broadcast(qarr), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        expr(s"CAST($adcSum AS DECIMAL(22,9))").as("approx"))
-    val short = adc
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("approx").desc, col("cand_id"))))
-      .filter(col("rn") <= shortlist)
-      .select("query_id", "cand_id", "cell_id", "approx")
-    short.join(queries, Seq("query_id"))
-      .join(vectors.select(col("vec_id").as("cand_id"), col("embedding").as("ce")),
-        Seq("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        col("approx").cast("double").as("approx"),
-        expr("cosine_sim(qe, ce)").as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
+    serve(queries, gen.read(spark, "seeds"), cb, coded, gen.read(spark, "vectors"),
+      nSlots, k, nprobe, shortlist)
   }
 
   /** SEMANTIC DEDUP served from the persisted index — the SemDeDup
@@ -556,13 +526,10 @@ object AnnIndex {
   def semanticDedup(spark: SparkSession, dir: String,
       tau: Double = 0.4): DataFrame = {
     graft.functions.CosineSim.register(spark)
-    val pin = pinnedVersions(spark, dir)
-    val tomb = pinnedTombstones(spark, dir)
-      .map(v => Versioned.read(spark, s"$dir/tombstones", Some(v)))
-    val coded = dropTombstoned(
-        Versioned.read(spark, s"$dir/coded", pin("coded")), tomb)
+    val gen = generation(spark, dir)
+    val coded = dropTombstoned(gen.read(spark, "coded"), gen.tombstoned(spark))
       .select(col("vec_id"), col("cell_id"))
-    val vectors = Versioned.read(spark, s"$dir/vectors", pin("vectors"))
+    val vectors = gen.read(spark, "vectors")
     val members = coded.join(vectors, Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), lit(0L).as("label"),
         col("cell_id").as("bucket"))

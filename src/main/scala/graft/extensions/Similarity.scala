@@ -8,9 +8,14 @@ import org.apache.spark.sql.functions._
 /** Similarity search over the `embeddings` table (vec_id, embedding
   * list<float>, label).
   *
-  * Dot products are sequential left-folds over doubles (Spark `aggregate`),
-  * which is bit-identical to DuckDB's list_dot_product loop — verified
-  * empirically — so cosine scores hash-match the oracle.
+  * Cosine is the native [[graft.functions.CosineSim]]: one sequential fold
+  * over doubles, bit-identical to DuckDB's list_dot_product loop, so cosine
+  * scores hash-match the oracle.
+  *
+  * The IVF and PQ queries are compositions of [[AnnIndex]]'s IVFADC stages
+  * (cell assignment, PQ codes, probe, ADC table, serve) over the in-memory
+  * relations, the stages the persisted index serves from, and every top-k
+  * here ranks through [[AnnIndex.topK]].
   *
   * Scale design: brute-force kNN broadcasts the (small) query set against a
   * partitioned candidate scan — linear in corpus size, no shuffle of the big
@@ -29,21 +34,53 @@ object Similarity {
 
   /** Brute-force cosine top-k: for each query vector (vec_id < 10), the top
     * 5 nearest neighbours among all other vectors. */
-  def annBruteForce(ctx: Ctx, k: Int = 5): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-    val scored = broadcast(q).crossJoin(c)
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), cosine("qe", "ce").as("cosine"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), col("cosine"), col("rank"))
+  def annBruteForce(ctx: Ctx, k: Int = 5): DataFrame = bruteForce(embeddings(ctx), k)
+
+  /** Exact top-k of the vectors vec_id < 10 among `vecs` (vec_id, embedding). */
+  private def bruteForce(vecs: DataFrame, k: Int): DataFrame =
+    exactTopK(vecs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe")), candidates(vecs), k)
+
+  /** The embeddings table, with the ANN natives registered. */
+  private def embeddings(ctx: Ctx): DataFrame = {
+    AnnIndex.register(ctx.spark)
+    ctx.tbl("embeddings")
   }
+
+  /** The query set of the IVF/PQ queries: vec_id in [10, 20). */
+  private def queries(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
+      .select(col("vec_id").as("query_id") +: col("embedding").as("qe") +: extra: _*)
+
+  private def candidates(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
+
+  /** The fixed quantizers: seeds vec_id < 8, codebook vec_id < 16. On
+    * 0-based testdata these are the sets AnnIndex.build's rank rule
+    * derives; the DuckDB twins fix the same id cuts, so on 1-based synth
+    * ids both sides use 7 seeds and 15 codewords. */
+  private def quantizers(e: DataFrame): (DataFrame, DataFrame) =
+    AnnIndex.quantizers(e, col("vec_id") < 8, col("vec_id") < 16)
+
+  /** Exact cosine top-k of each query (query_id, qe) among the candidates
+    * (cand_id, ce) other than itself that satisfy `on`. The query set is
+    * broadcast, so the candidate side never shuffles. */
+  private def exactTopK(q: DataFrame, c: DataFrame, k: Int,
+      on: Column = lit(true), keep: Seq[String] = Nil): DataFrame =
+    AnnIndex.topK(broadcast(q).join(c, col("query_id") =!= col("cand_id") && on)
+      .select((Seq("query_id", "cand_id") ++ keep).map(col) :+
+        cosine("qe", "ce").as("cosine"): _*), "cosine", k)
+
+  /** Per query of `exact`: its size, its overlap with `approx` and the
+    * recall, in exact-integer arithmetic. */
+  private def recall(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.as("e")
+      .join(approx.as("a"), col("e.query_id") === col("a.query_id")
+        && col("e.cand_id") === col("a.cand_id"), "left")
+      .groupBy(col("e.query_id").as("query_id"))
+      .agg(count(col("e.cand_id")).as("n_exact"), count(col("a.cand_id")).as("n_overlap"))
+      .select(col("query_id"), col("n_exact"), col("n_overlap"),
+        dv(col("n_overlap"), col("n_exact")).as("recall_at_k"))
 
   /** 8-bit deterministic-hyperplane signature (random-projection LSH with a
     * fixed integer weight grid w(i,j) = (i*31 + j*17) % 7 - 3), via the
@@ -209,112 +246,49 @@ object Similarity {
       .filter(col("cosine") >= 0.4)
       .select(col("vec_a"), col("vec_b"), col("cosine"))
 
-  /** IVF-style ANN: a fixed set of seed vectors (vec_id < 8) acts as the
-    * coarse quantizer; every vector is assigned to its nearest seed (cell),
-    * and a query probes only its nprobe=2 nearest cells — the inverted-file
+  /** IVF-style ANN: the seed vectors ([[quantizers]]) are the coarse
+    * quantizer; every vector is assigned to its nearest seed (cell), and a
+    * query probes only its nprobe=2 nearest cells — the inverted-file
     * pattern that bounds the scan to a fraction of the corpus at scale.
     * Queries here: vec_id in [10, 20); top-3 within probed cells. */
-  def annIvf(ctx: Ctx, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val seeds = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("se"))
-    // cell assignment: nearest seed per vector (deterministic tie-break)
-    val assigned = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("embedding"), col("cell_id"),
-        cosine("embedding", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("cell_id"))
-    // probe list: nprobe nearest cells per query
-    val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val probes = queries.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("qe"), col("cell_id"),
-        cosine("qe", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qe"), col("cell_id"))
-    // search only within probed cells
-    probes.join(assigned.select(col("cell_id"), col("vec_id").as("cand_id"),
-        col("embedding").as("ce")), Seq("cell_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        cosine("qe", "ce").as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
-  }
+  def annIvf(ctx: Ctx, k: Int = 3, nprobe: Int = 2): DataFrame =
+    ivf(ctx, k, nprobe, sameLabel = false)
 
   /** FILTERED vector search, exact baseline: top-k cosine among only the
     * candidates that satisfy a metadata predicate — here "same label as the
     * query" (in-category search), the canonical filtered-ANN shape (FAISS
     * IDSelector / vector-DB payload filters). The predicate is applied to
     * the candidate SCAN — map-side, before any distance work — so its
-    * selectivity divides the scored-row count directly; the query set stays
-    * broadcast and the corpus side never shuffles. Queries: vec_id in
+    * selectivity divides the scored-row count directly. Queries: vec_id in
     * [10, 20); top-5 within the query's own label. */
   def annFilteredBrute(ctx: Ctx, k: Int = 5): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val q = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("cand_id"), col("label"),
-      col("embedding").as("ce"))
-    broadcast(q)
-      .join(c, col("label") === col("qlabel") && col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("label"),
-        cosine("qe", "ce").as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
+    val e = embeddings(ctx)
+    exactTopK(queries(e, col("label").as("qlabel")),
+      e.select(col("vec_id").as("cand_id"), col("label"), col("embedding").as("ce")),
+      k, on = col("label") === col("qlabel"), keep = Seq("label"))
   }
 
-  /** FILTERED IVF search: [[annIvf]]'s inverted-file scan with the metadata
-    * predicate pushed INTO the probed cells — candidates failing the filter
-    * drop BEFORE scoring and before top-k (PRE-filtering), so a query still
-    * fills its k slots no matter how selective the predicate, where a
-    * post-filter (rank first, filter after) silently returns fewer. At
-    * scale the probed-cell candidate stream is the only data-sized leg and
-    * the filter multiplies it down by its selectivity; seeds stay a
-    * broadcast. Kept textually separate from [[annIvf]] (not a shared
-    * parameterized body) so the unfiltered plan the oracle and specs pin
-    * cannot drift. */
-  def annIvfFiltered(ctx: Ctx, k: Int = 3, nprobe: Int = 2): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val seeds = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("se"))
-    val assigned = e.select(col("vec_id"), col("label"), col("embedding"))
-      .crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("label"), col("embedding"), col("cell_id"),
-        cosine("embedding", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("label"), col("embedding"), col("cell_id"))
-    val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("embedding").as("qe"))
-    val probes = queries.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("qlabel"), col("qe"), col("cell_id"),
-        cosine("qe", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("qlabel"), col("qe"), col("cell_id"))
-    probes.join(assigned.select(col("cell_id"), col("vec_id").as("cand_id"),
-        col("label"), col("embedding").as("ce")), Seq("cell_id"))
-      .filter(col("label") === col("qlabel") && col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        cosine("qe", "ce").as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
+  /** FILTERED IVF search: [[annIvf]] with the label predicate pushed INTO
+    * the probed cells — candidates failing it drop before scoring and
+    * before top-k (PRE-filtering), so a query still fills its k slots
+    * however selective the predicate, where a post-filter (rank first,
+    * filter after) silently returns fewer. */
+  def annIvfFiltered(ctx: Ctx, k: Int = 3, nprobe: Int = 2): DataFrame =
+    ivf(ctx, k, nprobe, sameLabel = true)
+
+  private def ivf(ctx: Ctx, k: Int, nprobe: Int, sameLabel: Boolean): DataFrame = {
+    val e = embeddings(ctx)
+    val (seeds, _) = quantizers(e)
+    val q = queries(e, col("label").as("qlabel"))
+    val cells = AnnIndex.assign(e, seeds).select(col("cell_id"),
+      col("vec_id").as("cand_id"), col("label"), col("embedding").as("ce"))
+    val cands = AnnIndex.probe(q, seeds, nprobe)
+      .join(q, Seq("query_id"))
+      .join(cells, Seq("cell_id"))
+      .filter(col("query_id") =!= col("cand_id") &&
+        (if (sameLabel) col("label") === col("qlabel") else lit(true)))
+    AnnIndex.topK(cands.select(col("query_id"), col("cand_id"), col("cell_id"),
+      cosine("qe", "ce").as("cosine")), "cosine", k)
   }
 
   /** Per-dimension int8 (0..255) quantization of the embedding column —
@@ -348,7 +322,7 @@ object Similarity {
     * both sides uses the same (cosine desc, cand) total order; overlap and
     * recall are exact-integer arithmetic. */
   def annQuantizedRecall(ctx: Ctx, k: Int = 5): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
+    val e = embeddings(ctx)
     val rd = when(col("dmax") === col("dmin"), col("dmin"))
       .otherwise(col("dmin")
         + col("q").cast("double") * (col("dmax") - col("dmin")) / 255.0)
@@ -356,31 +330,8 @@ object Similarity {
       .select(col("vec_id"), col("idx"), rd.as("rd"))
       .groupBy("vec_id")
       .agg(expr("transform(array_sort(collect_list(struct(idx, rd))), x -> x.rd)")
-        .as("rv"))
-    def topK(vecs: DataFrame, vcol: String): DataFrame = {
-      val qs = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col(vcol).as("qv"))
-      val cs = vecs.select(col("vec_id").as("cand_id"), col(vcol).as("cv"))
-      broadcast(qs).crossJoin(cs)
-        .filter(col("query_id") =!= col("cand_id"))
-        .select(col("query_id"), col("cand_id"), cosine("qv", "cv").as("cosine"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-        .filter(col("rank") <= k)
-    }
-    val exact = topK(ctx.tbl("embeddings")
-      .select(col("vec_id"), col("embedding")), "embedding")
-    val quant = topK(rv, "rv")
-    exact.as("e")
-      .join(quant.as("qq"),
-        col("e.query_id") === col("qq.query_id")
-          && col("e.cand_id") === col("qq.cand_id"), "left")
-      .groupBy(col("e.query_id").as("query_id"))
-      .agg(
-        count(col("e.cand_id")).as("n_exact"),
-        count(col("qq.cand_id")).as("n_overlap"))
-      .select(col("query_id"), col("n_exact"), col("n_overlap"),
-        dv(col("n_overlap"), col("n_exact")).as("recall_at_k"))
+        .as("embedding"))
+    recall(bruteForce(e, k), bruteForce(rv, k))
   }
 
   /** Per-label centroids — the IVF coarse-quantizer building block: one
@@ -447,230 +398,41 @@ object Similarity {
 
   /** Product-quantization recall@k — the third leg of the production ANN
     * trio (LSH buckets / IVF cells / PQ codes). The 64-dim space splits
-    * into 8 subspaces of 8 dims; the codebook per subspace is the seed
-    * vectors' subvectors (vec_id < 16, fixed coarse quantizer exactly like
-    * [[annIvf]] — no iterative k-means, so both engines derive identical
-    * codebooks). Every vector encodes to 8 codes (nearest codeword per
-    * subspace by subvector cosine); a query's similarity to a candidate is
+    * into 8 subspaces of 8 dims; the codebook per subspace is the
+    * subvectors of the fixed codeword set ([[quantizers]]; no iterative
+    * k-means, so both engines derive identical codebooks). Every vector
+    * encodes to 8 codes, and a query's similarity to a candidate is
     * recovered WITHOUT touching the candidate's floats — the ADC pattern:
     * the query precomputes its 8×16 codeword similarities, a candidate
     * costs 8 table lookups + a sum. Compression here: 64 floats → 8 bytes.
-    *
-    * Cross-engine exactness: per-subspace cosines are single sequential
-    * folds (the verified [[graft.functions.CosineSim]]/list_dot_product
-    * pairing), then ROUNDed to DECIMAL(12,9) before the 8-way ADC sum —
-    * decimal addition is order-free, so the shuffle's nondeterministic
-    * row order cannot flip a ranking (double addition is not associative;
-    * the int8 quantize oracle uses the same round-then-exact rule).
-    *
-    * At 100 TB: encoding is a linear pass with a broadcast codebook; the
-    * ADC scan is Q×N lookups — in production composed with [[annIvf]]
-    * (probe cells first, ADC within cells), both pieces of which this
-    * library ships. */
+    * The ADC scan is over all Q×N pairs; [[annIvfPq]] restricts it to
+    * probed cells. */
   def annPqRecall(ctx: Ctx, k: Int = 5): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val sub = e.select(col("vec_id"), col("label"),
-        explode(expr("sequence(0, 7)")).as("s"), col("embedding"))
-      .select(col("vec_id"), col("s"),
-        expr("slice(embedding, s * 8 + 1, 8)").as("sv"))
-    val cb = sub.filter(col("vec_id") < 16)
-      .select(col("s"), col("vec_id").as("cell"), col("sv").as("cv"))
-    // encode: nearest codeword per (vector, subspace)
-    val codes = sub.join(broadcast(cb), Seq("s"))
-      .select(col("vec_id"), col("s"), col("cell"),
-        expr("cosine_sim(sv, cv)").as("subcos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id", "s").orderBy(col("subcos").desc, col("cell"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("cell"))
-    val queries = sub.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("s"), col("sv").as("qv"))
-    // the query's 8x16 codeword-similarity table, rounded to exact decimal
-    val qd = queries.join(broadcast(cb), Seq("s"))
-      .select(col("query_id"), col("s"), col("cell"),
-        round(expr("cosine_sim(qv, cv)"), 9).cast("decimal(12,9)").as("qdec"))
-    // ADC: candidate score = sum of the query's similarities to its codes —
-    // packed + unrolled like annIvfPq (r11): one codes array per candidate,
-    // one flat 8×16 decimal slot array per query, score = eight unrolled
-    // element_at lookups in a single whole-stage-codegen'd sum. The
-    // previous shape joined 8 code rows per candidate against the
-    // broadcast qd relation and re-aggregated (query, cand) groups — at
-    // SF100 that is 160M joined rows and a 20M-group exchange for a
-    // FULL-SCAN ADC (no IVF restriction here). Same exact decimal values
-    // (order-free addition), oracle-pinned.
-    val codesPacked = codes
-      .groupBy(col("vec_id").as("cand_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, cell))), x -> x.cell)")
-        .as("codes"))
-    val qarr = qd
-      .groupBy(col("query_id"), col("s"))
-      .agg(map_from_entries(collect_list(
-        struct(col("cell").cast("int").as("k"), col("qdec").as("v")))).as("m"))
-      .select(col("query_id"), col("s"),
-        expr("""transform(sequence(0, 15),
-           c -> coalesce(element_at(m, c), CAST(0 AS DECIMAL(12,9))))""").as("sarr"))
-      .groupBy("query_id")
-      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, sarr))), x -> x.sarr))")
-        .as("qarr"))
-    val adcSum = (0 until 8)
-      .map(s => s"element_at(qarr, CAST($s * 16 + " +
-        s"element_at(codes, ${s + 1}) + 1 AS INT))")
-      .mkString(" + ")
-    val adc = codesPacked.crossJoin(broadcast(qarr))
+    val e = embeddings(ctx)
+    val (_, cb) = quantizers(e)
+    val q = queries(e)
+    val pq = AnnIndex.pqCodes(e, cb).select(col("vec_id").as("cand_id"), col("codes"))
+      .crossJoin(broadcast(AnnIndex.adcTable(q, cb, 16)))
       .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr(s"CAST($adcSum AS DECIMAL(22,9))").as("approx"))
-    val pqTop = adc
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("approx").desc, col("cand_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("cand_id"))
-    // ground truth: exact full-vector cosine top-k
-    val qe = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("fq"))
-    val exactTop = qe.join(e.select(col("vec_id").as("cand_id"),
-        col("embedding").as("fc")), col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        expr("cosine_sim(fq, fc)").as("cosine"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("cand_id"))
-    val pqT = pqTop.select(col("query_id").as("pq_qid"), col("cand_id").as("pq_cand"))
-    exactTop.join(pqT,
-        col("query_id") === col("pq_qid") && col("cand_id") === col("pq_cand"),
-        "left_outer")
-      .groupBy("query_id")
-      .agg(count(col("cand_id")).as("n_exact"),
-        count(col("pq_cand")).as("n_overlap"))
-      .select(col("query_id"), col("n_exact"), col("n_overlap"),
-        dv(col("n_overlap"), col("n_exact")).as("recall_at_k"))
+      .select(col("query_id"), col("cand_id"), AnnIndex.adcScore(16).as("approx"))
+    recall(exactTopK(q, candidates(e), k), AnnIndex.topK(pq, "approx", k))
       .orderBy("query_id")
   }
 
-  /** The COMPOSED production ANN pipeline (FAISS IVFADC shape): coarse
-    * quantizer → ADC scan within probed cells → exact rerank.
-    *
-    *  1. IVF ([[annIvf]]'s pieces): every vector is assigned to its
-    *     nearest of 8 seed cells; each query probes its `nprobe` nearest
-    *     cells.
-    *  2. PQ-ADC ([[annPqRecall]]'s pieces): candidates INSIDE probed
-    *     cells are scored from their 8 codebook codes and the query's
-    *     broadcast 8×16 decimal similarity table — no candidate floats
-    *     touched, and the scan is |probed cells|/|cells| of the corpus,
-    *     not all of it.
-    *  3. Exact rerank: only the top-`shortlist` ADC survivors per query
-    *     pay a full-vector cosine; top `k` emitted with ranks.
-    *
-    * At 100 TB: stage 2's cost is the probed fraction × 8 lookups/row,
-    * stage 3 touches shortlist×Q vectors. Cross-engine exactness is the
-    * same verified rules as the two parents: deterministic tie-breaks
-    * everywhere, decimal-rounded ADC sums (order-free addition), the
-    * verified cosine fold. */
+  /** The COMPOSED production ANN pipeline (FAISS IVFADC shape), over the
+    * in-memory relations: every vector is encoded ([[annIvf]]'s cell plus
+    * [[annPqRecall]]'s codes), each query probes its `nprobe` nearest
+    * cells, candidates inside them are ADC-scored, and only the top
+    * `shortlist` pay an exact full-vector cosine; top `k` are emitted with
+    * ranks. [[AnnIndex.query]] serves the same stages from a persisted
+    * index. The codes are raw codebook ids below 16, so the slot width is
+    * 16 and construction runs no action. */
   def annIvfPq(ctx: Ctx, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 20): DataFrame = {
-    graft.functions.CosineSim.register(ctx.spark)
-    val e = ctx.tbl("embeddings")
-    val seeds = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("se"))
-    val assigned = e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("cell_id"), cosine("embedding", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") === 1)
-      .select("vec_id", "cell_id")
-    val queries = e.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val probes = queries.crossJoin(broadcast(seeds))
-      .select(col("query_id"), col("cell_id"), cosine("qe", "se").as("seed_cos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("seed_cos").desc, col("cell_id"))))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "cell_id")
-    // PQ encode + query distance table, the same construction as
-    // annPqRecall ("code" = codeword id, distinct from the IVF cell_id) —
-    // but codes are REINDEXED densely per subspace (row_number over the
-    // tiny codebook; rank is monotone in the original id, so every
-    // tie-break is unchanged) and the serving join is PACKED: one codes
-    // array per candidate, one (8 × 16)-slot decimal array per query,
-    // ADC score = a single fold of 8 array lookups. The previous
-    // row-per-subspace shape paid 8 join rows + a (query, cand)
-    // re-aggregation per candidate — measured 3-6× the packed form's
-    // cost at scale (PERF_NOTES_r10.md §3: the row-machinery tax made
-    // the whole ADC path lose to brute force). The fold accumulates the
-    // SAME eight decimal(12,9) values Spark's sum() added — decimal
-    // addition is exact and order-free, so the output is bit-identical
-    // (the DuckDB oracle and AnnIndexSpec both pin this).
-    val sub = e.select(col("vec_id"), explode(expr("sequence(0, 7)")).as("s"),
-        col("embedding"))
-      .select(col("vec_id"), col("s"), expr("slice(embedding, s * 8 + 1, 8)").as("sv"))
-    val cb = sub.filter(col("vec_id") < 16)
-      .select(col("s"), col("vec_id").as("code"), col("sv").as("cv"))
-      .withColumn("code", row_number().over(
-        Window.partitionBy("s").orderBy("code")) - 1)
-    val codesPacked = sub.join(broadcast(cb), Seq("s"))
-      .select(col("vec_id"), col("s"), col("code"),
-        expr("cosine_sim(sv, cv)").as("subcos"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("vec_id", "s").orderBy(col("subcos").desc, col("code"))))
-      .filter(col("rn") === 1)
-      .groupBy(col("vec_id").as("cand_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, code))), x -> x.code)")
-        .as("codes"))
-    // full (s, code) grid so slot arithmetic s*16 + code stays valid even
-    // if the codebook were ever sparse; unreferenced slots pad 0
-    val qarr = queries
-      .select(col("query_id"), explode(expr("sequence(0, 7)")).as("s"), col("qe"))
-      .select(col("query_id"), col("s"), expr("slice(qe, s * 8 + 1, 8)").as("qv"))
-      .join(broadcast(cb), Seq("s"))
-      .select(col("query_id"), col("s"), col("code"),
-        round(expr("cosine_sim(qv, cv)"), 9).cast("decimal(12,9)").as("qdec"))
-      .select(col("query_id"), col("s"),
-        explode(expr("sequence(0, 15)")).as("slot"), col("code"), col("qdec"))
-      .select(col("query_id"), col("s"), col("slot"),
-        when(col("slot") === col("code"), col("qdec"))
-          .otherwise(lit(0).cast("decimal(12,9)")).as("qdec"))
-      .groupBy("query_id", "s", "slot")
-      .agg(sum(col("qdec")).cast("decimal(12,9)").as("qdec"))
-      .groupBy("query_id")
-      .agg(expr("transform(array_sort(collect_list(struct(s, slot, qdec))), x -> x.qdec)")
-        .as("qarr"))
-    // ADC over candidates in probed cells only — one row per candidate.
-    // The 8 slot lookups are UNROLLED into one flat sum rather than an
-    // aggregate() fold: higher-order functions are CodegenFallback, and
-    // the interpreted per-row eval measured 2.6-3x the cost of the
-    // whole-stage-codegen'd unrolled expression on 900k candidates
-    // (PERF_NOTES_r11.md — element type is not the
-    // tax, the HOF is: a double fold was just as slow). Decimal addition
-    // is exact and order-free, so the value is bit-identical to the fold
-    // and to the original per-subspace sum() (the DuckDB oracle pins it).
-    val cands = probes
-      .join(assigned.select(col("cell_id"), col("vec_id").as("cand_id")), Seq("cell_id"))
-      .filter(col("query_id") =!= col("cand_id"))
-    val adcSum = (0 until 8)
-      .map(s => s"element_at(qarr, CAST($s * 16 + " +
-        s"element_at(codes, ${s + 1}) + 1 AS INT))")
-      .mkString(" + ")
-    val adc = cands
-      .join(codesPacked, Seq("cand_id"))
-      .join(broadcast(qarr), Seq("query_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        expr(s"CAST($adcSum AS DECIMAL(22,9))").as("approx"))
-    val short = adc
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("approx").desc, col("cand_id"))))
-      .filter(col("rn") <= shortlist)
-      .select("query_id", "cand_id", "cell_id", "approx")
-    // exact rerank of the shortlist only
-    short.join(queries, Seq("query_id"))
-      .join(e.select(col("vec_id").as("cand_id"), col("embedding").as("ce")),
-        Seq("cand_id"))
-      .select(col("query_id"), col("cand_id"), col("cell_id"),
-        col("approx").cast("double").as("approx"), cosine("qe", "ce").as("cosine"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id"))))
-      .filter(col("rank") <= k)
+    val e = embeddings(ctx)
+    val (seeds, cb) = quantizers(e)
+    val vecs = e.select("vec_id", "embedding")
+    AnnIndex.serve(queries(e), seeds, cb, AnnIndex.encode(vecs, seeds, cb), vecs,
+      nSlots = 16, k, nprobe, shortlist)
   }
 }

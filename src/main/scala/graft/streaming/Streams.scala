@@ -60,16 +60,6 @@ object Streams {
       .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
 
-  /** Session windows with a 30-minute gap per user (built-in session_window
-    * — state bounded by the watermark). */
-  def sessionWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,6)")).as("session_value"))
-
   /** Exactly-once style stream dedup on event_id within the watermark. */
   def dedup(events: DataFrame): DataFrame =
     events

@@ -38,6 +38,24 @@ class AnnIndexSpec extends SparkSpec {
       s.zipAll(d, "<missing>", "<missing>").find(p => p._1 != p._2)}")
   }
 
+  test("query construction runs 2 actions: one meta row read and the slot width") {
+    import spark.implicits._
+    val dir = "/tmp/graft-ann-index-jobs"
+    rm(new java.io.File(dir))
+    extensions.AnnIndex.build(ctx, dir)
+    // a pinned tombstone set too: versions, tombstones and ledger all come
+    // from the one meta row
+    extensions.AnnIndex.remove(spark, dir, Seq(42L).toDF("vec_id"))
+    val q = queriesDf
+    val n = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      extensions.AnnIndex.query(spark, dir, q); ()
+    }
+    // the meta row is one scan job; the slot width is an aggregate, whose
+    // shuffle stage and result are two jobs under adaptive execution
+    assert(n == org.apache.spark.JobCounter.Count(jobs = 3, executions = 2),
+      s"query construction ran $n")
+  }
+
   test("rebuild publishes a new snapshot; the old index stays readable") {
     val dir = "/tmp/graft-ann-index-spec" // built by the test above
     val v0 = Versioned.latestVersion(spark, s"$dir/coded").get

@@ -15,7 +15,7 @@ class ManifestSpec extends SparkSpec {
       tracker.getJobInfo(id).toSeq.flatMap(_.stageIds().toSeq)
         .flatMap(s => tracker.getStageInfo(s).toSeq.map(_.numTasks()))).maxOption
     assert(maxTasks.forall(_ <= 2),
-      s"manifest construction ran a ${maxTasks.get}-task job — that's a scan")
+      s"manifest construction ran a ${maxTasks.getOrElse(0)}-task job — that's a scan")
     val rows = m.collect()
     assert(rows.length >= 62, s"only ${rows.length} models catalogued")
     val byName = rows.map(r => r.getString(0) ->

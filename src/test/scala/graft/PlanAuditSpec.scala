@@ -122,6 +122,24 @@ class PlanAuditSpec extends SparkSpec {
       }
   }
 
+  test("IVF queries assign cells through argmax_cosine, with no vec_id window") {
+    Seq("annIvf" -> extensions.Similarity.annIvf(ctx),
+        "annIvfFiltered" -> extensions.Similarity.annIvfFiltered(ctx),
+        "annIvfPq" -> extensions.Similarity.annIvfPq(ctx)).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val all = nodes(plan)
+      assert(all.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.ArgmaxCosine]))), s"$name:\n$plan")
+      // a crossJoin + row_number assignment would rank every (vector, seed)
+      // pair in a window partitioned by vec_id
+      val vecWindows = all.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec
+          if w.partitionSpec.exists(_.references.exists(_.name == "vec_id")) => w
+      }
+      assert(vecWindows.isEmpty, s"$name:\n$plan")
+    }
+  }
+
   test("rollup is one Expand + one aggregate, no per-level re-scan") {
     val plan = extensions.Analytics.regionalRevenueRollup(ctx)
       .queryExecution.executedPlan
