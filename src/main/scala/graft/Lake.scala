@@ -2,13 +2,21 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Cluster-scale materialization: bucketed table writes.
+/** Write-time lake layouts: how a table's rows are placed in files so that
+  * consumers skip or avoid work at scale.
   *
-  * Locally, Store persists hot mid-DAG tables in memory. On a real cluster
-  * at 100 TB the same boundary is a bucketed parquet table: bucketing by the
-  * downstream join/aggregation key means consumers join bucket-to-bucket
-  * with NO shuffle of the big side (verified by BucketedJoinSpec: the
-  * bucketed fact ⋈ fact plan contains no Exchange).
+  *  - [[Lake.writeBucketed]]: bucketing by the downstream join/aggregation
+  *    key, so consumers join bucket-to-bucket with NO shuffle of the big
+  *    side (BucketedJoinSpec: the bucketed fact ⋈ fact plan has no
+  *    Exchange);
+  *  - [[Lake.writeTimePartitioned]]: date partitions + range-sorted files,
+  *    for partition pruning and row-group skipping on one sort key;
+  *  - [[Lake.writeZOrdered]] / [[Lake.writeZOrderedQuantile]]: Morton
+  *    clustering, for file skipping on either of two predicate columns.
+  *
+  * Each writer replaces its target in one Spark write. Rewriting a table's
+  * data in place (upsert, compaction) is [[Versioned]]'s job: one commit
+  * protocol, an atomic manifest publish, no rename of live data.
   */
 object Lake {
 
@@ -138,177 +146,5 @@ object Lake {
       .drop("__z", "__qa", "__qb")
       .write.mode(SaveMode.Overwrite)
       .parquet(path)
-  }
-
-  /** Small-file compaction — the routine operational fix for streaming /
-    * incremental sinks that accrete thousands of tiny files per partition
-    * (each costing a task, a footer read, and a namenode entry at scale).
-    * Rewrites `path` in place to ONE file per date partition (hash-
-    * clustering rows by date routes each date to exactly one of
-    * `parallelism` concurrent reducers), preserving the partition layout
-    * and every row. The rewrite goes through a temp dir then a rename
-    * swap, so a crashed compaction leaves the original data intact. */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      dateCol: String, parallelism: Int = 8,
-      sortCols: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
-    val tmp = path + "__compact_tmp"
-    spark.read.parquet(path)
-      .repartition(parallelism, col(dateCol))
-      // re-sorting inside each rewritten file preserves the tight per-file
-      // min/max spans the sorted-write layouts exist for — compaction must
-      // not trade file count for dead row-group skipping
-      .sortWithinPartitions((col(dateCol) +: sortCols.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy(dateCol).parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    // checked swap: on a failed second rename, restore the original and
-    // abort rather than leaving the table path missing. A crash BETWEEN
-    // the renames still leaves the full data at __compact_old (manual
-    // recovery: rename it back); neither case loses rows.
-    if (fs.exists(bak)) fs.delete(bak, true)
-    require(fs.rename(dst, bak), s"compact: cannot move $dst aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      val restored = fs.rename(bak, dst)
-      sys.error(s"compact: swap into $dst failed" +
-        (if (restored) " (original restored)" else s" (ORIGINAL AT $bak)"))
-    }
-    fs.delete(bak, true)
-    ()
-  }
-
-  /** [[compact]] restricted to the partitions that are actually fragmented
-    * (≥ `minFiles` data files) — the shape a long-running streaming sink
-    * needs: cold history is never re-read or re-written, so maintenance
-    * I/O tracks the ACTIVE partitions, not the lake's lifetime size. Each
-    * fragmented partition is rewritten independently through its own temp
-    * dir + checked rename swap. Returns the compacted partition names.
-    *
-    * BIN-PACKED, not single-filed: the rewrite targets `targetFileBytes`
-    * per output file (from the partition's on-disk size), so a huge
-    * fragmented partition compacts through ceil(bytes/target) parallel
-    * tasks into bounded files instead of funneling through one straggler
-    * task — `coalesce(1)` here was a scale bug. With `sortCols` the pack
-    * uses a RANGE repartition on the sort key + within-file sort, so the
-    * tight per-file min/max spans (the point of the sorted layout) survive
-    * compaction across multiple output files. */
-  def compactFragmented(spark: org.apache.spark.sql.SparkSession, path: String,
-      dateCol: String, minFiles: Int = 4,
-      sortCols: Seq[String] = Nil,
-      targetFileBytes: Long = 128L << 20): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) return Nil
-    // Data files live at the LEAF of the hive-style directory tree: descend
-    // through any nested `k=v` levels under each `dateCol=` dir so layouts
-    // like dateCol=…/source=… compact per-leaf instead of silently no-oping
-    // (single-level layouts see exactly the old behavior).
-    def leaves(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val subs = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (subs.isEmpty) Seq(dir) else subs.flatMap(s => leaves(s.getPath))
-    }
-    val fragmented = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$dateCol="))
-      .flatMap(s => leaves(s.getPath))
-      .map(p => (p, fs.listStatus(p)
-        .filter(_.getPath.getName.endsWith(".parquet"))))
-      .collect { case (p, files) if files.length >= minFiles =>
-        (p, files.map(_.getLen).sum)
-      }
-    fragmented.foreach { case (partDir, bytes) =>
-      val tmp = new org.apache.hadoop.fs.Path(partDir.toString + "__compact_tmp")
-      val nOut = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val src = spark.read.parquet(partDir.toString)
-      val sorted =
-        if (sortCols.nonEmpty)
-          src.repartitionByRange(nOut, sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.map(col): _*)
-        else src.repartition(nOut)
-      sorted.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val bak = new org.apache.hadoop.fs.Path(partDir.toString + "__old")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      require(fs.rename(partDir, bak), s"compactFragmented: cannot move $partDir")
-      if (!fs.rename(tmp, partDir)) {
-        val restored = fs.rename(bak, partDir)
-        sys.error(s"compactFragmented: swap of $partDir failed" +
-          (if (restored) " (original restored)" else s" (ORIGINAL AT $bak)"))
-      }
-      fs.delete(bak, true)
-    }
-    // root-relative names so nested leaves stay unambiguous
-    // ("dt=…/source=…"); single-level layouts still read as before
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    fragmented.map(_._1.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
-  }
-
-  /** Keyed MERGE INTO (upsert) for a partitioned parquet lake — the late-
-    * correction path [[graft.Incremental]]'s high-water-mark strategy
-    * cannot serve: updates/inserts keyed by `keys` may land in ANY old
-    * partition, and only those partitions may be touched.
-    *
-    * Cost model at 100 TB: proportional to the TOUCHED partitions, never
-    * the table — (1) the update batch's distinct `partCol` values (a
-    * metadata-sized list) select the partitions; (2) ONLY those partitions
-    * are read back (predicate = partition pruning, proven in UpsertSpec);
-    * (3) existing rows superseded by an update key are dropped via a
-    * left-anti join (updates side is the small side — broadcast); (4) the
-    * merged rows replace exactly those partition dirs via a temp-write +
-    * rename swap. All other partition directories are never read or
-    * rewritten (UpsertSpec pins their files byte-identical).
-    *
-    * Constraint (standard for event-grain facts): a key's `partCol` value
-    * must be stable across versions — a "moved" row would leave its old
-    * version in an untouched partition. */
-  def upsert(spark: org.apache.spark.sql.SparkSession, path: String,
-      updates: DataFrame, keys: Seq[String], partCol: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val touched = updates.select(partCol).distinct().collect().map(_.get(0))
-    val existing = spark.read.parquet(path)
-      .filter(col(partCol).isInCollection(touched.toSeq))
-    val kept = existing.join(
-      org.apache.spark.sql.functions.broadcast(
-        updates.select(keys.map(col): _*).distinct()),
-      keys, "left_anti")
-    val merged = kept.unionByName(updates.select(existing.columns.map(col): _*))
-    // Spark refuses to overwrite a path it is reading (correctly — a failed
-    // job would destroy its own input), so the merged partitions go through
-    // a temp dir and a per-partition rename swap, same crash posture as
-    // [[compact]]: originals are intact until their replacement is fully
-    // written, and a crash mid-swap loses no partition (the __old backup
-    // remains).
-    val tmp = path + "__upsert_tmp"
-    merged.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // swap by the temp dir's ACTUAL partition directory names (the writer
-    // Hive-escapes special characters in partition values — reconstructing
-    // names from raw values would miss those dirs), and CHECK every rename:
-    // the backup is deleted only after its replacement landed, so no
-    // failure mode silently drops a partition.
-    val written = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath)
-    written.foreach { src =>
-      val part = src.getName
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$part")
-      val bak = new org.apache.hadoop.fs.Path(s"$path/${part}__old")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      val hadOld = fs.exists(dst)
-      if (hadOld) require(fs.rename(dst, bak),
-        s"upsert: cannot move $dst aside")
-      if (!fs.rename(src, dst)) {
-        val restored = !hadOld || fs.rename(bak, dst)
-        sys.error(s"upsert: swap of $part failed" +
-          (if (restored) " (original restored)" else s" (ORIGINAL AT $bak)"))
-      }
-      if (hadOld) fs.delete(bak, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    written.length.toLong
   }
 }

@@ -211,7 +211,7 @@ object Versioned {
     * references them, so this move needs no atomicity). Returns entries
     * whose `part` is the raw dir fragment value. */
   private def stage(df: DataFrame, path: String,
-      partitionBy: Option[String]): Seq[FileEntry] = {
+      partitionBy: Option[String], hashCluster: Boolean = true): Seq[FileEntry] = {
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = s"$path/_stage/$uuid"
     partitionBy match {
@@ -222,7 +222,11 @@ object Versioned {
       // guide §6 small-files). Hash-clustered, each partition value lands in
       // exactly one task → one file per partition. A partition too large for
       // one file splits via spark.sql.files.maxRecordsPerFile when set.
-      case Some(pc) => df.repartition(col(pc)).write.partitionBy(pc).parquet(tmp)
+      // [[compact]] arrives already laid out (one partition value per task,
+      // range-sorted) and opts out, so its bin-packing survives the stage.
+      case Some(pc) =>
+        (if (hashCluster) df.repartition(col(pc)) else df)
+          .write.partitionBy(pc).parquet(tmp)
       case None => df.write.parquet(tmp)
     }
     val fs = fsOf(df.sparkSession, path)
@@ -296,11 +300,15 @@ object Versioned {
     * Concurrent commits to OTHER partitions are merged and win together.
     */
   def replacePartitions(df: DataFrame, path: String, partCol: String,
-      baseVersion: Option[Long] = None): Long = {
+      baseVersion: Option[Long] = None): Long =
+    replace(df, path, partCol, baseVersion, hashCluster = true)
+
+  private def replace(df: DataFrame, path: String, partCol: String,
+      baseVersion: Option[Long], hashCluster: Boolean): Long = {
     val spark = df.sparkSession
     val base = baseVersion.orElse(latestVersion(spark, path))
       .map(v => readManifest(spark, path, Some(v)))
-    val staged = stage(df, path, Some(partCol))
+    val staged = stage(df, path, Some(partCol), hashCluster)
     val replaced = staged.flatMap(_.part).toSet
     val partType = df.schema(partCol).dataType.sql
     def touchedFiles(m: Option[Manifest]): Set[String] =
@@ -332,6 +340,12 @@ object Versioned {
     require(m.files.nonEmpty,
       s"version ${m.version} of $path is an empty snapshot (no data files); " +
         s"schema: ${m.schema.getOrElse("<unrecorded>")}")
+    scan(spark, path, m, m.files)
+  }
+
+  /** One FileSourceScan over `files`, a subset of manifest `m`'s list. */
+  private def scan(spark: SparkSession, path: String, m: Manifest,
+      files: Seq[FileEntry]): DataFrame = {
     def abs(f: FileEntry) = s"$path/${f.file}"
     // commit-time recorded schema: no footer-inference job on read. The
     // head-file inference remains only for pre-r8 manifests.
@@ -340,32 +354,42 @@ object Versioned {
     (m.partCol, m.partType) match {
       case (Some(pc), Some(pt)) =>
         val full = recorded.getOrElse {
-          val dataSchema = spark.read.parquet(abs(m.files.head)).schema
+          val dataSchema = spark.read.parquet(abs(files.head)).schema
           StructType(dataSchema.fields.filterNot(_.name == pc) :+
             org.apache.spark.sql.types.StructField(pc, DataType.fromDDL(pt)))
         }
         spark.read
           .option("basePath", s"$path/data")
           .schema(full)
-          .parquet(m.files.map(abs): _*)
+          .parquet(files.map(abs): _*)
       case _ =>
         recorded match {
-          case Some(s) => spark.read.schema(s).parquet(m.files.map(abs): _*)
-          case None => spark.read.parquet(m.files.map(abs): _*)
+          case Some(s) => spark.read.schema(s).parquet(files.map(abs): _*)
+          case None => spark.read.parquet(files.map(abs): _*)
         }
     }
   }
 
-  /** Transactional keyed MERGE INTO — [[Lake.upsert]]'s semantics with an
-    * ATOMIC publish: read only the touched partitions of the CURRENT
-    * snapshot, drop rows superseded by an update key (broadcast
-    * anti-join), and commit merged + untouched partitions in one manifest
-    * rename. A crash at any point leaves the previous version fully
-    * readable; concurrent readers never observe the intermediate state;
-    * a concurrent commit into the same partitions aborts with
-    * [[CommitConflictException]] (lost updates are impossible, not just
-    * unlikely). Same stability constraint: a key's `partCol` value must
-    * not change across versions. */
+  /** Transactional keyed MERGE INTO (upsert) — the late-correction path
+    * [[graft.Incremental]]'s high-water-mark strategy cannot serve:
+    * updates/inserts keyed by `keys` may land in ANY old partition, and
+    * only those partitions may be touched.
+    *
+    * Cost ∝ the TOUCHED partitions, never the table: the update batch's
+    * distinct `partCol` values (a metadata-sized list) select the
+    * partitions; only those are read back from the CURRENT snapshot (the
+    * filter is partition pruning); existing rows superseded by an update
+    * key are dropped by a broadcast anti-join; and the merged rows are
+    * committed by [[replacePartitions]], so every other partition keeps
+    * its manifest entries and files untouched (UpsertSpec pins both).
+    *
+    * The publish is atomic: a crash at any point leaves the previous
+    * version fully readable, concurrent readers never observe the
+    * intermediate state, and a concurrent commit into the same
+    * partitions aborts with [[CommitConflictException]] (lost updates are
+    * impossible, not just unlikely). Constraint (standard for event-grain
+    * facts): a key's `partCol` value must not change across versions — a
+    * "moved" row would leave its old version in an untouched partition. */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], partCol: String): Long = {
     import org.apache.spark.sql.functions.broadcast
@@ -384,6 +408,55 @@ object Versioned {
       keys, "left_anti")
     val merged = kept.unionByName(updates.select(current.columns.map(col): _*))
     replacePartitions(merged, path, partCol, baseVersion = baseV)
+  }
+
+  /** Small-file compaction as one commit (Delta's OPTIMIZE): the routine
+    * fix for streaming/incremental writers that accrete many tiny files per
+    * partition, each costing a task, a footer read and a namenode entry.
+    *
+    *  - Only FRAGMENTED partitions (≥ `minFiles` files in the latest
+    *    manifest) are rewritten: cold history is never re-read, so
+    *    maintenance I/O tracks the active partitions, not the table's
+    *    lifetime size. Each is read back from exactly its manifest files.
+    *  - Each is BIN-PACKED into ceil(bytes / target) files written by that
+    *    many tasks, the target being Spark's own
+    *    `spark.sql.files.maxPartitionBytes` (the split size a reader wants
+    *    anyway): a huge partition never funnels through one straggler task.
+    *  - With `sortCols` each partition is range-partitioned on them and
+    *    sorted within each file, so the tight per-file min/max spans the
+    *    sorted layouts exist for survive compaction.
+    *  - All rewritten partitions publish in ONE [[replacePartitions]]-style
+    *    commit based on the manifest they were chosen from: readers see the
+    *    old or the new layout, never a mix; earlier versions stay readable
+    *    until [[vacuum]]; a concurrent commit into the same partitions
+    *    aborts the compaction instead of being lost.
+    *
+    * Returns the raw partition values compacted (empty: nothing to do). */
+  def compact(spark: SparkSession, path: String, minFiles: Int = 4,
+      sortCols: Seq[String] = Nil): Seq[String] = {
+    val m = readManifest(spark, path)
+    val pc = m.partCol.getOrElse(sys.error(s"compact: $path is not partitioned"))
+    val fragmented = m.files.groupBy(_.part).toSeq.collect {
+      case (Some(pv), files) if files.size >= minFiles => pv -> files
+    }.sortBy(_._1)
+    if (fragmented.isEmpty) return Nil
+    val fs = fsOf(spark, path)
+    val target = math.max(1L, org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")))
+    // one input per partition, so every write task holds ONE partition
+    // value and writes one file; the union keeps each input's partitioning
+    val packed = fragmented.map { case (_, files) =>
+      val bytes = files.map(f => fs.getFileStatus(new Path(s"$path/${f.file}")).getLen).sum
+      val n = math.max(1L, (bytes + target - 1) / target).toInt
+      val src = scan(spark, path, m, files)
+      if (sortCols.isEmpty) src.repartition(n)
+      else src.repartitionByRange(n, sortCols.map(col): _*)
+    }.reduce(_ union _)
+      // partition column first: it is the order the dynamic-partition
+      // writer requires, so it adds no sort of its own over this one
+      .sortWithinPartitions((pc +: sortCols).map(col): _*)
+    replace(packed, path, pc, Some(m.version), hashCluster = false)
+    fragmented.map(_._1)
   }
 
   /** Delete data files no longer referenced by any manifest newer than

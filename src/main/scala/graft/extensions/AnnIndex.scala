@@ -561,25 +561,44 @@ object AnnIndex {
     * index BUILD is actions (the Versioned publishes) — consumers timing
     * this entry must start their clock before construction, which the
     * driver's inclusive fn(spark, dir) timing and the in-repo bench do.
-    * Old generations are vacuumed age-guarded (never the one just
-    * published), so repeated runs don't accrete forever. */
+    * The index lives at [[pipelineDir]]; old generations are vacuumed
+    * age-guarded (never the one just published), so repeated runs don't
+    * accrete forever. */
   def semanticDedupPipeline(ctx: Ctx, tau: Double = 0.4): DataFrame = {
+    val dir = publishPipelineIndex(ctx, "semdedup") { dir =>
+      val n = ctx.tbl("embeddings").count()
+      build(ctx, dir, nCells = math.ceil(math.sqrt(n.toDouble)).toInt)
+    }
+    semanticDedup(ctx.spark, dir, tau)
+  }
+
+  /** Where a declared pipeline of `kind` keeps its index over `ctx`'s
+    * corpus: under the SparkContext's own scratch root
+    * (`SparkFiles.getRootDirectory()`, the driver temp dir that
+    * `SparkEnv.stop` deletes recursively), so an index lives no longer
+    * than the context that built it; keyed by the corpus dir. */
+  private[graft] def pipelineDir(ctx: Ctx, kind: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(ctx.dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val dir = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-semdedup/$digest"
-    val n = ctx.tbl("embeddings").count()
-    val nCells = math.ceil(math.sqrt(n.toDouble)).toInt
-    build(ctx, dir, nCells = nCells)
-    Tables.foreach(t => Versioned.vacuum(ctx.spark, s"$dir/$t", keepVersions = 2))
-    Versioned.vacuum(ctx.spark, s"$dir/meta", keepVersions = 2)
-    semanticDedup(ctx.spark, dir, tau)
+    s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft-$kind/$digest"
+  }
+
+  /** Publish a fresh generation with `build` at [[pipelineDir]], then
+    * vacuum the older generations (never the one just published): Bench
+    * draws rebuild the index repeatedly within one context. */
+  private def publishPipelineIndex(ctx: Ctx, kind: String)(
+      build: String => Unit): String = {
+    val dir = pipelineDir(ctx, kind)
+    build(dir)
+    (Tables :+ "meta").foreach(t =>
+      Versioned.vacuum(ctx.spark, s"$dir/$t", keepVersions = 2))
+    dir
   }
 
   /** Index-served FILTERED search as a declared pipeline — the registry
     * twin of [[Similarity.annIvfPq]] plus a stored-attribute predicate:
     * builds the default-geometry index WITH `label` as a stored attribute
-    * (build metaCols) under a corpus-keyed scratch dir, then serves the
+    * (build metaCols) under [[pipelineDir]], then serves the
     * standard query set (vec_id in [10, 20)) restricted MAP-SIDE to
     * vec_id 0's label. The predicate prunes the coded candidate stream
     * before ADC, so the shortlist and the final k are drawn entirely from
@@ -588,14 +607,9 @@ object AnnIndex {
     * times the pipeline inclusively); the oracle mirrors the full IVFADC
     * math with the same pre-shortlist label filter. */
   def filteredServePipeline(ctx: Ctx): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${ctx.dir}/filtered".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val dir = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      s"/graft-annfiltered/$digest"
-    build(ctx, dir, metaCols = Seq("label"))
-    Tables.foreach(t => Versioned.vacuum(ctx.spark, s"$dir/$t", keepVersions = 2))
-    Versioned.vacuum(ctx.spark, s"$dir/meta", keepVersions = 2)
+    val dir = publishPipelineIndex(ctx, "annfiltered") { dir =>
+      build(ctx, dir, metaCols = Seq("label"))
+    }
     val emb = ctx.tbl("embeddings")
     // take(1), not head(): on embeddings without a vec_id 0 (graft-synth
     // numbers ids from 1) the label is NULL and nothing matches — an empty

@@ -163,13 +163,4 @@ object Rollups {
         pin4(sum("gross_item_sales_amount")).as("gross_d"),
         pin4(sum("net_item_sales_amount")).as("net_d"))
   }
-
-  /** All rollups, for eager parallel materialization in `Runner.buildAll`
-    * (one fact pass each, concurrently, before the report phase fans out). */
-  def all(ctx: Ctx): Seq[(String, DataFrame)] = Seq(
-    "rollup_customer_orders" -> customerOrders(ctx),
-    "rollup_customer_month" -> customerMonth(ctx),
-    "rollup_part_month" -> partMonth(ctx),
-    "rollup_supplier_sales" -> supplierSales(ctx),
-    "rollup_nation_flows" -> nationFlows(ctx))
 }

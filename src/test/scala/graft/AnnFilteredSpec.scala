@@ -168,14 +168,38 @@ class AnnFilteredSpec extends SparkSpec {
     // NULL, which the DuckDB twin's scalar subquery turns into zero rows
     val dir = java.nio.file.Files.createTempDirectory("ann_one_based").toString
     val oneBased = Ctx(spark, dir)
-    val index = new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp") +
-      "/graft-annfiltered/" + java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir/filtered".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    val index = new java.io.File(extensions.AnnIndex.pipelineDir(oneBased, "annfiltered"))
     try {
       ctx.tbl("embeddings").withColumn("vec_id", col("vec_id") + 1)
         .write.parquet(s"$dir/embeddings.parquet")
       assert(oneBased.tbl("embeddings").filter(col("vec_id") === 0).count() == 0)
       assert(extensions.AnnIndex.filteredServePipeline(oneBased).count() == 0)
     } finally { rm(new java.io.File(dir)); rm(index) }
+  }
+
+  test("registry index pipelines publish under the context's scratch root, not java.io.tmpdir") {
+    // a fresh corpus dir, so no earlier run can have left its old-style
+    // java.io.tmpdir index behind
+    val dir = java.nio.file.Files.createTempDirectory("ann_pipeline_dirs").toString
+    val corpus = Ctx(spark, dir)
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
+    val legacy = Seq(new java.io.File(s"$tmp/graft-semdedup/${md5(dir)}"),
+      new java.io.File(s"$tmp/graft-annfiltered/${md5(s"$dir/filtered")}"))
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory())
+      .getCanonicalPath
+    val indexes = Seq("semdedup", "annfiltered")
+      .map(k => new java.io.File(extensions.AnnIndex.pipelineDir(corpus, k)))
+    try {
+      ctx.tbl("embeddings").write.parquet(s"$dir/embeddings.parquet")
+      assert(extensions.AnnIndex.semanticDedupPipeline(corpus).count() > 0)
+      assert(extensions.AnnIndex.filteredServePipeline(corpus).count() > 0)
+      indexes.foreach { d =>
+        assert(d.getCanonicalPath.startsWith(root + "/"), s"$d is not under $root")
+        assert(new java.io.File(d, "meta/_log").isDirectory, s"no index published at $d")
+      }
+      assert(legacy.forall(!_.exists()), s"an index landed in $tmp")
+    } finally { rm(new java.io.File(dir)); indexes.foreach(rm) }
   }
 }

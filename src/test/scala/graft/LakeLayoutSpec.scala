@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Event-lake layout posture (Lake.writeTimePartitioned / Lake.compact):
+/** Event-lake layout posture (Lake.writeTimePartitioned / Versioned.compact):
   * at 100 TB the difference between scanning a day and scanning the corpus
   * is (a) directory-level partition pruning and (b) tight per-file sort-key
   * ranges for row-group skipping — both are write-time decisions, so prove
@@ -60,86 +60,83 @@ class LakeLayoutSpec extends SparkSpec {
       s"file spans not tight: ${spans.mkString(",")}")
   }
 
+  private def checksum(df: org.apache.spark.sql.DataFrame): Long =
+    df.select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
+      .agg(expr("bit_xor(h)")).head().getLong(0)
+
+  /** `slices` appends of `df` into a Versioned table: one file per date
+    * per append, the small-file shape a streaming writer leaves. */
+  private def appendSlices(df: org.apache.spark.sql.DataFrame, dir: String,
+      slices: Int): Unit =
+    (0 until slices).foreach { i =>
+      // dt is event_id % 8: slice on event_id / 8 so every slice spans every date
+      Versioned.write(df.filter((col("event_id") / 8).cast("long") % slices === i), dir,
+        mode = "append", partitionBy = Some("dt"))
+    }
+
   test("compact: collapses to one file per date, preserves the row multiset") {
     val dir = java.nio.file.Files.createTempDirectory("lake_cp").toString
-    // deliberately shard: 16 writer partitions x 8 dates = ~128 small files
-    events.repartition(16).write.mode("overwrite").partitionBy("dt").parquet(dir)
-    def dataFiles() = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .filterNot(_.getName.startsWith("_"))
-      .map(d => d.listFiles().count(_.getName.endsWith(".parquet")))
-    val before = dataFiles()
-    assert(before.sum > 50, s"precondition: expected many shards, got ${before.sum}")
-    val checksumBefore = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-    Lake.compact(spark, dir, "dt")
-    val after = dataFiles()
-    assert(after.length == 8 && after.forall(_ == 1),
-      s"expected 1 file in each of 8 partitions, got ${after.mkString(",")}")
-    val backCount = spark.read.parquet(dir).count()
-    val checksumAfter = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-    assert(backCount == 40000 && checksumAfter == checksumBefore)
+    appendSlices(events, dir, 6)
+    val before = Versioned.readManifest(spark, dir)
+    assert(before.files.size == 48, s"precondition: expected 48 shards, got ${before.files.size}")
+    val checksumBefore = checksum(Versioned.read(spark, dir))
+    val done = Versioned.compact(spark, dir)
+    assert(done.size == 8, s"compacted: $done")
+    val after = Versioned.readManifest(spark, dir)
+    assert(after.version == before.version + 1, "compaction is not one commit")
+    val perDate = after.files.groupBy(_.part).values.map(_.size)
+    assert(perDate.size == 8 && perDate.forall(_ == 1),
+      s"expected 1 file in each of 8 partitions, got ${perDate.mkString(",")}")
+    val back = Versioned.read(spark, dir)
+    assert(back.count() == 40000 && checksum(back) == checksumBefore)
+    // the pre-compaction version still reads, whole
+    assert(checksum(Versioned.read(spark, dir, Some(before.version))) == checksumBefore)
   }
 
-  test("compactFragmented bin-packs a big partition into N>1 bounded files") {
+  test("compact bin-packs a big partition into N>1 bounded files") {
     val dir = java.nio.file.Files.createTempDirectory("lake_bp").toString
     // one hot date fragmented into 16 shards; the rest have 1 file each
-    val hot = events.filter(col("dt") === lit(java.sql.Date.valueOf("2024-01-03")))
-    val cold = events.filter(col("dt") =!= lit(java.sql.Date.valueOf("2024-01-03")))
-    cold.coalesce(1).write.mode("overwrite").partitionBy("dt").parquet(dir)
-    hot.repartition(16).write.mode("append").partitionBy("dt").parquet(dir)
-    val hotDir = new java.io.File(s"$dir/dt=2024-01-03")
-    val hotBytes = hotDir.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.length()).sum
-    val checksumBefore = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
+    val hotDate = lit(java.sql.Date.valueOf("2024-01-03"))
+    Versioned.write(events.filter(col("dt") =!= hotDate), dir, partitionBy = Some("dt"))
+    appendSlices(events.filter(col("dt") === hotDate), dir, 16)
+    val before = Versioned.readManifest(spark, dir)
+    val hotBefore = before.files.filter(_.part.contains("2024-01-03"))
+    assert(hotBefore.size == 16)
+    val hotBytes = hotBefore.map(f => new java.io.File(s"$dir/${f.file}").length()).sum
+    val checksumBefore = checksum(Versioned.read(spark, dir))
     // target a third of the partition per file -> expect ~3-4 output files,
     // each a task of bounded size (no single-task straggler rewrite)
-    val done = Lake.compactFragmented(spark, dir, "dt", minFiles = 4,
-      sortCols = Seq("user_id"), targetFileBytes = hotBytes / 3)
-    assert(done == Seq("dt=2024-01-03"), s"compacted: $done")
-    val after = hotDir.listFiles().count(_.getName.endsWith(".parquet"))
-    assert(after > 1 && after < 16, s"expected bin-packed files, got $after")
-    val checksumAfter = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-    assert(checksumAfter == checksumBefore, "compaction changed the row multiset")
-    // cold partitions untouched (still single-file)
-    val coldFiles = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .filterNot(d => d.getName.startsWith("_") || d.getName == "dt=2024-01-03")
-      .map(_.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(coldFiles.forall(_ == 1))
-  }
-
-  test("compactFragmented descends nested hive partitions to the leaf") {
-    val dir = java.nio.file.Files.createTempDirectory("lake_nest").toString
-    // src must vary WITHIN a date (dt is id%8, so use a modulus coprime
-    // to 8) or the sibling-leaf assertions have nothing to check
-    val tagged = events.withColumn("src",
-      when(col("event_id") % 3 === 0, "web").otherwise("app"))
-    // fragment exactly one (dt, src) leaf; every other leaf stays 1 file
-    val hot = tagged.filter(col("dt") === lit(java.sql.Date.valueOf("2024-01-03"))
-      && col("src") === "web")
-    val cold = tagged.filter(!(col("dt") === lit(java.sql.Date.valueOf("2024-01-03"))
-      && col("src") === "web"))
-    cold.coalesce(1).write.mode("overwrite").partitionBy("dt", "src").parquet(dir)
-    hot.repartition(8).write.mode("append").partitionBy("dt", "src").parquet(dir)
-    val checksumBefore = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-    val done = Lake.compactFragmented(spark, dir, "dt", minFiles = 4)
-    assert(done == Seq("dt=2024-01-03/src=web"), s"compacted: $done")
-    val leaf = new java.io.File(s"$dir/dt=2024-01-03/src=web")
-    assert(leaf.listFiles().count(_.getName.endsWith(".parquet")) == 1)
-    val checksumAfter = spark.read.parquet(dir)
-      .select(xxhash64(col("event_id"), col("user_id"), col("value")).as("h"))
-      .agg(expr("bit_xor(h)")).head().getLong(0)
-    assert(checksumAfter == checksumBefore, "compaction changed the row multiset")
-    // sibling leaf of the same date untouched
-    val sibling = new java.io.File(s"$dir/dt=2024-01-03/src=app")
-    assert(sibling.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    val target = hotBytes / 3
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, target.toString)
+    val done = try Versioned.compact(spark, dir, minFiles = 4, sortCols = Seq("user_id"))
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(done == Seq("2024-01-03"), s"compacted: $done")
+    val after = Versioned.readManifest(spark, dir)
+    assert(after.version == before.version + 1, "compaction is not one commit")
+    val hot = after.files.filter(_.part.contains("2024-01-03"))
+    assert(hot.size > 1 && hot.size < 16, s"expected bin-packed files, got ${hot.size}")
+    // one staged write (a shared commit uuid), one task per file
+    // (part-<task>-… names)
+    val names = hot.map(_.file.split('/').last)
+    assert(names.map(_.take(36)).distinct.size == 1, names.mkString(", "))
+    assert(names.map(_.drop(37).take(10)).distinct.size == hot.size, names.mkString(", "))
+    val files = hot.map(f => new java.io.File(s"$dir/${f.file}"))
+    assert(files.forall(_.length() <= 2 * target),
+      s"files not bounded by 2x the $target-byte target: ${files.map(_.length()).mkString(",")}")
+    // range-sorted: each file covers a narrow slice of the user_id domain
+    val spans = files.map { f =>
+      val r = spark.read.parquet(f.getAbsolutePath).agg(min("user_id"), max("user_id")).head()
+      r.getLong(1) - r.getLong(0)
+    }
+    assert(spans.forall(_ <= 100000L / 2), s"file spans not tight: ${spans.mkString(",")}")
+    assert(checksum(Versioned.read(spark, dir)) == checksumBefore,
+      "compaction changed the row multiset")
+    // cold partitions untouched: identical manifest entries
+    assert(after.files.filterNot(_.part.contains("2024-01-03")).toSet ==
+      before.files.filterNot(_.part.contains("2024-01-03")).toSet)
+    // the pre-compaction version still reads
+    assert(Versioned.read(spark, dir, Some(before.version)).count() == 40000)
   }
 }

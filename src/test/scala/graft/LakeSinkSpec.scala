@@ -4,47 +4,11 @@ import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streams.lakeSink — the streaming event-lake landing loop: microbatches
-  * append into the date-partitioned layout, files accrete, and the
-  * in-pipeline compaction collapses them back without losing a row. */
+/** Streams.versionedSink — the streaming event-lake landing loop:
+  * microbatches commit into the date-partitioned Versioned table, files
+  * accrete, and the in-pipeline compaction collapses them back without
+  * losing a row. */
 class LakeSinkSpec extends SparkSpec {
-  test("appends accrete small files; scheduled compaction collapses them, row-exact") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val target = java.nio.file.Files.createTempDirectory("lake_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("lake_sink_ck").toString
-    val mem = MemoryStream[Long]
-    val shaped = mem.toDF().select(
-      col("value").as("event_id"),
-      date_add(lit(java.sql.Date.valueOf("2024-06-01")),
-        (col("value") % 3).cast("int")).as("dt"),
-      (col("value") * 37 % 1000).as("user_id"))
-    val q = Streams.lakeSink(shaped, target, ckpt, compactEvery = 4).start()
-    try {
-      // batches 0..3: files accrete (2 per date per batch); batch 4 compacts
-      for (b <- 0 until 4) {
-        mem.addData((b * 300L) until (b * 300L + 300L): _*)
-        q.processAllAvailable()
-      }
-      def filesPerDate(): Map[String, Int] =
-        new java.io.File(target).listFiles().filter(_.isDirectory)
-          .filterNot(_.getName.startsWith("_"))
-          .map(d => d.getName ->
-            d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-      val before = filesPerDate()
-      assert(before.values.sum >= 12,
-        s"expected accreted shards before compaction, got $before")
-      mem.addData(1200L until 1500L: _*)
-      q.processAllAvailable() // batchId 4 -> compaction fires
-      val after = filesPerDate()
-      assert(after.values.forall(_ <= 2),
-        s"compaction left multi-file partitions: $after")
-      val back = spark.read.parquet(target)
-      assert(back.count() == 1500)
-      assert(back.select(countDistinct(col("event_id"))).head().getLong(0) == 1500)
-    } finally q.stop()
-  }
-
   test("versionedSink: atomic batch commits, manifest-driven compaction, time travel") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -77,6 +41,48 @@ class LakeSinkSpec extends SparkSpec {
       assert(now.select(countDistinct(col("event_id"))).head().getLong(0) == 1500)
       // the pre-compaction snapshot is still whole (time travel)
       assert(Versioned.read(spark, target, Some(3L)).count() == 1200)
+    } finally q.stop()
+  }
+
+  test("versionedSink with sortCols: compaction bin-packs range-sorted files with tight spans") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val target = java.nio.file.Files.createTempDirectory("v_sink_sorted").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("v_sink_sorted_ck").toString
+    val mem = MemoryStream[Long]
+    val shaped = mem.toDF().select(
+      col("value").as("event_id"),
+      date_add(lit(java.sql.Date.valueOf("2024-06-01")),
+        (col("value") % 3).cast("int")).as("dt"),
+      (col("value") * 37 % 1000).as("user_id"))
+    // a 2 KB target splits each date's ~5 accreted files into several;
+    // the stream's session copies the conf at start
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "2048")
+    val q = try Streams.versionedSink(shaped, target, ckpt, compactEvery = 4,
+        minFiles = 3, sortCols = Seq("user_id")).start()
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      for (b <- 0 until 5) {
+        mem.addData((b * 300L) until (b * 300L + 300L): _*)
+        q.processAllAvailable() // batch 4 -> append commit + compaction commit
+      }
+      val m = Versioned.readManifest(spark, target)
+      assert(m.version == 5L, s"expected append+compaction commits, at v${m.version}")
+      val perDate = m.files.groupBy(_.part).values.map(_.size)
+      assert(perDate.size == 3 && perDate.forall(_ > 1),
+        s"expected bin-packed dates, got ${perDate.mkString(",")}")
+      // each file covers a narrow slice of the [0, 1000) user_id domain
+      val spans = m.files.map { f =>
+        val r = spark.read.parquet(s"$target/${f.file}")
+          .agg(min("user_id"), max("user_id")).head()
+        r.getLong(1) - r.getLong(0)
+      }
+      assert(spans.forall(_ <= 1000L / 2), s"file spans not tight: ${spans.mkString(",")}")
+      val now = Versioned.read(spark, target)
+      assert(now.count() == 1500)
+      assert(now.select(countDistinct(col("event_id"))).head().getLong(0) == 1500)
     } finally q.stop()
   }
 }

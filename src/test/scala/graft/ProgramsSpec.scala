@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Anti-drift guard over the main sources: every program builds its
   * session through [[Sessions]] (no second session builder, no second
-  * copy of the broadcast ceiling), every object with a
+  * copy of the broadcast ceiling), only [[Versioned]] moves files into
+  * place (one commit protocol), every object with a
   * `main` is listed under the README's "Programs" heading, and every
   * program a main source cites as `tools/<Name>` exists. */
 class ProgramsSpec extends AnyFunSuite {
@@ -24,6 +25,17 @@ class ProgramsSpec extends AnyFunSuite {
           (src.contains("SparkSession.builder") || src.contains("256m")) => f.getPath
     }
     assert(strays.isEmpty, s"session settings outside Sessions.scala: ${strays.mkString(", ")}")
+  }
+
+  test("only Versioned.scala renames or links files: one commit protocol") {
+    // rewriting table data in place goes through the manifest log; a
+    // second temp-write + rename swap would reopen the crash window in
+    // which a table path is missing or sits at a backup name
+    val strays = main.collect {
+      case (f, src) if f.getName != "Versioned.scala" &&
+          (src.contains(".rename(") || src.contains("createLink")) => f.getPath
+    }
+    assert(strays.isEmpty, s"file renames outside Versioned.scala: ${strays.mkString(", ")}")
   }
 
   test("every object with a main is in the README's Programs list") {

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
-/** Lake.upsert — keyed MERGE INTO over a date-partitioned lake: update-wins
-  * semantics, inserts, and the two cost claims that make it viable at
-  * 100 TB: untouched partitions are bit-identical afterwards (never
-  * rewritten), and the read of the existing table is partition-pruned to
-  * the touched dates. */
+/** Versioned.upsert — keyed MERGE INTO over a date-partitioned table:
+  * update-wins semantics, inserts, and the two cost claims that make it
+  * viable at 100 TB: untouched partitions keep their manifest entries and
+  * files (never rewritten), and the read of the existing table is
+  * partition-pruned to the touched dates. */
 class UpsertSpec extends SparkSpec {
   private def base = spark.range(8000).select(
     col("id").as("k"),
@@ -14,12 +16,17 @@ class UpsertSpec extends SparkSpec {
       (col("id") % 8).cast("int")).as("dt"),
     (col("id") * 10).as("v"))
 
-  private def writeBase(dir: String): Unit =
-    base.write.partitionBy("dt").mode("overwrite").parquet(dir)
+  private def writeBase(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("lake_up").toString
+    Versioned.write(base, dir, partitionBy = Some("dt"))
+    dir
+  }
+
+  private def entries(dir: String, v: Long, part: String): Set[Versioned.FileEntry] =
+    Versioned.readManifest(spark, dir, Some(v)).files.filter(_.part.contains(part)).toSet
 
   test("update-wins + insert semantics, exact row multiset") {
-    val dir = java.nio.file.Files.createTempDirectory("lake_up").toString
-    writeBase(dir)
+    val dir = writeBase()
     // updates: change v for 100 existing keys on 2024-03-02, insert 50 new
     // keys on 2024-03-04
     val updates = spark.range(100).select(
@@ -30,9 +37,11 @@ class UpsertSpec extends SparkSpec {
         (col("id") + 100000).as("k"),
         lit(java.sql.Date.valueOf("2024-03-04")).as("dt"),
         lit(-2L).as("v")))
-    val touched = Lake.upsert(spark, dir, updates, Seq("k"), "dt")
-    assert(touched == 2)
-    val back = spark.read.parquet(dir)
+    assert(Versioned.upsert(spark, dir, updates, Seq("k"), "dt") == 1L)
+    val changed = (0 until 8).map(d => java.sql.Date.valueOf("2024-03-01").toLocalDate
+      .plusDays(d).toString).filter(p => entries(dir, 0L, p) != entries(dir, 1L, p))
+    assert(changed == Seq("2024-03-02", "2024-03-04"), s"replaced: $changed")
+    val back = Versioned.read(spark, dir)
     assert(back.count() == 8050)
     assert(back.filter(col("v") === -1L).count() == 100)
     assert(back.filter(col("v") === -2L).count() == 50)
@@ -47,42 +56,61 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("untouched partitions are bit-identical (no rewrite), touched ones replaced") {
-    val dir = java.nio.file.Files.createTempDirectory("lake_up2").toString
-    writeBase(dir)
-    def fileSig(part: String): Set[(String, Long, Long)] = {
-      val d = new java.io.File(s"$dir/dt=$part")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length(), f.lastModified())).toSet
-    }
-    val before5 = fileSig("2024-03-05")
-    val before2 = fileSig("2024-03-02")
+    val dir = writeBase()
+    def fileSig(v: Long, part: String): Set[(String, Long, Long)] =
+      entries(dir, v, part).map { e =>
+        val f = new java.io.File(s"$dir/${e.file}")
+        (f.getName, f.length(), f.lastModified())
+      }
+    val before5 = fileSig(0L, "2024-03-05")
     Thread.sleep(20)
     val updates = spark.range(10).select(
       (col("id") * 8 + 1).as("k"),
       lit(java.sql.Date.valueOf("2024-03-02")).as("dt"), lit(-1L).as("v"))
-    Lake.upsert(spark, dir, updates, Seq("k"), "dt")
-    assert(fileSig("2024-03-05") == before5, "untouched partition was rewritten")
-    assert(fileSig("2024-03-02") != before2, "touched partition was not replaced")
-    assert(!new java.io.File(dir + "__upsert_tmp").exists(), "temp dir left behind")
+    Versioned.upsert(spark, dir, updates, Seq("k"), "dt")
+    assert(entries(dir, 1L, "2024-03-05") == entries(dir, 0L, "2024-03-05"),
+      "untouched partition's manifest entries changed")
+    assert(fileSig(1L, "2024-03-05") == before5, "untouched partition was rewritten")
+    assert(entries(dir, 1L, "2024-03-02").intersect(entries(dir, 0L, "2024-03-02")).isEmpty,
+      "touched partition was not replaced")
+    assert(Option(new java.io.File(s"$dir/_stage").list()).forall(_.isEmpty),
+      "staging dir left behind")
   }
 
   test("the existing-table read is partition-pruned to the touched dates") {
-    val dir = java.nio.file.Files.createTempDirectory("lake_up3").toString
-    writeBase(dir)
-    val touchedDates = Seq(java.sql.Date.valueOf("2024-03-02"))
-    val pruned = spark.read.parquet(dir)
-      .filter(col("dt").isInCollection(touchedDates))
-    pruned.collect()
-    val files = pruned.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.get
-    val all = spark.read.parquet(dir)
-    all.collect()
-    val allFiles = all.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.get
-    assert(files * 8 <= allFiles + 7, s"pruned read touches $files of $allFiles files")
+    val dir = writeBase()
+    // every plan the upsert executes, scans found through adaptive and
+    // query-stage wrappers
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val updates = spark.range(10).select(
+      (col("id") * 8 + 1).as("k"),
+      lit(java.sql.Date.valueOf("2024-03-02")).as("dt"), lit(-1L).as("v"))
+    spark.listenerManager.register(listener)
+    // JobCounter.during drains the listener bus before it returns
+    try org.apache.spark.JobCounter.during(spark.sparkContext) {
+      Versioned.upsert(spark, dir, updates, Seq("k"), "dt"); ()
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val tableScans = plans.asScala.toSeq.flatMap(nodes).collect {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
+    }
+    assert(tableScans.size == 1, s"expected one read of the table, got ${tableScans.size}")
+    val scanned = tableScans.head.metrics("numFiles").value
+    val all = Versioned.readManifest(spark, dir, Some(0L)).files
+    val touched = all.count(_.part.contains("2024-03-02"))
+    assert(all.size >= 8 && scanned == touched,
+      s"upsert read $scanned files; the touched date has $touched of ${all.size}")
   }
 }
