@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** dbt `materialized='incremental'` twin, insert_overwrite strategy
@@ -19,15 +19,17 @@ import org.apache.spark.sql.functions._
   *
   * What a delta reads: the `partCol >= hwm` filter is applied to the
   * `source` DataFrame as given, so it prunes only what that plan lets it
-  * reach. [[fctOrdersMonthly]] is `Wh.fctOrders`, which `Store.table`
-  * persists over the persisted `Ods.ordersItems`: the filter sits above
-  * both persists, so the first delta in a session builds and pins the
-  * whole fact, and every delta reads all of it from memory. Work per run
-  * is proportional to the table, not to the new data (ROADMAP item 7 makes
-  * the source a function of the hwm). The write side is incremental: the
-  * dynamic-overwrite write touches only the delta's partition
-  * directories. Row counts come from a read of the written partitions,
-  * not a recompute of the delta.
+  * reach. [[fctOrdersMonthly]] is built for it: it aggregates the base
+  * orders ⋈ lineitem scans with no persisted parent and derives its
+  * `order_month` from a grouping column, so Catalyst pushes the filter
+  * through the aggregate and the joins onto its orders scans. The broadcast
+  * orders side then holds only the open months' orders, and only their
+  * line items reach the aggregate and the write; nothing is pinned in
+  * memory. The lineitem scan itself is still read whole, since no
+  * predicate on its own columns follows from the hwm. The write side is
+  * incremental too: the dynamic-overwrite write touches only the delta's
+  * partition directories. Row counts are observed on that write, not
+  * read back.
   */
 object Incremental {
 
@@ -49,31 +51,47 @@ object Incremental {
       source: DataFrame): IncResult = {
     val exists = new java.io.File(target).exists()
     if (!exists) {
-      source.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(target)
-      val written = spark.read.parquet(target)
-      IncResult(fullRefresh = true, written.count(),
-        listParts(target, partCol), None)
+      val rows = write(source, target, partCol)
+      IncResult(fullRefresh = true, rows, listParts(target, partCol), None)
     } else {
       // high-water mark from the target's partition DIRECTORIES — a
       // metadata listing, no data read of the existing table
       val hwm = listParts(target, partCol).lastOption.getOrElse(
         sys.error(s"$target exists but has no $partCol= partitions"))
-      val delta = source.filter(col(partCol) >= lit(hwm))
       val key = "spark.sql.sources.partitionOverwriteMode"
       val prev = spark.conf.get(key, "STATIC")
       spark.conf.set(key, "dynamic")
-      try delta.write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(target)
-      finally spark.conf.set(key, prev)
-      val touched = listParts(target, partCol).filter(_ >= hwm)
-      val rows = spark.read.parquet(target)
-        .filter(col(partCol) >= lit(hwm)).count()
-      IncResult(fullRefresh = false, rows, touched, Some(hwm))
+      val rows = try write(source.filter(col(partCol) >= lit(hwm)), target, partCol)
+        finally spark.conf.set(key, prev)
+      IncResult(fullRefresh = false, rows,
+        listParts(target, partCol).filter(_ >= hwm), Some(hwm))
     }
   }
 
+  /** Overwrites `target` with `df` partitioned by `partCol`; the row count
+    * is observed on the write itself, with no second job or read-back. */
+  private def write(df: DataFrame, target: String, partCol: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(target)
+    obs.get("rows").asInstanceOf[Long]
+  }
+
   /** The incremental flavor of fct_orders: same rows as `Wh.fctOrders`,
-    * partitioned by order month — the canonical incremental fact. */
-  def fctOrdersMonthly(ctx: Ctx): DataFrame =
-    layers.Wh.fctOrders(ctx)
+    * partitioned by order month — the canonical incremental fact. It rolls
+    * up [[layers.Ods.pricedItems]] on `(order_key, order_date)` rather than
+    * the persisted orders_items, so `order_month` derives from a grouping
+    * column and a filter on it reaches the orders scan; the join back to
+    * the other order columns is on both keys, so the filter is inferred
+    * for that orders scan too. Only the two keys travel through the
+    * aggregate's shuffle. */
+  def fctOrdersMonthly(ctx: Ctx): DataFrame = {
+    val totals = layers.Wh.orderTotals
+    val rollup = layers.Ods.pricedItems(ctx, layers.Base.lineItem(ctx))
+      .groupBy("order_key", "order_date").agg(totals.head, totals.tail: _*)
+    layers.Base.orders(ctx).select(layers.Wh.orderColumns.map(col): _*)
+      .join(rollup, Seq("order_key", "order_date"))
+      .withColumn("order_count", lit(1))
       .withColumn("order_month", date_format(col("order_date"), "yyyy-MM"))
+  }
 }

@@ -376,12 +376,13 @@ object Versioned {
     * only those partitions may be touched.
     *
     * Cost ∝ the TOUCHED partitions, never the table: the update batch's
-    * distinct `partCol` values (a metadata-sized list) select the
-    * partitions; only those are read back from the CURRENT snapshot (the
-    * filter is partition pruning); existing rows superseded by an update
-    * key are dropped by a broadcast anti-join; and the merged rows are
-    * committed by [[replacePartitions]], so every other partition keeps
-    * its manifest entries and files untouched (UpsertSpec pins both).
+    * distinct `partCol` values (a metadata-sized list, collected without a
+    * shuffle) select the partitions; only those are read back from the
+    * CURRENT snapshot (the filter is partition pruning); existing rows
+    * superseded by an update key are dropped by a broadcast anti-join; and
+    * the merged rows are committed by [[replacePartitions]], so every other
+    * partition keeps its manifest entries and files untouched (UpsertSpec
+    * pins both, and that the clustered write is the one shuffle).
     *
     * The publish is atomic: a crash at any point leaves the previous
     * version fully readable, concurrent readers never observe the
@@ -394,8 +395,9 @@ object Versioned {
       keys: Seq[String], partCol: String): Long = {
     import org.apache.spark.sql.functions.broadcast
     val baseV = latestVersion(spark, path)
-    val touched = updates.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSeq
+    // each task de-duplicates its own values, so the collect needs no shuffle
+    val touched = updates.select(col(partCol)).rdd
+      .mapPartitions(_.map(_.get(0)).toSet.iterator).collect().distinct.toSeq
     val nonNull = touched.filterNot(_ == null)
     val cond = {
       val in = if (nonNull.isEmpty) org.apache.spark.sql.functions.lit(false)
@@ -403,9 +405,9 @@ object Versioned {
       if (touched.exists(_ == null)) in || col(partCol).isNull else in
     }
     val current = read(spark, path, baseV).filter(cond)
-    val kept = current.join(
-      broadcast(updates.select(keys.map(col): _*).distinct()),
-      keys, "left_anti")
+    // a left-anti join keeps the same rows whether or not the broadcast
+    // keys repeat, so they need no de-duplicating shuffle
+    val kept = current.join(broadcast(updates.select(keys.map(col): _*)), keys, "left_anti")
     val merged = kept.unionByName(updates.select(current.columns.map(col): _*))
     replacePartitions(merged, path, partCol, baseVersion = baseV)
   }

@@ -25,13 +25,10 @@ object Ods {
       "order_key", "order_date", "customer_key", "order_status_code",
       "order_priority_code", "order_amount")
 
-  /** Reference models/ods/orders_items.sql — the price-decomposition fact.
-    * Stage 1 computes money-rounded base/discount amounts; stage 2 derives
-    * tax and net from the *rounded* stage-1 columns, exactly as the
-    * reference's CTE structure does (orders_items.sql:43-82). */
+  /** Reference models/ods/orders_items.sql — the price-decomposition fact:
+    * [[pricedItems]] over a keyed repartition of the line items, projected
+    * to the reference's columns. */
   def ordersItems(ctx: Ctx): DataFrame = Store.table(ctx, "orders_items") {
-    val o = Base.orders(ctx)
-      .select("order_key", "order_date", "customer_key", "order_status_code")
     // The projection below is the most compute-dense in the library (md5
     // surrogate over 7 rendered columns + exact scaled-integer money math
     // per row), and with a broadcast orders side NOTHING shuffles — its
@@ -41,39 +38,43 @@ object Ods {
     // persisted table hash-partitioned on order_key for downstream
     // joins/aggregations — the bucketed-table layout a warehouse would
     // choose for this fact anyway.
-    val l = Base.lineItem(ctx).repartition(col("order_key"))
-    val stage1 = o.join(l, Seq("order_key"))
-      .select(
-        // Reference keys on (order_key, order_line_number)
-        // (models/ods/orders_items.sql:19) — valid under TPC-H's PK. The
-        // driver testdata duplicates (order_key, line_number) pairs and even
-        // (…, part_key, supplier_key) quadruples, so the surrogate covers
-        // the measures too (decimal/date -> string rendering is identical in
-        // both engines at these types).
-        surrogateKey(col("order_key"), col("order_line_number"),
-          col("part_key"), col("supplier_key"), col("quantity"),
-          col("extended_price"), col("ship_date")).as("order_item_key"),
-        col("order_key"), col("order_date"), col("customer_key"), col("order_status_code"),
-        col("part_key"), col("supplier_key"), col("return_status_code"),
-        col("order_line_number"), col("order_line_status_code"), col("ship_date"),
-        col("commit_date"), col("receipt_date"), col("ship_mode_name"),
-        col("quantity"), col("discount_percentage"), col("tax_rate"), col("extended_price"),
-        moneyDiv("extended_price", "quantity").as("base_price"),
-        moneyR(col("extended_price") * (lit(1) - col("discount_percentage")))
-          .as("discounted_item_sales_amount"),
-        moneyR(lit(-1) * col("extended_price") * col("discount_percentage"))
-          .as("item_discount_amount"))
-    stage1.select(
-      col("order_item_key"), col("order_key"), col("order_date"), col("customer_key"),
+    pricedItems(ctx, Base.lineItem(ctx).repartition(col("order_key"))).select(
+      // Reference keys on (order_key, order_line_number)
+      // (models/ods/orders_items.sql:19) — valid under TPC-H's PK. The
+      // test data duplicates (order_key, line_number) pairs and even
+      // (…, part_key, supplier_key) quadruples, so the surrogate covers
+      // the measures too (decimal/date -> string rendering is identical in
+      // both engines at these types).
+      surrogateKey(col("order_key"), col("order_line_number"),
+        col("part_key"), col("supplier_key"), col("quantity"),
+        col("extended_price"), col("ship_date")).as("order_item_key"),
+      col("order_key"), col("order_date"), col("customer_key"),
       col("order_status_code"), col("part_key"), col("supplier_key"),
       col("return_status_code"), col("order_line_number"), col("order_line_status_code"),
       col("ship_date"), col("commit_date"), col("receipt_date"), col("ship_mode_name"),
       col("quantity"), col("base_price"), col("discount_percentage"),
+      col("discounted_price"), col("gross_item_sales_amount"),
+      col("discounted_item_sales_amount"), col("item_discount_amount"),
+      col("tax_rate"), col("item_tax_amount"), col("net_item_sales_amount"))
+  }
+
+  /** Every order column ⋈ `lineItems`, with the reference's money maths
+    * (orders_items.sql:43-82) appended, unpersisted. Stage 1 computes
+    * money-rounded base/discount amounts; stage 2 derives tax and net from
+    * the *rounded* stage-1 columns, exactly as the reference's CTE
+    * structure does. A consumer that groups on order columns keeps a filter
+    * on them pushable through its aggregate and this join to the orders
+    * scan. */
+  def pricedItems(ctx: Ctx, lineItems: DataFrame): DataFrame = {
+    val stage1 = Base.orders(ctx).join(lineItems, Seq("order_key")).select(col("*"),
+      moneyDiv("extended_price", "quantity").as("base_price"),
+      moneyR(col("extended_price") * (lit(1) - col("discount_percentage")))
+        .as("discounted_item_sales_amount"),
+      moneyR(lit(-1) * col("extended_price") * col("discount_percentage"))
+        .as("item_discount_amount"))
+    stage1.select(col("*"),
       moneyR(col("base_price") * (lit(1) - col("discount_percentage"))).as("discounted_price"),
       col("extended_price").as("gross_item_sales_amount"),
-      col("discounted_item_sales_amount"),
-      col("item_discount_amount"),
-      col("tax_rate"),
       moneyR((col("extended_price") + col("item_discount_amount")) * col("tax_rate"))
         .as("item_tax_amount"),
       moneyR(col("extended_price") + col("item_discount_amount")

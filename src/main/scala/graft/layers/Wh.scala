@@ -1,7 +1,7 @@
 package graft.layers
 
 import graft.{Ctx, Store, Macros => M}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** wh layer: dims, facts, TPC-H report tables (reference models/wh/ layer).
@@ -44,19 +44,24 @@ object Wh {
   /** Reference models/wh/dim_part.sql (pure projection of ods.parts). */
   def dimPart(ctx: Ctx): DataFrame = Ods.parts(ctx)
 
+  /** fct_orders' order-level columns, carried from orders as they are. */
+  val orderColumns: Seq[String] = Seq("order_key", "order_date", "customer_key",
+    "order_status_code", "order_priority_code")
+
+  /** fct_orders' four per-order money totals over orders_items rows. */
+  def orderTotals: Seq[Column] = Seq(
+    pin4(sum("gross_item_sales_amount")).as("gross_item_sales_amount"),
+    pin4(sum("item_discount_amount")).as("item_discount_amount"),
+    pin4(sum("item_tax_amount")).as("item_tax_amount"),
+    pin4(sum("net_item_sales_amount")).as("net_item_sales_amount"))
+
   /** Reference models/wh/fct_orders.sql: per-order rollup of orders_items
     * joined back to orders. The rollup groups on order_key (the join key),
     * so the aggregate's shuffle partitioning is reused by the join — one
     * shuffle, not two. */
   def fctOrders(ctx: Ctx): DataFrame = Store.table(ctx, "fct_orders") {
-    val s = Ods.ordersItems(ctx).groupBy("order_key").agg(
-      pin4(sum("gross_item_sales_amount")).as("gross_item_sales_amount"),
-      pin4(sum("item_discount_amount")).as("item_discount_amount"),
-      pin4(sum("item_tax_amount")).as("item_tax_amount"),
-      pin4(sum("net_item_sales_amount")).as("net_item_sales_amount"))
-    Base.orders(ctx)
-      .select("order_key", "order_date", "customer_key", "order_status_code",
-        "order_priority_code")
+    val s = Ods.ordersItems(ctx).groupBy("order_key").agg(orderTotals.head, orderTotals.tail: _*)
+    Base.orders(ctx).select(orderColumns.map(col): _*)
       .join(s, Seq("order_key"))
       .withColumn("order_count", lit(1))
   }

@@ -1,11 +1,17 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Incremental (insert_overwrite) materialization: a snapshot build plus an
   * incremental run lands byte-identical rows to a full rebuild, closed
   * partitions are never rewritten, and only the delta's partitions are
-  * touched. */
+  * touched. A delta of the monthly orders fact reads the base scans with
+  * its hwm filter on the orders scan, and no run pins anything. */
 class IncrementalSpec extends SparkSpec {
 
   private def fileState(target: String): Map[String, Long] = {
@@ -55,5 +61,92 @@ class IncrementalSpec extends SparkSpec {
       .select(full.columns.map(col).toIndexedSeq: _*)
     assert(rebuilt.count() == full.count())
     assert(rebuilt.except(full).isEmpty && full.except(rebuilt).isEmpty)
+  }
+
+  private def tmpTarget(): String =
+    java.nio.file.Files.createTempDirectory("graft_incr").toString + "/fct_orders"
+
+  /** A snapshot of the source missing its last two months. */
+  private def snapshot(full: org.apache.spark.sql.DataFrame) = {
+    val months = full.select("order_month").distinct()
+      .orderBy("order_month").collect().map(_.getString(0))
+    full.filter(col("order_month") < months(months.length - 3))
+  }
+
+  // the nodes below `p` that no shuffle separates from it
+  private def unshuffled(p: SparkPlan): Seq[SparkPlan] = p match {
+    case _: ShuffleExchangeLike | _: ShuffleQueryStageExec => Nil
+    case a: AdaptiveSparkPlanExec => unshuffled(a.executedPlan)
+    case q: QueryStageExec => q +: unshuffled(q.plan)
+    case other => other +: other.children.flatMap(unshuffled)
+  }
+
+  private def scansOf(plan: Seq[SparkPlan], table: String) = plan.collect {
+    case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => f
+  }
+
+  test("a delta reads the base scans, with the hwm filter on the orders scans") {
+    val target = tmpTarget()
+    val full = Incremental.fctOrdersMonthly(ctx)
+    Incremental.run(spark, target, "order_month", snapshot(full))
+    val (r, plans) = Plans.executed(spark)(Incremental.run(spark, target, "order_month", full))
+    val all = plans.flatMap(Plans.nodes)
+    val hwm = r.highWaterMark.get
+    assert(all.nonEmpty && !all.exists(_.isInstanceOf[InMemoryTableScanExec]),
+      "the delta read a persisted relation")
+    val orders = scansOf(all, "orders")
+    assert(orders.nonEmpty && orders.forall(_.dataFilters.exists(_.toString.contains(hwm))),
+      s"orders scans without the hwm filter: ${orders.map(_.dataFilters)}")
+    // the join admits only the filtered orders, and streams the line items
+    // straight from their scan
+    val joins = all.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.exists { j =>
+      val below = j.children.flatMap(Plans.nodes)
+      val streamed = j.children.flatMap(unshuffled)
+      scansOf(below, "orders").nonEmpty && scansOf(streamed, "lineitem").nonEmpty
+    }, s"no join of the filtered orders with an unshuffled lineitem scan")
+  }
+
+  test("a delta's partitions hold exactly the full refresh's rows for their months") {
+    val full = Incremental.fctOrdersMonthly(ctx)
+    val fullTarget = tmpTarget()
+    val deltaTarget = tmpTarget()
+    val f = Incremental.run(spark, fullTarget, "order_month", full)
+    assert(f.rowsWritten == full.count())
+    Incremental.run(spark, deltaTarget, "order_month", snapshot(full))
+    val d = Incremental.run(spark, deltaTarget, "order_month", full)
+    val hwm = d.highWaterMark.get
+    def open(target: String) = spark.read.parquet(target).filter(col("order_month") >= hwm)
+    assert(d.rowsWritten == open(fullTarget).count())
+    assert(open(deltaTarget).exceptAll(open(fullTarget)).isEmpty &&
+      open(fullTarget).exceptAll(open(deltaTarget)).isEmpty)
+  }
+
+  test("the monthly fact is fct_orders by month") {
+    val wh = layers.Wh.fctOrders(ctx)
+      .withColumn("order_month", date_format(col("order_date"), "yyyy-MM"))
+    val monthly = Incremental.fctOrdersMonthly(ctx)
+    assert(monthly.columns.toSeq == wh.columns.toSeq)
+    assert(monthly.schema.map(_.dataType) == wh.schema.map(_.dataType))
+    assert(monthly.exceptAll(wh).isEmpty && wh.exceptAll(monthly).isEmpty)
+  }
+
+  test("a full run and a delta run persist nothing") {
+    // a context of its own: no table cached for another spec's context can
+    // stand in for one this refresh would persist
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr_src")
+    Seq("orders", "lineitem").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(ctx.dir, s"$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    }
+    val own = Ctx(spark, dir.toString)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val target = tmpTarget()
+    val full = Incremental.fctOrdersMonthly(own)
+    Incremental.run(spark, target, "order_month", snapshot(full))
+    Incremental.run(spark, target, "order_month", full)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(pinned.isEmpty, s"the refresh persisted RDDs $pinned")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -12,13 +12,7 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
   * parquet scan, column pruning shrinks ReadSchema to what the query needs,
   * and snowflake dimension joins broadcast instead of shuffling the fact. */
 class PlanAuditSpec extends SparkSpec {
-  /** Every node of an executed plan, once: an adaptive plan is entered
-    * through its current plan and a query stage through its stage plan. */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-    case q: QueryStageExec => q +: nodes(q.plan)
-    case other => other +: other.children.flatMap(nodes)
-  }
+  import Plans.nodes
 
   private def scans(plan: SparkPlan): Seq[FileSourceScanExec] =
     nodes(plan).collect { case f: FileSourceScanExec => f }

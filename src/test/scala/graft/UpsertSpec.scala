@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Versioned.upsert — keyed MERGE INTO over a date-partitioned table:
@@ -79,30 +78,11 @@ class UpsertSpec extends SparkSpec {
 
   test("the existing-table read is partition-pruned to the touched dates") {
     val dir = writeBase()
-    // every plan the upsert executes, scans found through adaptive and
-    // query-stage wrappers
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val updates = spark.range(10).select(
       (col("id") * 8 + 1).as("k"),
       lit(java.sql.Date.valueOf("2024-03-02")).as("dt"), lit(-1L).as("v"))
-    spark.listenerManager.register(listener)
-    // JobCounter.during drains the listener bus before it returns
-    try org.apache.spark.JobCounter.during(spark.sparkContext) {
-      Versioned.upsert(spark, dir, updates, Seq("k"), "dt"); ()
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val tableScans = plans.asScala.toSeq.flatMap(nodes).collect {
+    val (_, plans) = Plans.executed(spark)(Versioned.upsert(spark, dir, updates, Seq("k"), "dt"))
+    val tableScans = plans.flatMap(Plans.nodes).collect {
       case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
     }
@@ -112,5 +92,33 @@ class UpsertSpec extends SparkSpec {
     val touched = all.count(_.part.contains("2024-03-02"))
     assert(all.size >= 8 && scanned == touched,
       s"upsert read $scanned files; the touched date has $touched of ${all.size}")
+  }
+
+  test("a correction batch with repeated keys replaces each key's rows with all of its updates") {
+    val dir = writeBase()
+    val once = spark.range(10).select(
+      (col("id") * 8 + 1).as("k"),
+      lit(java.sql.Date.valueOf("2024-03-02")).as("dt"), lit(-1L).as("v"))
+    val updates = once.unionByName(once.withColumn("v", lit(-3L)))
+    Versioned.upsert(spark, dir, updates, Seq("k"), "dt")
+    // the merge with de-duplicated keys: every row of an updated key goes,
+    // every update row lands
+    val v0 = Versioned.read(spark, dir, Some(0L))
+    val expected = v0.join(updates.select("k").distinct(), Seq("k"), "left_anti")
+      .unionByName(updates)
+    val back = Versioned.read(spark, dir)
+    assert(back.count() == 8010)
+    assert(back.exceptAll(expected).isEmpty && expected.exceptAll(back).isEmpty)
+  }
+
+  test("an upsert shuffles once: the hash-clustered write") {
+    val dir = writeBase()
+    val updates = spark.range(100).select(
+      (col("id") * 8 + 1).as("k"),
+      lit(java.sql.Date.valueOf("2024-03-02")).as("dt"), lit(-1L).as("v"))
+    val n = org.apache.spark.JobCounter.shuffleStages(spark.sparkContext) {
+      Versioned.upsert(spark, dir, updates, Seq("k"), "dt"); ()
+    }
+    assert(n == 1, s"upsert ran $n shuffle stages")
   }
 }

@@ -1,7 +1,7 @@
 package org.apache.spark
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** Test-side count of the Spark jobs a block starts on the calling thread:
   * a listener records the job starts of a job group set for the block, and
@@ -13,23 +13,45 @@ object JobCounter {
   final case class Count(jobs: Int, executions: Int)
 
   def during(sc: SparkContext)(f: => Unit): Count = {
-    val group = s"job-counter-${java.util.UUID.randomUUID()}"
     val jobs = new ConcurrentHashMap[Int, String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .filter(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
-          .foreach(p => jobs.put(e.jobId,
-            String.valueOf(p.getProperty("spark.sql.execution.id"))))
+    inGroup(sc, f) { group =>
+      new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties)
+            .filter(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
+            .foreach(p => jobs.put(e.jobId,
+              String.valueOf(p.getProperty("spark.sql.execution.id"))))
+      }
     }
-    sc.addSparkListener(listener)
+    Count(jobs.size, jobs.values.toArray.distinct.length)
+  }
+
+  /** Shuffle map stages the block runs: one per shuffle it writes. A stage
+    * skipped because its shuffle output is reused is never submitted, so
+    * it does not count. */
+  def shuffleStages(sc: SparkContext)(f: => Unit): Int = {
+    val shuffles = ConcurrentHashMap.newKeySet[Int]()
+    inGroup(sc, f) { group =>
+      new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
+            e.stageInfo.shuffleDepId.foreach(shuffles.add)
+      }
+    }
+    shuffles.size
+  }
+
+  private def inGroup(sc: SparkContext, f: => Unit)(listener: String => SparkListener): Unit = {
+    val group = s"job-counter-${java.util.UUID.randomUUID()}"
+    val l = listener(group)
+    sc.addSparkListener(l)
     sc.setJobGroup(group, group)
     try f
     finally {
       sc.clearJobGroup()
       sc.listenerBus.waitUntilEmpty()
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
-    Count(jobs.size, jobs.values.toArray.distinct.length)
   }
 }
