@@ -53,15 +53,10 @@ final case class Ctx(spark: SparkSession, dir: String) {
 }
 
 object Ctx {
-  /** Parquet source schemas per session, keyed on path and modification
-    * time: inferring a schema runs a footer-reading Spark job, which every
-    * plan constructor would otherwise pay again for every table it reads.
-    * A rewritten source has a new modification time, so it is read again.
-    * The map holds its sessions weakly, and its values do not reference
-    * them, so a stopped session's entries go with it. */
-  private val schemas =
-    new java.util.WeakHashMap[SparkSession, TrieMap[(String, Long), StructType]]()
-
+  /** A parquet source, its schema inferred once per session and source
+    * modification time ([[Store.sourceSchema]]): inferring runs a
+    * footer-reading Spark job, which every plan constructor would
+    * otherwise pay again for every table it reads. */
   private def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     // a missing source keeps Spark's own "Path does not exist" error
@@ -70,14 +65,19 @@ object Ctx {
         .getFileStatus(p).getModificationTime)
       catch { case _: java.io.FileNotFoundException => None }
     mtime.fold(spark.read.parquet(path)) { t =>
-      val perSession = schemas.synchronized {
-        var m = schemas.get(spark)
-        if (m == null) { m = TrieMap.empty; schemas.put(spark, m) }
-        m
-      }
-      spark.read.schema(perSession.getOrElseUpdate((path, t),
+      spark.read.schema(Store.sourceSchema(spark, path, t)(
         spark.read.parquet(path).schema)).parquet(path)
     }
+  }
+
+  /** The subdirectory names of `dir`, or None when it does not exist.
+    * Listed through the Hadoop FS: java.io sees a `file:`, `hdfs://` or
+    * `s3a://` URI as a missing path. */
+  private[graft] def subdirs(spark: SparkSession, dir: String): Option[Seq[String]] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    Option.when(fs.exists(p))(
+      fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName))
   }
 
   /** Schema-adaptive events loader — the ONE place `events.ts` is decoded.
@@ -113,92 +113,142 @@ object Ctx {
   }
 }
 
-/** Materialization boundary for dbt `table` models.
+/** Materialization boundary for dbt `table` models, and graft's `ref()`.
   *
   * The reference materializes ods/wh models as tables (dbt_project.yml:31-34)
   * so ~40 downstream models reuse them instead of re-deriving the join tree.
-  * Catalyst does NOT do cross-query reuse on its own, so we persist hot
-  * mid-DAG nodes once per (session, sfDir). At cluster scale the same
+  * Catalyst does NOT do cross-query reuse on its own, so [[table]] persists
+  * hot mid-DAG nodes once per (session, sfDir). At cluster scale the same
   * boundary would be a bucketed-parquet write (bucketed by the join key)
   * instead of an in-memory persist; on local[32] at sf<=0.1 persist is right.
+  *
+  * The registry belongs to its session: the session's function registry
+  * holds it (the slot [[graft.functions.Natives]] fills too), so it dies
+  * with the session and `newSession()` starts with none.
+  *
+  * [[table]] is also the build's dependency record, as dbt's `ref()` is:
+  * inside [[reads]] a call records the name it was asked for and neither
+  * creates nor persists an entry, and [[graft.Runner.buildAll]] takes its
+  * build DAG from what each model's plan reads directly.
   */
 object Store {
-  private val cache = TrieMap[(String, String, String), DataFrame]()
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import scala.collection.mutable
 
-  // stable per-session id: identityHashCode can collide after a stopped
-  // session is garbage-collected, serving a dead session's cached plan
-  private val ids = new java.util.WeakHashMap[SparkSession, String]()
-  private def idOf(s: SparkSession): String = ids.synchronized {
-    var id = ids.get(s)
-    if (id == null) { id = java.util.UUID.randomUUID().toString; ids.put(s, id) }
-    id
+  /** One session's entries by (sfDir, name) and its parquet source schemas
+    * by (path, modification time); a function builder only to be held. */
+  private final class Registry extends (Seq[Expression] => Expression) {
+    val entries = mutable.Map.empty[(String, String), DataFrame]
+    val schemas = TrieMap.empty[(String, Long), StructType]
+    def apply(args: Seq[Expression]): Expression =
+      throw new UnsupportedOperationException(s"$slot is not a SQL function")
   }
 
-  def table(ctx: Ctx, name: String)(build: => DataFrame): DataFrame =
-    // synchronized: Runner.buildAll materializes models from a thread pool,
-    // and a racing getOrElseUpdate could persist the same plan twice (only
-    // plan CONSTRUCTION is serialized here — execution stays concurrent)
-    cache.synchronized {
-      cache.getOrElseUpdate(
-        (idOf(ctx.spark), ctx.dir, name), {
-          val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-          df
+  private val slot = "graft_store"
+
+  private def registry(spark: SparkSession): Registry = {
+    val fr = spark.sessionState.functionRegistry
+    fr.synchronized {
+      fr.lookupFunctionBuilder(org.apache.spark.sql.catalyst.FunctionIdentifier(slot)) match {
+        case Some(r: Registry) => r
+        case _ =>
+          val r = new Registry
+          fr.createOrReplaceTempFunction(slot, r, "built-in")
+          r
+      }
+    }
+  }
+
+  /** One capture pass. The captured node's own [[table]] call (`self`)
+    * builds through, so a Store-table model records what its build reads.
+    * Every other table is recorded at depth 0 and served as an empty
+    * stand-in of its schema, built once per pass: plans stay shallow. */
+  private final class Scope {
+    var self = ""
+    var reads = mutable.LinkedHashSet.empty[String]
+    private val standIns = mutable.Map.empty[(String, String), DataFrame]
+    private var depth = 0
+    def read(ctx: Ctx, name: String, build: => DataFrame): DataFrame =
+      if (depth == 0 && name == self) build
+      else {
+        if (depth == 0) reads += name
+        standIns.getOrElseUpdate((ctx.dir, name), {
+          depth += 1
+          val schema = try build.schema finally depth -= 1
+          ctx.spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         })
+      }
+  }
+
+  private val scope = new ThreadLocal[Scope]
+
+  /** True inside [[reads]] on this thread: plans are built for their
+    * schema or their reads only, and constructors must run no job. */
+  private[graft] def capturing: Boolean = scope.get != null
+
+  /** Builds `plan(name)` for each build node of `names` in one lazy capture
+    * pass on the calling thread, yielding each result with the Store tables
+    * that plan read directly, in first-read order. */
+  def reads[A](names: Seq[String])(plan: String => A): Iterator[(A, Seq[String])] = {
+    val s = new Scope
+    names.iterator.map { n =>
+      val outer = scope.get
+      scope.set(s)
+      s.self = n
+      s.reads = mutable.LinkedHashSet.empty
+      try (plan(n), s.reads.toSeq) finally scope.set(outer)
+    }
+  }
+
+  /** The session's entry `name` for `ctx.dir`, built and persisted at
+    * `level` on first use (`StorageLevel.NONE` memoizes the plan only). */
+  def table(ctx: Ctx, name: String,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK)(build: => DataFrame): DataFrame =
+    scope.get match {
+      case null =>
+        val r = registry(ctx.spark)
+        // synchronized: Runner.buildAll builds models from a thread pool,
+        // and a racing getOrElseUpdate could persist the same plan twice
+        // (only plan CONSTRUCTION is serialized — execution stays concurrent)
+        r.synchronized(r.entries.getOrElseUpdate((ctx.dir, name),
+          if (level == StorageLevel.NONE) build else build.persist(level)))
+      case s => s.read(ctx, name, build)
     }
 
   /** Write-through swap for [[graft.Runner.buildAll]]: once a model's
-    * parquet is on disk, downstream plans should read THAT (dbt's actual
-    * execution model — each model selects from the materialized table of
-    * its parents, not from a live query plan) instead of keeping a second
-    * serialized copy in the block manager. Replaces the cached entry with
-    * the parquet-backed relation and frees the in-build persist — without
-    * this, a cold SF10 full build holds every table twice (output parquet
-    * + persisted blocks) and the double footprint, not the data, is what
-    * overruns local disk. No-op for models that were never Store-backed. */
-  def swap(ctx: Ctx, name: String, replacement: => DataFrame): Unit =
-    cache.synchronized {
-      val key = (idOf(ctx.spark), ctx.dir, name)
-      cache.get(key).foreach { old =>
-        cache.put(key, replacement)
-        old.unpersist(false); ()
-      }
-    }
-
-  /** Memoize a built DataFrame per (session, sfDir) WITHOUT an extra
-    * persist — for operators that manage their own persistence internally
-    * (the cluster fixpoint loop already persists its labels): cross-query
-    * reuse of the finished plan, not a second storage layer. clear() drops
-    * the entry; its unpersist is a harmless no-op on the derived plan while
-    * the operator's own tracked persists do the real freeing. */
-  def memo(ctx: Ctx, name: String)(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      cache.getOrElseUpdate((idOf(ctx.spark), ctx.dir, "memo:" + name), build)
-    }
-
-  // operator-internal persists (Scale.globalOrder, dedup clustering, ...)
-  // registered here so clear() can free them with the table cache
-  private val tracked = TrieMap[String, List[DataFrame]]()
-
-  /** Register an operator-internal persisted relation for session-scoped
-    * cleanup; returns the DataFrame unchanged. */
-  def track(spark: SparkSession, df: DataFrame): DataFrame = {
-    val id = idOf(spark)
-    tracked.updateWith(id) {
-      case Some(l) => Some(df :: l)
-      case None    => Some(df :: Nil)
-    }
-    df
+    * parquet is on disk, downstream plans read THAT (dbt's execution model:
+    * each model selects from its parents' materialized tables) instead of
+    * a second copy in the block manager. Replaces the entry with the
+    * parquet-backed relation and frees the persist — without this a cold
+    * SF10 build holds every table twice and overruns local disk. No-op for
+    * models that were never Store-backed. */
+  def swap(ctx: Ctx, name: String, replacement: => DataFrame): Unit = {
+    val r = registry(ctx.spark)
+    r.synchronized(r.entries.get((ctx.dir, name)).foreach { old =>
+      r.entries((ctx.dir, name)) = replacement
+      old.unpersist(false)
+    })
   }
 
-  /** Unpersist and drop every entry of one session — table cache AND
-    * tracked operator persists (frees executor memory across sfDir changes
-    * / before a cold full-build measurement). */
+  /** The session's entries, as (sfDir, name). */
+  private[graft] def entries(spark: SparkSession): Set[(String, String)] = {
+    val r = registry(spark)
+    r.synchronized(r.entries.keySet.toSet)
+  }
+
+  /** The session's schema of the parquet source at `path` as of `mtime`. */
+  private[graft] def sourceSchema(spark: SparkSession, path: String, mtime: Long)(
+      infer: => StructType): StructType =
+    registry(spark).schemas.getOrElseUpdate((path, mtime), infer)
+
+  /** Drops every entry of the session and empties its cache manager, which
+    * also frees the persists operators make internally (Scale.globalOrder's
+    * input and ranges, customer_rfm_segments' base): a batch boundary. */
   def clear(spark: SparkSession): Unit = {
-    val id = idOf(spark)
-    cache.keys.filter(_._1 == id).foreach { k =>
-      cache.remove(k).foreach(df => { df.unpersist(false); () })
-    }
-    tracked.remove(id).foreach(_.foreach(df => { df.unpersist(false); () }))
+    val r = registry(spark)
+    r.synchronized(r.entries.clear())
+    spark.catalog.clearCache()
   }
 }
 

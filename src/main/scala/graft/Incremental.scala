@@ -36,45 +36,33 @@ object Incremental {
   final case class IncResult(fullRefresh: Boolean, rowsWritten: Long,
       partitionsWritten: Seq[String], highWaterMark: Option[String])
 
-  private def listParts(target: String, partCol: String): Seq[String] = {
-    val dir = new java.io.File(target)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
-      .map(_.getName.stripPrefix(s"$partCol="))
-      .sorted.toSeq
-  }
+  /** The target's `partCol` partition values, sorted, or None when there
+    * is no target. */
+  private def listParts(spark: SparkSession, target: String,
+      partCol: String): Option[Seq[String]] =
+    Ctx.subdirs(spark, target).map(_.filter(_.startsWith(s"$partCol="))
+      .map(_.stripPrefix(s"$partCol=")).sorted)
 
   /** One incremental run of `source` into the partitioned parquet table at
     * `target`. `partCol` must be a monotonically-growing partition column
     * (a date/month string in the models here). */
   def run(spark: SparkSession, target: String, partCol: String,
       source: DataFrame): IncResult = {
-    val exists = new java.io.File(target).exists()
-    if (!exists) {
-      val rows = write(source, target, partCol)
-      IncResult(fullRefresh = true, rows, listParts(target, partCol), None)
-    } else {
-      // high-water mark from the target's partition DIRECTORIES — a
-      // metadata listing, no data read of the existing table
-      val hwm = listParts(target, partCol).lastOption.getOrElse(
-        sys.error(s"$target exists but has no $partCol= partitions"))
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.get(key, "STATIC")
-      spark.conf.set(key, "dynamic")
-      val rows = try write(source.filter(col(partCol) >= lit(hwm)), target, partCol)
-        finally spark.conf.set(key, prev)
-      IncResult(fullRefresh = false, rows,
-        listParts(target, partCol).filter(_ >= hwm), Some(hwm))
-    }
-  }
-
-  /** Overwrites `target` with `df` partitioned by `partCol`; the row count
-    * is observed on the write itself, with no second job or read-back. */
-  private def write(df: DataFrame, target: String, partCol: String): Long = {
+    // high-water mark from the target's partition DIRECTORIES — a metadata
+    // listing, no data read of the existing table; no target = full refresh
+    val hwm = listParts(spark, target, partCol).map(_.lastOption.getOrElse(
+      sys.error(s"$target exists but has no $partCol= partitions")))
+    // a delta overwrites only the partitions it holds: set as this write's
+    // own option, not on the session, where a concurrent write would see it
     val obs = Observation()
-    df.observe(obs, count(lit(1)).as("rows"))
-      .write.partitionBy(partCol).mode(SaveMode.Overwrite).parquet(target)
-    obs.get("rows").asInstanceOf[Long]
+    hwm.fold(source)(h => source.filter(col(partCol) >= lit(h)))
+      .observe(obs, count(lit(1)).as("rows"))
+      .write.partitionBy(partCol).mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", if (hwm.isDefined) "dynamic" else "static")
+      .parquet(target)
+    val parts = listParts(spark, target, partCol).getOrElse(Nil)
+    IncResult(hwm.isEmpty, obs.get("rows").asInstanceOf[Long],
+      hwm.fold(parts)(h => parts.filter(_ >= h)), hwm)
   }
 
   /** The incremental flavor of fct_orders: same rows as `Wh.fctOrders`,

@@ -42,30 +42,6 @@ object Runner {
       .take(sorted.size)
   }
 
-  /** Which rollups each report model READS (from the Rollups.* call sites
-    * in layers.Reports / layers.Metrics) — its build-DAG dependencies
-    * beyond the schema gate. Models absent here are fact-direct. */
-  private val reportRollupDeps: Map[String, Seq[String]] = Map(
-    "customer_concentration_risk" -> Seq("rollup_customer_orders"),
-    "customer_cohort_retention" -> Seq("rollup_customer_orders", "rollup_customer_month"),
-    "customer_churn_risk" -> Seq("rollup_customer_orders"),
-    "customer_geographic_summary" -> Seq("rollup_customer_orders"),
-    "customer_purchase_frequency_bands" -> Seq("rollup_customer_orders"),
-    "customer_rfm_segments" -> Seq("rollup_customer_orders"),
-    "monthly_order_trends" -> Seq("rollup_customer_orders", "rollup_customer_month"),
-    "monthly_revenue_kpis" -> Seq("rollup_customer_month"),
-    "metrics_customer_retention" -> Seq("rollup_customer_orders", "rollup_customer_month"),
-    "metrics_monthly_orders" -> Seq("rollup_customer_month"),
-    "metrics_regional_revenue" -> Seq("rollup_customer_month"),
-    "part_abc_classification" -> Seq("rollup_part_month"),
-    "part_sales_velocity" -> Seq("rollup_part_month"),
-    "metrics_profit_margin_trend" -> Seq("rollup_part_month"),
-    "metrics_inventory_coverage" -> Seq("rollup_part_month"),
-    "metrics_top_parts_trending" -> Seq("rollup_part_month"),
-    "supplier_revenue_ranking" -> Seq("rollup_supplier_sales"),
-    "supplier_scorecard" -> Seq("rollup_supplier_sales"),
-    "regional_trade_balance" -> Seq("rollup_nation_flows"))
-
   /** Relative cost rank for the report phase's interleaved submission —
     * from the measured per-model wall times of the SF10 replica build
     * (heaviest ≈ 300 s, lightest ≈ 30 s; the ranking, not the absolute
@@ -85,6 +61,93 @@ object Runner {
     "repeat_purchase_analysis", "discount_effectiveness",
     "fulfillment_priority_analysis").reverse.zipWithIndex
     .map { case (n, i) => n -> (i + 1) }.toMap
+
+  /** A build node's layer: wh models carry the housekeeping columns,
+    * rollups are written under `_rollups/`, outside the returned tables,
+    * and every report-layer model runs after the schema gate. */
+  private[graft] object Layer extends Enumeration { val Ods, Wh, Rollup, Report = Value }
+
+  private[graft] final case class Node(name: String, layer: Layer.Value,
+      plan: Ctx => DataFrame)
+
+  /** The schema-test gate's node. */
+  private[graft] val Gate = "__gate"
+
+  /** Tables whose persisted copy `cacheParents` demotes to a parquet read
+    * once their readers above the report layer are done. Keeping
+    * everything persisted measured SLOWER at SF10 (the report phase
+    * evict-thrashed ~45 GB of cached relations in a 38 GB store). */
+  private val demoted = Seq("orders_items", "parts_suppliers", "dim_part_supplier_xrf")
+  private def demotion(name: String): String = s"__demote_$name"
+
+  /** Every model and rollup of a build: ods, wh, rollups, then the report
+    * layer (the Registry's `table` models) in an order that interleaves
+    * heavy and light models, so heavies start early without co-running as
+    * a memory-hungry block. */
+  private[graft] def nodes: Seq[Node] = {
+    def ods(n: String, f: Ctx => DataFrame) = Node(n, Layer.Ods, f)
+    def wh(n: String, f: Ctx => DataFrame) = Node(n, Layer.Wh, f)
+    def rollup(n: String, f: Ctx => DataFrame) = Node(n, Layer.Rollup, f)
+    Seq(
+      // ods layer (dbt `table`, no housekeeping — dbt_project.yml:31-32)
+      ods("customers", Ods.customers), ods("nations", Ods.nations),
+      ods("regions", Ods.regions), ods("parts", Ods.parts),
+      ods("suppliers", Ods.suppliers), ods("orders", Ods.orders),
+      ods("orders_items", Ods.ordersItems),
+      ods("parts_suppliers", Ods.partsSuppliers),
+      // wh layer (dbt `table` with housekeeping — dbt_project.yml:33-34)
+      wh("dim_customer", Wh.dimCustomer), wh("dim_supplier", Wh.dimSupplier),
+      wh("dim_part", Wh.dimPart), wh("dim_part_supplier_xrf", Wh.dimPartSupplierXrf),
+      wh("fct_orders", Wh.fctOrders), wh("fct_orders_items", Wh.fctOrdersItems),
+      wh("rpt_pricing_summary", Wh.rptPricingSummary),
+      wh("rpt_minimum_cost_suppliers", Wh.rptMinimumCostSuppliers),
+      // shared rollup boundary (layers.Rollups — the dbt table-layer reuse
+      // twin): grain-reduced relations serving the report fan-out
+      rollup("rollup_customer_orders", Rollups.customerOrders),
+      rollup("rollup_customer_month", Rollups.customerMonth),
+      rollup("rollup_part_month", Rollups.partMonth),
+      rollup("rollup_supplier_sales", Rollups.supplierSales),
+      rollup("rollup_nation_flows", Rollups.nationFlows)) ++
+    // metrics + reports layers (dbt `table`, no housekeeping); intermediate
+    // models stay views (dbt_project.yml:35-36)
+    interleave(Registry.all.iterator
+      .collect { case (n, en) if en.mat == Registry.Mat.Table => n -> en }
+      .toSeq
+      .sortBy { case (n, _) => -reportWeight.getOrElse(n, 0) })
+      .map { case (n, en) => Node(n, Layer.Report, en.fn) }
+  }
+
+  /** The build DAG in submission order: every node with its parents, which
+    * precede it. Like dbt, which reads its DAG off the `ref()` calls in each
+    * model, the model, rollup and gate edges are the build nodes each plan
+    * reads through [[Store.table]] directly, captured with [[Store.reads]].
+    * What is added is policy: every report-layer model runs after the gate,
+    * and in `cacheParents` mode each [[demoted]] table is demoted after its
+    * readers above the report layer, before any report starts. Capture is
+    * lazy, so a build runs each node while later ones are captured. */
+  private[graft] def dag(ctx: Ctx, cacheParents: Boolean): Iterator[(String, Seq[String])] = {
+    val all = nodes
+    val byName = all.map(n => n.name -> n).toMap
+    def capture(names: Seq[String]) =
+      names.iterator.zip(Store.reads(names) { n =>
+        if (n == Gate) gateChecks(ctx) else byName(n).plan(ctx)
+      }).map { case (n, (_, reads)) => n -> reads.filter(byName.contains) }
+    val (reports, tables) = all.partition(_.layer == Layer.Report)
+    val (rollups, models) = tables.partition(_.layer == Layer.Rollup)
+    val upstream = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
+    // `++` takes its operand by name: demotions are derived once every
+    // reader above the report layer is captured
+    lazy val demotions =
+      if (!cacheParents) Nil
+      else demoted.map(d =>
+        demotion(d) -> (d +: upstream.toSeq.collect { case (n, r) if r.contains(d) => n }))
+    // the gate, the report layer's prerequisite, goes before the rollups
+    capture(models.map(_.name) ++ Seq(Gate) ++ rollups.map(_.name))
+      .map { e => upstream += e; e } ++
+      demotions ++
+      capture(reports.map(_.name))
+        .map { case (n, ps) => n -> ((Gate +: demotions.map(_._1)) ++ ps) }
+  }
 
   /** Is this build failure the transient driver-memory class that a
     * resume retry heals? Two shapes witnessed on SF10-replica draws:
@@ -136,12 +199,12 @@ object Runner {
   }
 
   /** Full dbt-build twin. `threads` mirrors the reference's `dbt build`
-    * concurrency (profiles threads: 8): models WITHIN a phase have no
-    * dependencies on each other, so each phase materializes its models as
-    * concurrent Spark actions — the scheduler interleaves their stages and
+    * concurrency (profiles threads: 8). The build DAG is [[dag]]: as dbt
+    * reads its DAG off each model's `ref()` calls, each node's parents are
+    * the Store tables its plan reads, so no dependency is written down
+    * here. Every node starts the moment its parents land and runs as a
+    * concurrent Spark action — the scheduler interleaves their stages and
     * keeps all cores busy even while one model sits in a narrow stage.
-    * Dependencies ACROSS phases (ods -> wh -> gate -> reports) stay strictly
-    * ordered, exactly like dbt's DAG-ordered, intra-level-parallel run.
     *
     * `resume = true` is the `dbt retry` twin: a model whose output
     * directory already holds a complete write (its _SUCCESS marker) is
@@ -171,15 +234,14 @@ object Runner {
     val buildT0 = System.nanoTime()
     def rel: Double = (System.nanoTime() - buildT0) / 1e9
 
-    def write(name: String, df: DataFrame, housekeeping: Boolean): BuildResult = {
+    def write(name: String, path: String, df: DataFrame,
+        housekeeping: Boolean): BuildResult = {
       val t0 = System.nanoTime()
       val out = if (housekeeping) df.select(col("*") +: hk: _*) else df
-      val path = s"$outDir/$name"
-      val successMarker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      def markerExists: Boolean = successMarker
-        .getFileSystem(ctx.spark.sparkContext.hadoopConfiguration)
-        .exists(successMarker) // Hadoop FS, not java.io: outDir may be hdfs://s3a://
-      if (resume && markerExists) {
+      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
+      // Hadoop FS, not java.io: outDir may be hdfs:// or s3a://
+      if (resume && marker.getFileSystem(
+          ctx.spark.sparkContext.hadoopConfiguration).exists(marker)) {
         // complete prior write: count from parquet row-group metadata (the
         // reader short-circuits a bare count), no recompute
         return BuildResult(name, ctx.spark.read.parquet(path).count(), path,
@@ -194,10 +256,7 @@ object Runner {
       out.observe(obs, org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
         .write.mode("overwrite").parquet(path)
-      val rows = obs.get("rows") match {
-        case n: java.lang.Long => n.longValue()
-        case other             => other.toString.toLong
-      }
+      val rows = obs.get("rows").asInstanceOf[Long]
       val sec = (System.nanoTime() - t0) / 1e9
       buildLog(f"[build] +$rel%7.1f  $name%-32s $sec%7.1f s $rows%12d rows")
       // this model's dim broadcasts just became garbage; if broadcast-held
@@ -207,21 +266,17 @@ object Runner {
       BuildResult(name, rows, path, sec)
     }
 
+    // node-level readiness, as dbt runs its DAG: phase barriers left cores
+    // idle at every phase tail (measured at SF10: only orders_items +
+    // parts_suppliers ran for the last ~55 s of the "ods phase"). Nodes
+    // chain through Future.flatMap — a waiting node occupies NO pool
+    // thread, so the fixed pool cannot deadlock on dependencies.
+    val byName = nodes.map(n => n.name -> n).toMap
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-
-    // ---- model-level dependency DAG (dbt's actual scheduler shape) ----
-    // dbt runs the DAG with node-level readiness, not layer barriers: a dim
-    // starts the moment its sources land, rollups/tests start the moment
-    // their fact lands. Phase barriers left cores idle at every phase tail
-    // (measured at SF10: only orders_items+parts_suppliers run for the last
-    // ~55 s of the "ods phase" while six finished dims' consumers wait).
-    // Nodes chain through Future.flatMap — a waiting node occupies NO pool
-    // thread, so the fixed pool cannot deadlock on dependencies.
-    val nodes = scala.collection.mutable.Map.empty[String, Future[Any]]
-    val modelOrder = scala.collection.mutable.ArrayBuffer.empty[String]
-    def after[A](deps: Seq[String])(body: => A): Future[A] =
-      Future.sequence(deps.map(nodes)).flatMap(_ => Future {
+    val futures = scala.collection.mutable.Map.empty[String, Future[Any]]
+    def after[A](deps: Seq[Future[Any]])(body: => A): Future[A] =
+      Future.sequence(deps).flatMap(_ => Future {
         // every node body tags its Spark jobs with this build's run id so a
         // failing build can cancel the in-flight siblings (fail fast, and
         // no job is left writing into outDir after buildAll returns)
@@ -229,162 +284,73 @@ object Runner {
           interruptOnCancel = true)
         try body finally ctx.spark.sparkContext.clearJobGroup()
       })
-    // plan CONSTRUCTION happens inside the node body (after deps), so a
-    // child's plan always embeds the parent's post-write Store state —
-    // the write-through swap (or cacheParents persist) its deps published
-    def model(name: String, deps: Seq[String], housekeeping: Boolean)
-        (df: => DataFrame): Unit = {
-      modelOrder += name
-      nodes(name) = after(deps) {
-        // broadcast-pressure admission: on a drag epoch the concurrent
-        // writers' live dim broadcasts can exhaust driver storage (the r12
-        // SF10-replica abort at 8g). Waiting here holds no broadcasts, so
-        // in-flight models drain pressure and admission resumes; timeout
-        // proceeds anyway. Healthy path: one counter read, no wait.
-        if (!DriverGuard.admit())
-          buildLog(f"[build] +$rel%7.1f  $name admission timed out at " +
-            f"${DriverGuard.broadcastFraction}%.2f broadcast fraction — proceeding")
-        val r = write(name, df, housekeeping)
-        // per-model write-through: children read the WRITTEN parquet (dbt's
-        // execution model — select from the parent's materialized table)
-        // and the in-build persisted copy is freed; without it a cold SF10
-        // build holds every table twice and overruns local disk.
-        // cacheParents keeps the persist instead (children read memory) —
-        // except resumed skips, whose persist was never filled.
-        if (!cacheParents || r.skipped) Store.swap(ctx, name, {
-          val pq = ctx.spark.read.parquet(r.path)
-          if (housekeeping) pq.drop("dbt_batch_id", "dbt_batch_ts") else pq
-        })
-        r
-      }
+    // parquet read of a written model, without its housekeeping columns
+    def written(path: String, housekeeping: Boolean): DataFrame = {
+      val pq = ctx.spark.read.parquet(path)
+      if (housekeeping) pq.drop("dbt_batch_id", "dbt_batch_ts") else pq
     }
-    // demotion: in cacheParents mode a table whose hot consumers have all
-    // completed is swapped down to a parquet read, freeing block-manager
-    // memory for the relations the report fan-out actually re-reads.
-    // Keeping everything persisted measured SLOWER at SF10 (the report
-    // phase evict-thrashed ~45 GB of cached relations in a 38 GB store).
-    def demote(name: String, deps: Seq[String], housekeeping: Boolean): Seq[String] =
-      if (!cacheParents) Nil
-      else {
-        val node = s"__demote_$name"
-        nodes(node) = after(deps) {
-          Store.swap(ctx, name, {
-            val pq = ctx.spark.read.parquet(s"$outDir/$name")
-            if (housekeeping) pq.drop("dbt_batch_id", "dbt_batch_ts") else pq
-          })
-        }
-        Seq(node)
+    // plan CONSTRUCTION happens inside the node body (after its parents),
+    // so a child's plan always embeds the parent's post-write Store state —
+    // the write-through swap (or cacheParents persist) its parents published
+    def model(n: Node): BuildResult = {
+      // broadcast-pressure admission: on a drag epoch the concurrent
+      // writers' live dim broadcasts can exhaust driver storage (the r12
+      // SF10-replica abort at 8g). Waiting here holds no broadcasts, so
+      // in-flight models drain pressure and admission resumes; timeout
+      // proceeds anyway. Healthy path: one counter read, no wait.
+      if (!DriverGuard.admit())
+        buildLog(f"[build] +$rel%7.1f  ${n.name} admission timed out at " +
+          f"${DriverGuard.broadcastFraction}%.2f broadcast fraction — proceeding")
+      val housekeeping = n.layer == Layer.Wh
+      val dir = if (n.layer == Layer.Rollup) s"$outDir/_rollups" else outDir
+      val r = write(n.name, s"$dir/${n.name}", n.plan(ctx), housekeeping)
+      // write-through: children read the WRITTEN parquet and the persist is
+      // freed (Store.swap); cacheParents keeps it for them — except for a
+      // resumed skip, whose persist was never filled
+      if (!cacheParents || r.skipped)
+        Store.swap(ctx, n.name, written(r.path, housekeeping))
+      r
+    }
+    def body(name: String): Any =
+      if (name == Gate) {
+        // schema-test gate (reference fct_orders.yml / fct_orders_items.yml):
+        // every report depends on it, so a violation aborts before any
+        // report materializes — `dbt build` semantics with dbt's scheduling
+        schemaGate(ctx)
+        buildLog(f"[build] +$rel%7.1f  === schema gate passed")
+      } else demoted.find(d => demotion(d) == name) match {
+        case Some(d) =>
+          Store.swap(ctx, d, written(s"$outDir/$d", byName(d).layer == Layer.Wh))
+        case None => model(byName(name))
       }
 
     try {
-      // ods layer (dbt `table`, no housekeeping — dbt_project.yml:31-32);
-      // sources only, so no deps
-      model("customers", Nil, false)(Ods.customers(ctx))
-      model("nations", Nil, false)(Ods.nations(ctx))
-      model("regions", Nil, false)(Ods.regions(ctx))
-      model("parts", Nil, false)(Ods.parts(ctx))
-      model("suppliers", Nil, false)(Ods.suppliers(ctx))
-      model("orders", Nil, false)(Ods.orders(ctx))
-      model("orders_items", Nil, false)(Ods.ordersItems(ctx))
-      model("parts_suppliers", Nil, false)(Ods.partsSuppliers(ctx))
-
-      // wh layer (dbt `table` with housekeeping — dbt_project.yml:33-34);
-      // each starts the moment ITS parents land, not the whole ods layer
-      model("dim_customer", Seq("customers", "nations", "regions"), true)(
-        Wh.dimCustomer(ctx))
-      model("dim_supplier", Seq("suppliers", "nations", "regions"), true)(
-        Wh.dimSupplier(ctx))
-      model("dim_part", Seq("parts"), true)(Wh.dimPart(ctx))
-      model("dim_part_supplier_xrf", Seq("parts_suppliers", "suppliers"), true)(
-        Wh.dimPartSupplierXrf(ctx))
-      model("fct_orders", Seq("orders", "orders_items"), true)(Wh.fctOrders(ctx))
-      model("fct_orders_items", Seq("orders_items", "parts_suppliers"), true)(
-        Wh.fctOrdersItems(ctx))
-      model("rpt_pricing_summary", Seq("fct_orders_items"), true)(
-        Wh.rptPricingSummary(ctx))
-      model("rpt_minimum_cost_suppliers", Seq("dim_part_supplier_xrf"), true)(
-        Wh.rptMinimumCostSuppliers(ctx))
-
-      val demotions =
-        demote("orders_items", Seq("fct_orders", "fct_orders_items"), false) ++
-        demote("parts_suppliers",
-          Seq("fct_orders_items", "dim_part_supplier_xrf"), false) ++
-        demote("dim_part_supplier_xrf", Seq("rpt_minimum_cost_suppliers"), true)
-
-      // schema-test gate (reference fct_orders.yml / fct_orders_items.yml):
-      // starts the moment the facts + dims land; report models depend on it,
-      // so a violation aborts before any report materializes — `dbt build`
-      // semantics with dbt's actual scheduling
-      nodes("__gate") = after(Seq(
-        "fct_orders", "fct_orders_items", "dim_customer", "dim_supplier",
-        "parts")) {
-        schemaGate(ctx)
-        buildLog(f"[build] +$rel%7.1f  === schema gate passed")
-      }
-
-      // shared rollup boundary (layers.Rollups — the dbt table-layer reuse
-      // twin): each rollup starts the moment its fact lands and serves the
-      // report fan-out grain-reduced relations. Written under _rollups/
-      // (a bucketed write at cluster scale); not part of the public
-      // 50-table contract — kept out of the returned list.
-      def rollup(name: String, deps: Seq[String])(df: => DataFrame): Unit =
-        nodes(name) = after(deps) {
-          val path = s"$outDir/_rollups/$name"
-          df.write.mode("overwrite").parquet(path)
-          if (!cacheParents) Store.swap(ctx, name, ctx.spark.read.parquet(path))
-          buildLog(f"[build] +$rel%7.1f  $name (rollup)")
+      // each node is submitted as soon as its plan is captured: the report
+      // layer's capture runs while the layers above it build
+      scala.util.Try {
+        dag(ctx, cacheParents).foreach { case (name, parents) =>
+          futures(name) = after(parents.map(futures))(body(name))
         }
-      rollup("rollup_customer_orders", Seq("fct_orders"))(Rollups.customerOrders(ctx))
-      rollup("rollup_customer_month", Seq("fct_orders"))(Rollups.customerMonth(ctx))
-      rollup("rollup_part_month", Seq("fct_orders_items"))(Rollups.partMonth(ctx))
-      rollup("rollup_supplier_sales", Seq("fct_orders_items"))(Rollups.supplierSales(ctx))
-      rollup("rollup_nation_flows",
-        Seq("fct_orders_items", "dim_supplier", "dim_customer"))(
-        Rollups.nationFlows(ctx))
-      val rollups = Seq("rollup_customer_orders", "rollup_customer_month",
-        "rollup_part_month", "rollup_supplier_sales", "rollup_nation_flows")
-
-      // metrics + reports layers (dbt `table`, no housekeeping);
-      // intermediate models stay views (dbt_project.yml:35-36) and
-      // extension operators are not dbt models — selected via the Registry
-      // materialization tag. Every report gates on the schema tests (dbt
-      // semantics) but waits only for the rollups IT reads — a fact-direct
-      // report starts the moment the gate passes instead of idling behind
-      // the 50M-row part-month rollup. (A missing entry here is a perf
-      // slip, never a correctness one: an undeclared rollup would simply
-      // be computed by its first consumer through the Store boundary.)
-      // Submission order interleaves heavy and light models (cost-ranked
-      // ends of the list) so heavies start early without co-running as a
-      // memory-hungry block.
-      val baseDeps = Seq("__gate") ++ demotions
-      interleave(Registry.all.iterator
-        .collect { case (n, en) if en.mat == Registry.Mat.Table => n -> en }
-        .toSeq
-        .sortBy { case (n, _) => -reportWeight.getOrElse(n, 0) })
-        .foreach { case (n, en) =>
-          model(n, baseDeps ++ reportRollupDeps.getOrElse(n, Nil), false)(en.fn(ctx))
-        }
-      // (the final await below also covers rollup nodes nothing depends on)
-
-      scala.util.Try(
-        Await.result(Future.sequence(nodes.values.toSeq), Duration.Inf)) match {
+        buildLog(f"[build] +$rel%7.1f  === DAG captured (${futures.size} nodes)")
+      }.flatMap(_ => scala.util.Try(
+        Await.result(Future.sequence(futures.values.toSeq), Duration.Inf))) match {
         case scala.util.Failure(e) =>
-          // a gate/model failed: Future.sequence fails fast while sibling
-          // nodes are still running. Cancel this build's in-flight jobs,
-          // then wait for EVERY node future to settle before rethrowing —
-          // otherwise the finally's Store.clear races live jobs and a
-          // background write can land in outDir after buildAll returned
-          // (callers delete outDir on failure).
+          // a capture, gate or model failed: Future.sequence fails fast
+          // while sibling nodes are still running. Cancel this build's
+          // in-flight jobs, then wait for EVERY node future to settle
+          // before rethrowing — otherwise the finally's Store.clear races
+          // live jobs and a background write can land in outDir after
+          // buildAll returned (callers delete outDir on failure).
           scala.util.Try(ctx.spark.sparkContext.cancelJobGroup(runId))
           Await.ready(Future.sequence(
-            nodes.values.toSeq.map(_.transform(scala.util.Success(_)))),
+            futures.values.toSeq.map(_.transform(scala.util.Success(_)))),
             Duration.Inf)
           throw e
         case scala.util.Success(_) => ()
       }
-      buildLog(f"[build] +$rel%7.1f  === build complete (${modelOrder.size} models)")
-      modelOrder.toSeq.map(n =>
-        Await.result(nodes(n), Duration.Inf).asInstanceOf[BuildResult])
+      val models = nodes.filter(_.layer != Layer.Rollup).map(_.name)
+      buildLog(f"[build] +$rel%7.1f  === build complete (${models.size} models)")
+      models.map(n => Await.result(futures(n), Duration.Inf).asInstanceOf[BuildResult])
     } finally {
       pool.shutdown()
       // A build is a batch job: the write-through swaps above left the
@@ -425,15 +391,12 @@ object Runner {
   def diff(spark: org.apache.spark.sql.SparkSession, dirA: String, dirB: String,
       keys: Map[String, Seq[String]] = Map.empty): Seq[TableDiff] = {
     import org.apache.spark.sql.functions.{coalesce, greatest, lit, md5, struct, sum, to_json}
-    def tables(dir: String): Set[String] =
-      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory).map(_.getName)
-        .filterNot(_.startsWith("_")) // _rollups etc: internal, not models
-        .toSet
-    val all = (tables(dirA) ++ tables(dirB)).toSeq.sorted
-    all.map { t =>
-      val inA = tables(dirA)(t)
-      val inB = tables(dirB)(t)
+    def tables(dir: String): Set[String] = Ctx.subdirs(spark, dir).getOrElse(Nil)
+      .filterNot(_.startsWith("_")).toSet // _rollups etc: internal, not models
+    val (tablesA, tablesB) = (tables(dirA), tables(dirB))
+    (tablesA ++ tablesB).toSeq.sorted.map { t =>
+      val inA = tablesA(t)
+      val inB = tablesB(t)
       def read(dir: String) = spark.read.parquet(s"$dir/$t")
       if (!inA || !inB) {
         val rows = read(if (inA) dirA else dirB).count()
@@ -500,11 +463,25 @@ object Runner {
     * grain for an FK check. The six gate jobs are independent and run
     * concurrently. */
   def schemaGate(ctx: Ctx): Unit = {
-    import Expectations._
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    val gates = gateChecks(ctx)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(gates.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.sequence(gates.map(g => Future(g()))), Duration.Inf)
+    finally pool.shutdown()
+    ()
+  }
+
+  /** The gate's checks, over relations built here: building them is what
+    * [[dag]] captures to learn the gate's parents. */
+  private def gateChecks(ctx: Ctx): Seq[() => Unit] = {
+    import Expectations._
     val fo = Wh.fctOrders(ctx)
     val foi = Wh.fctOrdersItems(ctx)
+    val dimCustomer = Wh.dimCustomer(ctx)
+    val dimPart = Wh.dimPart(ctx)
+    val dimSupplier = Wh.dimSupplier(ctx)
     def notNulls(cols: String*): Seq[Expectation] = cols.map(NotNull)
 
     def orphans(fact: DataFrame, fk: String, dim: DataFrame, pk: String,
@@ -514,7 +491,7 @@ object Runner {
       require(n == 0L, s"$label: $n orphan value(s) of $fk")
     }
 
-    val gates: Seq[() => Unit] = Seq(
+    Seq(
       () => enforce(fo, "fct_orders", Unique("order_key") +: notNulls(
         "order_key", "order_date", "customer_key", "order_status_code",
         "order_priority_code", "gross_item_sales_amount",
@@ -532,58 +509,38 @@ object Runner {
         "discounted_price", "tax_rate", "order_item_count", "quantity",
         "gross_item_sales_amount", "discounted_item_sales_amount",
         "item_discount_amount", "item_tax_amount", "net_item_sales_amount")),
-      () => orphans(fo, "customer_key", Wh.dimCustomer(ctx), "customer_key",
+      () => orphans(fo, "customer_key", dimCustomer, "customer_key",
         "fct_orders->dim_customer"),
-      () => orphans(foi, "customer_key", Wh.dimCustomer(ctx), "customer_key",
+      () => orphans(foi, "customer_key", dimCustomer, "customer_key",
         "fct_orders_items->dim_customer"),
-      () => orphans(foi, "part_key", Wh.dimPart(ctx), "part_key",
+      () => orphans(foi, "part_key", dimPart, "part_key",
         "fct_orders_items->dim_part"),
-      () => orphans(foi, "supplier_key", Wh.dimSupplier(ctx), "supplier_key",
+      () => orphans(foi, "supplier_key", dimSupplier, "supplier_key",
         "fct_orders_items->dim_supplier"))
-
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(gates.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(Future.sequence(gates.map(g => Future(g()))), Duration.Inf)
-    finally pool.shutdown()
-    ()
   }
 
   /** `dbt docs generate` twin — the model catalog: every dbt-surface model
     * (the Extension operators are a library, not dbt models) with its
     * materialization and fully resolved output schema. Schemas come from
-    * Catalyst ANALYSIS only — nothing beyond per-source parquet footer
-    * reads (1-task metadata jobs) runs — so the catalog is metadata-cheap
-    * at any scale, exactly like dbt compiling models to learn their shapes
-    * (ManifestSpec asserts no multi-task job runs). Inter-model dependency
-    * structure is carried by
-    * the materialization phases (base→ods→wh→gate→views/reports/metrics),
-    * the same coarse DAG `buildAll` executes. */
+    * Catalyst ANALYSIS only, inside a [[Store.reads]] capture: no Store
+    * entry is made, globalOrder's fast path runs no count, and nothing
+    * beyond per-source parquet footer reads (1-task metadata jobs) runs —
+    * so the catalog is metadata-cheap at any scale, exactly like dbt
+    * compiling models to learn their shapes (ManifestSpec asserts no
+    * multi-task job runs). Final model schemas are the same as a real
+    * build's (ScaleSpec pins the two globalOrder branches' output parity). */
   def manifest(ctx: Ctx): DataFrame = {
     import ctx.spark.implicits._
-    // docs-generate contract: analysis only, zero data jobs. globalOrder's
-    // adaptive fast path counts its input at construction time; this flag
-    // routes it to the (lazy) two-phase plan while schemas are harvested —
-    // final model schemas are identical either way (ScaleSpec pins the two
-    // branches' output parity; decimal widths only differ on internal
-    // columns that every declared output re-casts).
-    ctx.spark.conf.set("spark.graft.lazyAnalysis", "true")
-    try manifestInner(ctx)
-    finally ctx.spark.conf.unset("spark.graft.lazyAnalysis")
-  }
-
-  private def manifestInner(ctx: Ctx): DataFrame = {
-    import ctx.spark.implicits._
-    Registry.all.toSeq.collect {
-      case (name, en) if en.mat != Registry.Mat.Extension =>
-        val mat = en.mat match {
-          case Registry.Mat.OdsTable => "table(ods)"
-          case Registry.Mat.WhTable => "table(wh)"
-          case Registry.Mat.View => "view"
-          case _ => "table"
-        }
-        val cols = en.fn(ctx).schema.fields
-          .map(f => s"${f.name}:${f.dataType.simpleString}").toSeq
-        (name, mat, cols)
+    val models = Registry.all.toSeq.filter(_._2.mat != Registry.Mat.Extension)
+    val schemas = Store.reads(models.map(_._1))(n => Registry.all(n).fn(ctx).schema).toSeq
+    models.zip(schemas).map { case ((name, en), (schema, _)) =>
+      val mat = en.mat match {
+        case Registry.Mat.OdsTable => "table(ods)"
+        case Registry.Mat.WhTable => "table(wh)"
+        case Registry.Mat.View => "view"
+        case _ => "table"
+      }
+      (name, mat, schema.fields.toSeq.map(f => s"${f.name}:${f.dataType.simpleString}"))
     }.toDF("model", "materialization", "columns")
   }
 }

@@ -69,19 +69,18 @@ object Text {
     * document length, not corpus size; a cluster-scale run would back this
     * with a bucketed write instead of an in-memory persist. */
   private[graft] def shingleArr(ctx: Ctx): DataFrame =
-    graft.Store.memo(ctx, "doc_shingle_sets") {
-      graft.Store.track(ctx.spark,
-        // collect_set straight off the raw pairs: ONE doc-keyed shuffle,
-        // with the dedup happening inside the map-side partial sets — the
-        // distinct + collect_list form paid a second full pair-sized
-        // exchange for nothing (4x at SF10, PERF_NOTES_r8.md; consumers are
-        // order-insensitive: mins / sizes / intersect-size / re-explodes)
-        shinglePairs(ctx).groupBy("doc_id")
-          // serialized storage: wide string-array rows deserialized are
-          // several× their batch size and evict first under sweep-wide
-          // memory pressure (the r3 stall diagnosis) — keep them compact
-          .agg(collect_set(col("shingle")).as("shingles"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    // serialized storage: wide string-array rows deserialized are several×
+    // their batch size and evict first under sweep-wide memory pressure
+    // (the r3 stall diagnosis) — keep them compact
+    graft.Store.table(ctx, "doc_shingle_sets",
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) {
+      // collect_set straight off the raw pairs: ONE doc-keyed shuffle, with
+      // the dedup happening inside the map-side partial sets — the
+      // distinct + collect_list form paid a second full pair-sized exchange
+      // for nothing (4x at SF10, PERF_NOTES_r8.md; consumers are
+      // order-insensitive: mins / sizes / intersect-size / re-explodes)
+      shinglePairs(ctx).groupBy("doc_id")
+        .agg(collect_set(col("shingle")).as("shingles"))
     }
 
   /** Token counting: whitespace tokens + a BPE-ish regex token stream. */
@@ -1000,7 +999,8 @@ object Text {
     * rounds); the per-round plan here is already the scalable one
     * (edge-partitioned join, no driver-side graph).
     */
-  def dedupClusters(ctx: Ctx): DataFrame = graft.Store.memo(ctx, "dedup_cluster_labels") {
+  def dedupClusters(ctx: Ctx): DataFrame = graft.Store.table(ctx, "dedup_cluster_labels",
+      org.apache.spark.storage.StorageLevel.NONE) {
     val pairs = dedupMinhashLsh(ctx)
       .filter(col("is_near_duplicate"))
       .select("doc_a", "doc_b")

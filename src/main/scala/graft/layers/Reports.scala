@@ -193,9 +193,11 @@ object Reports {
       col("last_order_date"), col("order_count").as("frequency"),
       col("gross_d").as("monetary_d"))
     val ref = r.agg(max("last_order_date").as("reference_date"))
-    val base = graft.Store.track(ctx.spark, om.crossJoin(ref)
+    val withRecency = om.crossJoin(ref)
       .withColumn("recency_days", datediff(col("reference_date"), col("last_order_date")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // a plan built inside a Store.reads capture is never run
+    val base = if (graft.Store.capturing) withRecency
+      else withRecency.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the three global orderings are independent: compute each row number
     // over a minimal two-column projection of the cached base and join the
     // branches back on the key — same bit-exact ntile inputs as a chained

@@ -54,11 +54,11 @@ object Scale {
   /** Row-count bound under which the single-task window form is used.
     * Conf-tunable (`spark.graft.globalOrder.singleTaskMaxRows`); 0 forces
     * the two-phase path everywhere (the 100 TB posture, used by specs).
-    * Also 0 whenever `spark.graft.lazyAnalysis` is set: schema-only
-    * consumers (Runner.manifest — the docs-generate twin) must not trigger
-    * the fast path's construction-time count job. */
+    * Also 0 inside a [[graft.Store.reads]] capture: a plan built for its
+    * schema or its reads (Runner.manifest, Runner.buildAll's DAG) must not
+    * run the fast path's construction-time count job. */
   def singleTaskMaxRows(spark: org.apache.spark.sql.SparkSession): Long =
-    if (spark.conf.get("spark.graft.lazyAnalysis", "false") == "true") 0L
+    if (graft.Store.capturing) 0L
     else spark.conf.get("spark.graft.globalOrder.singleTaskMaxRows", "1000000").toLong
 
   /** Attach global-order analytics to `df` without a single-partition window.
@@ -94,10 +94,12 @@ object Scale {
     // again for the real pass — an unpersisted input (often a full fact
     // join+aggregate) would be computed twice. Persist it unless the caller
     // already did (e.g. a chained globalOrder whose input is the previous
-    // call's cached relation).
+    // call's cached relation). A plan built inside a Store.reads capture is
+    // never run, so it persists nothing.
+    val capturing = graft.Store.capturing
     val input =
-      if (persistInput && df.storageLevel == StorageLevel.NONE)
-        graft.Store.track(spark, df.persist(StorageLevel.MEMORY_AND_DISK))
+      if (persistInput && df.storageLevel == StorageLevel.NONE && !capturing)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
       else df
 
     // Small-input fast path: one count over the (persisted) input decides.
@@ -121,8 +123,7 @@ object Scale {
       // persist like the two-phase path persists `local`: several reports
       // consume the ranked relation more than once (rank/tie windows,
       // self-joins) and would otherwise re-run the window per consumer
-      return graft.Store.track(spark,
-        result.persist(StorageLevel.MEMORY_AND_DISK))
+      return result.persist(StorageLevel.MEMORY_AND_DISK)
     }
 
     val parted = input.repartitionByRange(p, order: _*)
@@ -141,10 +142,10 @@ object Scale {
     val wRow = Window.partitionBy(pid).orderBy(order: _*)
     val wCum = wRow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local0 = rn.fold(parted)(_ => parted.withColumn("__go_lrn", row_number().over(wRow)))
-    val local = graft.Store.track(spark,
-      cums.foldLeft(local0) { case (d, (c, _)) =>
-        d.withColumn(s"__go_lcum_$c", sum(col(c)).over(wCum))
-      }.persist(StorageLevel.MEMORY_AND_DISK))
+    val windowed = cums.foldLeft(local0) { case (d, (c, _)) =>
+      d.withColumn(s"__go_lcum_$c", sum(col(c)).over(wCum))
+    }
+    val local = if (capturing) windowed else windowed.persist(StorageLevel.MEMORY_AND_DISK)
 
     // phase 2: one row per range -> prefix offsets via triangular self-join
     val sumCols = (cums.map(_._1) ++ totals.map(_._1)).distinct

@@ -149,4 +149,22 @@ class IncrementalSpec extends SparkSpec {
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(pinned.isEmpty, s"the refresh persisted RDDs $pinned")
   }
+
+  test("a file: URI target is found, so its second run is a delta") {
+    // toUri: "file:/tmp/.../", which java.io.File reads as a missing path
+    val target = java.nio.file.Files.createTempDirectory("graft_incr_uri")
+      .toUri.toString + "fct_orders"
+    val full = Incremental.fctOrdersMonthly(ctx)
+    val months = full.select("order_month").distinct()
+      .orderBy("order_month").collect().map(_.getString(0))
+    val cut = months(months.length - 3)
+    val r1 = Incremental.run(spark, target, "order_month",
+      full.filter(col("order_month") < cut))
+    assert(r1.fullRefresh && r1.partitionsWritten == months.filter(_ < cut).toSeq)
+    val r2 = Incremental.run(spark, target, "order_month", full)
+    assert(!r2.fullRefresh && r2.highWaterMark.contains(months(months.length - 4)))
+    assert(r2.partitionsWritten == months.filter(_ >= months(months.length - 4)).toSeq)
+    assert(spark.read.parquet(target).count() == full.count())
+  }
 }
+

@@ -57,4 +57,18 @@ class RunnerDiffSpec extends SparkSpec {
     val Seq(d) = Runner.diff(spark, s"$root/a", s"$root/b")
     assert(d.schemaChanged && d.changedKeys.isEmpty && !d.identical)
   }
+
+  test("builds under file: URIs are listed and diffed") {
+    import spark.implicits._
+    // toUri: "file:/tmp/.../", a URI java.io.File cannot list
+    val root = java.nio.file.Files.createTempDirectory("graft_diff_uri").toUri.toString
+    val (a, b) = (s"${root}a", s"${root}b")
+    val stable = spark.range(10).toDF("id")
+    mkBuild(a)("stable" -> stable, "t" -> Seq(1, 2, 3).toDF("v"))
+    mkBuild(b)("stable" -> stable, "t" -> Seq(1, 2, 4).toDF("v"))
+    val diffs = Runner.diff(spark, a, b).map(d => d.table -> d).toMap
+    assert(diffs.keySet == Set("stable", "t"))
+    assert(diffs("stable").identical)
+    assert(diffs("t").onlyInA == 1 && diffs("t").onlyInB == 1, diffs("t"))
+  }
 }

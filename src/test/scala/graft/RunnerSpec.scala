@@ -6,9 +6,17 @@ import org.apache.spark.sql.functions.col
   * per-run housekeeping constants and the schema-test gate. */
 class RunnerSpec extends SparkSpec {
 
-  test("buildAll materializes all table-layer models with housekeeping") {
+  /** A build test run in both build modes: write-through under `name`, and
+    * `cacheParents` (persisted parents, demoted after their readers) under
+    * `name [cacheParents]`. */
+  private def buildTest(name: String)(body: Boolean => Unit): Unit =
+    Seq(false, true).foreach { cacheParents =>
+      test(if (cacheParents) s"$name [cacheParents]" else name)(body(cacheParents))
+    }
+
+  buildTest("buildAll materializes all table-layer models with housekeeping") { cp =>
     val out = java.nio.file.Files.createTempDirectory("graft-build").toString
-    val results = Runner.buildAll(ctx, out)
+    val results = Runner.buildAll(ctx, out, cacheParents = cp)
     assert(results.forall(_.rows > 0), "every materialized table has rows")
     assert(results.exists(_.table == "orders_items"))
     assert(results.exists(_.table == "supplier_scorecard"))
@@ -24,9 +32,10 @@ class RunnerSpec extends SparkSpec {
     assert(!spark.read.parquet(s"$out/orders_items").columns.contains("dbt_batch_id"))
   }
 
-  test("buildAll leaves the session Store clean — no dangling build-dir reads") {
+  buildTest("buildAll leaves the session Store clean — no dangling build-dir reads") { cp =>
     val out = java.nio.file.Files.createTempDirectory("graft-build-wt").toString
-    val results = Runner.buildAll(ctx, out)
+    val results = Runner.buildAll(ctx, out, cacheParents = cp)
+    assert(Store.entries(spark).isEmpty, "buildAll left Store entries behind")
     // rollups were materialized under _rollups/ but are NOT part of the
     // public table contract
     assert(new java.io.File(s"$out/_rollups/rollup_customer_orders").isDirectory)
@@ -44,9 +53,9 @@ class RunnerSpec extends SparkSpec {
       "rollup must rebuild from source after buildAll")
   }
 
-  test("buildAll(resume = true) redoes only the missing models — the dbt retry twin") {
+  buildTest("buildAll(resume = true) redoes only the missing models — the dbt retry twin") { cp =>
     val out = java.nio.file.Files.createTempDirectory("graft-build-rs").toString
-    val first = Runner.buildAll(ctx, out)
+    val first = Runner.buildAll(ctx, out, cacheParents = cp)
     // simulate a crash that lost two models: one with a complete-but-stale
     // marker removed, one wiped entirely
     def rm(f: java.io.File): Unit = {
@@ -54,7 +63,7 @@ class RunnerSpec extends SparkSpec {
     }
     rm(new java.io.File(s"$out/supplier_scorecard"))
     new java.io.File(s"$out/fct_orders/_SUCCESS").delete()
-    val second = Runner.buildAll(ctx, out, resume = true)
+    val second = Runner.buildAll(ctx, out, resume = true, cacheParents = cp)
     val redone = second.filterNot(_.skipped).map(_.table).toSet
     assert(redone == Set("supplier_scorecard", "fct_orders"),
       s"expected exactly the 2 damaged models redone, got $redone")
@@ -97,7 +106,7 @@ class RunnerSpec extends SparkSpec {
     assert(healed.length == first.length)
   }
 
-  test("a schema-gate violation aborts the build before ANY report materializes") {
+  buildTest("a schema-gate violation aborts the build before ANY report materializes") { cp =>
     // corrupt twin of the sf0.001 source: one order gets a customer key
     // that exists in no customer row -> the declared relationships test
     // (fct_orders.customer_key -> dim_customer) must fail and, per `dbt
@@ -119,7 +128,7 @@ class RunnerSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$src/orders.parquet")
     val out = java.nio.file.Files.createTempDirectory("graft-badbuild").toString
     val badCtx = Ctx(spark, src)
-    val err = intercept[Exception] { Runner.buildAll(badCtx, out) }
+    val err = intercept[Exception] { Runner.buildAll(badCtx, out, cacheParents = cp) }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
     assert(chain(err).exists(m => m != null && m.contains("orphan")),
