@@ -135,10 +135,12 @@ object Store {
   import org.apache.spark.sql.catalyst.expressions.Expression
   import scala.collection.mutable
 
-  /** One session's entries by (sfDir, name) and its parquet source schemas
-    * by (path, modification time); a function builder only to be held. */
+  /** One session's entries by (sfDir, name), the RDDs operators hand it
+    * to release ([[own]]) and its parquet source schemas by (path,
+    * modification time); a function builder only to be held. */
   private final class Registry extends (Seq[Expression] => Expression) {
     val entries = mutable.Map.empty[(String, String), DataFrame]
+    val owned = mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
     val schemas = TrieMap.empty[(String, Long), StructType]
     def apply(args: Seq[Expression]): Expression =
       throw new UnsupportedOperationException(s"$slot is not a SQL function")
@@ -242,12 +244,25 @@ object Store {
       infer: => StructType): StructType =
     registry(spark).schemas.getOrElseUpdate((path, mtime), infer)
 
+  /** Hands the session the persisted `rdds` an operator's result reads
+    * (the fixpoint's last checkpoint round, whose blocks are its only
+    * copy): [[clear]] unpersists them. */
+  private[graft] def own(spark: SparkSession, rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
+    val r = registry(spark)
+    r.synchronized(r.owned ++= rdds)
+  }
+
   /** Drops every entry of the session and empties its cache manager, which
     * also frees the persists operators make internally (Scale.globalOrder's
-    * input and ranges, customer_rfm_segments' base): a batch boundary. */
+    * input and ranges, customer_rfm_segments' base), and unpersists what
+    * operators handed it ([[own]]): a batch boundary. */
   def clear(spark: SparkSession): Unit = {
     val r = registry(spark)
-    r.synchronized(r.entries.clear())
+    r.synchronized {
+      r.entries.clear()
+      r.owned.foreach(_.unpersist(blocking = false))
+      r.owned.clear()
+    }
     spark.catalog.clearCache()
   }
 }

@@ -59,10 +59,12 @@ object Versioned {
 
   /** `schema` is the full table schema DDL recorded at commit time, so a
     * read never pays a footer-inference job (and an empty snapshot can
-    * still report its shape). None only on pre-r8 manifests. */
+    * still report its shape). None only on pre-r8 manifests. `props` are
+    * the committer's own key/value facts about the version, read back
+    * through the FS with no scan (empty on manifests that carry none). */
   final case class Manifest(version: Long, partCol: Option[String],
       partType: Option[String], files: Seq[FileEntry],
-      schema: Option[String] = None)
+      schema: Option[String] = None, props: Map[String, String] = Map.empty)
 
   final class CommitConflictException(msg: String)
     extends RuntimeException(msg)
@@ -91,7 +93,8 @@ object Versioned {
       s"partCol=${m.partCol.getOrElse("")}",
       s"partType=${m.partType.getOrElse("")}") ++
       // DDL is single-line; key absent entirely on None (pre-r8 manifests)
-      m.schema.map(s => s"schema=$s")
+      m.schema.map(s => s"schema=$s") ++
+      m.props.toSeq.sorted.map { case (k, v) => s"prop.$k=$v" }
     // '\u0001' separator: never appears in hive-ESCAPED dir fragments
     // (escapePathName percent-encodes control chars)
     val files = m.files.map(f => s"file=${f.file}\u0001${f.part.getOrElse("")}")
@@ -108,10 +111,14 @@ object Versioned {
       FileEntry(body.substring(0, i),
         Option(body.substring(i + 1)).filter(_.nonEmpty))
     }
+    val props = lines.filter(_.startsWith("prop.")).map { l =>
+      val i = l.indexOf('=')
+      l.substring(5, i) -> l.substring(i + 1)
+    }.toMap
     Manifest(kv("version").toLong,
       Option(kv("partCol")).filter(_.nonEmpty),
       Option(kv("partType")).filter(_.nonEmpty), files,
-      Option(kv("schema")).filter(_.nonEmpty))
+      Option(kv("schema")).filter(_.nonEmpty), props)
   }
 
   def readManifest(spark: SparkSession, path: String,
@@ -166,7 +173,8 @@ object Versioned {
     * the new file list, partition metadata and table schema DDL — or
     * throws [[CommitConflictException]] if the new tip conflicts with
     * what the caller staged. */
-  private def commit(spark: SparkSession, path: String)(
+  private def commit(spark: SparkSession, path: String,
+      props: Map[String, String] = Map.empty)(
       build: Option[Manifest] =>
         (Seq[FileEntry], Option[String], Option[String], Option[String])): Long = {
     val fs = fsOf(spark, path)
@@ -181,7 +189,7 @@ object Versioned {
         val prev = prevV.map(v => readManifest(spark, path, Some(v)))
         val (files, pc, pt, ddl) = build(prev)
         val next = prevV.getOrElse(-1L) + 1
-        val m = Manifest(next, pc, pt, files, ddl)
+        val m = Manifest(next, pc, pt, files, ddl, props)
         val tmp = new Path(logDir(path),
           s".v$next-${java.util.UUID.randomUUID()}.tmp")
         val out = fs.create(tmp, false)
@@ -267,7 +275,23 @@ object Versioned {
     * concurrent builds already have: last meta commit wins). */
   def write(df: DataFrame, path: String, mode: String = "overwrite",
       partitionBy: Option[String] = None,
-      appendBase: Option[Long] = None): Long = {
+      appendBase: Option[Long] = None): Long =
+    publish(df, path, mode, partitionBy, appendBase, Map.empty)
+
+  /** Overwrite the table with `df` as [[write]] does, recording `props`
+    * in the committed manifest ([[Manifest.props]]). Keys are names
+    * without '=' and values single-line. */
+  private[graft] def writeWithProps(df: DataFrame, path: String,
+      props: Map[String, String]): Long = {
+    require(props.forall { case (k, v) =>
+      k.nonEmpty && !k.exists("=\n".contains(_)) && !v.contains('\n') },
+      s"manifest props need '='-free keys and single-line values: $props")
+    publish(df, path, "overwrite", None, None, props)
+  }
+
+  private def publish(df: DataFrame, path: String, mode: String,
+      partitionBy: Option[String], appendBase: Option[Long],
+      props: Map[String, String]): Long = {
     require(appendBase.isEmpty || mode == "append",
       s"appendBase only applies to mode=append (got mode=$mode)")
     val partType = partitionBy.map(pc => df.schema(pc).dataType.sql)
@@ -275,7 +299,7 @@ object Versioned {
     val spark = df.sparkSession
     val baseFiles = appendBase.map(v => readManifest(spark, path, Some(v)).files)
     val staged = stage(df, path, partitionBy)
-    commit(spark, path) { prev =>
+    commit(spark, path, props) { prev =>
       val kept = mode match {
         case "overwrite" => Nil
         case "append" => baseFiles.getOrElse(prev.map(_.files).getOrElse(Nil))

@@ -26,39 +26,29 @@ object Analytics {
     * one shuffle, partial-aggregatable, so it scales exactly like the flat
     * groupBy. GROUPING() flags distinguish a subtotal row from a genuine
     * NULL group, and double as the deterministic sort level. */
-  def regionalRevenueRollup(ctx: Ctx): DataFrame = {
-    // DetectAmbiguousSelfJoin misfires on rollup()+grouping() over a child
-    // whose lineage contains a genuine self-join (fct_orders joins orders
-    // against an orders_items aggregate that itself reads orders): the
-    // grouping-sets expansion duplicates the child's attribute references
-    // and the detector counts the dataset twice. The references here are
-    // semantically unambiguous — each grouping name exists exactly once in
-    // scope — so suspend the guard for this one (eager) analysis.
-    val conf = ctx.spark.conf
-    val key = "spark.sql.analyzer.failAmbiguousSelfJoin"
-    val prev = conf.get(key, "true")
-    conf.set(key, "false")
-    try
-      Wh.fctOrders(ctx)
-        .join(Wh.dimCustomer(ctx), Seq("customer_key"))
-        .select(
-          col("customer_region_name").as("region_name"),
-          col("customer_nation_name").as("nation_name"),
-          col("order_key"), col("customer_key"),
-          col("gross_item_sales_amount"), col("net_item_sales_amount"))
-        .rollup("region_name", "nation_name")
-        .agg(
-          grouping(col("region_name")).cast("int").as("region_subtotal"),
-          grouping(col("nation_name")).cast("int").as("nation_subtotal"),
-          // fct_orders ⋈ dim is order grain, so the order distinct is a
-          // plain count at every rollup level; only the customer distinct
-          // remains — no multi-distinct Expand stacked on the rollup Expand
-          count(col("order_key")).as("order_count"),
-          countDistinct(col("customer_key")).as("customer_count"),
-          sum("gross_item_sales_amount").cast("double").as("gross_revenue"),
-          sum("net_item_sales_amount").cast("double").as("net_revenue"))
-    finally conf.set(key, prev)
-  }
+  def regionalRevenueRollup(ctx: Ctx): DataFrame =
+    Wh.fctOrders(ctx)
+      .join(Wh.dimCustomer(ctx), Seq("customer_key"))
+      .select(
+        col("customer_region_name").as("region_name"),
+        col("customer_nation_name").as("nation_name"),
+        col("order_key"), col("customer_key"),
+        col("gross_item_sales_amount"), col("net_item_sales_amount"))
+      // unqualified keys: the by-name `rollup(String*)` resolves them against
+      // this Dataset and tags them with its id, and DetectAmbiguousSelfJoin
+      // then misreads the grouping-sets expansion as a self-join (fct_orders
+      // reads orders twice) and fails the analysis
+      .rollup(col("region_name"), col("nation_name"))
+      .agg(
+        grouping(col("region_name")).cast("int").as("region_subtotal"),
+        grouping(col("nation_name")).cast("int").as("nation_subtotal"),
+        // fct_orders ⋈ dim is order grain, so the order distinct is a
+        // plain count at every rollup level; only the customer distinct
+        // remains — no multi-distinct Expand stacked on the rollup Expand
+        count(col("order_key")).as("order_count"),
+        countDistinct(col("customer_key")).as("customer_count"),
+        sum("gross_item_sales_amount").cast("double").as("gross_revenue"),
+        sum("net_item_sales_amount").cast("double").as("net_revenue"))
 
   /** Year-over-year customer activity — the §2.7 set-op semantics
     * (INTERSECT/EXCEPT over the two years' active-customer sets), computed

@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   * [[query]] over a published index.
   *
   *   - [[subvectors]]: the 8 subvectors of 8 dims of each 64-dim vector;
+  *   - [[pack]]: a quantizer (seeds or codebook) as one packed row, or one
+  *     per subspace, aggregated in one partition so no exchange is planned;
   *   - [[assign]] / [[pqCodes]] ([[encode]] for both): nearest seed cell and
   *     nearest codeword per subvector, through the native
   *     `argmax_cosine` (functions.ArgmaxCosine) against one broadcast,
@@ -20,11 +22,16 @@ import org.apache.spark.sql.functions._
   *     (cosine desc, id) picks (same IEEE cosine op order, max then min id,
   *     ArgmaxSpec), with no scored-row materialization and no exchange;
   *   - [[probe]]: each query's `nprobe` nearest cells;
-  *   - [[adcTable]] / [[adcScore]]: the query's per-subspace codeword
-  *     similarities as one decimal(12,9) slot array, and a candidate's score
-  *     as eight unrolled `element_at` lookups into it;
+  *   - [[adcTable]] / [[adcScore]]: each query's per-subspace codeword
+  *     similarities as one decimal(12,9) slot array, computed map-side by
+  *     the native `adc_slots` (functions.AdcSlots) against the broadcast
+  *     packed codebook; the array is 8 × (max code + 1) slots, so it
+  *     carries its own width, and a candidate's score is eight unrolled
+  *     `element_at` lookups into it;
   *   - [[serve]]: ADC-score the coded vectors in probed cells, shortlist,
-  *     exact-rerank the shortlist;
+  *     exact-rerank the shortlist. Its one shuffle is the probe's ranking:
+  *     the later rankings are keyed by query too, and every join after it
+  *     is a broadcast;
   *   - [[topK]]: the per-query ranking every stage ends in.
   *
   * Cross-engine exactness (the DuckDB twins): per-subspace cosines are
@@ -47,13 +54,16 @@ import org.apache.spark.sql.functions._
   *     PQ codes in subspace order
   *   - `vectors`    (vec_id, embedding)      — full floats, rerank-only
   *   - `meta`       — ONE row naming the four table versions of this
-  *     generation, the tombstone set and the ingest ledger, committed LAST
+  *     generation, the tombstone set and the ingest ledger, committed LAST;
+  *     its manifest records the same fields as `prop.` lines
   *
   * The four data tables commit independently; cross-table atomicity comes
-  * from the meta row: readers resolve it once ([[Generation]]) and pin every
-  * read to the versions it names, so an in-flight rebuild that has not yet
-  * committed its meta row is invisible and a crashed one leaves readers on
-  * the previous generation (AnnIndexSpec's interleaved-rebuild test).
+  * from the meta version: readers resolve it once ([[Generation]], from its
+  * manifest through the Hadoop FS, so a query constructs with no Spark
+  * job) and pin every read to the versions it names, so an in-flight
+  * rebuild that has not yet committed its meta version is invisible and a
+  * crashed one leaves readers on the previous generation (AnnIndexSpec's
+  * interleaved-rebuild test).
   *
   * At 100 TB: the build is one linear encode pass, paid once; a query batch
   * reads the coded relation (8 codes + cell per vector, ~1% of the float
@@ -67,6 +77,7 @@ object AnnIndex {
   private[extensions] def register(spark: SparkSession): Unit = {
     graft.functions.CosineSim.register(spark)
     graft.functions.ArgmaxDot.register(spark)
+    graft.functions.AdcSlots.register(spark)
   }
 
   // ---- the IVFADC stages -------------------------------------------------
@@ -85,32 +96,38 @@ object AnnIndex {
       subvectors(e.filter(codewordIds))
         .select(col("s"), col("vec_id").as("code"), col("sv").as("cv")))
 
+  /** Quantizer rows `q` packed, one row per `keys` group: `mat`, the `vec`
+    * arrays concatenated in ascending (`order`...) order (ArgmaxCosine's
+    * packed-row convention), and per `order` column `c` the array `c_arr`
+    * of its values in the same order. The aggregate runs in the one
+    * partition of a `coalesce(1)`, which meets its required distribution,
+    * so the pack plans no exchange. A quantizer is a few hundred rows at
+    * most; its scan is what the one task reads. */
+  private[extensions] def pack(q: DataFrame, order: Seq[String], vec: String,
+      keys: String*): DataFrame =
+    q.coalesce(1).groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct((order :+ vec).map(col): _*))).as("p"))
+      .select(keys.map(col) ++ (flatten(col(s"p.$vec")).as("mat") +:
+        order.map(c => col(s"p.$c").as(s"${c}_arr"))): _*)
+
   /** `vecs` (vec_id, embedding, ...) with its nearest seed's `cell_id`
     * after vec_id. */
-  private[extensions] def assign(vecs: DataFrame, seeds: DataFrame): DataFrame = {
-    val seedsPacked = seeds.agg(
-      expr("flatten(transform(array_sort(collect_list(struct(cell_id, se))), x -> x.se))").as("smat"),
-      expr("array_sort(collect_list(cell_id))").as("sids"))
-    vecs.crossJoin(broadcast(seedsPacked))
+  private[extensions] def assign(vecs: DataFrame, seeds: DataFrame): DataFrame =
+    vecs.crossJoin(broadcast(pack(seeds, Seq("cell_id"), "se")))
       .select(col("vec_id") +:
-        expr("element_at(sids, argmax_cosine(embedding, smat) + 1)").as("cell_id") +:
+        expr("element_at(cell_id_arr, argmax_cosine(embedding, mat) + 1)").as("cell_id") +:
         vecs.columns.filterNot(_ == "vec_id").toSeq.map(col): _*)
-  }
 
   /** (vec_id, codes): each vector's nearest codeword per subspace, packed
     * in subspace order (the 8-byte production encoding, kept as an array
     * for plan inspectability). */
-  private[extensions] def pqCodes(vecs: DataFrame, cb: DataFrame): DataFrame = {
-    val cbPacked = cb.groupBy("s").agg(
-      expr("flatten(transform(array_sort(collect_list(struct(code, cv))), x -> x.cv))").as("cmat"),
-      expr("array_sort(collect_list(code))").as("codes_arr"))
-    subvectors(vecs).join(broadcast(cbPacked), Seq("s"))
+  private[extensions] def pqCodes(vecs: DataFrame, cb: DataFrame): DataFrame =
+    subvectors(vecs).join(broadcast(pack(cb, Seq("code"), "cv", "s")), Seq("s"))
       .select(col("vec_id"), col("s"),
-        expr("element_at(codes_arr, argmax_cosine(sv, cmat) + 1)").as("code"))
+        expr("element_at(code_arr, argmax_cosine(sv, mat) + 1)").as("code"))
       .groupBy("vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(s, code))), x -> x.code)")
-        .as("codes"))
-  }
+      .agg(sort_array(collect_list(struct(col("s"), col("code")))).as("p"))
+      .select(col("vec_id"), col("p.code").as("codes"))
 
   /** (vec_id, cell_id, codes, ...): `vecs` (vec_id, embedding, ...)
     * encoded under fixed quantizers. [[build]] and [[add]] share it, so an
@@ -143,30 +160,20 @@ object AnnIndex {
       .select("query_id", "cell_id")
 
   /** (query_id, qarr): each query's ADC table, one decimal(12,9) slot array
-    * of 8 × `nSlots` (slot s * nSlots + code), 0 where no codeword has that
-    * code. Codes are the raw codebook ids, so a candidate's codes index it
-    * directly. */
-  private[extensions] def adcTable(queries: DataFrame, cb: DataFrame,
-      nSlots: Int): DataFrame =
-    subvectors(queries, "query_id", "qe", "qv")
-      .join(broadcast(cb), Seq("s"))
-      .select(col("query_id"), col("s"),
-        col("code").cast("int").as("code"),
-        round(expr("cosine_sim(qv, cv)"), 9).cast("decimal(12,9)").as("qdec"))
-      .groupBy(col("query_id"), col("s"))
-      .agg(map_from_entries(collect_list(struct(col("code"), col("qdec")))).as("m"))
-      .select(col("query_id"), col("s"),
-        expr(s"""transform(sequence(0, ${nSlots - 1}),
-           c -> coalesce(element_at(m, c), CAST(0 AS DECIMAL(12,9))))""").as("sarr"))
-      .groupBy("query_id")
-      .agg(expr("flatten(transform(array_sort(collect_list(struct(s, sarr))), x -> x.sarr))")
-        .as("qarr"))
+    * of 8 × width (slot s * width + code, width = max code + 1), 0 where
+    * no codeword has that code: one map-side `adc_slots` projection of the
+    * queries against the broadcast packed codebook. Codes are the raw
+    * codebook ids, so a candidate's codes index it directly. */
+  private[extensions] def adcTable(queries: DataFrame, cb: DataFrame): DataFrame =
+    queries.crossJoin(broadcast(pack(cb, Seq("s", "code"), "cv")))
+      .select(col("query_id"), expr("adc_slots(qe, mat, s_arr, code_arr)").as("qarr"))
 
   /** A candidate's ADC score over `codes` and `qarr`: the eight slot
-    * lookups unrolled into one whole-stage-codegen'd decimal sum. */
-  private[extensions] def adcScore(nSlots: Int): Column = {
+    * lookups unrolled into one whole-stage-codegen'd decimal sum, at the
+    * width the slot array carries. */
+  private[extensions] def adcScore: Column = {
     val lookups = (0 until 8)
-      .map(s => s"element_at(qarr, CAST($s * $nSlots + " +
+      .map(s => s"element_at(qarr, CAST($s * (size(qarr) div 8) + " +
         s"element_at(codes, ${s + 1}) + 1 AS INT))")
       .mkString(" + ")
     expr(s"CAST($lookups AS DECIMAL(22,9))")
@@ -177,15 +184,15 @@ object AnnIndex {
     * and rank those by exact cosine against `vectors` (vec_id, embedding).
     * Out: (query_id, cand_id, cell_id, approx: double, cosine, rank). */
   private[extensions] def serve(queries: DataFrame, seeds: DataFrame,
-      cb: DataFrame, coded: DataFrame, vectors: DataFrame, nSlots: Int,
+      cb: DataFrame, coded: DataFrame, vectors: DataFrame,
       k: Int, nprobe: Int, shortlist: Int): DataFrame = {
     val adc = probe(queries, seeds, nprobe)
       .join(coded.select(col("cell_id"), col("vec_id").as("cand_id"),
         col("codes")), Seq("cell_id"))
       .filter(col("query_id") =!= col("cand_id"))
-      .join(broadcast(adcTable(queries, cb, nSlots)), Seq("query_id"))
+      .join(broadcast(adcTable(queries, cb)), Seq("query_id"))
       .select(col("query_id"), col("cand_id"), col("cell_id"),
-        adcScore(nSlots).as("approx"))
+        adcScore.as("approx"))
     val short = topK(adc, "approx", shortlist, rank = "rn")
       .select("query_id", "cand_id", "cell_id", "approx")
     topK(short.join(queries, Seq("query_id"))
@@ -216,16 +223,21 @@ object AnnIndex {
         s"nCells=$nCells nCodewords=$nCodewords")
     register(ctx.spark)
     val e = ctx.tbl("embeddings")
-    // the quantizer id cuts: one TakeOrdered over the id column, bounded
-    // by max(nCells, nCodewords) rows on the driver
+    // the quantizer vectors: one TakeOrdered over the ids, bounded by
+    // max(nCells, nCodewords) rows on the driver. Cut from that local
+    // relation, the quantizers and their packs never read the corpus
+    // again, so a pack's one partition never holds a corpus scan; in one
+    // partition, each quantizer table publishes as one file.
     val nq = math.max(nCells, nCodewords)
-    val qIds = e.select(col("vec_id")).orderBy(col("vec_id")).limit(nq)
-      .collect().map(_.getLong(0))
-    require(qIds.length >= nq,
-      s"corpus has only ${qIds.length} vectors — the requested quantizer " +
+    val ve = e.select("vec_id", "embedding")
+    val qRows = ve.orderBy(col("vec_id")).limit(nq).collect()
+    require(qRows.length >= nq,
+      s"corpus has only ${qRows.length} vectors — the requested quantizer " +
         s"shape needs >= $nq (nCells=$nCells nCodewords=$nCodewords)")
-    val (seeds, cb) = quantizers(e, col("vec_id") <= qIds(nCells - 1),
-      col("vec_id") <= qIds(nCodewords - 1))
+    val qIds = qRows.map(_.getLong(0))
+    val (seeds, cb) = quantizers(
+      ctx.spark.createDataFrame(java.util.Arrays.asList(qRows: _*), ve.schema).coalesce(1),
+      col("vec_id") <= qIds(nCells - 1), col("vec_id") <= qIds(nCodewords - 1))
     // metaCols ride INTO the coded table (FAISS-style stored attributes):
     // query's `where` predicate then evaluates map-side on the coded scan —
     // no allow-list join, no shuffle
@@ -245,35 +257,34 @@ object AnnIndex {
       "seeds" -> Future(Versioned.write(seeds, s"$dir/seeds"))(ec),
       "codebooks" -> Future(Versioned.write(cb, s"$dir/codebooks"))(ec),
       "coded" -> Future(Versioned.write(coded, s"$dir/coded"))(ec),
-      "vectors" -> Future(Versioned.write(
-        e.select("vec_id", "embedding"), s"$dir/vectors"))(ec))
+      "vectors" -> Future(Versioned.write(ve, s"$dir/vectors"))(ec))
     val versions =
       try futs.map { case (k, f) => k -> Await.result(f, Duration.Inf) }.toMap
       finally pool.shutdown()
     commitMeta(ctx.spark, dir, versions, batchId = -1L)
   }
 
+  /** The meta fields, in the meta row's column order. */
+  private val MetaFields = Tables.map(t => s"${t}_v") ++ Seq("batch_id", "tombstones_v")
+
   /** The generation commit: one row naming the four versions just
     * published, plus the streaming-ingest ledger (`batch_id` — the highest
     * stream batch folded into this generation, -1 when none) and the
     * tombstone-set version (`tombstones_v` — -1 when the generation has no
-    * deletions). Readers pin on THIS row; until it lands, the new tables
-    * are invisible (a crashed rebuild/add/remove leaves the old generation
-    * serving). */
+    * deletions). The version's manifest records the same fields as props,
+    * which [[generation]] reads with no Spark job. Readers pin on THIS
+    * commit; until it lands, the new tables are invisible (a crashed
+    * rebuild/add/remove leaves the old generation serving). */
   private def commitMeta(spark: SparkSession, dir: String,
       versions: Map[String, Long], batchId: Long,
       tombstonesV: Long = -1L): Map[String, Long] = {
-    val metaDf = spark.range(1).select(
-      lit(versions("seeds")).as("seeds_v"),
-      lit(versions("codebooks")).as("codebooks_v"),
-      lit(versions("coded")).as("coded_v"),
-      lit(versions("vectors")).as("vectors_v"),
-      lit(batchId).as("batch_id"),
-      lit(tombstonesV).as("tombstones_v"))
-    versions + ("meta" -> Versioned.write(metaDf, s"$dir/meta"))
+    val fields = MetaFields.zip(Tables.map(versions) ++ Seq(batchId, tombstonesV))
+    val metaDf = spark.range(1).select(fields.map { case (k, v) => lit(v).as(k) }: _*)
+    versions + ("meta" -> Versioned.writeWithProps(metaDf, s"$dir/meta",
+      fields.map { case (k, v) => k -> v.toString }.toMap))
   }
 
-  /** One index generation, as its meta row names it: the four table
+  /** One index generation, as its meta version names it: the four table
     * versions (None before the meta-manifest existed: latest-per-table,
     * consistent only under serialized builds), the pending tombstone set
     * (None for a fresh build, a purge-compacted generation or a
@@ -291,21 +302,27 @@ object AnnIndex {
       tombstones.map(t => Versioned.read(spark, s"$dir/tombstones", Some(t)))
   }
 
-  /** Read the latest meta row once (a one-row collect), so every field of
-    * a call comes from the same generation. Versions are read by NAME: a
-    * reordered or renamed meta field throws rather than pinning the wrong
-    * table. */
+  /** Resolve the latest meta version once, so every field of a call comes
+    * from the same generation: from its manifest's props through the
+    * Hadoop FS (no Spark job), or, for an index whose manifests predate
+    * them, from its row (a one-row collect). Versions are read by NAME: a
+    * renamed meta field throws rather than pinning the wrong table. */
   private def generation(spark: SparkSession, dir: String): Generation =
-    if (Versioned.latestVersion(spark, s"$dir/meta").isEmpty)
-      Generation(dir, Tables.map(_ -> (None: Option[Long])).toMap, None, -1L)
-    else {
-      val row = Versioned.read(spark, s"$dir/meta").head()
-      val has = row.schema.fieldNames.toSet
-      Generation(dir,
-        Tables.map(t => t -> Some(row.getAs[Long](s"${t}_v"))).toMap,
-        if (has("tombstones_v")) Some(row.getAs[Long]("tombstones_v")).filter(_ >= 0)
-        else None,
-        if (has("batch_id")) row.getAs[Long]("batch_id") else -1L)
+    Versioned.latestVersion(spark, s"$dir/meta") match {
+      case None => Generation(dir, Tables.map(_ -> (None: Option[Long])).toMap, None, -1L)
+      case Some(v) =>
+        val props = Versioned.readManifest(spark, s"$dir/meta", Some(v)).props
+        val field: String => Option[Long] =
+          if (MetaFields.forall(props.contains)) k => props.get(k).map(_.toLong)
+          else {
+            val row = Versioned.read(spark, s"$dir/meta", Some(v)).head()
+            val has = row.schema.fieldNames.toSet
+            k => if (has(k)) Some(row.getAs[Long](k)) else None
+          }
+        def version(t: String) = field(s"${t}_v").getOrElse(
+          sys.error(s"meta version $v at $dir names no ${t}_v"))
+        Generation(dir, Tables.map(t => t -> Some(version(t))).toMap,
+          field("tombstones_v").filter(_ >= 0), field("batch_id").getOrElse(-1L))
     }
 
   /** Drop `tombstones` (distinct removed vec_ids) from a relation keyed by
@@ -484,21 +501,16 @@ object AnnIndex {
       k: Int = 5, nprobe: Int = 2, shortlist: Int = 20,
       allowed: Option[DataFrame] = None,
       where: Option[Column] = None): DataFrame = {
-    graft.functions.CosineSim.register(spark)
+    register(spark)
     val gen = generation(spark, dir)
-    val cb = gen.read(spark, "codebooks")
     val coded = allowed.foldLeft(where.foldLeft(
       dropTombstoned(gen.read(spark, "coded"), gen.tombstoned(spark))) {
       (c, w) => c.filter(w)
     }) {
       (c, a) => c.join(a.select(col("vec_id")).distinct(), Seq("vec_id"), "left_semi")
     }
-    // slot-array width: codes are the RAW codebook ids persisted at build
-    // time, so the slot array spans [0, max code]; the codebook is tiny,
-    // so this is a bounded metadata action, not a data-scaled collect
-    val nSlots = cb.agg(max(col("code"))).head().getLong(0).toInt + 1
-    serve(queries, gen.read(spark, "seeds"), cb, coded, gen.read(spark, "vectors"),
-      nSlots, k, nprobe, shortlist)
+    serve(queries, gen.read(spark, "seeds"), gen.read(spark, "codebooks"), coded,
+      gen.read(spark, "vectors"), k, nprobe, shortlist)
   }
 
   /** SEMANTIC DEDUP served from the persisted index — the SemDeDup

@@ -232,12 +232,13 @@ object Events {
           col("a_sessions") * col("b_sessions")).as("lift"))
   }
 
-  /** Batch twin of the STREAMING sliding window (Streams.slidingRates —
-    * 1-hour windows sliding every 15 minutes): each event belongs to
-    * exactly four overlapping windows, generated by an in-row explode of
-    * the four offsets (map-side; no self-join against a window spine), then
-    * one partial-aggregatable groupBy. Proves the streaming window
-    * semantics have an oracle-checkable batch equivalent. */
+  /** Sliding-window rates: 1-hour windows sliding every 15 minutes, the
+    * windows a streaming `window(ts, "1 hour", "15 minutes")` groups by,
+    * computed in batch. Each event belongs to exactly four overlapping
+    * windows, generated by an in-row explode of the four offsets (map-side;
+    * no self-join against a window spine), then one partial-aggregatable
+    * groupBy. Proves the streaming window semantics have an
+    * oracle-checkable batch equivalent. */
   def slidingRates(ctx: Ctx): DataFrame =
     events(ctx)
       .select(col("event_type"), tsSec.as("sec"),

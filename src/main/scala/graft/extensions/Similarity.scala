@@ -412,9 +412,9 @@ object Similarity {
     val (_, cb) = quantizers(e)
     val q = queries(e)
     val pq = AnnIndex.pqCodes(e, cb).select(col("vec_id").as("cand_id"), col("codes"))
-      .crossJoin(broadcast(AnnIndex.adcTable(q, cb, 16)))
+      .crossJoin(broadcast(AnnIndex.adcTable(q, cb)))
       .filter(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"), AnnIndex.adcScore(16).as("approx"))
+      .select(col("query_id"), col("cand_id"), AnnIndex.adcScore.as("approx"))
     recall(exactTopK(q, candidates(e), k), AnnIndex.topK(pq, "approx", k))
       .orderBy("query_id")
   }
@@ -425,14 +425,13 @@ object Similarity {
     * cells, candidates inside them are ADC-scored, and only the top
     * `shortlist` pay an exact full-vector cosine; top `k` are emitted with
     * ranks. [[AnnIndex.query]] serves the same stages from a persisted
-    * index. The codes are raw codebook ids below 16, so the slot width is
-    * 16 and construction runs no action. */
+    * index. */
   def annIvfPq(ctx: Ctx, k: Int = 5, nprobe: Int = 2,
       shortlist: Int = 20): DataFrame = {
     val e = embeddings(ctx)
     val (seeds, cb) = quantizers(e)
     val vecs = e.select("vec_id", "embedding")
     AnnIndex.serve(queries(e), seeds, cb, AnnIndex.encode(vecs, seeds, cb), vecs,
-      nSlots = 16, k, nprobe, shortlist)
+      k, nprobe, shortlist)
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list, by iterative
@@ -35,8 +37,17 @@ import org.apache.spark.sql.functions._
   * ~4 s with a flat plan). On a real cluster the same cut is
   * df.checkpoint(reliable dir) every round or two — standard
   * iterative-algorithm hygiene (GraphX does exactly this).
+  *
+  * A round's checkpoint is unpersisted as soon as the next round is
+  * materialized from it, and the session's [[graft.Store]] owns the last
+  * one, which the result reads: `Store.clear` releases it.
   */
 object Components {
+
+  /** The checkpointed RDD a round's plan reads: its blocks are the round's
+    * only copy. */
+  private def checkpoint(round: DataFrame): Seq[RDD[_]] =
+    round.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 
   /** Label every node of the undirected graph given as an edge list.
     *
@@ -99,13 +110,15 @@ object Components {
             .as("label"),
           col("label").as("__prev")))
       converged = next.filter(col("label") =!= col("__prev")).count() == 0L
+      // `next` is materialized and cut: nothing reads this round again
+      checkpoint(labels).foreach(_.unpersist(blocking = false))
       labels = next.drop("__prev")
     }
-    // the loop is done: nothing re-derives from the edge cache, and the
-    // superseded rounds' checkpoint blocks are freed by the ContextCleaner
-    // once unreferenced. The returned labels stay live (leaf plan over the
-    // final round's blocks).
+    // the loop is done: nothing re-derives from the edge cache. The
+    // returned labels stay live (leaf plan over the final round's blocks)
+    // until the session's Store is cleared.
     edges.unpersist()
+    graft.Store.own(pairs.sparkSession, checkpoint(labels))
     labels
   }
 }

@@ -53,13 +53,6 @@ object Streams {
         approx_count_distinct(col("user_id")).as("approx_users"),
         sum(col("value").cast("decimal(18,6)")).as("total_value"))
 
-  /** Sliding windows (1 hour, sliding 15 min) for smoothed rate metrics. */
-  def slidingRates(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-
   /** Exactly-once style stream dedup on event_id within the watermark. */
   def dedup(events: DataFrame): DataFrame =
     events

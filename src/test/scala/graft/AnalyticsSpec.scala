@@ -33,6 +33,33 @@ class AnalyticsSpec extends SparkSpec {
     assert(grand.forall(r => r.isNullAt(0) && r.isNullAt(1)))
   }
 
+  test("regionalRevenueRollup leaves the session conf as it was, same rows as the by-name rollup") {
+    val conf = spark.conf.getAll
+    val rows = Analytics.regionalRevenueRollup(ctx).collect().map(_.toString).sorted.toSeq
+    assert(spark.conf.getAll == conf, "constructing the rollup changed the session conf")
+    // the reference: the by-name rollup it replaced, which only analyzes
+    // with the ambiguous-self-join guard off
+    val key = "spark.sql.analyzer.failAmbiguousSelfJoin"
+    val prev = conf.get(key)
+    spark.conf.set(key, "false")
+    val ref = try layers.Wh.fctOrders(ctx)
+        .join(layers.Wh.dimCustomer(ctx), Seq("customer_key"))
+        .select(col("customer_region_name").as("region_name"),
+          col("customer_nation_name").as("nation_name"), col("order_key"),
+          col("customer_key"), col("gross_item_sales_amount"), col("net_item_sales_amount"))
+        .rollup("region_name", "nation_name")
+        .agg(grouping(col("region_name")).cast("int").as("region_subtotal"),
+          grouping(col("nation_name")).cast("int").as("nation_subtotal"),
+          count(col("order_key")).as("order_count"),
+          countDistinct(col("customer_key")).as("customer_count"),
+          sum("gross_item_sales_amount").cast("double").as("gross_revenue"),
+          sum("net_item_sales_amount").cast("double").as("net_revenue"))
+        .collect().map(_.toString).sorted.toSeq
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(spark.conf.getAll == conf)
+    assert(rows.nonEmpty && rows == ref)
+  }
+
   test("customerValuePercentiles matches single-partition window functions") {
     val actual = Analytics.customerValuePercentiles(ctx)
     val spend = layers.Wh.fctOrders(ctx).groupBy("customer_key")

@@ -38,22 +38,72 @@ class AnnIndexSpec extends SparkSpec {
       s.zipAll(d, "<missing>", "<missing>").find(p => p._1 != p._2)}")
   }
 
-  test("query construction runs 2 actions: one meta row read and the slot width") {
+  test("query and lastIngestBatch construct with no Spark job") {
     import spark.implicits._
     val dir = "/tmp/graft-ann-index-jobs"
     rm(new java.io.File(dir))
     extensions.AnnIndex.build(ctx, dir)
     // a pinned tombstone set too: versions, tombstones and ledger all come
-    // from the one meta row
+    // from the meta version's manifest
     extensions.AnnIndex.remove(spark, dir, Seq(42L).toDF("vec_id"))
+    assert(Versioned.readManifest(spark, s"$dir/meta").props.get("tombstones_v")
+      .exists(_.toLong >= 0))
     val q = queriesDf
     val n = org.apache.spark.JobCounter.during(spark.sparkContext) {
-      extensions.AnnIndex.query(spark, dir, q); ()
+      extensions.AnnIndex.query(spark, dir, q)
+      extensions.AnnIndex.lastIngestBatch(spark, dir)
+      ()
     }
-    // the meta row is one scan job; the slot width is an aggregate, whose
-    // shuffle stage and result are two jobs under adaptive execution
-    assert(n == org.apache.spark.JobCounter.Count(jobs = 3, executions = 2),
+    assert(n == org.apache.spark.JobCounter.Count(jobs = 0, executions = 0),
       s"query construction ran $n")
+  }
+
+  test("an index whose meta manifests predate the generation fields serves identically") {
+    import spark.implicits._
+    val dir = "/tmp/graft-ann-index-oldmeta"
+    rm(new java.io.File(dir))
+    extensions.AnnIndex.build(ctx, dir)
+    extensions.AnnIndex.remove(spark, dir, Seq(42L).toDF("vec_id"))
+    val before = extensions.AnnIndex.query(spark, dir, queriesDf)
+      .collect().map(_.toString).sorted.toSeq
+    // the same meta row, committed as a writer before the fields did it:
+    // a manifest without props, so the generation comes from the row
+    Versioned.write(Versioned.read(spark, s"$dir/meta"), s"$dir/meta")
+    assert(Versioned.readManifest(spark, s"$dir/meta").props.isEmpty)
+    var served: org.apache.spark.sql.DataFrame = null
+    val n = org.apache.spark.JobCounter.during(spark.sparkContext) {
+      served = extensions.AnnIndex.query(spark, dir, queriesDf)
+    }
+    assert(n.jobs > 0, "the fallback reads the meta row")
+    assert(served.collect().map(_.toString).sorted.toSeq == before)
+    assert(extensions.AnnIndex.lastIngestBatch(spark, dir) == -1L)
+  }
+
+  test("the filtered serve shuffles once, and aggregates only its quantizer packs") {
+    import org.apache.spark.sql.execution.CoalesceExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = "/tmp/graft-ann-index-filtered-plan"
+    rm(new java.io.File(dir))
+    extensions.AnnIndex.build(ctx, dir, metaCols = Seq("label"))
+    val target = ctx.tbl("embeddings").filter(col("vec_id") === 0)
+      .select("label").head().get(0)
+    def served = extensions.AnnIndex.query(spark, dir, queriesDf,
+      where = Some(col("label") === target))
+    val stages = org.apache.spark.JobCounter.shuffleStages(spark.sparkContext) {
+      served.collect(); ()
+    }
+    assert(stages == 1, s"the filtered serve ran $stages shuffle stages")
+    val (rows, plans) = Plans.executed(spark)(served.collect())
+    assert(rows.nonEmpty && plans.size == 1)
+    val nodes = Plans.nodes(plans.head)
+    assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
+      plans.head.treeString)
+    // the probe's ranking is the one shuffle; no aggregate is keyed per
+    // query: the only ones pack the codebook and run in one partition
+    val aggs = nodes.collect { case a: ObjectHashAggregateExec => a }
+    assert(aggs.forall(a => a.groupingExpressions.isEmpty &&
+      Plans.nodes(a).exists(_.isInstanceOf[CoalesceExec])), plans.head.treeString)
   }
 
   test("rebuild publishes a new snapshot; the old index stays readable") {

@@ -15,9 +15,9 @@ class NativesSpec extends SparkSpec {
   /** Every SQL name the graft.functions natives define. */
   private val names = Seq("ws_tokens", "ngrams", "ngram_md5s",
     "ngram_rep_stats", "simhash64", "min_md5", "band_min_md5s", "count_in_set",
-    "cosine_sim", "lsh_sign", "argmax_dot", "argmax_cosine", "dot_product",
-    "bit_hamming", "hll_approx_count_distinct", "kll_sketch", "freq_items",
-    "minhash_sketch", "minhash16_sig", "ordered_pairs", "zorder2")
+    "cosine_sim", "lsh_sign", "argmax_dot", "argmax_cosine", "adc_slots",
+    "dot_product", "bit_hamming", "hll_approx_count_distinct", "kll_sketch",
+    "freq_items", "minhash_sketch", "minhash16_sig", "ordered_pairs", "zorder2")
 
   private final class Capture extends AbstractAppender(
       "natives-capture", null, null, true, Property.EMPTY_ARRAY) {
@@ -68,7 +68,7 @@ class NativesSpec extends SparkSpec {
       functions.TextGrams.register, functions.Md5Mins.register,
       functions.CountInSet.register, functions.CosineSim.register,
       functions.LshSign.register, functions.ArgmaxDot.register,
-      functions.DotProduct.register, functions.BitHamming.register,
+      functions.AdcSlots.register, functions.DotProduct.register, functions.BitHamming.register,
       functions.Hll.register, functions.KllSketch.register,
       functions.FreqItemsSketch.register, functions.MinHash.register,
       functions.MinHashSig16.register, functions.OrderedPairs.register,

@@ -4,10 +4,9 @@ package graft
   * what operators persist internally along with them. */
 class StoreSpec extends SparkSpec {
 
-  /** The context's persisted RDDs, less local checkpoints: the fixpoint
-    * loop's (Components.labels) are its own, not persists. */
-  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs
-    .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+  /** The context's persisted RDDs, local checkpoints included: the
+    * fixpoint loop's (Components.labels) must not outlive the clear either. */
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("Store.clear frees globalOrder's, the RFM base's and the shingle-set persists") {
     Store.clear(spark)
