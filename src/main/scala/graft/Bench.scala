@@ -63,7 +63,10 @@ object Bench {
     }
     // best of 3 replays: a single host stall cannot contaminate the
     // committed artifact (each replay starts a fresh checkpoint-less query,
-    // so all three process the full file)
+    // so all three process the full file). The last replay's state store
+    // (rows and memory summed over its stateful operators) goes into the
+    // detail artifact.
+    var streamState = (-1L, -1L)
     val streamRate =
       try {
         val nEvents = spark.read.parquet(s"$sfDir/events.parquet").count()
@@ -75,6 +78,8 @@ object Bench {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
+          val ops = q.lastProgress.stateOperators
+          streamState = (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum)
           nEvents / ((System.nanoTime() - ts) / 1e9)
         }.max
       } catch { case e: Throwable => failed("__stream", e); -1.0 }
@@ -162,7 +167,7 @@ object Bench {
     val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$fullQs,"errors":$errDetail,"sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$fullQs,"errors":$errDetail,"sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"stream_state_rows":${streamState._1},"stream_state_bytes":${streamState._2},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}"""
     println(s"BENCH_DETAIL: $detail")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),

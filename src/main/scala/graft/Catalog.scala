@@ -47,7 +47,6 @@ object Catalog {
     Registry.all.foreach { case (name, e) =>
       if (e.mat != Registry.Mat.Extension) e.fn(ctx).createOrReplaceTempView(name)
     }
-    functions.BitHamming.register(ctx.spark)
     functions.Hll.register(ctx.spark)
     functions.CosineSim.register(ctx.spark)
     functions.FreqItemsSketch.register(ctx.spark)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -83,34 +83,50 @@ object Ctx {
   /** Schema-adaptive events loader — the ONE place `events.ts` is decoded.
     *
     * The testdata generator has shipped `ts` as parquet TIMESTAMP(NANOS)
-    * (which vanilla Spark can only read as a raw nano count, via the legacy
-    * conf) and as plain `timestamp[us]` (which Spark reads as
-    * TIMESTAMP_NTZ) across generations. Every downstream plan — epoch
-    * bucketing, sessionization gaps, the as-of join's integer tolerance —
-    * does exact BIGINT nanosecond arithmetic, so normalize here to
-    * epoch-nanos BIGINT whatever the file says and nothing downstream ever
-    * sees the encoding. The DuckDB oracle twins use `epoch_ns(ts)` /
-    * `epoch(ts)`, which are the same normalization on the oracle side.
+    * (which vanilla Spark can only read as a raw nano count) and as plain
+    * `timestamp[us]` (which Spark reads as TIMESTAMP_NTZ) across
+    * generations. Every downstream plan — epoch bucketing, sessionization
+    * gaps, the as-of join's integer tolerance — does exact BIGINT
+    * nanosecond arithmetic, so normalize here to epoch-nanos BIGINT whatever
+    * the file says and nothing downstream ever sees the encoding. The DuckDB
+    * oracle twins use `epoch_ns(ts)` / `epoch(ts)`, which are the same
+    * normalization on the oracle side.
     *
-    * Session timezone is pinned UTC before the NTZ->instant cast: a naive
-    * parquet timestamp must be interpreted as UTC wall-clock to land on the
-    * same epoch integers DuckDB derives. TestdataSchemaSpec guards this
-    * contract against the next drift. */
+    * A naive parquet timestamp is UTC wall-clock to the oracle, and
+    * [[ntzMicros]] decodes it in no time zone, so the session's zone is
+    * neither read nor set. TestdataSchemaSpec guards this contract against
+    * the next drift; EventsTimeZoneSpec pins it on a non-UTC session. */
   def normalizedEvents(spark: SparkSession, path: String): DataFrame = {
-    // must be set BEFORE the read resolves the footer schema; harmless
-    // (unread) for non-NANOS files
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
+    val df = readEvents(spark, path)
     df.schema("ts").dataType match {
       case LongType => df // TIMESTAMP(NANOS) read as the raw nano count
-      case TimestampNTZType | TimestampType =>
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df.withColumn("ts",
-          unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
+      case TimestampNTZType => df.withColumn("ts", ntzMicros("ts") * lit(1000L))
+      case TimestampType => df.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
       case other =>
         sys.error(s"events.ts: unsupported parquet type $other at $path")
     }
   }
+
+  /** `events.parquet` as Spark reads it. A TIMESTAMP(NANOS) `ts` reads only
+    * as a raw nano count, through `spark.sql.legacy.parquet.nanosAsLong`.
+    * Spark 4.1's ParquetOptions has no per-read form of it, so it stays a
+    * session setting, made only when the footer fails without it: any other
+    * encoding leaves the session as it was. */
+  private[graft] def readEvents(spark: SparkSession, path: String): DataFrame =
+    try spark.read.parquet(path)
+    catch {
+      case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.read.parquet(path)
+    }
+
+  /** Microseconds from the epoch of TIMESTAMP_NTZ column `c`, in no time
+    * zone: NTZ minus NTZ is a wall-clock interval. `timestampdiff` and a
+    * cast to TIMESTAMP go through the session zone, which moves a wall time
+    * inside a DST gap by an hour. */
+  private[graft] def ntzMicros(c: String): Column = expr(
+    s"CAST(CAST(CAST($c - TIMESTAMP_NTZ'1970-01-01 00:00:00' AS INTERVAL SECOND)" +
+      " AS DECIMAL(18,6)) * 1000000 AS BIGINT)")
 }
 
 /** Materialization boundary for dbt `table` models, and graft's `ref()`.

@@ -24,7 +24,8 @@ import org.apache.spark.sql.types._
   * scan when parquet footers carry min/max).
   *
   * Event-time encoding is schema-adaptive per column, like the events
-  * loader ([[Ctx.normalizedEvents]]): DATE, TIMESTAMP/NTZ (UTC session),
+  * loader ([[Ctx.normalizedEvents]]): DATE, TIMESTAMP, TIMESTAMP_NTZ (as UTC
+  * wall-clock, in no session time zone: [[Ctx.ntzMicros]]),
   * and the engine's normalized epoch-nanos BIGINT all reduce to epoch
   * seconds here, so testdata drift cannot kill the check.
   */
@@ -50,8 +51,8 @@ object Freshness {
       val epochS: Column = df.schema(field).dataType match {
         case LongType => expr(s"$field div 1000000000") // normalized epoch-nanos
         case DateType => unix_date(col(field)).cast("long") * lit(86400L)
-        case TimestampType | TimestampNTZType =>
-          unix_seconds(col(field).cast(TimestampType))
+        case TimestampType => unix_seconds(col(field))
+        case TimestampNTZType => unix_seconds(timestamp_micros(Ctx.ntzMicros(field)))
         case other =>
           sys.error(s"$table.$field: unsupported event_time type $other")
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import java.sql.Timestamp
 
 /** Structured Streaming surface over event streams — strictly additive to
@@ -22,19 +23,19 @@ object Streams {
     * schema every pipeline here expects: `ts` TIMESTAMP plus (user_id,
     * event_type, value). Schema-adaptive the same way [[graft.Ctx.tbl]] is
     * for the batch side — a raw nano count becomes `timestamp_micros(ns div
-    * 1000)`, a native timestamp (NTZ or instant) casts through
-    * TimestampType under a UTC session — so a testdata re-generation can
+    * 1000)`, a TIMESTAMP_NTZ `timestamp_micros` of its zone-free epoch
+    * micros ([[graft.Ctx.ntzMicros]]) — so a testdata re-generation can
     * change the parquet encoding without touching any stream consumer
-    * (Bench's throughput leg, StreamRateFloorSpec). */
+    * (Bench's throughput leg, StreamRateFloorSpec). The session's time zone
+    * is neither read nor set. The NANOS encoding alone needs the session
+    * setting `nanosAsLong`: Spark 4.1's ParquetOptions has no per-read form
+    * of it ([[graft.Ctx.readEvents]]). */
   def eventFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = graft.Ctx.readEvents(spark, s"$sfDir/events.parquet").schema
     val tsCol = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts div 1000"))
-      case _ =>
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        col("ts").cast("timestamp")
+      case LongType => timestamp_micros(expr("ts div 1000"))
+      case TimestampNTZType => timestamp_micros(graft.Ctx.ntzMicros("ts"))
+      case _ => col("ts").cast("timestamp")
     }
     // the file stream source needs a directory: glob-filter the sf dir
     spark.readStream.schema(schema)
@@ -43,15 +44,23 @@ object Streams {
   }
 
   /** Tumbling 1-hour windowed counts per event type with a 2-hour watermark
-    * (late data beyond the watermark is dropped; state is bounded). */
-  def hourlyCounts(events: DataFrame): DataFrame =
+    * (late data beyond the watermark is dropped; state is bounded).
+    *
+    * `approx_users` is the sparse HyperLogLog++ of [[graft.functions.Hll]]:
+    * per group `approx_count_distinct(user_id)`'s value, but the shuffle and
+    * the state store carry only the registers the group touched. Its state
+    * schema (one binary buffer, not 52 longs) cannot resume a checkpoint
+    * written with `approx_count_distinct`. */
+  def hourlyCounts(events: DataFrame): DataFrame = {
+    graft.functions.Hll.register(events.sparkSession)
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        approx_count_distinct(col("user_id")).as("approx_users"),
+        expr("hll_approx_count_distinct(user_id)").as("approx_users"),
         sum(col("value").cast("decimal(18,6)")).as("total_value"))
+  }
 
   /** Exactly-once style stream dedup on event_id within the watermark. */
   def dedup(events: DataFrame): DataFrame =

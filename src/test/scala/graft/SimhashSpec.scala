@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BitHamming, TextGrams}
+import graft.functions.TextGrams
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -116,10 +116,9 @@ class SimhashSpec extends SparkSpec {
   }
 
   /** The three queries' outputs on the composed signatures: equal-string
-    * buckets, all pairs within `maxDist` by bit_hamming, and per distance
-    * the pair and document counts. */
+    * buckets, all pairs within `maxDist` by a brute-force character
+    * comparison, and per distance the pair and document counts. */
   private def reference(c: Ctx, maxDist: Int): (DataFrame, DataFrame, DataFrame) = {
-    BitHamming.register(spark)
     val sim = composed(extensions.Text.docsTok(c))
     val dedup = sim.join(sim.groupBy("simhash").agg(
         count(lit(1)).as("bucket_size"), min("doc_id").as("bucket_keep_doc_id")),
@@ -128,7 +127,8 @@ class SimhashSpec extends SparkSpec {
     val near = sim.select(col("doc_id").as("doc_a"), col("simhash").as("simhash_a"))
       .crossJoin(sim.select(col("doc_id").as("doc_b"), col("simhash").as("simhash_b")))
       .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr("bit_hamming(simhash_a, simhash_b)"))
+      .withColumn("hamming", expr("size(filter(sequence(1, 64), " +
+        "i -> substr(simhash_a, i, 1) != substr(simhash_b, i, 1)))"))
       .filter(col("hamming") <= maxDist)
       .select("doc_a", "doc_b", "simhash_a", "simhash_b", "hamming")
     val stats = near

@@ -41,6 +41,28 @@ class StreamingSketchSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("hll_approx_count_distinct as a streaming cardinality monitor equals the batch estimate") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val mem = MemoryStream[Long]
+    val agg = mem.toDF().agg(expr("hll_approx_count_distinct(value)").as("users"))
+    val q = agg.writeStream.format("memory").queryName("hllmon")
+      .outputMode("complete").start()
+    // overlapping batches: 0..3999, then 2000..7999, then 0..99 again
+    val batches = Seq(0L until 4000L, 2000L until 8000L, 0L until 100L)
+    try {
+      val readouts = batches.map { b =>
+        mem.addData(b: _*)
+        q.processAllAvailable()
+        spark.table("hllmon").head().getLong(0)
+      }
+      val batch = batches.scanLeft(Seq.empty[Long])(_ ++ _).tail.map(seen =>
+        seen.toDF("v").agg(approx_count_distinct(col("v"))).head().getLong(0))
+      assert(readouts == batch)
+      assert(math.abs(readouts.last - 8000L) < 800L, readouts)
+    } finally q.stop()
+  }
+
   test("freq_items as a streaming heavy-hitter monitor keeps the guarantee across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

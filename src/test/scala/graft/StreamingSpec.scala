@@ -33,6 +33,37 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("hourlyCounts: approx_users over three batches equals batch approx_count_distinct") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // three hours x two types; user ids (mod a prime) overlap across
+    // batches, and the view groups pass the sketch's sparse-to-dense
+    // crossover (208 registers at p = 9) in the second batch
+    def batch(b: Int): Seq[Evt] = (0 until 900).map { i =>
+      val n = b * 900 + i
+      Evt(n, Timestamp.valueOf(f"2026-01-01 ${10 + n % 3}%02d:${n % 60}%02d:00"),
+        (n * 7919L) % 1009, if (n % 5 == 0) "click" else "view", 1.0)
+    }
+    val mem = MemoryStream[Evt]
+    val q = Streams.hourlyCounts(mem.toDF())
+      .writeStream.format("memory").queryName("hourly_hll")
+      .outputMode("complete").start()
+    try {
+      (0 until 3).foreach { b => mem.addData(batch(b)); q.processAllAvailable() }
+      val got = spark.table("hourly_hll")
+        .select(col("window.start").as("h"), col("event_type"), col("approx_users"))
+      val want = (0 until 3).flatMap(batch).toDF()
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(approx_count_distinct(col("user_id")).as("approx_users"))
+        .select(col("window.start").as("h"), col("event_type"), col("approx_users"))
+      val rows = (df: org.apache.spark.sql.DataFrame) => df.collect().toSet
+      assert(rows(got).size == 6)
+      assert(rows(got) == rows(want))
+      // ~400 users touch ~280 of the 512 registers: the dense form
+      assert(rows(want).map(_.getLong(2)).max > 400L)
+    } finally q.stop()
+  }
+
   test("dedup: duplicate event_ids dropped within watermark") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

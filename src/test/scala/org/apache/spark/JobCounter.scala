@@ -1,7 +1,8 @@
 package org.apache.spark
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 /** Test-side count of the Spark jobs a block starts on the calling thread:
   * a listener records the job starts of a job group set for the block, and
@@ -40,6 +41,30 @@ object JobCounter {
       }
     }
     shuffles.size
+  }
+
+  /** Shuffle bytes and records written by every task that ends while the
+    * block runs, whichever thread started its job: a streaming query runs
+    * its micro-batches on a thread of its own, outside any job group set
+    * here. So the block must be the only work on the context. */
+  def shuffleWrites(sc: SparkContext)(f: => Unit): (Long, Long) = {
+    val bytes = new AtomicLong
+    val records = new AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach { m =>
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        }
+    }
+    sc.listenerBus.waitUntilEmpty() // earlier work's task ends are not counted
+    sc.addSparkListener(l)
+    try f
+    finally {
+      sc.listenerBus.waitUntilEmpty()
+      sc.removeSparkListener(l)
+    }
+    (bytes.get, records.get)
   }
 
   private def inGroup(sc: SparkContext, f: => Unit)(listener: String => SparkListener): Unit = {
