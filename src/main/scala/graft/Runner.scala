@@ -345,6 +345,7 @@ object Runner {
           Await.ready(Future.sequence(
             futures.values.toSeq.map(_.transform(scala.util.Success(_)))),
             Duration.Inf)
+          awaitTasksEnded(ctx.spark.sparkContext, runId)
           throw e
         case scala.util.Success(_) => ()
       }
@@ -359,6 +360,27 @@ object Runner {
       // rather than dangling on this build's files.
       Store.clear(ctx.spark)
     }
+  }
+
+  /** Waits until every job of job group `group` has ended and none of its
+    * tasks still runs. A cancelled job fails its caller at once, but its
+    * tasks are killed asynchronously: a write task keeps writing, then
+    * deletes, its `_temporary` file until it sees the interrupt. The status
+    * tracker shows a job ended only after its stages' completion events,
+    * so from then on a stage's active-task count is exact. Bounded by
+    * `timeoutMs`: a task that ignores its interrupt is not waited on
+    * forever. */
+  private[graft] def awaitTasksEnded(sc: org.apache.spark.SparkContext,
+      group: String, timeoutMs: Long = 60000L): Unit = {
+    val tracker = sc.statusTracker
+    def running: Boolean = tracker.getJobIdsForGroup(group).exists { id =>
+      tracker.getJobInfo(id).exists { j =>
+        j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => tracker.getStageInfo(s).exists(_.numActiveTasks > 0))
+      }
+    }
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    while (running && System.nanoTime() < deadline) Thread.sleep(20)
   }
 
   /** Per-table result of [[diff]]: row-multiset deltas between two builds. */

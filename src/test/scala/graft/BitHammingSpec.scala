@@ -1,46 +1,29 @@
 package graft
 
-import graft.functions.BitHamming
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The native bit_hamming expression: interpreted + codegen paths through a
-  * real DataFrame, plus the multi-index Hamming-join completeness property. */
+/** The multi-index Hamming join's completeness and its two cost paths,
+  * against an all-pairs scan that counts differing characters of the
+  * bit-string simhashes with builtin expressions only. */
 class BitHammingSpec extends SparkSpec {
 
-  test("bit_hamming: correct distances through codegen") {
-    BitHamming.register(spark)
-    import spark.implicits._
-    val df = Seq(
-      ("0000", "0000", 0), ("0001", "0000", 1), ("1111", "0000", 4),
-      ("10", "1011", 2), ("0110100110010110", "0110100110010110", 0),
-      ("0110100110010110", "1110100110010111", 2))
-      .toDF("a", "b", "expected")
-    val bad = df.withColumn("got", expr("bit_hamming(a, b)"))
-      .filter(col("got") =!= col("expected")).count()
-    assert(bad == 0)
-  }
-
-  test("bit_hamming: null propagation") {
-    BitHamming.register(spark)
-    import spark.implicits._
-    val r = Seq((Option("0101"), Option.empty[String])).toDF("a", "b")
-      .selectExpr("bit_hamming(a, b)").collect()
-    assert(r.head.isNullAt(0))
-  }
+  /** Pairs (doc_a < doc_b) within distance 2 by brute force. */
+  private def brutePairs(sim: DataFrame): Set[(Long, Long)] =
+    sim.as("a").crossJoin(sim.as("b"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .withColumn("h", expr("size(filter(sequence(1, length(a.simhash)), " +
+        "i -> substr(a.simhash, i, 1) != substr(b.simhash, i, 1)))"))
+      .filter(col("h") <= 2)
+      .select(col("a.doc_id"), col("b.doc_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("multi-index Hamming join finds every pair the brute force finds") {
     // pigeonhole completeness: chunked candidates must cover all pairs with
     // distance <= 2 found by an all-pairs scan over the same simhashes
-    BitHamming.register(spark)
     val near = extensions.Text.dedupSimhashNear(ctx)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sim = extensions.Text.dedupSimhash(ctx).select("doc_id", "simhash")
-    val brute = sim.as("a").crossJoin(sim.as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .withColumn("h", expr("bit_hamming(a.simhash, b.simhash)"))
-      .filter(col("h") <= 2)
-      .select(col("a.doc_id"), col("b.doc_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = brutePairs(extensions.Text.dedupSimhash(ctx).select("doc_id", "simhash"))
     assert(near == brute, s"multi-index missed ${(brute -- near).size} pairs")
   }
 
@@ -48,7 +31,6 @@ class BitHammingSpec extends SparkSpec {
     // dedupSimhashNear picks chunk-join vs meet-in-the-middle from the
     // measured candidate mass; both must be EXACT, so forcing each via the
     // threshold conf must yield the same (doc_a, doc_b, hamming) set
-    BitHamming.register(spark)
     def pairs() = extensions.Text.dedupSimhashNear(ctx)
       .select("doc_a", "doc_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
