@@ -57,7 +57,13 @@ object Ctx {
     * modification time ([[Store.sourceSchema]]): inferring runs a
     * footer-reading Spark job, which every plan constructor would
     * otherwise pay again for every table it reads. */
-  private def parquet(spark: SparkSession, path: String): DataFrame = {
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    parquetAs(spark, path)(spark.read.parquet(path).schema)
+
+  /** The parquet source at `path` under its cached schema, which `infer`
+    * supplies on a miss. */
+  private def parquetAs(spark: SparkSession, path: String)(
+      infer: => StructType): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     // a missing source keeps Spark's own "Path does not exist" error
     val mtime =
@@ -65,8 +71,7 @@ object Ctx {
         .getFileStatus(p).getModificationTime)
       catch { case _: java.io.FileNotFoundException => None }
     mtime.fold(spark.read.parquet(path)) { t =>
-      spark.read.schema(Store.sourceSchema(spark, path, t)(
-        spark.read.parquet(path).schema)).parquet(path)
+      spark.read.schema(Store.sourceSchema(spark, path, t)(infer)).parquet(path)
     }
   }
 
@@ -107,17 +112,21 @@ object Ctx {
     }
   }
 
-  /** `events.parquet` as Spark reads it. A TIMESTAMP(NANOS) `ts` reads only
+  /** `events.parquet` as Spark reads it, its schema inferred once per
+    * session like every parquet source. A TIMESTAMP(NANOS) `ts` reads only
     * as a raw nano count, through `spark.sql.legacy.parquet.nanosAsLong`.
     * Spark 4.1's ParquetOptions has no per-read form of it, so it stays a
     * session setting, made only when the footer fails without it: any other
-    * encoding leaves the session as it was. */
+    * encoding leaves the session as it was. The session that cached such a
+    * schema is the one that made the setting. */
   private[graft] def readEvents(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-    catch {
-      case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
+    parquetAs(spark, path) {
+      try spark.read.parquet(path).schema
+      catch {
+        case e: AnalysisException if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          spark.read.parquet(path).schema
+      }
     }
 
   /** Microseconds from the epoch of TIMESTAMP_NTZ column `c`, in no time

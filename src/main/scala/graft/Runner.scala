@@ -270,10 +270,14 @@ object Runner {
     // idle at every phase tail (measured at SF10: only orders_items +
     // parts_suppliers ran for the last ~55 s of the "ods phase"). Nodes
     // chain through Future.flatMap — a waiting node occupies NO pool
-    // thread, so the fixed pool cannot deadlock on dependencies.
+    // thread, so the fixed pool cannot deadlock on dependencies. The
+    // chaining itself runs parasitic, on the thread that completes a
+    // future: only node bodies go to the pool, so no callback is still
+    // pending there when a failed build shuts it down.
     val byName = nodes.map(n => n.name -> n).toMap
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val exec = ExecutionContext.fromExecutorService(pool)
+    implicit val chain: ExecutionContext = ExecutionContext.parasitic
     val futures = scala.collection.mutable.Map.empty[String, Future[Any]]
     def after[A](deps: Seq[Future[Any]])(body: => A): Future[A] =
       Future.sequence(deps).flatMap(_ => Future {
@@ -283,7 +287,7 @@ object Runner {
         ctx.spark.sparkContext.setJobGroup(runId, s"graft buildAll $runId",
           interruptOnCancel = true)
         try body finally ctx.spark.sparkContext.clearJobGroup()
-      })
+      }(exec))
     // parquet read of a written model, without its housekeeping columns
     def written(path: String, housekeeping: Boolean): DataFrame = {
       val pq = ctx.spark.read.parquet(path)
@@ -489,8 +493,11 @@ object Runner {
     import scala.concurrent.duration.Duration
     val gates = gateChecks(ctx)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(gates.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try Await.result(Future.sequence(gates.map(g => Future(g()))), Duration.Inf)
+    val exec = ExecutionContext.fromExecutorService(pool)
+    // collected parasitic, as buildAll chains its nodes: the pool, shut
+    // down at the first failing check, is handed no callback afterwards
+    implicit val chain: ExecutionContext = ExecutionContext.parasitic
+    try Await.result(Future.sequence(gates.map(g => Future(g())(exec))), Duration.Inf)
     finally pool.shutdown()
     ()
   }

@@ -367,6 +367,18 @@ object Versioned {
     scan(spark, path, m, m.files)
   }
 
+  /** The rows `version` added on top of `base`: one scan of the files
+    * `version`'s manifest lists and `base`'s does not, under `version`'s
+    * recorded schema. After `write(df, path, "append", appendBase =
+    * Some(base))` these are exactly the rows `df` wrote, read back without
+    * evaluating `df` again. */
+  def readAdded(spark: SparkSession, path: String, base: Long,
+      version: Long): DataFrame = {
+    val m = readManifest(spark, path, Some(version))
+    val old = readManifest(spark, path, Some(base)).files.toSet
+    scan(spark, path, m, m.files.filterNot(old))
+  }
+
   /** One FileSourceScan over `files`, a subset of manifest `m`'s list. */
   private def scan(spark: SparkSession, path: String, m: Manifest,
       files: Seq[FileEntry]): DataFrame = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The IVFADC pipeline (FAISS IVF + PQ asymmetric distance) and its
-  * persisted, build-once / query-many index.
+  * published, build-once / query-many index.
   *
   * The stages live here once, and every ANN query composes them: the
   * in-memory [[Similarity]] queries over the `embeddings` table and
@@ -52,7 +52,9 @@ import org.apache.spark.sql.functions._
   *   - `codebooks`  (s, code, cv)            — per-subspace PQ codewords
   *   - `coded`      (vec_id, cell_id, codes) — each vector's cell and its 8
   *     PQ codes in subspace order
-  *   - `vectors`    (vec_id, embedding)      — full floats, rerank-only
+  *   - `vectors`    (vec_id, embedding, stored attributes) — full floats
+  *     for the rerank, and the rows an [[add]] encodes its `coded` append
+  *     from
   *   - `meta`       — ONE row naming the four table versions of this
   *     generation, the tombstone set and the ingest ledger, committed LAST;
   *     its manifest records the same fields as `prop.` lines
@@ -203,7 +205,7 @@ object AnnIndex {
         expr("cosine_sim(qe, ce)").as("cosine")), "cosine", k)
   }
 
-  // ---- the persisted index -----------------------------------------------
+  // ---- the published index -----------------------------------------------
 
   /** Build the index from `ctx`'s `embeddings` table and publish under
     * `dir`. Seeds are the `nCells` smallest vec_ids and the codebook the
@@ -240,9 +242,10 @@ object AnnIndex {
       col("vec_id") <= qIds(nCells - 1), col("vec_id") <= qIds(nCodewords - 1))
     // metaCols ride INTO the coded table (FAISS-style stored attributes):
     // query's `where` predicate then evaluates map-side on the coded scan —
-    // no allow-list join, no shuffle
-    val coded = encode(
-      e.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*), seeds, cb)
+    // no allow-list join, no shuffle. `vectors` stores them too, so an add
+    // encodes its coded rows from the vectors files it appended.
+    val vecs = e.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*)
+    val coded = encode(vecs, seeds, cb)
     // The four tables are independent publishes (the atomic generation
     // commit is the meta row below, not the order of these writes): run
     // them from a small thread pool so each write's scheduling/commit tail
@@ -257,7 +260,7 @@ object AnnIndex {
       "seeds" -> Future(Versioned.write(seeds, s"$dir/seeds"))(ec),
       "codebooks" -> Future(Versioned.write(cb, s"$dir/codebooks"))(ec),
       "coded" -> Future(Versioned.write(coded, s"$dir/coded"))(ec),
-      "vectors" -> Future(Versioned.write(ve, s"$dir/vectors"))(ec))
+      "vectors" -> Future(Versioned.write(vecs, s"$dir/vectors"))(ec))
     val versions =
       try futs.map { case (k, f) => k -> Await.result(f, Duration.Inf) }.toMap
       finally pool.shutdown()
@@ -344,12 +347,16 @@ object AnnIndex {
     generation(spark, dir).batchId
 
   /** Incrementally add a vector batch to the index — the FAISS `add`
-    * shape: encode `batch` (vec_id, embedding) under the PINNED
-    * generation's quantizers (never retrained), append the encoded rows to
-    * `coded` and the raw rows to `vectors` as new Versioned snapshots, and
-    * commit a new meta generation pinning (old seeds_v, old codebooks_v,
-    * new coded_v, new vectors_v). Work is proportional to the batch: one
-    * map-side encode pass, and the appends keep prior files by reference.
+    * shape: append `batch` (vec_id, embedding, the index's stored
+    * attributes) to `vectors`, encode exactly the rows that append staged
+    * under the PINNED generation's quantizers (never retrained) into a
+    * `coded` append, and commit a new meta generation pinning (old seeds_v,
+    * old codebooks_v, new coded_v, new vectors_v). The caller's plan is
+    * evaluated ONCE, by the vectors append; the clash check and the encode
+    * read its staged files back ([[graft.Versioned.readAdded]]), so coded
+    * and vectors hold one row set by construction, whatever the plan.
+    * Work is proportional to the batch: one map-side encode pass, and the
+    * appends keep prior files by reference.
     *
     * Because the quantizers are a pure function of the generation,
     * `build(half) + add(rest)` is BIT-IDENTICAL to `build(all)` whenever
@@ -362,8 +369,14 @@ object AnnIndex {
     * externally, the contract concurrent builds already have.
     *
     * Rejects vec_ids already present (a silent duplicate would double rows
-    * in every downstream consumer); the check joins the bounded batch
-    * against the pinned coded relation, not corpus x corpus.
+    * in every downstream consumer); the check joins the staged batch
+    * against the pinned coded relation, not corpus x corpus. A rejected
+    * add leaves an unpinned vectors append behind, which the next add's
+    * appendBase discards.
+    *
+    * An index built before `vectors` carried the stored attributes still
+    * accepts an add: the append records the wider schema, and the older
+    * files read the attributes as null, which no reader of `vectors` uses.
     *
     * `batchId` threads the streaming-ingest ledger: a non-negative id is
     * recorded in the new generation's meta row and must exceed the ledger
@@ -382,16 +395,6 @@ object AnnIndex {
       s"stream batch $batchId already ingested at $dir (ledger: ${gen.batchId})")
     val seeds = gen.read(spark, "seeds")
     val cb = gen.read(spark, "codebooks")
-    // STABILIZE the batch before the first action: add runs three actions
-    // over this plan (clash-check count, encode -> coded append, vectors
-    // append), and a nondeterministic caller plan (limit/sample without an
-    // ordering) could otherwise commit coded and vectors snapshots with
-    // DIFFERENT row sets under one generation — coded rows without a vector
-    // twin are silently dropped by query's rerank join, and unsearchable
-    // vectors block future re-adds via the collision guard. persist() pins
-    // one materialization for all three actions; the row-parity require
-    // below backstops the pathological recompute (executor loss mid-add)
-    // before anything becomes visible.
     // the index's stored attributes (build's metaCols) are whatever the
     // pinned coded schema carries beyond the encoding triple — the batch
     // must supply the same columns or the append would shear the schema
@@ -402,36 +405,32 @@ object AnnIndex {
     require(missing.isEmpty,
       s"add batch lacks the index's stored attribute column(s) " +
         s"${missing.mkString(", ")} at $dir")
-    val b = batch.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*)
-      .persist()
-    try {
-      val clashes = b.join(codedPinned.select("vec_id"), Seq("vec_id"), "left_semi")
-        .limit(1).count()
-      require(clashes == 0,
-        s"add batch contains vec_ids already present in the index at $dir")
-      val codedV = Versioned.write(encode(b, seeds, cb), s"$dir/coded",
-        mode = "append", appendBase = Some(gen.v("coded")))
-      val vectorsV = Versioned.write(b.select("vec_id", "embedding"),
-        s"$dir/vectors", mode = "append", appendBase = Some(gen.v("vectors")))
-      // coded and vectors must describe the SAME row set in every pinned
-      // generation; counts are parquet-metadata reads (bounded, no scan).
-      // A mismatch aborts BEFORE the meta commit — the old generation keeps
-      // serving and the orphan snapshots are discarded on retry (appendBase).
-      val codedN = Versioned.read(spark, s"$dir/coded", Some(codedV)).count()
-      val vecN = Versioned.read(spark, s"$dir/vectors", Some(vectorsV)).count()
-      require(codedN == vecN,
-        s"add staged divergent snapshots (coded $codedN vs vectors $vecN " +
-          s"rows) — batch plan not deterministic across actions; aborting " +
-          "before the meta commit (previous generation still serves)")
-      commitMeta(spark, dir,
-        Map("seeds" -> gen.v("seeds"), "codebooks" -> gen.v("codebooks"),
-          "coded" -> codedV, "vectors" -> vectorsV),
-        batchId = if (batchId >= 0) batchId else gen.batchId,
-        tombstonesV = gen.tombstones.getOrElse(-1L))
-    } finally {
-      b.unpersist()
-      ()
-    }
+    // the one evaluation of the caller's plan; all after it reads the
+    // files this append staged
+    val vectorsV = Versioned.write(
+      batch.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*),
+      s"$dir/vectors", mode = "append", appendBase = Some(gen.v("vectors")))
+    val added = Versioned.readAdded(spark, s"$dir/vectors", gen.v("vectors"), vectorsV)
+    val clashes = added.join(codedPinned.select("vec_id"), Seq("vec_id"), "left_semi")
+      .limit(1).count()
+    require(clashes == 0,
+      s"add batch contains vec_ids already present in the index at $dir")
+    val codedV = Versioned.write(encode(added, seeds, cb), s"$dir/coded",
+      mode = "append", appendBase = Some(gen.v("coded")))
+    // coded and vectors must describe the SAME row set in every pinned
+    // generation; counts are parquet-metadata reads (bounded, no scan).
+    // A mismatch aborts BEFORE the meta commit — the old generation keeps
+    // serving and the orphan snapshots are discarded on retry (appendBase).
+    val codedN = Versioned.read(spark, s"$dir/coded", Some(codedV)).count()
+    val vecN = Versioned.read(spark, s"$dir/vectors", Some(vectorsV)).count()
+    require(codedN == vecN,
+      s"add staged divergent snapshots (coded $codedN vs vectors $vecN " +
+        "rows); aborting before the meta commit (previous generation still serves)")
+    commitMeta(spark, dir,
+      Map("seeds" -> gen.v("seeds"), "codebooks" -> gen.v("codebooks"),
+        "coded" -> codedV, "vectors" -> vectorsV),
+      batchId = if (batchId >= 0) batchId else gen.batchId,
+      tombstonesV = gen.tombstones.getOrElse(-1L))
   }
 
   /** Delete vectors from the index — the tombstone shape (FAISS
@@ -486,7 +485,7 @@ object AnnIndex {
       batchId = gen.batchId)
   }
 
-  /** Serve IVFADC top-k ([[serve]]) from the persisted index: `queries` is
+  /** Serve IVFADC top-k ([[serve]]) from the published index: `queries` is
     * (query_id, qe: array<float>); the output and every tie-break are
     * [[Similarity.annIvfPq]]'s. Table reads are pinned to one meta
     * generation.
@@ -513,7 +512,7 @@ object AnnIndex {
       gen.read(spark, "vectors"), k, nprobe, shortlist)
   }
 
-  /** SEMANTIC DEDUP served from the persisted index — the SemDeDup
+  /** SEMANTIC DEDUP served from the published index — the SemDeDup
     * production shape (Abbas et al. 2023, "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication"): cluster the
     * corpus with the index's coarse quantizer, then inside each cluster
@@ -525,7 +524,7 @@ object AnnIndex {
     * Everything is read FROM the index generation the meta-manifest pins:
     * cell assignments from `coded`, float vectors (for the exact
     * within-cell cosines) from `vectors` — this is the pipeline consumer
-    * the persisted index exists for, and a rebuild racing this query can
+    * the published index exists for, and a rebuild racing this query can
     * never mix generations (object scaladoc). One row per corpus vector:
     * (vec_id, cell_id, n_dup_lower, dup_witness, max_cosine_lower, keep).
     *

@@ -520,13 +520,16 @@ object Text {
   private def sigString(sig: Column): Column = lpad(bin(sig), 64, "0")
 
   /** SimHash (64-bit, md5-derived per-token bit votes): equal-signature
-    * buckets are near-dup groups, grouped and joined on the long. */
+    * buckets are near-dup groups, sized and keyed by a window over the
+    * long, so one documents scan feeds one exchange. The signature string
+    * is rendered after the window: rendered before it, the 64 characters
+    * would ride the exchange in place of the 8-byte long. */
   def dedupSimhash(ctx: Ctx): DataFrame = {
-    val sim = simhashes(ctx)
-    sim
-      .join(sim.groupBy("sig").agg(
-        count(lit(1)).as("bucket_size"), min("doc_id").as("bucket_keep_doc_id")),
-        Seq("sig"))
+    val bucket = Window.partitionBy("sig")
+    simhashes(ctx)
+      .select(col("doc_id"), col("sig"),
+        count(lit(1)).over(bucket).as("bucket_size"),
+        min("doc_id").over(bucket).as("bucket_keep_doc_id"))
       .select(col("doc_id"), sigString(col("sig")).as("simhash"),
         col("bucket_size"), col("bucket_keep_doc_id"))
   }

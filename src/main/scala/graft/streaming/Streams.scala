@@ -29,7 +29,8 @@ object Streams {
     * (Bench's throughput leg, StreamRateFloorSpec). The session's time zone
     * is neither read nor set. The NANOS encoding alone needs the session
     * setting `nanosAsLong`: Spark 4.1's ParquetOptions has no per-read form
-    * of it ([[graft.Ctx.readEvents]]). */
+    * of it ([[graft.Ctx.readEvents]]). The schema is the session's cached
+    * one, so only a session's first stream over a file runs a footer job. */
   def eventFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     val schema = graft.Ctx.readEvents(spark, s"$sfDir/events.parquet").schema
     val tsCol = schema("ts").dataType match {

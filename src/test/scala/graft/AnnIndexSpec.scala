@@ -222,6 +222,77 @@ class AnnIndexSpec extends SparkSpec {
       "duplicate vec_ids in the retried-add generation")
   }
 
+  /** The vec_ids of `table` in the generation the latest meta row pins. */
+  private def pinnedIds(dir: String, table: String): Set[Long] = {
+    val v = Versioned.read(spark, s"$dir/meta").head().getAs[Long](s"${table}_v")
+    Versioned.read(spark, s"$dir/$table", Some(v)).select("vec_id")
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  test("an add of a nondeterministic batch commits coded and vectors with one vec_id set") {
+    val dir = "/tmp/graft-ann-index-rand"
+    rm(new java.io.File(dir))
+    extensions.AnnIndex.build(ctx, dir)
+    val n = ctx.tbl("embeddings").count()
+    // each evaluation of this plan draws another 50 of the shifted rows
+    val batch = ctx.tbl("embeddings")
+      .select((col("vec_id") + n).as("vec_id"), col("embedding"))
+      .orderBy(rand()).limit(50)
+    extensions.AnnIndex.add(spark, dir, batch)
+    val coded = pinnedIds(dir, "coded")
+    assert(coded.size == n + 50, s"expected ${n + 50} coded vectors, got ${coded.size}")
+    assert(coded == pinnedIds(dir, "vectors"), "coded and vectors hold different vec_ids")
+  }
+
+  test("an attributed index whose vectors predate the stored attributes accepts an add") {
+    val dir = "/tmp/graft-ann-index-oldvectors"
+    val dirFull = "/tmp/graft-ann-index-oldvectors-full"
+    Seq(dir, dirFull).foreach(d => rm(new java.io.File(d)))
+    val e = ctx.tbl("embeddings")
+    val n = e.count()
+    // the quantizers are the low vec_ids, so build(half) + add(rest)
+    // serves as build(all) does
+    val halfDir = java.nio.file.Files.createTempDirectory("graft_ann_oldvec").toString
+    e.filter(col("vec_id") <= n / 2)
+      .write.mode("overwrite").parquet(s"$halfDir/embeddings.parquet")
+    extensions.AnnIndex.build(Ctx(spark, halfDir), dir, metaCols = Seq("label"))
+    // the generation as a build that stored only (vec_id, embedding) left it
+    val oldV = Versioned.write(
+      Versioned.read(spark, s"$dir/vectors").select("vec_id", "embedding"), s"$dir/vectors")
+    Versioned.writeWithProps(
+      Versioned.read(spark, s"$dir/meta").withColumn("vectors_v", lit(oldV)), s"$dir/meta",
+      Versioned.readManifest(spark, s"$dir/meta").props + ("vectors_v" -> oldV.toString))
+    assert(Versioned.read(spark, s"$dir/vectors", Some(oldV)).columns.toSeq ==
+      Seq("vec_id", "embedding"))
+
+    extensions.AnnIndex.add(spark, dir, e.filter(col("vec_id") > n / 2))
+    assert(pinnedIds(dir, "vectors") == pinnedIds(dir, "coded"))
+    extensions.AnnIndex.build(ctx, dirFull, metaCols = Seq("label"))
+    val target = e.filter(col("vec_id") === 0).select("label").head().get(0)
+    def served(d: String) = extensions.AnnIndex.query(spark, d, queriesDf,
+      where = Some(col("label") === target)).collect().map(_.toString).sorted.toSeq
+    val inc = served(dir)
+    assert(inc.nonEmpty && inc == served(dirFull),
+      "the add to a pre-attribute index serves unlike a full build")
+  }
+
+  test("an empty add commits a new generation with the same rows") {
+    val dir = "/tmp/graft-ann-index-empty"
+    rm(new java.io.File(dir))
+    extensions.AnnIndex.build(ctx, dir)
+    val n = ctx.tbl("embeddings").count()
+    val before = extensions.AnnIndex.query(spark, dir, queriesDf)
+      .collect().map(_.toString).sorted.toSeq
+    val metaBefore = Versioned.latestVersion(spark, s"$dir/meta").get
+    val versions = extensions.AnnIndex.add(spark, dir,
+      ctx.tbl("embeddings").select("vec_id", "embedding").limit(0), batchId = 7L)
+    assert(versions("meta") == metaBefore + 1)
+    assert(pinnedIds(dir, "coded").size == n && pinnedIds(dir, "vectors").size == n)
+    assert(extensions.AnnIndex.query(spark, dir, queriesDf)
+      .collect().map(_.toString).sorted.toSeq == before)
+    assert(extensions.AnnIndex.lastIngestBatch(spark, dir) == 7L)
+  }
+
   test("compact collapses ingest files into a new generation, serving unchanged") {
     val dir = "/tmp/graft-ann-index-compact"
     rm(new java.io.File(dir))

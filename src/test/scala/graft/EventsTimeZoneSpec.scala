@@ -44,6 +44,16 @@ class EventsTimeZoneSpec extends SparkSpec {
     assert(utcHourly.nonEmpty && hourly(la, "tz_hourly_la") == utcHourly)
   }
 
+  test("a second eventFileStream on a session infers no schema: zero Spark jobs") {
+    val s = spark.newSession()
+    Streams.eventFileStream(s, dir)
+    val n = org.apache.spark.JobCounter.during(s.sparkContext) {
+      Streams.eventFileStream(s, dir); ()
+    }
+    assert(n == org.apache.spark.JobCounter.Count(jobs = 0, executions = 0),
+      s"the second eventFileStream ran $n")
+  }
+
   test("a TIMESTAMP(NANOS) ts sets nanosAsLong alone and reads as the nano count") {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter

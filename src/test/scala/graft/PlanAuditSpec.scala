@@ -105,15 +105,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(scans(plan).size == 1, plan)
     assert(kernels(plan) == 1, plan)
     // its consumers read no persisted relation either, and run the kernel
-    // once per documents scan (two: one per join side): a join's inferred
-    // isnotnull(sig) pushed below the projection would run it twice
-    Seq(extensions.Text.dedupSimhash(ctx), extensions.Text.dedupSimhashNear(ctx))
-      .foreach { df =>
+    // once per documents scan: dedup_simhash's buckets are a window over
+    // one scan, so one hash exchange and no join; dedup_simhash_near joins
+    // two (a join's inferred isnotnull(sig) pushed below the projection
+    // would run it twice per side)
+    Seq(extensions.Text.dedupSimhash(ctx) -> 1, extensions.Text.dedupSimhashNear(ctx) -> 2)
+      .foreach { case (df, n) =>
         val p = df.queryExecution.executedPlan
         assert(p.isInstanceOf[AdaptiveSparkPlanExec], p)
         assert(!nodes(p).exists(_.isInstanceOf[InMemoryTableScanExec]), p)
-        assert(scans(p).size == 2 && kernels(p) == 2, p)
+        assert(scans(p).size == n && kernels(p) == n, p)
       }
+    val dedup = nodes(extensions.Text.dedupSimhash(ctx).queryExecution.executedPlan)
+    assert(dedup.collect { case e: ShuffleExchangeExec => e.outputPartitioning }.toSeq
+      .map(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]) ==
+      Seq(true), dedup.head)
+    assert(!dedup.exists(_.isInstanceOf[BaseJoinExec]), dedup.head)
   }
 
   test("IVF queries assign cells through argmax_cosine, with no vec_id window") {

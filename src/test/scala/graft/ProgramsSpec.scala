@@ -38,6 +38,22 @@ class ProgramsSpec extends AnyFunSuite {
     assert(strays.isEmpty, s"file renames outside Versioned.scala: ${strays.mkString(", ")}")
   }
 
+  test("only the Store registry and the listed operators persist or checkpoint") {
+    // Core.scala's Store.table is the one materialization mechanism; these
+    // operators still hold their own pins until they move onto it
+    val allowed = Set("Core.scala", "ExactQuantile.scala", "Components.scala",
+      "Scale.scala", "Reports.scala")
+    val pins = Seq(".persist(", ".cache()", "localCheckpoint", ".checkpoint(")
+    val strays = main.collect {
+      case (f, src) if !allowed(f.getName) && pins.exists(src.contains) => f.getPath
+    }
+    assert(strays.isEmpty, s"persists outside the Store registry: ${strays.mkString(", ")}")
+    // and the list only shrinks: an operator that moved comes off it
+    val stale = allowed.filterNot(n => main.exists { case (f, src) =>
+      f.getName == n && pins.exists(src.contains) })
+    assert(stale.isEmpty, s"allow-listed files that no longer pin: ${stale.mkString(", ")}")
+  }
+
   test("every object with a main is in the README's Programs list") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), "UTF-8")

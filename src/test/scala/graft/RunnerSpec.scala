@@ -128,6 +128,20 @@ class RunnerSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$src/orders.parquet")
     val out = java.nio.file.Files.createTempDirectory("graft-badbuild").toString
     val badCtx = Ctx(spark, src)
+    // stderr is teed from here until the quiescence wait below ends: a
+    // callback submitted to the build's shut-down pool would print a
+    // RejectedExecutionException there
+    val stderr = System.err
+    val printed = new java.io.ByteArrayOutputStream()
+    System.setErr(new java.io.PrintStream(
+      new org.apache.commons.io.output.TeeOutputStream(stderr, printed), true))
+    try failedBuild(out, badCtx, cp)
+    finally System.setErr(stderr)
+    val rejected = printed.toString("UTF-8").contains("RejectedExecutionException")
+    assert(!rejected, "a failed buildAll printed a RejectedExecutionException to stderr")
+  }
+
+  private def failedBuild(out: String, badCtx: Ctx, cp: Boolean): Unit = {
     val err = intercept[Exception] { Runner.buildAll(badCtx, out, cacheParents = cp) }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
