@@ -161,12 +161,21 @@ object Store {
   import scala.collection.mutable
 
   /** One session's entries by (sfDir, name), the RDDs operators hand it
-    * to release ([[own]]) and its parquet source schemas by (path,
-    * modification time); a function builder only to be held. */
+    * to release ([[own]]), its parquet source schemas by (path,
+    * modification time) and its range-join bin widths ([[rangeJoinWidth]]);
+    * a function builder only to be held. */
   private final class Registry extends (Seq[Expression] => Expression) {
     val entries = mutable.Map.empty[(String, String), DataFrame]
     val owned = mutable.Buffer.empty[org.apache.spark.rdd.RDD[_]]
     val schemas = TrieMap.empty[(String, Long), StructType]
+    // bounded LRU (access order, 64 entries): a long-lived session that
+    // plans many range joins keeps only its recent widths
+    val widths = new java.util.LinkedHashMap[Product, java.lang.Long](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Product, java.lang.Long]): Boolean =
+        size() > 64
+    }
+    // how the widths were derived: (driver-side parquet read, Spark sample)
+    var widthDerivations = (0L, 0L)
     def apply(args: Seq[Expression]): Expression =
       throw new UnsupportedOperationException(s"$slot is not a SQL function")
   }
@@ -268,6 +277,33 @@ object Store {
   private[graft] def sourceSchema(spark: SparkSession, path: String, mtime: Long)(
       infer: => StructType): StructType =
     registry(spark).schemas.getOrElseUpdate((path, mtime), infer)
+
+  /** The session's range-join bin width under `key`, from `derive` on a
+    * miss. `derive` says whether its width came from the driver-side
+    * parquet read (true) or the Spark sample (false): the session counts
+    * both ([[rangeJoinDerivations]]). */
+  private[graft] def rangeJoinWidth(spark: SparkSession, key: Product)(
+      derive: => (Long, Boolean)): Long = {
+    val r = registry(spark)
+    val hit = r.widths.synchronized(r.widths.get(key))
+    if (hit != null) hit.longValue()
+    else {
+      val (w, fromStats) = derive
+      r.widths.synchronized {
+        r.widths.put(key, java.lang.Long.valueOf(w))
+        val (stats, sample) = r.widthDerivations
+        r.widthDerivations = if (fromStats) (stats + 1, sample) else (stats, sample + 1)
+      }
+      w
+    }
+  }
+
+  /** How many range-join widths the session derived by the driver-side
+    * parquet read and by the Spark sample. */
+  private[graft] def rangeJoinDerivations(spark: SparkSession): (Long, Long) = {
+    val r = registry(spark)
+    r.widths.synchronized(r.widthDerivations)
+  }
 
   /** Hands the session the persisted `rdds` an operator's result reads
     * (the fixpoint's last checkpoint round, whose blocks are its only

@@ -10,61 +10,50 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType}
 
-/** Sparse HyperLogLog++ (Heule, Nunkesser and Hall, EDBT 2013) as a
-  * TypedImperativeAggregate, equal to Spark's `approx_count_distinct` value
-  * for value (HllSpec). Update is `HyperLogLogPlusPlusHelper.update`'s
-  * (xxhash64 seed 42, floats normalized, p from `relativeSD` by Spark's
-  * formula: 9 at 0.05), merge is register max, and eval packs the registers
-  * into Spark's words (ten 6-bit registers per long) for the helper's
-  * `query`, so the estimator and its bias tables are Spark's own code.
+/** The registers of a sparse HyperLogLog++ (Heule, Nunkesser and Hall, EDBT
+  * 2013) at Spark's precision for `relativeSD` (p = 9 at 0.05), one byte
+  * per register in memory. Update is `HyperLogLogPlusPlusHelper.update`'s
+  * (xxhash64 seed 42, floats normalized), merge is register max, and
+  * [[estimate]] packs the registers into Spark's words (ten 6-bit
+  * registers per long) for the helper's `query`, so the estimator and its
+  * bias tables are Spark's own code.
   *
-  * What differs is [[serialize]], the form a partial aggregate shuffles and
-  * a streaming state store keeps. Spark's buffer is always m / 10 + 1 words
-  * (416 B at p = 9); this one is the touched (index, rank) pairs, 2 bytes
-  * each at p <= 10 and 4 above, or the packed words once those are smaller.
-  * The packed form is exactly `denseBytes` long and a sparse one shorter.
-  * In memory a buffer is one byte per register.
-  */
-case class HyperLogLog(
-    child: Expression,
-    relativeSD: Double = 0.05,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
+  * [[serialize]] writes the touched (index, rank) pairs, 2 bytes each at
+  * p <= 10 and 4 above, or the packed words once those are smaller: the
+  * packed form is exactly `denseBytes` long and a sparse one shorter. Spark's
+  * own buffer is always m / 10 + 1 words (416 B at p = 9). Shared by
+  * [[HyperLogLog]] and [[HourlyRollup]]. */
+private[graft] final class HllSketch(relativeSD: Double) extends Serializable {
   private val p =
     Math.ceil(2.0d * Math.log(1.106d / relativeSD) / Math.log(2.0d)).toInt
   private val m = 1 << p
   private val numWords = m / 10 + 1
   private val pairBytes = if (p <= 10) 2 else 4
-  private[graft] val denseBytes = numWords * 8
-  private lazy val helper = new HyperLogLogPlusPlusHelper(relativeSD)
+  val denseBytes: Int = numWords * 8
+  @transient private lazy val helper = new HyperLogLogPlusPlusHelper(relativeSD)
 
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
+  def create(): Array[Byte] = new Array[Byte](m)
 
-  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
+  /** Adds `v` (of type `dt`; null is skipped) to `regs`. */
+  def update(regs: Array[Byte], v: Any, dt: DataType): Unit =
     if (v != null) {
-      val normalized = child.dataType match {
+      val normalized = dt match {
         case FloatType => NormalizeFloatingNumbers.FLOAT_NORMALIZER(v)
         case DoubleType => NormalizeFloatingNumbers.DOUBLE_NORMALIZER(v)
         case _ => v
       }
-      val x = XxHash64Function.hash(normalized, child.dataType, 42L, true, false)
+      val x = XxHash64Function.hash(normalized, dt, 42L, true, false)
       val idx = (x >>> (64 - p)).toInt
       val rank = java.lang.Long.numberOfLeadingZeros((x << p) | 1L << (p - 1)) + 1
-      if (rank > buffer(idx)) buffer(idx) = rank.toByte
+      if (rank > regs(idx)) regs(idx) = rank.toByte
     }
-    buffer
-  }
 
-  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] = {
+  def merge(regs: Array[Byte], other: Array[Byte]): Unit = {
     var i = 0
     while (i < m) {
-      if (other(i) > buffer(i)) buffer(i) = other(i)
+      if (other(i) > regs(i)) regs(i) = other(i)
       i += 1
     }
-    buffer
   }
 
   /** Spark's word layout: register i at bits 6 * (i % 10) of word i / 10. */
@@ -74,37 +63,72 @@ case class HyperLogLog(
     w
   }
 
-  override def eval(buffer: Array[Byte]): Any =
-    helper.query(new GenericInternalRow(words(buffer).map(w => w: Any)), 0)
+  def estimate(regs: Array[Byte]): Long =
+    helper.query(new GenericInternalRow(words(regs).map(w => w: Any)), 0)
 
-  override def serialize(buffer: Array[Byte]): Array[Byte] = {
-    val n = buffer.count(_ != 0)
+  def serialize(regs: Array[Byte]): Array[Byte] = {
+    val n = regs.count(_ != 0)
     if (n * pairBytes < denseBytes) {
       val out = ByteBuffer.allocate(n * pairBytes)
-      for (i <- 0 until m if buffer(i) != 0) {
-        val pair = i << 6 | buffer(i)
+      for (i <- 0 until m if regs(i) != 0) {
+        val pair = i << 6 | regs(i)
         if (pairBytes == 2) out.putShort(pair.toShort) else out.putInt(pair)
       }
       out.array()
     } else {
       val out = ByteBuffer.allocate(denseBytes)
-      words(buffer).foreach(out.putLong)
+      words(regs).foreach(out.putLong)
       out.array()
     }
   }
 
-  override def deserialize(storage: Array[Byte]): Array[Byte] = {
-    val in = ByteBuffer.wrap(storage)
-    val regs = createAggregationBuffer()
-    if (storage.length == denseBytes) {
+  /** The registers [[serialize]] wrote into the rest of `in`. A sparse
+    * form may be followed by zero bytes: they read as rank-0 pairs, and a
+    * byte short of a pair is skipped. */
+  def deserialize(in: ByteBuffer): Array[Byte] = {
+    val regs = create()
+    if (in.remaining == denseBytes) {
       val w = Array.fill(numWords)(in.getLong())
       for (i <- 0 until m) regs(i) = (w(i / 10) >>> (6 * (i % 10)) & 63).toByte
-    } else while (in.hasRemaining) {
+    } else while (in.remaining >= pairBytes) {
       val pair = if (pairBytes == 2) in.getShort() & 0xffff else in.getInt()
-      regs(pair >>> 6) = (pair & 63).toByte
+      if ((pair & 63) > regs(pair >>> 6)) regs(pair >>> 6) = (pair & 63).toByte
     }
     regs
   }
+}
+
+/** Sparse HyperLogLog++ as a TypedImperativeAggregate, equal to Spark's
+  * `approx_count_distinct` value for value (HllSpec), at `relativeSD`'s
+  * precision by Spark's formula. What differs is [[serialize]], the form a
+  * partial aggregate shuffles and a streaming state store keeps: only the
+  * registers the group touched ([[HllSketch]]). */
+case class HyperLogLog(
+    child: Expression,
+    relativeSD: Double = 0.05,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+
+  private val sketch = new HllSketch(relativeSD)
+  private[graft] def denseBytes: Int = sketch.denseBytes
+
+  override def createAggregationBuffer(): Array[Byte] = sketch.create()
+
+  override def update(buffer: Array[Byte], input: InternalRow): Array[Byte] = {
+    sketch.update(buffer, child.eval(input), child.dataType)
+    buffer
+  }
+
+  override def merge(buffer: Array[Byte], other: Array[Byte]): Array[Byte] = {
+    sketch.merge(buffer, other)
+    buffer
+  }
+
+  override def eval(buffer: Array[Byte]): Any = sketch.estimate(buffer)
+  override def serialize(buffer: Array[Byte]): Array[Byte] = sketch.serialize(buffer)
+  override def deserialize(storage: Array[Byte]): Array[Byte] =
+    sketch.deserialize(ByteBuffer.wrap(storage))
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = false

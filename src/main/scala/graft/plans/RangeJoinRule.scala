@@ -55,30 +55,20 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     case _ => Cast(e, LongType)
   }
 
-  // derived-width memo. Keyed by SEMANTIC HASHES (three Ints), not plan
-  // trees: a tree-keyed cache pins relations/session state for the life of
-  // the process. Bounded LRU (access-order, 64 entries) so long-lived
-  // multi-query sessions can't accumulate entries either. A hash collision
-  // only mis-sizes a perf heuristic — correctness is carried by the exact
-  // re-check Filter, never by the width.
-  private val widthCache =
-    new java.util.LinkedHashMap[(Int, Int, Int), java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Int, Int), java.lang.Long]): Boolean = size() > 64
-    }
-
-  // observability for specs: how widths got derived this JVM
-  private[graft] val statsPathHits = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val sampleFallbackHits = new java.util.concurrent.atomic.AtomicLong
-
   /** Auto bin width: the median interval span from a bounded sample of the
     * interval side, so the typical interval covers ~2 bins WHATEVER the
     * column's unit is — day-grain dates and epoch-micros longs both get a
     * sane width, where any fixed constant is off by orders of magnitude
     * for one of them.
     *
-    * Derivation order (memoized per semantic hash of the interval side +
-    * bounds, bounded LRU):
+    * Memoized in the session's Store registry ([[graft.Store.rangeJoinWidth]])
+    * per semantic hash of the interval side and bounds and the modification
+    * time of the side's parquet source, so a source rewritten at the same
+    * path derives its width again. The hashes keep the memo from pinning
+    * plan trees; a collision only mis-sizes a heuristic, since correctness
+    * is carried by the exact re-check Filter, never by the width.
+    *
+    * Derivation order:
     *  1. DRIVER-SIDE parquet read: when both bounds resolve (through
     *     Project/Filter/SubqueryAlias) to root columns of a parquet
     *     [[HadoopFsRelation]], read ≤2001 rows of just those two columns
@@ -93,16 +83,28 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     *     planning time, and only on cache miss.
     *  3. Constant 32 if both fail. */
   private def deriveWidth(iSide: LogicalPlan, lo: Expression, hi: Expression): Long = {
-    val key = (iSide.semanticHash(), lo.semanticHash(), hi.semanticHash())
-    val hit = widthCache.synchronized(widthCache.get(key))
-    if (hit != null) return hit.longValue()
-    val w = parquetSampleWidth(iSide, lo, hi) match {
-      case Some(v) => statsPathHits.incrementAndGet(); v
-      case None => sampleFallbackHits.incrementAndGet(); sparkSampleWidth(iSide, lo, hi)
+    val source =
+      try resolveToParquetScan(iSide, Seq(lo, hi))
+      catch { case scala.util.control.NonFatal(_) => None }
+    val key = (iSide.semanticHash(), lo.semanticHash(), hi.semanticHash(),
+      source.fold(0L) { case (fs, _) => modificationTime(fs) })
+    graft.Store.rangeJoinWidth(org.apache.spark.sql.SparkSession.active, key) {
+      parquetSampleWidth(source) match {
+        case Some(w) => (w, true)
+        case None => (sparkSampleWidth(iSide, lo, hi), false)
+      }
     }
-    widthCache.synchronized(widthCache.put(key, java.lang.Long.valueOf(w)))
-    w
   }
+
+  /** The latest modification time of the relation's root paths, or 0 when
+    * one cannot be read. */
+  private def modificationTime(
+      fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation): Long =
+    try {
+      val conf = fs.sparkSession.sessionState.newHadoopConf()
+      fs.location.rootPaths.map(p =>
+        p.getFileSystem(conf).getFileStatus(p).getModificationTime).foldLeft(0L)(math.max)
+    } catch { case scala.util.control.NonFatal(_) => 0L }
 
   private def medianWidth(spans: Seq[Long]): Option[Long] =
     if (spans.isEmpty) None
@@ -149,10 +151,10 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     * first partition's spans. Still fully deterministic — fixed file
     * picks, fixed per-file row cap, file-order reads. Returns None
     * whenever the shape doesn't qualify, never throws. */
-  private def parquetSampleWidth(
-      iSide: LogicalPlan, lo: Expression, hi: Expression): Option[Long] =
+  private def parquetSampleWidth(source: Option[
+      (org.apache.spark.sql.execution.datasources.HadoopFsRelation, Seq[String])]): Option[Long] =
     try {
-      resolveToParquetScan(iSide, Seq(lo, hi)).flatMap { case (fs, Seq(loName, hiName)) =>
+      source.flatMap { case (fs, Seq(loName, hiName)) =>
         val files = fs.location.inputFiles.sorted
         if (files.isEmpty) return None
         val picks = Seq(0, files.length / 2, files.length - 1).distinct.map(files)

@@ -44,23 +44,45 @@ object Streams {
       .select(tsCol.as("ts"), col("user_id"), col("event_type"), col("value"))
   }
 
-  /** Tumbling 1-hour windowed counts per event type with a 2-hour watermark
-    * (late data beyond the watermark is dropped; state is bounded).
+  /** Tumbling 1-hour counts per event type: (window, event_type,
+    * n_events, approx_users, total_value), the rows of a groupBy over
+    * `window(ts, "1 hour")` with a 2-hour watermark on `ts`, whose sum is
+    * decimal(28,6) and whose `approx_users` is `approx_count_distinct`'s
+    * value (HourlyCountsSpec keeps that form as its reference).
     *
-    * `approx_users` is the sparse HyperLogLog++ of [[graft.functions.Hll]]:
-    * per group `approx_count_distinct(user_id)`'s value, but the shuffle and
-    * the state store carry only the registers the group touched. Its state
-    * schema (one binary buffer, not 52 longs) cannot resume a checkpoint
-    * written with `approx_count_distinct`. */
+    * Each group shuffles and keeps one (hour, event_type, buffer) row.
+    * `hour` is `window(ts, "1 hour").start`, which is epoch-aligned and
+    * reads no time zone (`date_trunc` would read the session zone and move
+    * the hours of a +05:30 zone). The three aggregates are one
+    * [[graft.functions.HourlyRollup]], whose buffer packs the count, the
+    * exact sum and the sparse sketch's registers into one 8-byte word for a
+    * one-event group; `window` is rebuilt from `hour` after the aggregate,
+    * as `window(hour, "1 hour")`: (hour, hour + 1h) for an aligned hour.
+    *
+    * The watermark is 3 hours on `hour`: a group is dropped or evicted when
+    * start <= floor_hour(max ts) - 3h. A 2-hour watermark on `ts` against
+    * the window end drops and evicts when start + 1h <= max ts - 2h, and
+    * because start + 3h falls on an hour boundary the two conditions are
+    * the same: the same late events are dropped and the same state is
+    * evicted. Only the reported watermark is 1 to 2 hours earlier.
+    *
+    * The state schema (one binary buffer keyed by the hour) cannot resume a
+    * checkpoint written by the window-keyed form, which kept the window
+    * struct, the count, the sketch and the sum in separate slots. */
   def hourlyCounts(events: DataFrame): DataFrame = {
-    graft.functions.Hll.register(events.sparkSession)
+    graft.functions.HourlyRollup.register(events.sparkSession)
+    val hour = col("hour")
     events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        expr("hll_approx_count_distinct(user_id)").as("approx_users"),
-        sum(col("value").cast("decimal(18,6)")).as("total_value"))
+      .select(window(col("ts"), "1 hour").getField("start").as("hour"),
+        col("event_type"), col("user_id"), col("value"))
+      .withWatermark("hour", "3 hours")
+      .groupBy(hour, col("event_type"))
+      .agg(expr("hourly_rollup(user_id, cast(value AS decimal(18,6)))").as("r"))
+      .select(
+        // (hour, hour + 1h), typed as the window function types it: a
+        // struct(hour AS start, ...) would carry hour's watermark marker
+        window(hour, "1 hour").as("window"),
+        col("event_type"), col("r.n_events"), col("r.approx_users"), col("r.total_value"))
   }
 
   /** Exactly-once style stream dedup on event_id within the watermark. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,8 +14,9 @@ class EventsTimeZoneSpec extends SparkSpec {
   private def dir = ctx.dir
 
   /** (window start in epoch micros, event_type, n_events, approx_users). */
-  private def hourly(s: SparkSession, name: String): Set[(Long, String, Long, Long)] = {
-    val q = Streams.hourlyCounts(Streams.eventFileStream(s, dir))
+  private def hourly(s: SparkSession, name: String,
+      agg: DataFrame => DataFrame = Streams.hourlyCounts): Set[(Long, String, Long, Long)] = {
+    val q = agg(Streams.eventFileStream(s, dir))
       .writeStream.format("memory").queryName(name).outputMode("update")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -42,6 +43,23 @@ class EventsTimeZoneSpec extends SparkSpec {
 
     val utcHourly = hourly(spark, "tz_hourly_utc")
     assert(utcHourly.nonEmpty && hourly(la, "tz_hourly_la") == utcHourly)
+  }
+
+  test("hourlyCounts on an Asia/Kolkata session: UTC-equal windows, conf untouched") {
+    val ist = spark.newSession()
+    ist.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    val before = ist.conf.getAll
+    val istHourly = hourly(ist, "tz_hourly_ist")
+    assert(ist.conf.getAll == before)
+    val utcHourly = hourly(spark, "tz_hourly_utc_ist")
+    assert(utcHourly.nonEmpty && istHourly == utcHourly)
+    // the pin has teeth: an hour key from date_trunc reads the session
+    // zone, and a +05:30 zone starts its hours at :30 UTC
+    val truncated = (e: DataFrame) => e
+      .withWatermark("ts", "2 hours")
+      .groupBy(struct(date_trunc("hour", col("ts")).as("start")).as("window"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"), approx_count_distinct(col("user_id")).as("approx_users"))
+    assert(hourly(ist, "tz_hourly_ist_trunc", truncated) != utcHourly)
   }
 
   test("a second eventFileStream on a session infers no schema: zero Spark jobs") {

@@ -16,7 +16,7 @@ class NativesSpec extends SparkSpec {
   private val names = Seq("ws_tokens", "ngrams", "ngram_md5s",
     "ngram_rep_stats", "simhash64", "min_md5", "band_min_md5s", "count_in_set",
     "cosine_sim", "lsh_sign", "argmax_dot", "argmax_cosine", "adc_slots",
-    "dot_product", "hll_approx_count_distinct", "kll_sketch",
+    "dot_product", "hll_approx_count_distinct", "hourly_rollup", "kll_sketch",
     "freq_items", "minhash_sketch", "minhash16_sig", "ordered_pairs", "zorder2")
 
   private final class Capture extends AbstractAppender(
@@ -69,7 +69,8 @@ class NativesSpec extends SparkSpec {
       functions.CountInSet.register, functions.CosineSim.register,
       functions.LshSign.register, functions.ArgmaxDot.register,
       functions.AdcSlots.register, functions.DotProduct.register,
-      functions.Hll.register, functions.KllSketch.register,
+      functions.Hll.register, functions.HourlyRollup.register,
+      functions.KllSketch.register,
       functions.FreqItemsSketch.register, functions.MinHash.register,
       functions.MinHashSig16.register, functions.OrderedPairs.register,
       functions.MortonCode.register).foreach(_(s))

@@ -30,6 +30,11 @@ class RangeJoinRuleSpec extends SparkSpec {
     """SELECT pid, iid FROM rj_points p JOIN rj_intervals i
       |ON p.day >= i.lo AND p.day <= i.hi""".stripMargin
 
+  /** The session's width derivations: (driver-side parquet read, Spark
+    * sample). */
+  private def derivations(s: org.apache.spark.sql.SparkSession = spark): (Long, Long) =
+    Store.rangeJoinDerivations(s)
+
   private def rows(q: String): Set[(Long, Long)] =
     spark.sql(q).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -125,14 +130,13 @@ class RangeJoinRuleSpec extends SparkSpec {
       """SELECT pid, iid FROM
         |  (SELECT pid, pid * 7 % 500 AS x FROM rj_points) p JOIN rj_parq_intervals i
         |ON p.x >= i.a AND p.x <= i.b""".stripMargin
-    val stats0 = graft.plans.RewriteRangeJoin.statsPathHits.get()
-    val fall0 = graft.plans.RewriteRangeJoin.sampleFallbackHits.get()
+    val (stats0, fall0) = derivations()
     val df = spark.sql(q)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("__graft_bin"), plan)
-    assert(graft.plans.RewriteRangeJoin.statsPathHits.get() > stats0,
+    assert(derivations()._1 > stats0,
       "parquet-backed auto width did not take the driver-side stats path")
-    assert(graft.plans.RewriteRangeJoin.sampleFallbackHits.get() == fall0,
+    assert(derivations()._2 == fall0,
       "parquet-backed auto width fell back to the Spark sample job")
     // width 11 = median span 10 + 1 shows up as the bin divisor
     assert(plan.contains(" 11)") || plan.contains("div 11"), plan)
@@ -168,11 +172,11 @@ class RangeJoinRuleSpec extends SparkSpec {
       """SELECT pid, iid FROM
         |  (SELECT pid, pid * 7 % 500 AS x FROM rj_points) p JOIN rj_parq_skew_intervals i
         |ON p.x >= i.a AND p.x <= i.b""".stripMargin
-    val stats0 = graft.plans.RewriteRangeJoin.statsPathHits.get()
+    val stats0 = derivations()._1
     val df = spark.sql(q)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("__graft_bin"), plan)
-    assert(graft.plans.RewriteRangeJoin.statsPathHits.get() > stats0,
+    assert(derivations()._1 > stats0,
       "skewed-file fixture did not take the driver-side stats path")
     assert(plan.contains(" 101)") || plan.contains("div 101"),
       s"width must be the global median span 100 + 1, not the first file's 1:\n$plan")
@@ -183,6 +187,57 @@ class RangeJoinRuleSpec extends SparkSpec {
     assert(got == want && want.nonEmpty, s"got=${got.size} want=${want.size}")
   }
 
+  /** Writes intervals of span `span` (width `span + 1`) to `dir`. */
+  private def writeSpans(dir: String, span: Int): Unit =
+    spark.range(300).select(col("id").as("iid"), (col("id") * 37 % 1000).as("a"))
+      .withColumn("b", col("a") + lit(span))
+      .write.mode("overwrite").parquet(dir)
+
+  /** The bin widths a plan divides by. */
+  private def widths(plan: String): Set[Long] =
+    "div (\\d+)".r.findAllMatchIn(plan).map(_.group(1).toLong).toSet
+
+  private def spanQuery(view: String): String =
+    s"""SELECT pid, iid FROM
+       |  (SELECT pid, pid * 3 % 700 AS x FROM rj_points) p JOIN $view i
+       |ON p.x >= i.a AND p.x <= i.b""".stripMargin
+
+  test("a source rewritten at the same path derives its width again") {
+    val dir = java.nio.file.Files.createTempDirectory("rj_rewrite").toFile.getAbsolutePath
+    writeSpans(dir, span = 4)
+    spark.read.parquet(dir).createOrReplaceTempView("rj_rewrite")
+    val planned = () => widths(
+      spark.sql(spanQuery("rj_rewrite")).queryExecution.executedPlan.toString)
+    val stats0 = derivations()._1
+    assert(planned() == Set(5L))
+    // the same plan again is served from the memo
+    assert(planned() == Set(5L))
+    assert(derivations()._1 == stats0 + 1)
+    Thread.sleep(50) // a new modification time, whatever the clock's grain
+    writeSpans(dir, span = 60)
+    // the view keeps its relation, and so the plan's hashes: only the
+    // source's modification time tells the memo the rows changed
+    spark.catalog.refreshTable("rj_rewrite")
+    assert(planned() == Set(61L))
+    assert(derivations()._1 == stats0 + 2)
+  }
+
+  test("a new session starts with an empty width memo") {
+    val dir = java.nio.file.Files.createTempDirectory("rj_session").toFile.getAbsolutePath
+    writeSpans(dir, span = 9)
+    spark.read.parquet(dir).createOrReplaceTempView("rj_session")
+    spark.sql(spanQuery("rj_session")).queryExecution.executedPlan
+    assert(derivations()._1 > 0)
+    val s = spark.newSession()
+    graft.plans.AsOf.register(s)
+    assert(derivations(s) == ((0L, 0L)))
+    s.read.parquet(dir).createOrReplaceTempView("rj_session")
+    s.range(400).select(col("id").as("pid")).createOrReplaceTempView("rj_points")
+    assert(widths(s.sql(spanQuery("rj_session")).queryExecution.executedPlan.toString) ==
+      Set(10L))
+    assert(derivations(s) == ((1L, 0L)))
+  }
+
   test("in-memory (non-parquet) interval side still derives via the bounded Spark sample") {
     // a distinct shape (projection renames) so the width memo can't serve it
     val q =
@@ -191,10 +246,10 @@ class RangeJoinRuleSpec extends SparkSpec {
         |  (SELECT iid, iid * 5 % 300 AS a, iid * 5 % 300 + iid % 7 AS b
         |   FROM rj_intervals) i
         |ON p.x >= i.a AND p.x <= i.b""".stripMargin
-    val fall0 = graft.plans.RewriteRangeJoin.sampleFallbackHits.get()
+    val fall0 = derivations()._2
     val df = spark.sql(q)
     assert(df.queryExecution.executedPlan.toString.contains("__graft_bin"))
-    assert(graft.plans.RewriteRangeJoin.sampleFallbackHits.get() > fall0)
+    assert(derivations()._2 > fall0)
     val got = rows(q)
     spark.conf.set("spark.graft.rangejoin.enabled", "false")
     val want = try rows(q) finally
