@@ -105,8 +105,8 @@ object Bench {
     }
 
     // transaction-log throughput (Versioned): a full snapshot commit, then
-    // three year-scoped upsert batches (MERGE through replacePartitions —
-    // the incremental-corrections shape), then a time-travel audit. Rows
+    // three year-scoped upsert batches (MERGE through one atomic partition
+    // swap — the incremental-corrections shape), then a time-travel audit. Rows
     // counted = rows staged through the log (initial + each batch's
     // rewritten partitions), so the rate prices commit overhead AND the
     // partition-scoped rewrite, not just the delta size.

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -217,7 +218,9 @@ object Versioned {
     * (`data/<partCol>=<v>/<uuid>-<part file>`), via a tmp write + per-file
     * rename into place (files are invisible to readers until a manifest
     * references them, so this move needs no atomicity). Returns entries
-    * whose `part` is the raw dir fragment value. */
+    * whose `part` is the raw dir fragment value. Hash-clustered, a
+    * partition is staged as one file; an [[upsert]] stages up to two per
+    * touched partition (its kept rows and its update rows). */
   private def stage(df: DataFrame, path: String,
       partitionBy: Option[String], hashCluster: Boolean = true): Seq[FileEntry] = {
     val uuid = java.util.UUID.randomUUID().toString
@@ -230,8 +233,10 @@ object Versioned {
       // guide §6 small-files). Hash-clustered, each partition value lands in
       // exactly one task → one file per partition. A partition too large for
       // one file splits via spark.sql.files.maxRecordsPerFile when set.
-      // [[compact]] arrives already laid out (one partition value per task,
-      // range-sorted) and opts out, so its bin-packing survives the stage.
+      // [[compact]] and [[upsert]] arrive already laid out and opt out:
+      // compact has one partition value per task, range-sorted; upsert has
+      // each bin's kept rows in one task and its update rows clustered, so
+      // a touched partition gets at most two files, kept and updated.
       case Some(pc) =>
         (if (hashCluster) df.repartition(col(pc)) else df)
           .write.partitionBy(pc).parquet(tmp)
@@ -411,14 +416,31 @@ object Versioned {
     * updates/inserts keyed by `keys` may land in ANY old partition, and
     * only those partitions may be touched.
     *
-    * Cost ∝ the TOUCHED partitions, never the table: the update batch's
-    * distinct `partCol` values (a metadata-sized list, collected without a
-    * shuffle) select the partitions; only those are read back from the
-    * CURRENT snapshot (the filter is partition pruning); existing rows
-    * superseded by an update key are dropped by a broadcast anti-join; and
-    * the merged rows are committed by [[replacePartitions]], so every other
-    * partition keeps its manifest entries and files untouched (UpsertSpec
-    * pins both, and that the clustered write is the one shuffle).
+    * Cost ∝ the TOUCHED partitions, never the table, and only the update
+    * rows cross an exchange (a low-shuffle MERGE):
+    *  - the update batch's distinct `partCol` values (a metadata-sized
+    *    list, collected without a shuffle) are rendered as the hive dir
+    *    fragments the writer makes of them, so they select the touched
+    *    partitions' files straight from the manifest (nulls and escaped
+    *    strings like `a:b` included);
+    *  - those whole partitions are bin-packed by bytes to [[compact]]'s
+    *    target; each bin is one scan of its files, a broadcast left-anti
+    *    join dropping the rows an update key supersedes, and one task
+    *    (`coalesce(1)`) that writes each of its partitions' kept rows as
+    *    one file — no exchange;
+    *  - only the update rows are hash-clustered on `partCol`, one task and
+    *    so one file per partition.
+    * So a touched partition leaves the commit with at most two files, its
+    * kept file and its update file; the next upsert into it reads both in
+    * one bin and folds them back into one kept file, so the count does not
+    * grow. Every other partition keeps its manifest entries and files
+    * untouched (UpsertSpec pins the layout, that the update rows are the
+    * one shuffle, and that the table is read in one scan at one bin).
+    *
+    * With two or more bins the batch holds two or more partition values,
+    * so its hash exchange never reports a single partition and Spark's
+    * union keeps every bin its own task; one bin and a one-partition batch
+    * may be zipped into one task, which then writes one file per partition.
     *
     * The publish is atomic: a crash at any point leaves the previous
     * version fully readable, concurrent readers never observe the
@@ -430,22 +452,32 @@ object Versioned {
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], partCol: String): Long = {
     import org.apache.spark.sql.functions.broadcast
-    val baseV = latestVersion(spark, path)
-    // each task de-duplicates its own values, so the collect needs no shuffle
-    val touched = updates.select(col(partCol)).rdd
-      .mapPartitions(_.map(_.get(0)).toSet.iterator).collect().distinct.toSeq
-    val nonNull = touched.filterNot(_ == null)
-    val cond = {
-      val in = if (nonNull.isEmpty) org.apache.spark.sql.functions.lit(false)
-        else col(partCol).isInCollection(nonNull)
-      if (touched.exists(_ == null)) in || col(partCol).isNull else in
-    }
-    val current = read(spark, path, baseV).filter(cond)
+    val m = readManifest(spark, path)
+    // the writer's own fragment of a value: cast to string, escaped, null
+    // or "" as __HIVE_DEFAULT_PARTITION__; each task de-duplicates its own
+    // values, so the collect needs no shuffle
+    val touched = updates.select(col(partCol).cast("string")).rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator).collect()
+      .map(ExternalCatalogUtils.getPartitionValueString).toSet
+    val target = splitBytes(spark)
+    // next-fit over whole partitions: a bin closes once the next partition
+    // would take it past the target
+    val bins = m.files.filter(_.part.exists(touched)).groupBy(_.part.get).toSeq.sortBy(_._1)
+      .map { case (_, files) => (bytesOf(spark, path, files), files) }
+      .foldLeft(List.empty[(Long, Seq[FileEntry])]) {
+        case ((used, bin) :: rest, (bytes, files)) if used + bytes <= target =>
+          (used + bytes, bin ++ files) :: rest
+        case (acc, partition) => partition :: acc
+      }.reverse.map(_._2)
     // a left-anti join keeps the same rows whether or not the broadcast
     // keys repeat, so they need no de-duplicating shuffle
-    val kept = current.join(broadcast(updates.select(keys.map(col): _*)), keys, "left_anti")
-    val merged = kept.unionByName(updates.select(current.columns.map(col): _*))
-    replacePartitions(merged, path, partCol, baseVersion = baseV)
+    val superseded = broadcast(updates.select(keys.map(col): _*))
+    val kept = bins.map(files =>
+      scan(spark, path, m, files).join(superseded, keys, "left_anti").coalesce(1))
+    // the table's column order; constructing a scan runs no job
+    val columns = scan(spark, path, m, m.files.take(1)).columns.map(col)
+    val merged = kept.foldRight(updates.select(columns: _*).repartition(col(partCol)))(_ union _)
+    replace(merged, path, partCol, Some(m.version), hashCluster = false)
   }
 
   /** Small-file compaction as one commit (Delta's OPTIMIZE): the routine
@@ -478,14 +510,11 @@ object Versioned {
       case (Some(pv), files) if files.size >= minFiles => pv -> files
     }.sortBy(_._1)
     if (fragmented.isEmpty) return Nil
-    val fs = fsOf(spark, path)
-    val target = math.max(1L, org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")))
+    val target = splitBytes(spark)
     // one input per partition, so every write task holds ONE partition
     // value and writes one file; the union keeps each input's partitioning
     val packed = fragmented.map { case (_, files) =>
-      val bytes = files.map(f => fs.getFileStatus(new Path(s"$path/${f.file}")).getLen).sum
-      val n = math.max(1L, (bytes + target - 1) / target).toInt
+      val n = math.max(1L, (bytesOf(spark, path, files) + target - 1) / target).toInt
       val src = scan(spark, path, m, files)
       if (sortCols.isEmpty) src.repartition(n)
       else src.repartitionByRange(n, sortCols.map(col): _*)
@@ -495,6 +524,18 @@ object Versioned {
       .sortWithinPartitions((pc +: sortCols).map(col): _*)
     replace(packed, path, pc, Some(m.version), hashCluster = false)
     fragmented.map(_._1)
+  }
+
+  /** Spark's split size, `spark.sql.files.maxPartitionBytes`: the bytes
+    * one read task wants, and so the size [[compact]] and [[upsert]] pack
+    * their rewritten partitions to. */
+  private def splitBytes(spark: SparkSession): Long = math.max(1L, org.apache.spark.network
+    .util.JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")))
+
+  /** The on-disk bytes of `files`. */
+  private def bytesOf(spark: SparkSession, path: String, files: Seq[FileEntry]): Long = {
+    val fs = fsOf(spark, path)
+    files.map(f => fs.getFileStatus(new Path(s"$path/${f.file}")).getLen).sum
   }
 
   /** Delete data files no longer referenced by any manifest newer than

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.{Inner, QueryPlan}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
@@ -62,11 +62,13 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     * for one of them.
     *
     * Memoized in the session's Store registry ([[graft.Store.rangeJoinWidth]])
-    * per semantic hash of the interval side and bounds and the modification
-    * time of the side's parquet source, so a source rewritten at the same
-    * path derives its width again. The hashes keep the memo from pinning
-    * plan trees; a collision only mis-sizes a heuristic, since correctness
-    * is carried by the exact re-check Filter, never by the width.
+    * per semantic hash of the interval side and of the bounds (bound to the
+    * side's output ordinals, so a fresh read of an unchanged source hits)
+    * and the modification time of the side's parquet source, so a source
+    * rewritten at the same path derives its width again. The hashes keep
+    * the memo from pinning plan trees; a collision only mis-sizes a
+    * heuristic, since correctness is carried by the exact re-check Filter,
+    * never by the width.
     *
     * Derivation order:
     *  1. DRIVER-SIDE parquet read: when both bounds resolve (through
@@ -86,7 +88,10 @@ object RewriteRangeJoin extends Rule[LogicalPlan] with PredicateHelper {
     val source =
       try resolveToParquetScan(iSide, Seq(lo, hi))
       catch { case scala.util.control.NonFatal(_) => None }
-    val key = (iSide.semanticHash(), lo.semanticHash(), hi.semanticHash(),
+    // a bound's canonical form keeps its attributes' exprIds, which every
+    // fresh read of a source renews: bound them to iSide's output ordinals
+    def bound(e: Expression) = QueryPlan.normalizeExpressions(e, iSide.output).semanticHash()
+    val key = (iSide.semanticHash(), bound(lo), bound(hi),
       source.fold(0L) { case (fs, _) => modificationTime(fs) })
     graft.Store.rangeJoinWidth(org.apache.spark.sql.SparkSession.active, key) {
       parquetSampleWidth(source) match {

@@ -222,6 +222,19 @@ class RangeJoinRuleSpec extends SparkSpec {
     assert(derivations()._1 == stats0 + 2)
   }
 
+  test("two fresh reads of one unchanged source derive its width once") {
+    val dir = java.nio.file.Files.createTempDirectory("rj_fresh").toFile.getAbsolutePath
+    writeSpans(dir, span = 14)
+    val stats0 = derivations()._1
+    (1 to 2).foreach { _ =>
+      // each read renews the relation's attribute exprIds
+      spark.read.parquet(dir).createOrReplaceTempView("rj_fresh")
+      assert(widths(spark.sql(spanQuery("rj_fresh")).queryExecution.executedPlan.toString) ==
+        Set(15L))
+    }
+    assert(derivations()._1 == stats0 + 1)
+  }
+
   test("a new session starts with an empty width memo") {
     val dir = java.nio.file.Files.createTempDirectory("rj_session").toFile.getAbsolutePath
     writeSpans(dir, span = 9)
